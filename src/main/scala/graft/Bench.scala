@@ -12,28 +12,10 @@ object Bench {
     val eraQuality = Era.quality()
     System.err.println(f"[bench] era_quality $eraQuality%.1f Msteps/s")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Cluster-profile rehearsal knobs: a 1000-executor deployment runs
-    // thousands of shuffle partitions with AQE coalescing them at runtime —
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS=2048 (+ AQE default-on) exercises the
-    // same plans under that shape on local[32] so partitioning-sensitive
-    // regressions surface before a real cluster does. SPARK_GRAFT_AQE=false
-    // pins the static planner for A/B isolation. The unset default is
-    // SIZE-derived, not core-derived (graft.Tune — r16 measured the
-    // core-count constant as the dominant overhead on tiny inputs and a
-    // wash at sf1).
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-      Tune.shufflePartitions(sfDir).toString)
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // graft.Session: local[SPARK_GRAFT_CPUS or nproc], size-derived shuffle
+    // partitions (SPARK_GRAFT_SHUFFLE_PARTITIONS=2048 rehearses the cluster
+    // profile's plan shapes), the same session Verify and PlanDump run on
+    val spark = Session.build(sfDir)
 
     // Untimed warmup: the first queries otherwise absorb one-time JVM costs
     // (classloading, codegen JIT, parquet footer reads) that belong to no

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: dump `explain("formatted")` for the headline queries to
   * a directory (one .txt per query) — the source for PLANS.md's plan audit
   * and the quickest way to re-check a plan shape after a change.
@@ -20,24 +18,9 @@ object PlanDump {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("/tmp/graft_plans")
     val names = if (args.length > 2) args.drop(2).toSeq else headline
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    // same cluster-profile knobs as Bench: dump plans under e.g.
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS=2048 / SPARK_GRAFT_AQE=false to diff
-    // shapes against the local default profile
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-      Tune.shufflePartitions(sfDir).toString) // same size-derived rule as Bench
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same extensions as Bench/Verify: without them the dumped plan can
-      // differ from the benched plan (the w3 FINAL-hint analyzer rule)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the Bench session (graft.Session): same master, partitions, AQE and
+    // extensions, so a dumped plan is the benched plan
+    val spark = Session.build(sfDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

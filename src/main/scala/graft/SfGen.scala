@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize a larger scale factor from a driver-shipped one by key-offset
@@ -39,14 +39,9 @@ object SfGen {
     val src = args(0)
     val out = args(1)
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(src)
+    // one output file per core, as the source is replicated
+    val cpus = spark.sparkContext.defaultParallelism
 
     def read(name: String) = spark.read.parquet(s"$src/$name.parquet")
     def write(df: DataFrame, name: String): Unit = {
@@ -67,7 +62,7 @@ object SfGen {
       val crossed = df.join(spark.range(factor).toDF("__k"))
       keys.foldLeft(crossed) { (acc, k) =>
         acc.withColumn(k, col(k) + col("__k") * lit(bases(k)))
-      }.drop("__k").repartition(cpus.toInt)
+      }.drop("__k").repartition(cpus)
     }
 
     write(replicate(read("customer"), Seq("c_custkey")), "customer")
@@ -82,13 +77,13 @@ object SfGen {
     val orders = read("orders").join(spark.range(factor).toDF("__k"))
       .withColumn("o_orderkey", col("o_orderkey") + col("__k") * lit(okBase))
       .withColumn("o_custkey", col("o_custkey") + col("__k") * lit(ckBase))
-      .drop("__k").repartition(cpus.toInt)
+      .drop("__k").repartition(cpus)
     write(orders, "orders")
     val lineitem = read("lineitem").join(spark.range(factor).toDF("__k"))
       .withColumn("l_orderkey", col("l_orderkey") + col("__k") * lit(okBase))
       .withColumn("l_partkey", col("l_partkey") + col("__k") * lit(pkBase))
       .withColumn("l_suppkey", col("l_suppkey") + col("__k") * lit(skBase))
-      .drop("__k").repartition(cpus.toInt)
+      .drop("__k").repartition(cpus)
     write(lineitem, "lineitem")
 
     val ev = read("events")
@@ -101,7 +96,7 @@ object SfGen {
     write(ev.join(spark.range(factor).toDF("__k"))
       .withColumn("event_id", col("event_id") + col("__k") * lit(evBase))
       .withColumn("user_id", col("user_id") + col("__k") * lit(uidBase))
-      .drop("__k").repartition(cpus.toInt), "events")
+      .drop("__k").repartition(cpus), "events")
 
     val docs = read("documents")
     val docBase = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) + 1L
@@ -115,13 +110,13 @@ object SfGen {
           "s -> s.w)) END").as("text"),
         col("lang"), col("source"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-      .repartition(cpus.toInt), "documents")
+      .repartition(cpus), "documents")
 
     val em = read("embeddings")
     val vecBase = em.agg(max(col("vec_id"))).collect()(0).getLong(0) + 1L
     write(em.join(spark.range(factor).toDF("__k"))
       .withColumn("vec_id", col("vec_id") + col("__k") * lit(vecBase))
-      .drop("__k").repartition(cpus.toInt), "embeddings")
+      .drop("__k").repartition(cpus), "embeddings")
 
     spark.stop()
   }

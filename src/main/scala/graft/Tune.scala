@@ -1,7 +1,7 @@
 package graft
 
-/** Scale-adaptive session tuning shared by the driver-contract mains
-  * (Bench / Verify / PlanDump).
+/** Scale-adaptive session tuning, applied by [[Session]] to every session
+  * it builds.
   *
   * The r16 optimization round measured the old `shuffle.partitions = cpus`
   * default as the dominant constant on the heavy sf0.1 queries: with ~17 MB
@@ -25,8 +25,8 @@ package graft
   * matters). Measured: sf0.1 → 5 partitions (the best band, 4–8, in the
   * A/B above); sf1 → 47 (within noise of the old 32 on every probed heavy
   * query). A cluster deployment sizes this to its own data via the same
-  * rule; SPARK_GRAFT_SHUFFLE_PARTITIONS stays as the explicit override used
-  * by the p2048 cluster-profile rehearsal. */
+  * rule; [[Session]] reads SPARK_GRAFT_SHUFFLE_PARTITIONS as the explicit
+  * override used by the p2048 cluster-profile rehearsal. */
 object Tune {
 
   private val BytesPerPartition: Long = 4L << 20

@@ -182,7 +182,7 @@ object Dedup {
     // from pr (the dict join implies the cap filter) into the per-doc
     // arrays, checkpointed because the probe scans them three times (the
     // usePairProbe postings agg, the CSR build's toLocalIterator, the final
-    // mapPartitions probe). WinnowProf stage receipts: dict over tok 1.15 s
+    // mapPartitions probe). PLANS.md r12 stage receipts: dict over tok 1.15 s
     // + tok checkpoint 0.96 s -> dict over capped ~0.2 s, one token pass.
     def docsP = {
       val spark = df.sparkSession

@@ -391,11 +391,11 @@ object Sampling {
 
   /** Largest single-source row count one window task is allowed to sort
     * before the capping operators switch to their scale routes. The plain
-    * routes put a whole source through ONE task; the 30 M-row CapSkewProbe
-    * receipt (bench_history, r11) measured the flip being worth it well
-    * below this, but the scale routes carry an extra (tiny) shuffle that is
-    * pure overhead at gate scale — so the default only flips when a source
-    * is genuinely window-task-hostile. Overridable per call (and by the
+    * routes put a whole source through ONE task; the 30 M-row receipt
+    * `bench_history/CAPSKEW_r11_30m.json` measured the flip being worth it
+    * well below this, but the scale routes carry an extra (tiny) shuffle
+    * that is pure overhead at gate scale — so the default only flips when a
+    * source is genuinely window-task-hostile. Overridable per call (and by the
     * probe/spec) via the `skewRowThreshold` parameter. */
   val AutoSkewRowThreshold = 2000000L
 

@@ -1,11 +1,14 @@
-package graft
+package graft.ladders
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Probe
+import graft.ext.{Dedup, Sampling, TextFns, Url}
 
-/** End-to-end curation-funnel scale receipt (VERDICT r11 item 7): the
-  * number a 100 TB design review asks for first — one run chaining
-  * url-dedup -> exact dedup -> near-dup -> quality gate -> source caps at
+/** End-to-end curation-funnel scale receipt (VERDICT r11 item 7), as
+  * `graft.Probe funnel [nRows=10000000]`: the number a 100 TB design review
+  * asks for first — one run chaining html extract -> url-dedup -> exact
+  * dedup -> paragraph dedup -> near-dup -> quality gate -> source caps at
   * probe scale (default 10 M docs, the URLPROBE rung), with per-stage
   * wall-times and a kept-fraction audit.
   *
@@ -13,28 +16,12 @@ import org.apache.spark.sql.functions._
   * between stages so a stage's timing is its own cost, not upstream
   * recompute), exactly like a staged curation pipeline would persist
   * between passes. The corpus is synthesized so every stage has real work
-  * at controlled rates — see the synthesis comment in `main`.
-  *
-  * Usage: java -cp ... graft.FunnelProbe [nRows]
-  * Prints one JSON line (ScaleProbe contract).
+  * at controlled rates — see the synthesis comment below.
   */
-object FunnelProbe {
-  def main(args: Array[String]): Unit = {
+object Funnel {
+  def run(spark: SparkSession, sfDir: String, args: Seq[String]): Probe.Fields = {
     val n = args.headOption.map(_.toLong).getOrElse(10000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.ext.{Dedup, Sampling, TextFns, Url}
-
-    def time[T](body: => T): (Double, T) = {
-      val t0 = System.nanoTime(); val r = body
-      ((System.nanoTime() - t0) / 1e9, r)
-    }
+    val r = new Probe.Receipt
 
     // ---- corpus with controlled funnel rates (letters only — digits count
     // as punctuation in the quality score):
@@ -83,18 +70,19 @@ object FunnelProbe {
       .withColumn("url", url)
       .localCheckpoint()
     val nTotal = docs.count()
+    r.add("n_rows", nTotal)
 
     def checkpointed(df: DataFrame): DataFrame = df.localCheckpoint()
 
     // ---- stage 0: HTML-to-text extraction (zero-shuffle regexp chain)
-    val (tHtml, extracted) = time {
+    val extracted = r.timed("html_extract") {
       checkpointed(docs.select(col("doc_id"), col("source"), col("url"),
         TextFns.stripHtml(col("html")).as("text")))
     }
     extracted.count()
 
     // ---- stage 1: URL-exact dedup (RefinedWeb first pass)
-    val (tUrl, afterUrl) = time {
+    val afterUrl = r.timed("url_dedup") {
       checkpointed(Url.urlDedupKeep(extracted, "url", "doc_id")
         .filter(col("keep") === 1)
         .select("doc_id", "source", "url", "text"))
@@ -102,7 +90,7 @@ object FunnelProbe {
     val nUrl = afterUrl.count()
 
     // ---- stage 2: exact text dedup (hash groupBy, lowest id survives)
-    val (tExact, afterExact0) = time {
+    val afterExact0 = r.timed("exact") {
       val keep = afterUrl.groupBy(md5(col("text")).as("__h"))
         .agg(min("doc_id").as("doc_id"))
         .select("doc_id")
@@ -116,7 +104,7 @@ object FunnelProbe {
     // to 3 docs (one per surviving footer variant) — the boilerplate
     // threshold must sit above content multiplicity, which is exactly the
     // knob's real-world calibration question
-    val (tPara, afterExact) = time {
+    val afterExact = r.timed("paragraph_dedup") {
       checkpointed(afterExact0
         .join(Dedup.paragraphDedup(afterExact0, "doc_id", "text",
             delim = "\n", maxDocs = 3)
@@ -127,7 +115,7 @@ object FunnelProbe {
 
     // ---- stage 3: near-dup dedup (MinHash-LSH candidates, Jaccard-verified,
     // pointer-jump clusters, cluster-min survives)
-    val (tNear, afterNear) = time {
+    val afterNear = r.timed("near_dup") {
       // threshold 0.6: the synthetic variants differ in one of 18 words ->
       // 3 of ~19 3-shingles change, J ~ 0.68 — genuinely near-duplicate
       val pairs = Dedup.nearDupPairs(afterExact, "text", "doc_id",
@@ -141,7 +129,7 @@ object FunnelProbe {
     val nNear = afterNear.count()
 
     // ---- stage 4: quality gate
-    val (tQual, afterQual) = time {
+    val afterQual = r.timed("quality") {
       checkpointed(afterNear
         .filter(round(TextFns.qualityScore(col("text")), 6) >= 0.35))
     }
@@ -149,7 +137,7 @@ object FunnelProbe {
 
     // ---- stage 5: caps — domain quota + per-source quota, both AUTO-routed
     // (the mega-source must flip the measured-skew decision at this scale)
-    val (tCaps, nCaps) = time {
+    val nCaps = r.timed("caps") {
       // domain quota 40 (the corpus averages ~50 surviving docs/domain —
       // the cap must BIND to measure the full window/salt path), then the
       // source quota at n/30 (under the mega-source's surviving share)
@@ -159,16 +147,17 @@ object FunnelProbe {
         .count()
     }
 
-    def frac(k: Long, of: Long): String = f"${k.toDouble / math.max(1L, of)}%.4f"
-    println(f"""{"probe":"funnel","n_rows":$nTotal,""" +
-      f""""html_extract_sec":$tHtml%.3f,""" +
-      f""""url_dedup_sec":$tUrl%.3f,"n_after_url":$nUrl,"url_kept_frac":${frac(nUrl, nTotal)},""" +
-      f""""exact_sec":$tExact%.3f,"paragraph_dedup_sec":$tPara%.3f,""" +
-      f""""n_after_exact":$nExact,"exact_kept_frac":${frac(nExact, nUrl)},""" +
-      f""""near_dup_sec":$tNear%.3f,"n_after_near":$nNear,"near_kept_frac":${frac(nNear, nExact)},""" +
-      f""""quality_sec":$tQual%.3f,"n_after_quality":$nQual,"quality_kept_frac":${frac(nQual, nNear)},""" +
-      f""""caps_sec":$tCaps%.3f,"n_after_caps":$nCaps,"caps_kept_frac":${frac(nCaps, nQual)},""" +
-      f""""end_to_end_kept_frac":${frac(nCaps, nTotal)}}""")
-    spark.stop()
+    r.add("n_after_url", nUrl)
+    r.add("url_kept_frac", Probe.frac(nUrl, nTotal))
+    r.add("n_after_exact", nExact)
+    r.add("exact_kept_frac", Probe.frac(nExact, nUrl))
+    r.add("n_after_near", nNear)
+    r.add("near_kept_frac", Probe.frac(nNear, nExact))
+    r.add("n_after_quality", nQual)
+    r.add("quality_kept_frac", Probe.frac(nQual, nNear))
+    r.add("n_after_caps", nCaps)
+    r.add("caps_kept_frac", Probe.frac(nCaps, nQual))
+    r.add("end_to_end_kept_frac", Probe.frac(nCaps, nTotal))
+    r.fields
   }
 }

@@ -3542,9 +3542,9 @@ object ExtQueries {
       (s: SparkSession, d: String) => {
         // 4 staged chunks (the stronger 4-element permutation), grouped 2
         // per micro-batch (r14): the per-batch constant IS the dominant
-        // replay cost when measured batch-by-batch (GRAFT_STREAM_PROF,
-        // ~0.9 s/batch vs ~0.65 s of chunk compute at sf1 — the r13
-        // 3-vs-4-chunk reading that suggested otherwise was era noise).
+        // replay cost when measured batch-by-batch (~0.9 s/batch vs
+        // ~0.65 s of chunk compute at sf1 — the r13 3-vs-4-chunk
+        // reading that suggested otherwise was era noise).
         // Grouping keeps the cross-boundary inversion (chunks {2,0} land
         // before {3,1}) and the least/greatest normalization keeps the
         // output set chunking-proof.

@@ -1083,7 +1083,7 @@ object Queries {
       // Matching the batch oracle proves the redelivery was absorbed —
       // an appended duplicate would double every sum. 2 chunks (r14, down
       // from 3): each micro-batch re-buys the same ~13-write ingest
-      // constant (StreamProbe's chunk curve), and the gate's claims —
+      // constant (PLANS.md r11 chunk curve), and the gate's claims —
       // disjoint batch ids, cross-batch isolation, redelivery absorption —
       // are fully exercised by 2 data batches + the plant. Chunk staging
       // is cached per JVM (stageKey) and delivered atomically; spec-level

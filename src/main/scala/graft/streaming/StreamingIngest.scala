@@ -183,20 +183,9 @@ object StreamingIngest {
     // fill with the write fan-out instead of serializing ~2.5 s of
     // materialization ahead of it (measured at the sf1 stream gate).
     val env = if (cacheInput) envelopes.cache() else envelopes
-    // per-write wall-clock on stderr under GRAFT_INGEST_PROF — the
-    // measurement that attributes a batch's wall to its slowest lineage
-    // vs the concurrent-commit constant (the GRAFT_STREAM_PROF pattern)
-    val prof = sys.env.contains("GRAFT_INGEST_PROF")
-    def timed(name: String)(body: => Unit): Unit =
-      if (!prof) body
-      else {
-        val t0 = System.nanoTime(); body
-        System.err.println(
-          f"[ingest-prof] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
     try {
       val tables = Flatten(env)
-      val tableWrites = tables.all.map { case (name, df) => () => timed(name) {
+      val tableWrites = tables.all.map { case (name, df) => () =>
         val out = df
           .withColumn("height_bucket", Fns.heightBucket(col("height")))
           .withColumn("ingest_batch", lit(taggedBatch))
@@ -208,7 +197,7 @@ object StreamingIngest {
           w = w.option(s"parquet.bloom.filter.enabled#$c", "true")
         }
         w.partitionBy("ingest_batch", "height_bucket").parquet(s"$warehouse/$name")
-      }}
+      }
       val blocks = if (cacheInput) tables.blocks.cache() else tables.blocks
       try {
         def mv(df: DataFrame, name: String): Unit =
@@ -218,13 +207,10 @@ object StreamingIngest {
             .partitionBy("ingest_batch")
             .parquet(s"$warehouse/$name")
         val mvWrites = Seq(
-          () => timed("mv_daily_block_stats") {
-            mv(Mvs.dailyBlockStatsDelta(blocks), "mv_daily_block_stats") },
-          () => timed("mv_daily_tx_stats") {
-            mv(Mvs.dailyTxStatsDelta(tables.txs, blocks), "mv_daily_tx_stats") },
-          () => timed("mv_event_type_stats") {
-            mv(Mvs.eventTypeStatsDelta(tables.txEvents, blocks),
-              "mv_event_type_stats") })
+          () => mv(Mvs.dailyBlockStatsDelta(blocks), "mv_daily_block_stats"),
+          () => mv(Mvs.dailyTxStatsDelta(tables.txs, blocks), "mv_daily_tx_stats"),
+          () => mv(Mvs.eventTypeStatsDelta(tables.txEvents, blocks),
+            "mv_event_type_stats"))
         runConcurrently(tableWrites ++ mvWrites)
       } finally { if (cacheInput) { blocks.unpersist(); () } }
     } finally { if (cacheInput) { env.unpersist(); () } }
@@ -261,17 +247,7 @@ object StreamingIngest {
     val inDir = s"$stage/in"
     val wh = s"$stage/wh"; val ckpt = s"$stage/ckpt"
 
-    // Phase timing on stderr: stage / per-batch / redelivery — the
-    // measurement that separates harness constants (per-micro-batch ingest
-    // cost is ~13 write commits + the chunk's flatten compute) from the
-    // engine's own throughput when this gate moves between rounds.
-    def phase[T](name: String)(body: => T): T = {
-      val t0 = System.nanoTime(); val r = body
-      System.err.println(f"[flatrun] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
-    def buildChunks(dir: String): String = phase("stage") {
+    def buildChunks(dir: String): String = {
       envelopes
         .repartitionByRange(chunks, col("height"))
         // SMALL ROW GROUPS (1 MiB vs the 128 MiB default): a chunk written
@@ -358,10 +334,8 @@ object StreamingIngest {
       format = "parquet")
     try {
       parts.zipWithIndex.foreach { case (part, i) =>
-        phase(s"batch$i") {
-          deliver(part, new Path(inDir, f"chunk-$i%05d.parquet"))
-          q.processAllAvailable()
-        }
+        deliver(part, new Path(inDir, f"chunk-$i%05d.parquet"))
+        q.processAllAvailable()
       }
     } finally q.stop()
 
@@ -371,9 +345,7 @@ object StreamingIngest {
       // (parallel) scan shape as the stream's own delivery did
       val redelivered = ss.read.schema(Schemas.envelope)
         .parquet(s"$inDir/chunk-${"%05d".format(parts.length - 1)}.parquet")
-      phase("redelivery") {
-        ingestBatchExactlyOnce(wh, redelivered, lastId, cacheInput = false)
-      }
+      ingestBatchExactlyOnce(wh, redelivered, lastId, cacheInput = false)
     }
     wh
   }

@@ -166,10 +166,6 @@ object StreamingNearDup {
                         arrivalOrder: Seq[Int] = Seq.empty,
                         filesPerTrigger: Int = 1): DataFrame = {
     import org.apache.hadoop.fs.Path
-    val tEnter0 = System.nanoTime()
-    def prof(tag: String, t0: Long): Unit =
-      if (sys.env.contains("GRAFT_STREAM_PROF"))
-        System.err.println(f"[neardup-prof] $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s")
     val stage = graft.Scratch.dir("graft_neardup_stage")
     val inDir = s"$stage/in"
     val outDir = s"$stage/out"; val ckpt = s"$stage/ckpt"
@@ -177,7 +173,6 @@ object StreamingNearDup {
     // chunk staging is SHARED across the four replay gates (same frame,
     // same range partitioning — StreamStage builds it once per JVM)
     val parts = StreamStage.stagedParts(spark, docsParquetDir, chunks)
-    prof("staged", tEnter0)
     val fs = new Path(stage).getFileSystem(spark.sessionState.newHadoopConf())
     // `arrivalOrder` (a chunk permutation — the firstSeenWinsFileRun knob)
     // injects out-of-order arrival: pairs then orient by ARRIVAL (a_id =
@@ -212,7 +207,7 @@ object StreamingNearDup {
     // (r13 verdict item 5): the dominant replay cost is the PER-MICRO-BATCH
     // constant — each batch re-plans the (large) signature expression tree
     // and pays offset/commit/state-store bookkeeping (~0.8-0.9 s/batch at
-    // sf1, measured with GRAFT_STREAM_PROF, vs ~0.65 s of actual data
+    // sf1, measured batch by batch, vs ~0.65 s of actual data
     // compute for a 12.5k-doc chunk). Within a micro-batch the state op
     // sorts arrivals by (event_time, doc_id), so grouping IN-ORDER chunks
     // never changes registration order (hash-identical output); for
@@ -234,32 +229,18 @@ object StreamingNearDup {
       .repartition(math.min(cores.toLong, math.max(2L,
         (stagedBytes * filesPerTrigger / parts.length + (64L << 10) - 1)
           / (64L << 10))).toInt)
-    val tBand0 = System.nanoTime()
     val bandStream = bandRows(inStream, "text", "doc_id", "event_time")
       .as[BandRow]
-    prof("plan-build", tBand0)
-    val tSetup0 = System.nanoTime()
     val q = candidateStream(bandStream, lateness, stateTtlMs, maxBucket)
       .writeStream.format("parquet")
       .option("path", outDir).option("checkpointLocation", ckpt)
       .outputMode("append").start()
-    prof("start", tSetup0)
     try {
-      order.zipWithIndex.grouped(filesPerTrigger).zipWithIndex.foreach {
-        case (group, b) =>
-          val t0 = System.nanoTime()
-          group.foreach { case (part, i) => StreamStage.feed(spark, parts(part), inDir, i) }
-          q.processAllAvailable()
-          prof(s"batch $b (${group.size} files)", t0)
+      order.zipWithIndex.grouped(filesPerTrigger).foreach { group =>
+        group.foreach { case (part, i) => StreamStage.feed(spark, parts(part), inDir, i) }
+        q.processAllAvailable()
       }
-    } finally {
-      val tStop0 = System.nanoTime()
-      q.stop()
-      prof("stop", tStop0)
-    }
-    val tRead0 = System.nanoTime()
-    val res = spark.read.parquet(outDir)
-    prof("readback", tRead0)
-    res
+    } finally q.stop()
+    spark.read.parquet(outDir)
   }
 }

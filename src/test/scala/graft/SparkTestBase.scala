@@ -11,17 +11,7 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the production extension set (bucket pruning + FINAL hint) active
-      // in every suite — tests exercise the extended analyzer/optimizer
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  /** The production session (graft.Session: GraftExtensions, AQE, UTC) on
+    * local[4]; sf0.001 sizes it to 4 shuffle partitions. */
+  lazy val session: SparkSession = Session.build("/root/testdata/sf0.001", cores = 4)
 }

@@ -8,7 +8,7 @@ set -u
 R9=$1; R10=$2; PASSES=$3
 Q=${4:-x_ann_ivfpq,x_ann_ivf_batch,x_ann_ivf,x_ann_ivf_indexed,x_ann_pq}
 export SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}
-export SPARK_GRAFT_CPUS=32 SPARK_GRAFT_BENCH_ONLY=$Q SPARK_GRAFT_BENCH_REPS=3 SPARK_GRAFT_INGEST_BLOCKS=10
+export SPARK_GRAFT_BENCH_ONLY=$Q SPARK_GRAFT_BENCH_REPS=3 SPARK_GRAFT_INGEST_BLOCKS=10
 for i in $(seq 1 "$PASSES"); do
   for side in r9 r10; do
     tree=$([ "$side" = r9 ] && echo "$R9" || echo "$R10")

@@ -25,8 +25,9 @@ object Bench {
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable => System.err.println(s"[bench] warmup $w: ${e.getMessage}") }
 
-    // Ingest throughput through the REAL path (flatten -> 10 partitioned
-    // table writes -> 3 MV delta appends), on synthesized envelopes with
+    // Ingest throughput through the driver loop's writer (Ingest.write:
+    // flatten -> 10 partitioned table writes + 3 MV delta appends, all
+    // concurrent), on synthesized envelopes with
     // 5 txs x 2 events per block. The reference publishes ~1000-2000
     // blocks/min at comparable tx volume (BASELINE.md); that number includes
     // RPC fetch latency, this one is the transform+insert path only — the
@@ -48,7 +49,7 @@ object Bench {
         val wh = java.nio.file.Files.createTempDirectory("graft_bench_wh").toString
         val env = syntheticEnvelopes(spark, nBlocks)
         val t0 = System.nanoTime()
-        graft.streaming.StreamingIngest.ingestBatch(wh, env)
+        graft.ingest.Ingest.write(wh, env, None)
         Some((System.nanoTime() - t0) / 1e9)
       } catch {
         case e: Throwable =>

@@ -23,11 +23,7 @@ import graft.ext.{Dedup, Sampling, TextFns}
   * first version of this probe did exactly that). Word multisets survive,
   * so token statistics stay realistic.
   *
-  * Each op records `<op>_sec` and `<op>_rows`.
-  * SPARK_GRAFT_PROBE_SKIP=cap,prefix,... skips named expensive blocks so a
-  * targeted question (e.g. segment-dedup growth at 200 k) doesn't pay the
-  * multi-minute cap-recall enumeration / prefix-join worst case;
-  * SPARK_GRAFT_SCALE_STREAM=1 adds the online near-dup stream.
+  * Each op records `<op>_sec` and `<op>_rows`; every op runs on every rung.
   */
 object Scale {
   def run(spark: SparkSession, sfDir: String, args: Seq[String]): Probe.Fields = {
@@ -58,10 +54,6 @@ object Scale {
     r.add("n_docs", nDocs)
     r.add("copies", copies)
 
-    val skip: Set[String] = sys.env.get("SPARK_GRAFT_PROBE_SKIP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-
     op("exact_dedup") { Dedup.exactDedup(docs, "text", "doc_id").count() }
     op("minhash_sig") { Dedup.minhashSig(docs, "text", "doc_id").count() }
 
@@ -88,7 +80,7 @@ object Scale {
     r.add("max_bucket", maxBucket)
     r.add("band_rows_dropped", dropped)
 
-    if (!skip("neardup")) op("near_dup_pairs") {
+    op("near_dup_pairs") {
       Dedup.nearDupPairs(docs, "text", "doc_id", threshold = 0.2)
         .select("a_id", "b_id").count()
     }
@@ -113,11 +105,11 @@ object Scale {
     // side indexes EVERY capped gram — candidate volume is Σ over prefix
     // tokens of df(token), bounded by the frequency cap. Measured so the
     // asymmetry's real cost (vs the symmetric prefix join) is on record.
-    if (!skip("containment")) op("containment_pairs") {
+    op("containment_pairs") {
       Dedup.containmentPairs(docs, "text", "doc_id", threshold = 0.5).count()
     }
 
-    if (!skip("cap")) capRecall(docs, r)
+    capRecall(docs, r)
 
     // The lossless marginal-threshold path: prefix-filter set-similarity
     // join at the same J >= 0.2. Contrast rows: capped LSH keeps ~21 % of
@@ -126,7 +118,7 @@ object Scale {
     // DefaultMaxBucket leave candidate generation, and on this dense
     // synthetic corpus that bites (reported, not hidden: pairs found vs the
     // kept+lost estimate above tells the recall story).
-    if (!skip("prefix")) op("prefix_join_pairs") {
+    op("prefix_join_pairs") {
       Dedup.prefixJoinPairs(docs, "text", "doc_id", threshold = 0.2).count()
     }
 
@@ -135,76 +127,70 @@ object Scale {
     // the density of the full gram index — measured here so the top-2 bench
     // entries (x_winnow_fp / x_winnow_pairs) have ladder numbers, not just
     // sf0.1 points.
-    if (!skip("winnow")) {
-      op("winnow_prints") {
-        graft.ext.Par.ensure(docs.select("doc_id", "text"))
-          .select(col("doc_id"), split(col("text"), " ").as("__ws"))
-          .select(explode(TextFns.winnowedPrints(col("__ws"), 3, 4)).as("p"))
-          .count()
-      }
-      op("winnow_pairs") { Dedup.winnowPairs(docs, "text", "doc_id").count() }
+    op("winnow_prints") {
+      graft.ext.Par.ensure(docs.select("doc_id", "text"))
+        .select(col("doc_id"), split(col("text"), " ").as("__ws"))
+        .select(explode(TextFns.winnowedPrints(col("__ws"), 3, 4)).as("p"))
+        .count()
     }
+    op("winnow_pairs") { Dedup.winnowPairs(docs, "text", "doc_id").count() }
 
     // ---- duplicate spans: the window-frequency agg shuffles ~one row per
     // corpus TOKEN (the heaviest per-token shuffle in the stack) — measured
     // so its growth constant is on record next to the segment/winnow rows.
-    if (!skip("span")) op("span_dup_windows") {
+    op("span_dup_windows") {
       Dedup.duplicateSpanStats(docs, "doc_id", "text")
         .agg(sum("n_dup_windows")).collect()(0).getLong(0)
     }
 
     // ---- bulk BPE: one scan, zero shuffles; cost ∝ corpus chars ----
-    if (!skip("bpe")) op("bpe_tokens") {
+    op("bpe_tokens") {
       graft.ext.Bpe.tokenizeBulkNative(docs, "doc_id", "text",
           graft.ext.Bpe.DemoMerges)
         .agg(sum(size(col("tokens")))).collect()(0).getLong(0)
     }
 
-    if (!skip("neardup")) {
-      val (labels, rounds) = r.timed("pairs_plus_clusters") {
-        // pairs materialized first so this times the cluster rounds, not a
-        // recompute of the LSH pipeline
-        val pairs = Dedup.nearDupPairs(docs, "text", "doc_id", threshold = 0.2)
-          .select("a_id", "b_id").localCheckpoint()
-        val (labels, rounds) = Dedup.dedupClustersWithRounds(pairs)
-        (labels.count(), rounds)
-      }
-      r.add("pairs_plus_clusters_rows", labels)
-      r.add("cluster_rounds", rounds)
+    val (labels, rounds) = r.timed("pairs_plus_clusters") {
+      // pairs materialized first so this times the cluster rounds, not a
+      // recompute of the LSH pipeline
+      val pairs = Dedup.nearDupPairs(docs, "text", "doc_id", threshold = 0.2)
+        .select("a_id", "b_id").localCheckpoint()
+      val (labels, rounds) = Dedup.dedupClustersWithRounds(pairs)
+      (labels.count(), rounds)
     }
+    r.add("pairs_plus_clusters_rows", labels)
+    r.add("cluster_rounds", rounds)
 
-    if (!skip("store")) {
-      // The production refresh path: half the corpus is the "existing"
-      // side, persisted once as the partitioned band store (the ingest-time
-      // artifact); the other half probes it as the refresh batch. Store
-      // build and probe are timed separately — the build amortizes across
-      // refreshes.
-      val half = nDocs / 2
-      val storeDir = Scratch.dir("graft_scale_store")
-      op("band_store_build") {
-        Dedup.writeBands(
-          Dedup.lshBands(
-            Dedup.minhashSig(docs.filter(col("doc_id") < half), "text", "doc_id"),
-            "doc_id"),
-          storeDir)
-        half
-      }
-      op("incr_probe") {
-        Dedup.incrementalNearDupsFromBands(
-          docs.filter(col("doc_id") >= half),
-          spark.read.parquet(storeDir),
-          docs.filter(col("doc_id") < half),
-          "text", "doc_id", threshold = 0.2).count()
-      }
-      // Bloom-accelerated incremental EXACT dedup on the same refresh split:
-      // filter build (treeAggregate over the corpus half) timed apart from
-      // the probe, mirroring the band store's build/probe split.
-      op("bloom_new_docs") {
-        Dedup.bloomNewDocs(
-          docs.filter(col("doc_id") >= half),
-          docs.filter(col("doc_id") < half),
-          "text", "doc_id", fpp = 0.01, expectedItems = half).count()
-      }
+    // The production refresh path: half the corpus is the "existing"
+    // side, persisted once as the partitioned band store (the ingest-time
+    // artifact); the other half probes it as the refresh batch. Store
+    // build and probe are timed separately — the build amortizes across
+    // refreshes.
+    val half = nDocs / 2
+    val storeDir = Scratch.dir("graft_scale_store")
+    op("band_store_build") {
+      Dedup.writeBands(
+        Dedup.lshBands(
+          Dedup.minhashSig(docs.filter(col("doc_id") < half), "text", "doc_id"),
+          "doc_id"),
+        storeDir)
+      half
+    }
+    op("incr_probe") {
+      Dedup.incrementalNearDupsFromBands(
+        docs.filter(col("doc_id") >= half),
+        spark.read.parquet(storeDir),
+        docs.filter(col("doc_id") < half),
+        "text", "doc_id", threshold = 0.2).count()
+    }
+    // Bloom-accelerated incremental EXACT dedup on the same refresh split:
+    // filter build (treeAggregate over the corpus half) timed apart from
+    // the probe, mirroring the band store's build/probe split.
+    op("bloom_new_docs") {
+      Dedup.bloomNewDocs(
+        docs.filter(col("doc_id") >= half),
+        docs.filter(col("doc_id") < half),
+        "text", "doc_id", fpp = 0.01, expectedItems = half).count()
     }
 
     op("token_topk") {
@@ -226,18 +212,6 @@ object Scale {
         count(lit(1)).as("n_total"),
         countDistinct(when(col("q") && col("smp"), col("fp"))).as("n_unique"))
         .collect()(0).getLong(0)
-    }
-
-    // Opt-in: the ONLINE near-dup path — the synthetic corpus replayed
-    // through StreamingNearDup's per-row-signature band stream +
-    // (band,bucket)-keyed state as a real multi-batch file stream.
-    // Comparable to lsh_candidates (same banding, same corpus), but paid
-    // incrementally per micro-batch with bounded state instead of one batch
-    // join. Reported rows = DISTINCT candidate pairs emitted.
-    if (sys.env.get("SPARK_GRAFT_SCALE_STREAM").contains("1")) op("stream_neardup_pairs") {
-      graft.streaming.StreamingNearDup
-        .candidatesFileRun(spark, dir, chunks = 8)
-        .select("a_id", "b_id").distinct().count()
     }
 
     r.fields

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Fns
-import graft.ingest.{FlatTables, Flatten}
+import graft.ingest.{FlatTables, Ingest}
 import graft.plans.{Intervals, Iv}
 import graft.schema.Schemas
 import graft.store.Store
@@ -132,35 +132,10 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
 
   // ------------------------------------------------------------- ingest ----
 
-  /** Flatten one envelope batch and append all 10 tables, height-bucketed and
-    * sorted for min/max pruning. The envelope Dataset is cached once — every
-    * table is a lineage off it (SURVEY §2.9).
-    *
-    * A16: the blocks write carries `observe()` metrics named "graft_ingest"
-    * (processed_blocks / total_txs / empty_blocks — the reference worker's
-    * streaming counters, worker.js:64-68,495-501), retrievable via a
-    * QueryExecutionListener without a second pass over the data. */
-  def ingest(envelopes: DataFrame): FlatTables = {
-    val env = envelopes.cache()
-    try {
-      val tables = Flatten(env)
-      tables.all.foreach { case (name, df) =>
-        val toWrite =
-          if (name == "blocks")
-            df.observe("graft_ingest",
-              count(lit(1)).as("processed_blocks"),
-              coalesce(sum("txs_results_count"), lit(0L)).as("total_txs"),
-              count(when(col("txs_results_count") === 0, 1)).as("empty_blocks"))
-          else df
-        val withBucket = toWrite.withColumn("height_bucket", Fns.heightBucket(col("height")))
-        Store.writeTable(withBucket, path(name),
-          partitionCols = Seq("height_bucket"),
-          sortCols = Seq("height"),
-          bloomCols = Store.bloomColsFor.getOrElse(name, Nil))
-      }
-      tables
-    } finally { env.unpersist(); () }
-  }
+  /** Flatten one envelope batch and append its 13 outputs — the 10 tables
+    * and the 3 MV partials — through the one ingest writer (`Ingest.write`,
+    * which also carries the A16 `observe()` counters). */
+  def ingest(envelopes: DataFrame): FlatTables = Ingest.write(cfg.warehouse, envelopes, None)
 
   // -------------------------------------------------------------- state ----
 

@@ -54,14 +54,21 @@ object Store {
     * partitions); sorting within partitions gives Parquet min/max row-group
     * stats, the analogue of the MergeTree primary index; `bloomCols` adds
     * Parquet bloom filters — the analogue of the reference's
-    * `bloom_filter(0.01)` skip indexes on tx_hash (models.js:124-126). */
+    * `bloom_filter(0.01)` skip indexes on tx_hash (models.js:124-126).
+    * `overwritePartitions` replaces exactly the partitions `df` writes
+    * (dynamic partition overwrite, scoped to this one writer) instead of
+    * appending. */
   def writeTable(df: DataFrame, path: String, partitionCols: Seq[String],
-                 sortCols: Seq[String], bloomCols: Seq[String] = Nil): Unit = {
+                 sortCols: Seq[String], bloomCols: Seq[String] = Nil,
+                 overwritePartitions: Boolean = false): Unit = {
     val sorted =
       if (sortCols.nonEmpty)
         df.sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
       else df
-    var w = sorted.write.mode("append")
+    var w =
+      if (overwritePartitions)
+        sorted.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      else sorted.write.mode("append")
     bloomCols.foreach { c =>
       w = w.option(s"parquet.bloom.filter.enabled#$c", "true")
     }

@@ -3,83 +3,19 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.functions.Fns
-import graft.ingest.Flatten
-import graft.queries.Mvs
+import graft.ingest.Ingest
 import graft.schema.Schemas
-import graft.store.Store
 
 /** Structured-Streaming ingest (SURVEY §2.10): the reference's 10-second
   * polling loop becomes a file-source stream of envelope JSON with a
   * processing-time trigger; offset tracking/resume is the stream checkpoint
-  * (replacing index_state for the streaming path); per-batch flatten + append
-  * reuses the exact batch lineages; the three MVs are maintained
-  * incrementally by appending partial aggregates per micro-batch
-  * (insert-time MV trigger semantics — readers finish with group-by-sum via
-  * `Mvs.readMv`).
+  * (replacing index_state for the streaming path); each micro-batch goes
+  * through the one ingest writer (`Ingest.write`), which flattens, writes
+  * the 10 tables and maintains the three MVs incrementally by writing
+  * partial aggregates per micro-batch (insert-time MV trigger semantics —
+  * readers finish with group-by-sum via `Mvs.readMv`).
   */
 object StreamingIngest {
-
-  /** Submit independent write jobs CONCURRENTLY and await them all. The
-    * 13 per-batch outputs (10 tables + 3 MV deltas) write disjoint paths
-    * from one cached input, so serializing them pays 13 × job-submission
-    * latency for no ordering benefit — measured as the dominant cost of
-    * the 4-batch file-stream gate at sf0.1. Spark's scheduler accepts
-    * concurrent job submission from multiple threads (each write is its
-    * own job); the input cache is materialized by the caller BEFORE the
-    * fan-out so concurrent lineages hit memory, not a recompute race.
-    * Failures propagate — but only AFTER every sibling write has come to
-    * rest: rethrowing on the first failure while other writes are still in
-    * flight would let a foreachBatch retry of the same batch run
-    * concurrently with leftover writes to the same table paths (two jobs
-    * sharing one output's _temporary dir), corrupting the partition
-    * overwrite the exactly-once contract depends on. So: await ALL futures
-    * to completion (success or failure), then rethrow the first failure. */
-  private lazy val writePool =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(
-        // 16, not 8: a batch fans out 13 writes (10 tables + 3 MVs); an
-        // 8-thread pool splits that into two waves and the second wave's
-        // stragglers serialize — measured 30 s → (see BENCH) at the sf1
-        // flat_stream_mv gate. The writes are I/O-commit-bound on tiny
-        // per-batch partitions, so 16 in flight don't contend for cores.
-        16,
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-ingest-write")
-          t.setDaemon(true)
-          t
-        }))
-
-  private def runConcurrently(tasks: Seq[() => Unit]): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.util.Try
-    val fs = tasks.map(t => Future(t())(writePool))
-    // Await every future to quiescence first (Try absorbs the failure so a
-    // later await is never skipped), THEN surface the first error.
-    val results = fs.map(f => Try(Await.result(f, Duration.Inf)))
-    results.collectFirst { case scala.util.Failure(e) => e }.foreach(throw _)
-  }
-
-  /** Start the ingest stream over a directory that receives envelope JSON
-    * files (one object per line). Writes the 10 analytic tables plus the
-    * three MV partial tables under `warehouse`. */
-  def start(spark: SparkSession, inputDir: String, warehouse: String,
-            checkpointDir: String,
-            trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
-            maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    var reader = spark.readStream.schema(Schemas.envelope)
-    maxFilesPerTrigger.foreach(n => reader = reader.option("maxFilesPerTrigger", n))
-    val env = reader.json(inputDir)
-
-    env.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ingestBatch(warehouse, batch)
-      }
-      .start()
-  }
 
   /** Event-time windowed block-rate aggregation with a watermark: counts
     * blocks and txs per tumbling window of block time, tolerating
@@ -100,18 +36,18 @@ object StreamingIngest {
         coalesce(sum(size(col("txs"))), lit(0L)).as("txs"))
   }
 
-  /** Exactly-once ingest stream: same dataflow as [[start]], but every
-    * micro-batch writes through [[ingestBatchExactlyOnce]] keyed by its
-    * batch id, so a batch REDELIVERED after a failure (foreachBatch's
-    * at-least-once contract: crash after a partial write, before the
-    * checkpoint commit) replaces its own output instead of appending a
-    * second copy. */
-  /** `streamTag` namespaces the batch-id partition key so MULTIPLE
+  /** Exactly-once ingest stream: every micro-batch writes through
+    * `Ingest.write` keyed by its batch id, so a batch REDELIVERED after a
+    * failure (foreachBatch's at-least-once contract: crash after a partial
+    * write, before the checkpoint commit) replaces its own output instead of
+    * appending a second copy.
+    *
+    * `streamTag` namespaces the batch-id partition key so MULTIPLE
     * concurrent streams can feed ONE warehouse: without it, two streams
     * both writing `ingest_batch=0` would dynamic-overwrite each other's
-    * partitions. The effective key is `(streamTag << 40) | batchId` —
-    * room for 2^40 batches per stream and 2^23 streams, both orders of
-    * magnitude beyond any trigger cadence × retention. */
+    * partitions. The effective key is [[batchKey]] — room for 2^40
+    * batches per stream and 2^23 streams, both orders of magnitude beyond
+    * any trigger cadence × retention. */
   def startExactlyOnce(spark: SparkSession, inputDir: String, warehouse: String,
                        checkpointDir: String,
                        trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
@@ -132,98 +68,16 @@ object StreamingIngest {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatchExactlyOnce(warehouse, batch, batchId, streamTag,
+        Ingest.write(warehouse, batch, Some(batchKey(streamTag, batchId)),
           cacheInput = format != "parquet")
+        ()
       }
       .start()
   }
 
-  /** Idempotent one-micro-batch ingest — the exactly-once building block.
-    *
-    * `foreachBatch` + plain parquet `append` (the [[ingestBatch]] path) is
-    * at-least-once: the sink append and the checkpoint offset commit are two
-    * non-atomic steps, so a crash between them replays the batch and doubles
-    * its rows. The standard Spark remedy is to make the batch write
-    * IDEMPOTENT in `batchId`: every output table carries `ingest_batch` as
-    * its LEADING partition directory and the write runs in dynamic
-    * partition-overwrite mode, so delivery N+1 of batch K overwrites
-    * exactly the `ingest_batch=K` directories delivery N created — and
-    * nothing else (concurrent/later batches live in their own partitions;
-    * a file-source batch is pinned by checkpointed offsets, so redelivered
-    * content is identical by construction). Readers are untouched:
-    * `ingest_batch` is one more prunable partition column under the same
-    * table paths, dropped by name like `height_bucket`.
-    *
-    * At 100 TB this costs one directory level (batch count is bounded by
-    * trigger cadence, not data volume) and buys crash-safe exactly-once on
-    * any filesystem with atomic task commit — no distributed transaction,
-    * mirroring the reference's idempotent ReplacingMergeTree re-insert
-    * (`/root/reference/src/core/worker.js:216-236` re-runs are absorbed by
-    * the engine; here they are absorbed by the partition overwrite). */
-  /** `cacheInput = false` skips caching the batch input and its flattened
-    * blocks: right when the source is COLUMNAR (parquet staging / landing
-    * zone), where 13 concurrent re-scans of a page-cached micro-batch file
-    * are cheaper than building one compressed InMemoryRelation of nested
-    * rows — the cache build is per-partition SERIAL, so every write lineage
-    * queues behind it (measured: the whole 13-write fan-out stalled in the
-    * fill's 2-5 s shadow at the sf1 stream gate). Keep true for JSON
-    * arrival, where re-parsing text 13× dwarfs the cache build. */
-  def ingestBatchExactlyOnce(warehouse: String, envelopes: DataFrame,
-                             batchId: Long, streamTag: Long = 0L,
-                             cacheInput: Boolean = true): Unit = {
-    // overwrite mode rides each WRITER (DataFrameWriter.option scopes it to
-    // the one write), never the session conf: a session-global set/restore
-    // races concurrent streams sharing the session — a write landing after
-    // another batch's finally-restore would run as a STATIC overwrite and
-    // delete every other batch's partitions
-    val taggedBatch = (streamTag << 40) | batchId
-    // no eager count either way: cached lineages fill the cache
-    // cooperatively (BlockManager locks each partition — the first task
-    // computes and stores, the rest wait on the block), overlapping the
-    // fill with the write fan-out instead of serializing ~2.5 s of
-    // materialization ahead of it (measured at the sf1 stream gate).
-    val env = if (cacheInput) envelopes.cache() else envelopes
-    try {
-      val tables = Flatten(env)
-      val tableWrites = tables.all.map { case (name, df) => () =>
-        val out = df
-          .withColumn("height_bucket", Fns.heightBucket(col("height")))
-          .withColumn("ingest_batch", lit(taggedBatch))
-          .sortWithinPartitions(col("ingest_batch"), col("height_bucket"),
-            col("height"))
-        var w = out.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-        Store.bloomColsFor.getOrElse(name, Nil).foreach { c =>
-          w = w.option(s"parquet.bloom.filter.enabled#$c", "true")
-        }
-        w.partitionBy("ingest_batch", "height_bucket").parquet(s"$warehouse/$name")
-      }
-      val blocks = if (cacheInput) tables.blocks.cache() else tables.blocks
-      try {
-        def mv(df: DataFrame, name: String): Unit =
-          df.withColumn("ingest_batch", lit(taggedBatch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(s"$warehouse/$name")
-        val mvWrites = Seq(
-          () => mv(Mvs.dailyBlockStatsDelta(blocks), "mv_daily_block_stats"),
-          () => mv(Mvs.dailyTxStatsDelta(tables.txs, blocks), "mv_daily_tx_stats"),
-          () => mv(Mvs.eventTypeStatsDelta(tables.txEvents, blocks),
-            "mv_event_type_stats"))
-        runConcurrently(tableWrites ++ mvWrites)
-      } finally { if (cacheInput) { blocks.unpersist(); () } }
-    } finally { if (cacheInput) { env.unpersist(); () } }
-  }
-
-  /** Staged envelope-chunk masters per (stageKey, chunks) per JVM — the
-    * [[StreamStage]] rationale applied to the flatten harness: every rep
-    * of the gate stages the IDENTICAL height-range chunk frame (~5 s at
-    * sf1, re-paid per run before round 14), so a caller that passes a
-    * stable `stageKey` (the sf dir) builds it once and each run COPIES
-    * the masters into its own watched dir. */
-  private val stageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The `ingest_batch` partition key of micro-batch `batchId` of stream
+    * `streamTag`. */
+  def batchKey(streamTag: Long, batchId: Long): Long = (streamTag << 40) | batchId
 
   /** File-stream harness for the FULL 10-table flatten (the streaming twin
     * of the batch flatten gates): stage `envelopes` as `chunks` height-range
@@ -232,22 +86,25 @@ object StreamingIngest {
     * the gate's dominant cost, harness not engine; the exactly-once path
     * under test is format-agnostic past the source), feed them to a running
     * [[startExactlyOnce]] stream one file per micro-batch
-    * (rename-into-watched-dir, drained between arrivals, the
+    * ([[StreamStage]] staging and atomic feed, drained between arrivals, the
     * [[StreamingDedup.firstSeenWinsFileRun]] pattern), and — when
     * `replayLastBatch` — PLANT a redelivery by re-running the final batch
-    * through [[ingestBatchExactlyOnce]] with the same batch id after the
+    * through `Ingest.write` with the same batch key after the
     * stream stops, proving the overwrite absorbs it. Returns the warehouse
     * directory. The JSON arrival format keeps its own streaming coverage in
-    * StreamingSpec (start/startExactlyOnce default to `format = "json"`). */
+    * StreamingSpec (startExactlyOnce defaults to `format = "json"`). A
+    * non-empty `stageKey` (the sf dir) builds the chunk staging once per
+    * JVM: every rep of the gate stages the IDENTICAL frame (~5 s at sf1). */
   def flattenFileRun(spark: SparkSession, envelopes: DataFrame, chunks: Int = 4,
                      replayLastBatch: Boolean = true,
                      stageKey: String = ""): String = {
-    import org.apache.hadoop.fs.{FileUtil, Path}
+    import org.apache.hadoop.fs.Path
     val stage = graft.Scratch.dir("graft_sflat")
     val inDir = s"$stage/in"
     val wh = s"$stage/wh"; val ckpt = s"$stage/ckpt"
 
-    def buildChunks(dir: String): String = {
+    val parts = StreamStage.staged(spark,
+        if (stageKey.isEmpty) "" else s"flatten:$stageKey#$chunks") { dir =>
       envelopes
         .repartitionByRange(chunks, col("height"))
         // SMALL ROW GROUPS (1 MiB vs the 128 MiB default): a chunk written
@@ -261,32 +118,9 @@ object StreamingIngest {
         // which is exactly what this staging models.
         .write.mode("overwrite").option("parquet.block.size", 1L << 20)
         .parquet(dir)
-      dir
     }
-    val cached = stageKey.nonEmpty
-    val chunkDir =
-      if (cached)
-        stageCache.computeIfAbsent(s"$stageKey#$chunks",
-          _ => buildChunks(graft.Scratch.dir("graft_sflat_master") + "/chunks"))
-      else buildChunks(s"$stage/chunks")
-
-    val hconf = spark.sessionState.newHadoopConf()
-    val fs = new Path(stage).getFileSystem(hconf)
-    val parts = fs.listStatus(new Path(chunkDir)).map(_.getPath)
-      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
+    val fs = new Path(stage).getFileSystem(spark.sessionState.newHadoopConf())
     fs.mkdirs(new Path(inDir))
-    // cached masters must SURVIVE for the next run: copy — but NEVER copy
-    // directly into the watched dir (the polling source could list a
-    // half-written file with no parquet footer). Copy to a sibling tmp
-    // path, then rename in (atomic on local/HDFS filesystems); per-run
-    // staging renames directly.
-    def deliver(part: Path, dest: Path): Unit =
-      if (cached) {
-        val tmp = new Path(s"$stage/tmp-${dest.getName}")
-        FileUtil.copy(fs, part, fs, tmp, false, hconf)
-        fs.rename(tmp, dest); ()
-      } else { fs.rename(part, dest); () }
 
     // Split-tuned CLONED session for the stream (and the redelivery read):
     // a micro-batch arrives as ONE staged parquet file, and the session
@@ -319,8 +153,8 @@ object StreamingIngest {
     // parent session's zone rather than trusting SparkConf inheritance
     ss.conf.set("spark.sql.session.timeZone",
       spark.sessionState.conf.sessionLocalTimeZone)
-    // ONE file per micro-batch, delivered ATOMICALLY (deliver() renames
-    // into the watched dir): a multi-file group under the continuously
+    // ONE file per micro-batch, delivered ATOMICALLY (StreamStage.feed
+    // renames into the watched dir): a multi-file group under the continuously
     // polling 0-second trigger can SPLIT into unplanned micro-batches
     // (maxFilesPerTrigger is a max, not a min — the source may commit a
     // batch between two deliveries), which would desynchronize the planted
@@ -334,7 +168,7 @@ object StreamingIngest {
       format = "parquet")
     try {
       parts.zipWithIndex.foreach { case (part, i) =>
-        deliver(part, new Path(inDir, f"chunk-$i%05d.parquet"))
+        StreamStage.feed(spark, part, inDir, i)
         q.processAllAvailable()
       }
     } finally q.stop()
@@ -345,39 +179,8 @@ object StreamingIngest {
       // (parallel) scan shape as the stream's own delivery did
       val redelivered = ss.read.schema(Schemas.envelope)
         .parquet(s"$inDir/chunk-${"%05d".format(parts.length - 1)}.parquet")
-      ingestBatchExactlyOnce(wh, redelivered, lastId, cacheInput = false)
+      Ingest.write(wh, redelivered, Some(batchKey(0L, lastId)), cacheInput = false)
     }
     wh
-  }
-
-  /** One micro-batch: flatten once (cached), append all tables bucketed by
-    * height, append MV partial aggregates for the affected dates. */
-  def ingestBatch(warehouse: String, envelopes: DataFrame): Unit = {
-    // cache without an eager count — the concurrent lineages fill it
-    // cooperatively under BlockManager's per-partition locks, overlapping
-    // the fill with the write fan-out (the ingestBatchExactlyOnce note)
-    val env = envelopes.cache()
-    try {
-      val tables = Flatten(env)
-      val tableWrites = tables.all.map { case (name, df) => () =>
-        Store.writeTable(
-          df.withColumn("height_bucket", Fns.heightBucket(col("height"))),
-          s"$warehouse/$name",
-          partitionCols = Seq("height_bucket"),
-          sortCols = Seq("height"),
-          bloomCols = Store.bloomColsFor.getOrElse(name, Nil))
-      }
-      val blocks = tables.blocks.cache()
-      try {
-        val mvWrites = Seq(
-          () => Mvs.dailyBlockStatsDelta(blocks)
-            .write.mode("append").parquet(s"$warehouse/mv_daily_block_stats"),
-          () => Mvs.dailyTxStatsDelta(tables.txs, blocks)
-            .write.mode("append").parquet(s"$warehouse/mv_daily_tx_stats"),
-          () => Mvs.eventTypeStatsDelta(tables.txEvents, blocks)
-            .write.mode("append").parquet(s"$warehouse/mv_event_type_stats"))
-        runConcurrently(tableWrites ++ mvWrites)
-      } finally { blocks.unpersist(); () }
-    } finally { env.unpersist(); () }
   }
 }

@@ -1,0 +1,68 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import graft.ingest.Ingest
+
+/** The one ingest writer under a failed output: a keyed batch whose write
+  * fails on one of its 13 outputs, redelivered under the same key, leaves
+  * the warehouse a clean single delivery would. */
+class IngestSpec extends SparkTestBase {
+  import spark.implicits._
+  import IngestSpec.outputs
+  private def digest(wh: String, name: String) = IngestSpec.digest(spark, wh, name)
+
+  /** Every output gets rows: odd heights carry a wasm event, even ones a
+    * message event, and every block a finalize event with an attribute. */
+  private def batch0: DataFrame = spark.read.schema(graft.schema.Schemas.envelope)
+    .json(Seq(1L, 2L, 3L).map(h =>
+      s"""{"height":$h,"time":"2025-07-0${1 + (h % 2)}T00:00:00Z","app_hash":"A$h","txs":["dGVzdA=="],"txs_results":[{"code":${h % 2},"gas_wanted":"10","gas_used":"${h * 10}","data":"","log":"","events":[{"type":"${if (h % 2 == 0) "message" else "wasm"}","attributes":[{"key":"k","value":"v$h","index":true}]}]}],"finalize_block_events":[{"type":"fin","attributes":[{"key":"fk","value":"fv$h","index":false}]}]}""").toDS)
+
+  private def tmpDir(prefix: String) =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  test("keyed write fails on any one of 13 outputs; redelivery equals a clean run") {
+    val clean = tmpDir("graft_ingest_clean")
+    Ingest.write(clean, batch0, Some(0L))
+    val expected = outputs.map(o => o -> digest(clean, o)).toMap
+    assert(expected.values.forall(_._1 > 0), s"every output gets rows: $expected")
+
+    for (failing <- outputs) {
+      val wh = tmpDir("graft_ingest_fault")
+      val planted = java.nio.file.Paths.get(wh, failing)
+      java.nio.file.Files.write(planted, "not a table".getBytes)
+      intercept[Exception](Ingest.write(wh, batch0, Some(0L)))
+      // the failure surfaced only after every sibling write had committed:
+      // a dynamic-overwrite job stages under .spark-staging-<job> and only
+      // its commit moves the ingest_batch=0 partition into place
+      for (o <- outputs if o != failing) {
+        val dir = new java.io.File(wh, o)
+        assert(new java.io.File(dir, "ingest_batch=0").isDirectory,
+          s"$failing failed: $o not committed")
+        assert(!dir.list().exists(_.startsWith(".spark-staging")),
+          s"$failing failed: $o still staging")
+      }
+      java.nio.file.Files.delete(planted)
+      Ingest.write(wh, batch0, Some(0L))
+      for (o <- outputs)
+        assert(digest(wh, o) === expected(o), s"$o after a failed $failing write and redelivery")
+    }
+  }
+}
+
+object IngestSpec {
+  /** The 13 outputs `Ingest.write` writes under a warehouse. */
+  val outputs: Seq[String] = Seq("blocks", "txs", "tx_events", "tx_event_attrs_json",
+    "type_wasm", "type_wasm_attrs", "type_message", "type_message_attrs",
+    "block_events", "block_event_attrs",
+    "mv_daily_block_stats", "mv_daily_tx_stats", "mv_event_type_stats")
+
+  /** Row count plus the sorted multiset of row hashes: order-independent.
+    * `created_at` outside `blocks` is processing time, so it is left out. */
+  def digest(spark: SparkSession, wh: String, name: String): (Long, Seq[Long]) = {
+    val df = spark.read.parquet(s"$wh/$name")
+    val cols = df.columns.filterNot(c => c == "created_at" && name != "blocks")
+    val hashes = df.select(xxhash64(cols.map(col): _*)).collect().map(_.getLong(0)).sorted
+    (hashes.length.toLong, hashes.toSeq)
+  }
+}

@@ -212,6 +212,68 @@ class PipelineSpec extends SparkTestBase {
     assert(spark.read.parquet(s"$dir/type_message_attrs").count() === 2)
   }
 
+  test("runOnce keeps the three MVs current: each MV read equals its recompute") {
+    import graft.queries.Mvs
+    val dir = java.nio.file.Files.createTempDirectory("graft_wh_mv").toString
+    val p = new Pipeline(spark, PipelineConfig(
+      warehouse = dir, startHeight = 1, assignRange = 10, numWorkers = 2,
+      backfillMode = true, now = () => { clock += 1; clock }))
+    // two items over heights spread across two days, with failed txs
+    val fetch = (iv: Iv) => {
+      val json = (iv.start to iv.end).map(h =>
+        s"""{"height":$h,"time":"2025-06-0${1 + h % 2}T12:00:00Z","app_hash":"AH$h","txs":["dGVzdA=="],"txs_results":[{"code":${h % 3},"gas_wanted":"10","gas_used":"${h * 7}","data":"","log":"","events":[{"type":"${if (h % 2 == 0) "message" else "wasm"}","attributes":[]}]}],"finalize_block_events":[{"type":"fin","attributes":[]}]}""")
+      spark.read.schema(Schemas.envelope).json(json.toDS)
+    }
+    assert(p.runOnce(tip = 20, fetch) === Some(Iv(1, 10)))
+    assert(p.runOnce(tip = 20, fetch) === Some(Iv(11, 20)))
+    val blocks = p.readTable("blocks")
+    val txs = spark.read.parquet(s"$dir/txs")
+    val txEvents = spark.read.parquet(s"$dir/tx_events")
+    def partials(mv: String) = spark.read.parquet(s"$dir/$mv")
+    def rows(df: DataFrame, cols: String*) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+
+    val mv1 = Seq("date", "blocks_count", "total_txs", "total_events")
+    assert(rows(Mvs.readMv(partials("mv_daily_block_stats"), Seq("date")), mv1: _*) ===
+      rows(Mvs.dailyBlockStatsRecompute(blocks), mv1: _*))
+    val mv2 = Seq("date", "tx_count", "total_gas_used", "failed_txs", "avg_gas_used")
+    val mv2Read = rows(Mvs.readDailyTxStats(partials("mv_daily_tx_stats")), mv2: _*)
+    assert(mv2Read.size === 2)
+    assert(mv2Read === rows(Mvs.dailyTxStatsRecompute(txs, blocks), mv2: _*))
+    val mv3 = Seq("date", "type", "event_count")
+    assert(rows(Mvs.readMv(partials("mv_event_type_stats"), Seq("date", "type")), mv3: _*) ===
+      rows(Mvs.eventTypeStatsRecompute(txEvents, blocks), mv3: _*))
+  }
+
+  test("runOnce over a lazy RPC fetch failing one height once: nothing commits, the retry equals one clean delivery") {
+    val client = new RpcClient(
+      RpcConfig(Seq("http://one"), retriesPerEndpoint = 2, sleeper = _ => ()), FlakyChain.transport)
+    val fetch = (lo: Long, hi: Long) => RpcSource.fetchEnvelopes(spark, client, lo, hi, parallelism = 2)
+    def warehouse(prefix: String) = {
+      val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+      (dir, new Pipeline(spark, PipelineConfig(
+        warehouse = dir, startHeight = 1, assignRange = 10, numWorkers = 2,
+        backfillMode = true, now = () => { clock += 1; clock })))
+    }
+    val (clean, pClean) = warehouse("graft_wh_clean")
+    FlakyChain.failuresLeft.set(0)
+    pClean.ingest(fetch(1, 10))
+
+    val (wh, p) = warehouse("graft_wh_flaky")
+    // the first fetch of the flaky height fails both attempts on the one
+    // endpoint; any later fetch of it succeeds
+    FlakyChain.failuresLeft.set(2)
+    assert(p.runOnce(tip = 10, iv => fetch(iv.start, iv.end)) === Some(Iv(1, 10)))
+    assert(p.workQueue().collect().map(_.getAs[String]("status")).toSeq === Seq("failed"))
+    for (o <- IngestSpec.outputs)
+      assert(!new java.io.File(wh, o).exists(), s"$o committed by a failed fetch")
+    clock += 3600 // past the retry backoff
+    assert(p.retryFailedBlocks(hs => fetch(hs.min, hs.max)) === ((10L, 0L)))
+    for (o <- IngestSpec.outputs)
+      assert(IngestSpec.digest(spark, wh, o) === IngestSpec.digest(spark, clean, o),
+        s"$o after the failed item and its retry")
+  }
+
   test("claimNext: forward-priority window skips old ranges unless backfilling") {
     val dir = java.nio.file.Files.createTempDirectory("graft_wh3").toString
     val p = new Pipeline(spark, PipelineConfig(
@@ -303,6 +365,24 @@ class PipelineSpec extends SparkTestBase {
     assert(statuses.count(_._2 == "done") === 2)
     assert(statuses.map(_._1).distinct.length === statuses.length,
       "re-seeding duplicated work items")
+  }
+}
+
+/** A one-endpoint RPC chain over heights that fill all 13 ingest outputs;
+  * `/block` at `FlakyHeight` fails while `failuresLeft` is positive. The
+  * counter is JVM-wide, so in local mode a Spark task that fetches the
+  * height after an earlier failed fetch sees the recovery. */
+object FlakyChain {
+  val FlakyHeight = 3L
+  val failuresLeft = new java.util.concurrent.atomic.AtomicInteger(0)
+  val transport: (String, String) => String = (_, path) => {
+    val h = path.substring(path.indexOf("height=") + 7).toLong
+    if (path.startsWith("/block_results"))
+      s"""{"result":{"txs_results":[{"code":${h % 2},"gas_wanted":"10","gas_used":"${h * 10}","data":"","log":"","events":[{"type":"${if (h % 2 == 0) "message" else "wasm"}","attributes":[{"key":"k","value":"v$h","index":true}]}]}],"finalize_block_events":[{"type":"fin","attributes":[{"key":"fk","value":"fv$h","index":false}]}]}}"""
+    else if (h == FlakyHeight && failuresLeft.getAndDecrement() > 0)
+      throw new java.io.IOException(s"503 for height $h")
+    else
+      s"""{"result":{"block":{"header":{"time":"2025-07-0${1 + h % 2}T00:00:00Z","app_hash":"A$h"},"data":{"txs":["dGVzdA=="]}}}}"""
   }
 }
 

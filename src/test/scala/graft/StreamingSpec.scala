@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.ingest.Ingest
 import graft.queries.Mvs
 import graft.streaming.StreamingIngest
 
@@ -25,7 +26,7 @@ class StreamingSpec extends SparkTestBase {
     writeEnvelopeFile(in, "batch1.json", Seq(1L, 2L))
     // AvailableNow self-terminates; a bounded wait could leave the stream
     // running under CPU contention and corrupt the shared checkpoint.
-    val q1 = StreamingIngest.start(spark, in, wh, cp, Trigger.AvailableNow())
+    val q1 = StreamingIngest.startExactlyOnce(spark, in, wh, cp, Trigger.AvailableNow())
     q1.awaitTermination()
 
     assert(spark.read.parquet(s"$wh/blocks").count() === 2)
@@ -33,7 +34,7 @@ class StreamingSpec extends SparkTestBase {
 
     // second file arrives; restart from checkpoint picks up ONLY the new file
     writeEnvelopeFile(in, "batch2.json", Seq(3L))
-    val q2 = StreamingIngest.start(spark, in, wh, cp, Trigger.AvailableNow())
+    val q2 = StreamingIngest.startExactlyOnce(spark, in, wh, cp, Trigger.AvailableNow())
     q2.awaitTermination()
 
     val blocks = spark.read.parquet(s"$wh/blocks")
@@ -41,8 +42,13 @@ class StreamingSpec extends SparkTestBase {
     assert(blocks.select("height").orderBy("height").collect().map(_.getLong(0)).toSeq
       === Seq(1L, 2L, 3L))
 
-    // MV partials were appended per batch; read finishes the aggregation
-    val mv2 = Mvs.readDailyTxStats(spark.read.parquet(s"$wh/mv_daily_tx_stats"))
+    // one ingest_batch partition per micro-batch: 0, then 1 after restart
+    assert(blocks.select(col("ingest_batch").cast("long")).distinct().orderBy("ingest_batch")
+      .collect().map(_.getLong(0)).toSeq === Seq(0L, 1L))
+
+    // MV partials were written per batch; read finishes the aggregation
+    val mv2 = Mvs.readDailyTxStats(
+        spark.read.parquet(s"$wh/mv_daily_tx_stats").drop("ingest_batch"))
       .orderBy("date").collect()
     // heights 1,3 -> day 2025-06-02 (h%2=1), height 2 -> 2025-06-01
     val byDate = mv2.map(r => r.getDate(0).toString ->
@@ -113,7 +119,7 @@ class StreamingSpec extends SparkTestBase {
     def counts(): Map[String, Long] =
       allTables.map(t => t -> spark.read.parquet(s"$wh/$t").count()).toMap
 
-    StreamingIngest.ingestBatchExactlyOnce(wh, env(Seq(1, 2)), batchId = 0L)
+    Ingest.write(wh, env(Seq(1, 2)), Some(0L))
     val after0 = counts()
     assert(after0("blocks") === 2 && after0("txs") === 2)
     assert(after0("type_wasm") === 1 && after0("type_message") === 1)
@@ -121,11 +127,11 @@ class StreamingSpec extends SparkTestBase {
 
     // planted redelivery of batch 0: every table must be byte-for-count
     // identical — the dynamic partition overwrite replaces ingest_batch=0
-    StreamingIngest.ingestBatchExactlyOnce(wh, env(Seq(1, 2)), batchId = 0L)
+    Ingest.write(wh, env(Seq(1, 2)), Some(0L))
     assert(counts() === after0, "redelivered batch must not change any table")
 
     // a NEW batch id appends next to it (its own partitions)
-    StreamingIngest.ingestBatchExactlyOnce(wh, env(Seq(3)), batchId = 1L)
+    Ingest.write(wh, env(Seq(3)), Some(1L))
     val after1 = counts()
     assert(after1("blocks") === 3 && after1("txs") === 3)
 
@@ -213,13 +219,11 @@ class StreamingSpec extends SparkTestBase {
       // interleaved REDELIVERY of A's batch 0 while stream B is live —
       // then B keeps ingesting: A's dynamic overwrite must touch only
       // (tag=1, batch=0) partitions, never B's
-      StreamingIngest.ingestBatchExactlyOnce(wh, envDf(Seq(1L, 2L)),
-        batchId = 0L, streamTag = 1L)
+      Ingest.write(wh, envDf(Seq(1L, 2L)), Some(StreamingIngest.batchKey(1L, 0L)))
       writeFile(inB, "b1.json", Seq(103L)); qB.processAllAvailable()
       writeFile(inA, "a1.json", Seq(3L)); qA.processAllAvailable()
       // and a redelivery of B's batch 1 while A is live
-      StreamingIngest.ingestBatchExactlyOnce(wh, envDf(Seq(103L)),
-        batchId = 1L, streamTag = 2L)
+      Ingest.write(wh, envDf(Seq(103L)), Some(StreamingIngest.batchKey(2L, 1L)))
     } finally { qA.stop(); qB.stop() }
 
     val blocks = spark.read.parquet(s"$wh/blocks")
@@ -255,8 +259,8 @@ class StreamingSpec extends SparkTestBase {
     def env(heights: Seq[Long]) = spark.read.schema(graft.schema.Schemas.envelope)
       .json(heights.map(h =>
         s"""{"height":$h,"time":"2025-07-01T00:00:00Z","app_hash":"A","txs":[],"txs_results":[],"finalize_block_events":[{"type":"t$h","attributes":[]}]}""").toDS)
-    StreamingIngest.ingestBatch(wh, env(Seq(1, 2)))
-    StreamingIngest.ingestBatch(wh, env(Seq(3)))
+    Ingest.write(wh, env(Seq(1, 2)), None)
+    Ingest.write(wh, env(Seq(3)), None)
     val mv1 = Mvs.readMv(
       spark.read.parquet(s"$wh/mv_daily_block_stats"), Seq("date")).collect()
     assert(mv1.length === 1)

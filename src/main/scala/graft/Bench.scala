@@ -47,7 +47,7 @@ object Bench {
     val ingestSamples = (1 to reps).flatMap { r =>
       try {
         val wh = java.nio.file.Files.createTempDirectory("graft_bench_wh").toString
-        val env = syntheticEnvelopes(spark, nBlocks)
+        val env = graft.fixtures.Fixtures.envelopes(spark, 1, nBlocks)
         val t0 = System.nanoTime()
         graft.ingest.Ingest.write(wh, env, None)
         Some((System.nanoTime() - t0) / 1e9)
@@ -126,35 +126,5 @@ object Bench {
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"flaky":$flaky,"n_queries":${results.size},"reps":$reps,"ingest_blocks_per_min":$blocksPerMin,"ingest_blocks":$nBlocks,"era_quality":${f"$eraQuality%.1f"},"sf":"$sfDir"}""")
     spark.stop()
-  }
-
-  /** Synthesized envelope batch: 5 txs x 2 events x 2 attrs per block —
-    * denser than the flat_* correctness fixtures (1 tx/block) to match the
-    * reference's tx-volume-dependent throughput claim. */
-  private def syntheticEnvelopes(spark: SparkSession, nBlocks: Int) = {
-    import org.apache.spark.sql.functions._
-    spark.range(1, nBlocks + 1L).select(
-      col("id").as("height"),
-      date_format(
-        timestamp_seconds(lit(1748736000L) + col("id") % 86400), // 2025-06-01 +
-        "yyyy-MM-dd'T'HH:mm:ss'Z'").as("time"),
-      md5(col("id").cast("string")).as("app_hash"),
-      transform(sequence(lit(1), lit(5)),
-        i => base64(concat(col("id").cast("string"), lit("|tx"), i).cast("binary")))
-        .as("txs"),
-      transform(sequence(lit(1), lit(5)), i => struct(
-        (i % 4).cast("int").as("code"),
-        (col("id") % 1000 + 100).cast("string").as("gas_wanted"),
-        (col("id") % 900 + 90).cast("string").as("gas_used"),
-        base64(concat(lit("d"), i).cast("binary")).as("data"),
-        lit("ok").as("log"),
-        transform(sequence(lit(1), lit(2)), e => struct(
-          when(e % 2 === 0, "message").otherwise("wasm").as("type"),
-          transform(sequence(lit(1), lit(2)), a => struct(
-            concat(lit("k"), a).as("key"),
-            concat(col("id").cast("string"), lit("-"), i, lit("-"), e).as("value"),
-            lit(true).as("index"))).as("attributes"))).as("events"))).as("txs_results"),
-      lit(null).cast(graft.schema.Schemas.envelope("finalize_block_events").dataType)
-        .as("finalize_block_events"))
   }
 }

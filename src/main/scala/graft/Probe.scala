@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ladders.{Ann, Crawl, Funnel, Link, Scale}
+import graft.ladders.{Ann, Crawl, Funnel, Link, Loop, Scale}
 
 /** The scale ladders behind the recorded scale claims, as one main:
   *
@@ -14,6 +14,7 @@ import graft.ladders.{Ann, Crawl, Funnel, Link, Scale}
   *   link   [nRows=10000000] [iterations=3] outlinks -> frontier -> pagerank
   *   funnel [nRows=10000000]                composed curation funnel
   *   crawl  [nRows=1000000] [cap=100]       composed crawl loop
+  *   loop   [preloaded=400000] [items=8]    driver loop over a pre-loaded warehouse
   * }}}
   *
   * A ladder (`graft.ladders`) maps the session, the sf dir and its rung
@@ -38,7 +39,8 @@ object Probe {
     "ann" -> Ann.run _,
     "link" -> Link.run _,
     "funnel" -> Funnel.run _,
-    "crawl" -> Crawl.run _)
+    "crawl" -> Crawl.run _,
+    "loop" -> Loop.run _)
 
   /** Wall seconds of `body`, and its result. */
   def time[T](body: => T): (Double, T) = {

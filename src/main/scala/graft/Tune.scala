@@ -26,7 +26,13 @@ package graft
   * A/B above); sf1 → 47 (within noise of the old 32 on every probed heavy
   * query). A cluster deployment sizes this to its own data via the same
   * rule; [[Session]] reads SPARK_GRAFT_SHUFFLE_PARTITIONS as the explicit
-  * override used by the p2048 cluster-profile rehearsal. */
+  * override used by the p2048 cluster-profile rehearsal.
+  *
+  * The rule has a second caller: `graft.ingest.Ingest.write` sizes the
+  * write partitions of an unkeyed batch from its filled input cache with
+  * [[partitionsFor]] at floor 1. Its 13 outputs already write concurrently,
+  * so splitting each output across the cores only adds per-task cost and
+  * files. */
 object Tune {
 
   private val BytesPerPartition: Long = 4L << 20
@@ -43,11 +49,16 @@ object Tune {
       finally s.close()
     } catch { case _: Exception => 0L }
 
+  /** The sizing rule: one partition per ~4 MiB of `bytes`, at least
+    * `floor`, at most 4096. */
+  def partitionsFor(bytes: Long, floor: Int): Int =
+    math.min(4096L,
+      math.max(floor.toLong, (bytes + BytesPerPartition - 1) / BytesPerPartition)).toInt
+
   /** Size-derived shuffle-partition default; see object doc. */
   def shufflePartitions(sfDir: String): Int = {
     val bytes = inputBytes(sfDir)
     if (bytes <= 0L) 200 // unknown input: fall back to Spark's own default
-    else math.min(4096L,
-      math.max(4L, (bytes + BytesPerPartition - 1) / BytesPerPartition)).toInt
+    else partitionsFor(bytes, floor = 4)
   }
 }

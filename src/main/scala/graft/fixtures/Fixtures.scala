@@ -1,6 +1,6 @@
 package graft.fixtures
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic gate/spec fixtures, OUT of the operator namespace
@@ -308,4 +308,34 @@ object Fixtures {
         (col(idCol) % 64 + 16).cast("int").as("width"),
         (col(idCol) % 48 + 16).cast("int").as("height"),
         (col(idCol) * 40L).as("duration_ms")).as("meta"))
+
+  /** Synthesized RPC envelopes for heights [from, to]: 5 txs x 2 events x
+    * 2 attrs per block — denser than the flat_* correctness fixtures (1
+    * tx/block) to match the reference's tx-volume-dependent throughput
+    * claim. `graft.Bench` times its ingest on them and the `loop` ladder
+    * fetches its items from them. */
+  def envelopes(spark: SparkSession, from: Long, to: Long): DataFrame =
+    spark.range(from, to + 1).select(
+      col("id").as("height"),
+      date_format(
+        timestamp_seconds(lit(1748736000L) + col("id") % 86400), // 2025-06-01 +
+        "yyyy-MM-dd'T'HH:mm:ss'Z'").as("time"),
+      md5(col("id").cast("string")).as("app_hash"),
+      transform(sequence(lit(1), lit(5)),
+        i => base64(concat(col("id").cast("string"), lit("|tx"), i).cast("binary")))
+        .as("txs"),
+      transform(sequence(lit(1), lit(5)), i => struct(
+        (i % 4).cast("int").as("code"),
+        (col("id") % 1000 + 100).cast("string").as("gas_wanted"),
+        (col("id") % 900 + 90).cast("string").as("gas_used"),
+        base64(concat(lit("d"), i).cast("binary")).as("data"),
+        lit("ok").as("log"),
+        transform(sequence(lit(1), lit(2)), e => struct(
+          when(e % 2 === 0, "message").otherwise("wasm").as("type"),
+          transform(sequence(lit(1), lit(2)), a => struct(
+            concat(lit("k"), a).as("key"),
+            concat(col("id").cast("string"), lit("-"), i, lit("-"), e).as("value"),
+            lit(true).as("index"))).as("attributes"))).as("events"))).as("txs_results"),
+      lit(null).cast(graft.schema.Schemas.envelope("finalize_block_events").dataType)
+        .as("finalize_block_events"))
 }

@@ -1,7 +1,8 @@
 package graft.ingest
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import graft.Tune
 import graft.functions.Fns
 import graft.queries.Mvs
 import graft.store.Store
@@ -15,6 +16,20 @@ import graft.store.Store
   * write through [[write]].
   */
 object Ingest {
+
+  /** What one [[write]] wrote: the flattened tables and the blocks write's
+    * `graft_ingest` observation. */
+  final class Ingested(val tables: FlatTables, blocksObserved: Observation) {
+    /** Highest height the blocks write committed (None when it wrote no
+      * rows). Waits for the observation, which Spark's listener bus
+      * delivers after the write; a delivery that never comes fails loudly
+      * instead of blocking forever. */
+    def maxHeight: Option[Long] = {
+      val row = scala.concurrent.Await.result(blocksObserved.future,
+        scala.concurrent.duration.Duration(5, "min"))
+      Option(row.getAs[java.lang.Long]("max_height")).map(_.longValue)
+    }
+  }
 
   /** Submit independent write jobs CONCURRENTLY and await them all. The
     * 13 per-batch outputs write disjoint paths from one cached input, so
@@ -64,8 +79,10 @@ object Ingest {
     * and bloom-indexed per `Store.bloomColsFor`; the blocks write carries
     * the A16 `observe()` metrics named "graft_ingest" (processed_blocks /
     * total_txs / empty_blocks — the reference worker's streaming counters,
-    * worker.js:64-68,495-501), retrievable via a QueryExecutionListener
-    * without a second pass over the data.
+    * worker.js:64-68,495-501 — plus max_height, which the driver loop's
+    * height watermark advances from), retrievable via a
+    * QueryExecutionListener or [[Ingested.maxHeight]] without a second
+    * pass over the data.
     *
     * `key = None` appends. `key = Some(k)` is the exactly-once layout:
     * every output carries `ingest_batch = k` as its LEADING partition
@@ -81,12 +98,20 @@ object Ingest {
     * races concurrent streams sharing the session.
     *
     * An append cannot be undone, so `key = None` caches the input and
-    * fills the cache with one count BEFORE any write starts: an input that
+    * fills the cache with one pass BEFORE any write starts: an input that
     * cannot be read (an RPC height failing every retry) then fails the call
     * with nothing committed. Without it the failure would sink only the
     * write whose task held that partition's cache lock; each sibling write
     * would re-fetch the height itself and could commit, and the caller's
     * retry of the whole range would append those rows twice.
+    *
+    * After that fill the unkeyed input is coalesced to the partition count
+    * [[Tune.partitionsFor]] gives for the filled cache's size (floor 1):
+    * the 13 outputs already write concurrently, so splitting each one
+    * across the cores adds per-task cost and files, not parallelism. A
+    * 200-height driver-loop item writes 13 single-task jobs and one file
+    * per table (was 4 of each on 4 cores). The keyed path keeps its
+    * input's partitioning.
     *
     * `cacheInput = false` (keyed writes only; a redelivery overwrites any
     * partial commit) skips caching the input and its flattened blocks:
@@ -97,9 +122,9 @@ object Ingest {
     * behind it (measured: the whole fan-out stalled in the fill's 2-5 s
     * shadow at the sf1 stream gate). Keep true for JSON arrival, where
     * re-parsing 13× dwarfs the cache build. A keyed write does no eager
-    * count: the fill overlaps the write fan-out. */
+    * fill: the fill overlaps the write fan-out. */
   def write(warehouse: String, envelopes: DataFrame, key: Option[Long],
-            cacheInput: Boolean = true): FlatTables = {
+            cacheInput: Boolean = true): Ingested = {
     def save(df: DataFrame, name: String, partitionCols: Seq[String],
              sortCols: Seq[String]): Unit =
       Store.writeTable(
@@ -113,17 +138,26 @@ object Ingest {
     val cached = cacheInput || key.isEmpty
     val env = if (cached) envelopes.cache() else envelopes
     try {
-      if (key.isEmpty) env.count()
-      val tables = Flatten(env)
+      val input =
+        if (key.isDefined) env
+        else {
+          // the fill: one job, no shuffle (a count would add an aggregate
+          // stage); computing each cached partition stores all of it
+          env.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())
+          env.coalesce(writePartitions(env))
+        }
+      val tables = Flatten(input)
       val blocks = if (cached) tables.blocks.cache() else tables.blocks
+      val blocksObserved = Observation("graft_ingest")
       try {
         val tableWrites = tables.all.map { case (name, df) => () =>
           val observed =
             if (name == "blocks")
-              df.observe("graft_ingest",
+              df.observe(blocksObserved,
                 count(lit(1)).as("processed_blocks"),
                 coalesce(sum("txs_results_count"), lit(0L)).as("total_txs"),
-                count(when(col("txs_results_count") === 0, 1)).as("empty_blocks"))
+                count(when(col("txs_results_count") === 0, 1)).as("empty_blocks"),
+                max("height").as("max_height"))
             else df
           save(observed.withColumn("height_bucket", Fns.heightBucket(col("height"))),
             name, Seq("height_bucket"), Seq("height"))
@@ -134,8 +168,19 @@ object Ingest {
           () => save(Mvs.eventTypeStatsDelta(tables.txEvents, blocks),
             "mv_event_type_stats", Nil, Nil))
         runConcurrently(tableWrites ++ mvWrites)
-        tables
+        new Ingested(tables, blocksObserved)
       } finally { if (cached) { blocks.unpersist(); () } }
     } finally { if (cached) { env.unpersist(); () } }
+  }
+
+  /** Write partitions of an unkeyed batch whose input cache `filled` was
+    * just filled: [[Tune.partitionsFor]] over the bytes the cache holds,
+    * read live from the cached relation (a plan's memoized statistics could
+    * predate the fill). An input that is not cached keeps its partitions. */
+  private def writePartitions(filled: DataFrame): Int = {
+    val ds = filled.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val bytes = ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+      .fold(BigInt(Long.MaxValue))(_.cachedRepresentation.computeStats().sizeInBytes)
+    Tune.partitionsFor(bytes.min(BigInt(Long.MaxValue)).toLong, floor = 1)
   }
 }

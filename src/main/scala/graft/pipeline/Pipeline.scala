@@ -7,12 +7,30 @@ import graft.ingest.{FlatTables, Ingest}
 import graft.plans.{Intervals, Iv}
 import graft.schema.Schemas
 import graft.store.Store
+import Pipeline.{IndexRow, LoopState, WorkItem}
 
 /** Batch ingest pipeline (SURVEY §2.10/§3.1): the reference's orchestrator +
   * worker processes collapsed into one driver program over DataFrames.
   * Process/queue plumbing becomes Spark task scheduling; the work_queue /
   * index_state / failed_blocks tables survive as audit/state Parquet tables
-  * read through `Store.latest` (FINAL semantics).
+  * (upsert-by-insert, FINAL semantics through `Store.latest`).
+  *
+  * The driver loop's own state — the FINAL rows of work_queue and
+  * index_state, the next work-item id and the blocks height watermark — is
+  * held on the driver, the way the reference's orchestrator reads it with
+  * one indexed row lookup per step. It is loaded once, cold, when the
+  * Pipeline is constructed, and updated in memory on each transition;
+  * every transition still appends its row (one parquet file written on the
+  * driver, `Store.appendRows`), so the parquet tables stay the durable log
+  * and Monitor's reads of them do not change. Every blocks write this
+  * Pipeline makes advances the watermark from the write's own `observe()`
+  * max(height). So resume, seeding, claim, the status and index-state
+  * appends and the watermark run no Spark job. Once per [[runOnce]] (and
+  * per [[seedWorkQueue]]) a listing of the two state tables, no Spark job,
+  * checks that the state has not gone stale: a file this instance did not
+  * write reloads the state from the FINAL views, and a table past
+  * `StateFileBound` files is compacted (`Store.compact`), which bounds both
+  * the listing and the table.
   *
   * Reference dataflow: orchestrator.js:373-385 (resume), 574-636 (seeding),
   * 93-240 (claim→split→dispatch→finalize), 393-430 (completeness/reconcile),
@@ -73,7 +91,10 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
   }
 
   /** Raw-append read: every inserted row, superseded versions included,
-    * empty-but-typed when not yet written. The explicit opt-out for call
+    * typed by the table's schema (so planning a read runs no footer-reading
+    * schema-inference job; partition columns such as `height_bucket` are
+    * still discovered from the directories), empty-but-typed when not yet
+    * written. The explicit opt-out for call
     * sites whose SEMANTICS are the insert log (requeue-loop detection counts
     * re-inserts; file-layout audits count appends) and for internal reads
     * that wrap their own latest() view.
@@ -94,7 +115,7 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
       if (!tableExists(table))
         throw new java.io.FileNotFoundException(path(table))
       everExisted = true
-      spark.read.parquet(path(table))
+      spark.read.schema(schemaOf(table)).parquet(path(table))
     } catch {
       case e: java.io.FileNotFoundException =>
         if (everExisted) throw new java.io.IOException(
@@ -134,30 +155,99 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
 
   /** Flatten one envelope batch and append its 13 outputs — the 10 tables
     * and the 3 MV partials — through the one ingest writer (`Ingest.write`,
-    * which also carries the A16 `observe()` counters). */
-  def ingest(envelopes: DataFrame): FlatTables = Ingest.write(cfg.warehouse, envelopes, None)
+    * which also carries the A16 `observe()` counters). The blocks write's
+    * observed max(height) advances the height watermark. */
+  def ingest(envelopes: DataFrame): FlatTables = {
+    val written = Ingest.write(cfg.warehouse, envelopes, None)
+    written.maxHeight.foreach { h =>
+      state = state.copy(watermark = Some(state.watermark.fold(h)(math.max(_, h))))
+    }
+    written.tables
+  }
+
+  // -------------------------------------------------- driver-held state ----
+
+  private var state: LoopState = LoopState(Map.empty, Map.empty, None)
+  /** Per state table, the data files the held state accounts for: those
+    * listed by the last cold load plus those this instance wrote since. */
+  private var known: Map[String, Set[String]] = Map.empty
+  coldLoad()
+
+  /** The loop state this instance holds (tests compare it to a cold read). */
+  private[graft] def loopState: LoopState = state
+
+  /** Data files of a state table (Spark's hidden-file rule: names starting
+    * with `_` or `.` are not data); empty when the table does not exist. */
+  private def stateFiles(table: String): Set[String] = {
+    val dir = new org.apache.hadoop.fs.Path(path(table))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try fs.listStatus(dir).iterator.map(_.getPath.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+    catch { case _: java.io.FileNotFoundException => Set.empty }
+  }
+
+  /** Read the state from the FINAL views and the blocks table. The files
+    * are listed BEFORE the reads: a file landing in between is unknown to
+    * the next [[sync]], which then loads again. */
+  private def coldLoad(): Unit = {
+    val listed = Pipeline.StateTables.map(t => t -> stateFiles(t)).toMap
+    val queue = workQueue()
+      .select(col("id"), col("start_height"), col("end_height"), col("status"),
+        col("worker_id"), col("error_message"),
+        unix_micros(col("created_at")), unix_micros(col("updated_at")))
+      .collect().map(r => r.getLong(0) -> WorkItem(r.getLong(0), r.getLong(1),
+        r.getLong(2), r.getString(3), r.getString(4), r.getString(5),
+        r.getLong(6), r.getLong(7))).toMap
+    val index = Store.latest(readTableRaw("index_state"), Seq("index_name"), "updated_at")
+      .select(col("index_name"), col("last_processed_height"), unix_micros(col("updated_at")))
+      .collect().map(r => r.getString(0) -> IndexRow(r.getLong(1), r.getLong(2))).toMap
+    val watermark = readTable("blocks").agg(max("height")).head()
+    state = LoopState(queue, index,
+      if (watermark.isNullAt(0)) None else Some(watermark.getLong(0)))
+    known = listed
+  }
+
+  /** The staleness check, no Spark job unless it finds something: list
+    * both state tables; if a listing differs from the files the held state
+    * accounts for (another writer appended, compacted or deleted), load the
+    * state again from the FINAL views; compact a table past
+    * `StateFileBound` files. */
+  private def sync(): Unit = {
+    val listed = Pipeline.StateTables.map(t => t -> stateFiles(t)).toMap
+    if (listed.exists { case (t, files) => files != known(t) }) coldLoad()
+    for ((t, files) <- listed if files.size > Pipeline.StateFileBound) {
+      val spec = Store.versionedTables(t)
+      Store.compact(spark, path(t), spec.keys, Some(spec.ver))
+      known += t -> stateFiles(t)
+    }
+  }
+
+  /** Append state rows as one driver-written file (`Store.appendRows`, no
+    * Spark job) and account for it as this instance's own. */
+  private def appendState(table: String, rows: Seq[Seq[Any]]): Unit = {
+    val file = Store.appendRows(spark.sparkContext.hadoopConfiguration,
+      path(table), schemaOf(table), rows)
+    known += table -> (known(table) + file)
+  }
+
+  private def queueRows(items: Seq[WorkItem]): Seq[Seq[Any]] = items.map(w =>
+    Seq(w.id, w.start, w.end, w.status, w.workerId, w.error, w.createdAt, w.updatedAt))
 
   // -------------------------------------------------------------- state ----
 
   /** A2 resume point: GREATEST(recorded index_state height, observed
     * MAX(blocks.height)), defaulting to startHeight-1 (orchestrator.js:373-385). */
   def lastIndexedHeight(): Long = {
-    val recorded = Store.latest(readTableRaw("index_state"), Seq("index_name"), "updated_at")
-      .filter(col("index_name") === cfg.component)
-      .agg(coalesce(max("last_processed_height"), lit(cfg.startHeight - 1)))
-      .collect()(0).getLong(0)
-    val observed = readTable("blocks")
-      .agg(coalesce(max("height"), lit(cfg.startHeight - 1)))
-      .collect()(0).getLong(0)
-    math.max(recorded, observed)
+    val none = cfg.startHeight - 1
+    math.max(state.index.get(cfg.component).fold(none)(_.height),
+      state.watermark.getOrElse(none))
   }
 
   /** Advance index_state by appending a fresh row (upsert-by-insert). */
   def advanceIndexState(height: Long): Unit = {
-    import spark.implicits._
-    val row = Seq((cfg.component, height)).toDF("index_name", "last_processed_height")
-      .withColumn("updated_at", timestamp_micros(lit(nextMicros())))
-    row.write.mode("append").parquet(path("index_state"))
+    val stamp = nextMicros()
+    appendState("index_state", Seq(Seq(cfg.component, height, stamp)))
+    state = state.copy(index = state.index.updated(cfg.component, IndexRow(height, stamp)))
   }
 
   /** Latest view of the work queue (FINAL). */
@@ -167,29 +257,32 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
   /** Seed work items for [from, to], subtracting already-queued
     * pending/processing ranges (J4; orchestrator.js:574-636). */
   def seedWorkQueue(from: Long, to: Long): Seq[Iv] = Pipeline.seedLock.synchronized {
+    sync()
+    seed(from, to)
+  }
+
+  /** [[seedWorkQueue]] over the held state; the caller holds
+    * `Pipeline.seedLock` and has just run [[sync]]. Ids continue from
+    * max(existing)+1: with the lock and the sync, concurrent in-process
+    * seeders can't mint colliding ids. (Multi-process seeders would need a
+    * coordinator-issued range, like the reference's DB sequence —
+    * documented single-driver invariant.) */
+  private def seed(from: Long, to: Long): Seq[Iv] = {
     if (to < from) return Seq.empty
-    import spark.implicits._
-    val queued = workQueue()
-      .filter(col("status").isin("pending", "processing"))
-      .filter(Intervals.overlaps(lit(from), lit(to), col("start_height"), col("end_height")))
-      .select("start_height", "end_height")
-      .collect().map(r => Iv(r.getLong(0), r.getLong(1))).toSeq
+    val range = Iv(from, to)
+    val queued = state.queue.values.toSeq
+      .filter(w => (w.status == "pending" || w.status == "processing") &&
+        Intervals.overlaps(range, Iv(w.start, w.end)))
+      .map(w => Iv(w.start, w.end))
     val items = Intervals.planWorkItems(from, to, cfg.assignRange, queued)
     if (items.nonEmpty) {
-      // ids continue from max(existing)+1 under Pipeline.seedLock: the
-      // read-modify-write over the appended table is serialized JVM-wide,
-      // so concurrent in-process seeders can't mint colliding ids. (Multi-
-      // process seeders would need a coordinator-issued range, like the
-      // reference's DB sequence — documented single-driver invariant.)
-      val base = 1L + readTableRaw("work_queue")
-        .agg(coalesce(max("id"), lit(0L))).head.getLong(0)
-      val stamp = timestamp_micros(lit(nextMicros()))
+      val base = state.nextId
+      val stamp = nextMicros()
       val rows = items.zipWithIndex.map { case (iv, i) =>
-        (base + i, iv.start, iv.end, "pending", null: String, null: String)
-      }.toDF("id", "start_height", "end_height", "status", "worker_id", "error_message")
-        .withColumn("created_at", stamp)
-        .withColumn("updated_at", stamp)
-      rows.write.mode("append").parquet(path("work_queue"))
+        WorkItem(base + i, iv.start, iv.end, "pending", null, null, stamp, stamp)
+      }
+      appendState("work_queue", queueRows(rows))
+      state = state.copy(queue = state.queue ++ rows.map(w => w.id -> w))
     }
     items
   }
@@ -197,14 +290,14 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
   /** P1 claim: lowest-id pending item within the forward-priority window and
     * optional target cap (orchestrator.js:126-150). */
   def claimNext(syncTarget: Option[Long] = None): Option[(Long, Iv)] = {
-    var q = workQueue().filter(col("status") === "pending")
-    if (!cfg.backfillMode) {
-      val minAllowed = math.max(cfg.startHeight, maxBlockHeight() - cfg.backfillWindow)
-      q = q.filter(col("start_height") >= minAllowed)
-    }
-    syncTarget.foreach(t => q = q.filter(col("end_height") <= t))
-    q.orderBy("id").limit(1).collect().headOption
-      .map(r => (r.getAs[Long]("id"), Iv(r.getAs[Long]("start_height"), r.getAs[Long]("end_height"))))
+    val minAllowed =
+      if (cfg.backfillMode) Long.MinValue
+      else math.max(cfg.startHeight, maxBlockHeight() - cfg.backfillWindow)
+    state.queue.values
+      .filter(w => w.status == "pending" && w.start >= minAllowed &&
+        syncTarget.forall(w.end <= _))
+      .minByOption(_.id)
+      .map(w => (w.id, Iv(w.start, w.end)))
   }
 
   /** Status transition = fresh full row (latest FULL row wins, no column
@@ -213,42 +306,70 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
     * that know the range pass it so downstream reads (reconcile) keep it. */
   def updateWorkStatus(id: Long, status: String, error: String = null,
                        range: Option[Iv] = None): Unit = {
-    import spark.implicits._
     val (s, e) = range.map(iv => (iv.start, iv.end)).getOrElse((0L, 0L))
-    val stamp = timestamp_micros(lit(nextMicros()))
-    Seq((id, s, e, status, null: String, error))
-      .toDF("id", "start_height", "end_height", "status", "worker_id", "error_message")
-      .withColumn("created_at", stamp)
-      .withColumn("updated_at", stamp)
-      .write.mode("append").parquet(path("work_queue"))
+    val stamp = nextMicros()
+    val row = WorkItem(id, s, e, status, null, error, stamp, stamp)
+    appendState("work_queue", queueRows(Seq(row)))
+    state = state.copy(queue = state.queue.updated(id, row))
   }
 
-  def maxBlockHeight(): Long =
-    readTable("blocks").agg(coalesce(max("height"), lit(0L))).collect()(0).getLong(0)
+  /** The height watermark: max(blocks.height), 0 for no blocks. */
+  def maxBlockHeight(): Long = state.watermark.getOrElse(0L)
 
   // ------------------------------------------------------------ verify -----
 
-  /** J3 gap detection over the ingested blocks (orchestrator.js:393-405).
-    * spark.range is the scale path: the series is generated distributed. */
-  def findGaps(start: Long, end: Long): DataFrame = {
-    import spark.implicits._
-    spark.range(start, end + 1).toDF("height")
-      .join(readTable("blocks").select("height").distinct(), Seq("height"), "left_anti")
+  /** `blocks` rows with height in [start, end]: the `height_bucket` filter
+    * prunes partition directories, the height filter row groups (the files
+    * are height-sorted). The bucket filter is explicit, so the pruning does
+    * not depend on the session carrying `GraftExtensions`' derivation of
+    * it. A table not yet written reads as the typed empty frame, which has
+    * no bucket column to prune. */
+  private[graft] def blocksIn(start: Long, end: Long): DataFrame = {
+    val blocks = readTable("blocks")
+    val inBuckets =
+      if (!blocks.columns.contains("height_bucket")) blocks
+      else blocks.filter(col("height_bucket")
+        .between(Fns.heightBucket(lit(start)), Fns.heightBucket(lit(end))))
+    inBuckets.filter(col("height").between(start, end))
   }
 
-  def isRangeComplete(start: Long, end: Long): Boolean =
-    findGaps(start, end).limit(1).count() == 0
+  /** J3 gap detection over the ingested blocks (orchestrator.js:393-405),
+    * pruned to the range. spark.range is the scale path: the series is
+    * generated distributed. */
+  def findGaps(start: Long, end: Long): DataFrame =
+    spark.range(start, end + 1).toDF("height")
+      .join(blocksIn(start, end).select("height").distinct(), Seq("height"), "left_anti")
+
+  /** Whether every height in [start, end] is in `blocks`: each task of the
+    * pruned scan marks its heights in a bitset over the range, and the
+    * driver ORs the bitsets — one job, no shuffle. */
+  def isRangeComplete(start: Long, end: Long): Boolean = {
+    val n = end - start + 1
+    if (n <= 0) return true
+    require(n <= Int.MaxValue, s"range [$start, $end] too long for one check")
+    import spark.implicits._
+    val lo = start
+    val size = n.toInt
+    val seen = new java.util.BitSet(size)
+    blocksIn(start, end).select("height").as[Long]
+      .mapPartitions { hs =>
+        val bits = new java.util.BitSet(size)
+        hs.foreach(h => bits.set((h - lo).toInt))
+        Iterator.single(bits.toByteArray)
+      }
+      .collect().foreach(b => seen.or(java.util.BitSet.valueOf(b)))
+    seen.cardinality() == size
+  }
 
   /** Reconcile lingering 'processing' items whose range is fully ingested
     * (orchestrator.js:408-430). Returns number fixed. */
   def reconcile(limit: Int = 50): Int = {
-    val items = workQueue().filter(col("status") === "processing")
-      .orderBy("id").limit(limit)
-      .select("id", "start_height", "end_height").collect()
+    val items = state.queue.values.toSeq.filter(_.status == "processing")
+      .sortBy(_.id).take(limit)
     var fixed = 0
-    items.foreach { r =>
-      if (isRangeComplete(r.getLong(1), r.getLong(2))) {
-        updateWorkStatus(r.getLong(0), "done", "[auto_mark_done_reconcile]")
+    items.foreach { w =>
+      if (isRangeComplete(w.start, w.end)) {
+        updateWorkStatus(w.id, "done", "[auto_mark_done_reconcile]")
         fixed += 1
       }
     }
@@ -321,7 +442,7 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
     if (eligible.isEmpty) return (0L, 0L)
     ingest(fetch(eligible))
     import spark.implicits._
-    val present = readTable("blocks").select("height").distinct()
+    val present = blocksIn(eligible.min, eligible.max).select("height").distinct()
       .join(eligible.toDF("height"), Seq("height"), "left_semi")
       .collect().map(_.getLong(0)).toSet
     // both outcomes are batched: one append of 'recovered' rows (the FINAL
@@ -329,13 +450,9 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
     // is the view) and one recordFailedBlocks for the still-missing set
     if (present.nonEmpty) {
       val ts = nextMicros()
-      present.toSeq.sorted
-        .map(h => (h, ts + h, "resolved", "", "driver", 0, cfg.maxRetries, "recovered"))
-        .toDF("block_height", "id", "error_type", "error_message", "worker_id",
-          "retry_count", "max_retries", "status")
-        .withColumn("next_retry_at", timestamp_micros(lit(ts)))
-        .withColumn("last_retry_at", timestamp_micros(lit(ts)))
-        .coalesce(1).write.mode("append").parquet(path("failed_blocks"))
+      Store.appendRows(spark.sparkContext.hadoopConfiguration, path("failed_blocks"),
+        Schemas.failedBlocks, present.toSeq.sorted.map(h =>
+          Seq(h, ts + h, "resolved", "", "driver", 0, cfg.maxRetries, "recovered", ts, ts)))
     }
     val missing = eligible.filterNot(present)
     if (missing.nonEmpty)
@@ -346,14 +463,16 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
 
   // -------------------------------------------------------------- drive ----
 
-  /** One driver-loop iteration: seed → claim → fetch+ingest → verify →
-    * finalize → advance offset. `fetch` maps a height interval to an envelope
-    * DataFrame (RpcSource.fetchEnvelopes in prod, fixtures in tests).
-    * Returns the claimed interval, if any. */
+  /** One driver-loop iteration: staleness check → seed → claim →
+    * fetch+ingest → verify → finalize → advance offset. `fetch` maps a
+    * height interval to an envelope DataFrame (RpcSource.fetchEnvelopes in
+    * prod, fixtures in tests). Returns the claimed interval, if any. */
   def runOnce(tip: Long, fetch: Iv => DataFrame): Option[Iv] = {
-    val last = lastIndexedHeight()
-    val target = math.min(last + cfg.assignRange * cfg.numWorkers, tip)
-    seedWorkQueue(last + 1, target)
+    Pipeline.seedLock.synchronized {
+      sync()
+      val last = lastIndexedHeight()
+      seed(last + 1, math.min(last + cfg.assignRange * cfg.numWorkers, tip))
+    }
     claimNext(Some(tip)).map { case (id, iv) =>
       updateWorkStatus(id, "processing", range = Some(iv))
       try {
@@ -378,6 +497,29 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
 }
 
 object Pipeline {
+  /** One FINAL work_queue row; stamps in epoch micros. */
+  final case class WorkItem(id: Long, start: Long, end: Long, status: String,
+                            workerId: String, error: String,
+                            createdAt: Long, updatedAt: Long)
+
+  /** One FINAL index_state row; `updatedAt` in epoch micros. */
+  final case class IndexRow(height: Long, updatedAt: Long)
+
+  /** The driver loop's state: work_queue and index_state FINAL rows by key,
+    * and the blocks height watermark. */
+  final case class LoopState(queue: Map[Long, WorkItem], index: Map[String, IndexRow],
+                             watermark: Option[Long]) {
+    def nextId: Long = if (queue.isEmpty) 1L else queue.keys.max + 1
+  }
+
+  /** The state tables the loop holds on the driver. */
+  private val StateTables = Seq("work_queue", "index_state")
+
+  /** Data files a state table may reach before [[Pipeline]]'s staleness
+    * check compacts it: the loop appends ~2 work_queue files and 1
+    * index_state file per item. */
+  private[graft] val StateFileBound = 64
+
   /** Last-issued micro-stamp per warehouse. `updateAndGet(max(last+1,
     * computed))` can never go backwards or repeat for one store, even across
     * Pipeline instances or >1e6 stamps within one injected-clock second (the
@@ -390,7 +532,8 @@ object Pipeline {
       .updateAndGet(last => math.max(last + 1, nowSeconds * 1000000L))
 
   /** Serializes work-queue seeding across Pipeline instances in this JVM —
-    * seedWorkQueue's max(id)+1 is a read-modify-write over an appended table.
+    * seedWorkQueue's max(id)+1 is a read-modify-write over the appended
+    * table, which each seeder re-syncs its held queue from under this lock.
     * Multi-PROCESS seeders remain out of scope by design: the reference gets
     * its ids from a Postgres sequence (a central coordinator); our
     * single-driver deployment model keeps one seeder per warehouse. */

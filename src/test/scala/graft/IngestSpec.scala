@@ -14,8 +14,10 @@ class IngestSpec extends SparkTestBase {
 
   /** Every output gets rows: odd heights carry a wasm event, even ones a
     * message event, and every block a finalize event with an attribute. */
-  private def batch0: DataFrame = spark.read.schema(graft.schema.Schemas.envelope)
-    .json(Seq(1L, 2L, 3L).map(h =>
+  private def batch0: DataFrame = batch(Seq(1L, 2L, 3L))
+
+  private def batch(heights: Seq[Long]): DataFrame = spark.read.schema(graft.schema.Schemas.envelope)
+    .json(heights.map(h =>
       s"""{"height":$h,"time":"2025-07-0${1 + (h % 2)}T00:00:00Z","app_hash":"A$h","txs":["dGVzdA=="],"txs_results":[{"code":${h % 2},"gas_wanted":"10","gas_used":"${h * 10}","data":"","log":"","events":[{"type":"${if (h % 2 == 0) "message" else "wasm"}","attributes":[{"key":"k","value":"v$h","index":true}]}]}],"finalize_block_events":[{"type":"fin","attributes":[{"key":"fk","value":"fv$h","index":false}]}]}""").toDS)
 
   private def tmpDir(prefix: String) =
@@ -48,6 +50,25 @@ class IngestSpec extends SparkTestBase {
         assert(digest(wh, o) === expected(o), s"$o after a failed $failing write and redelivery")
     }
   }
+
+  test("unkeyed 200-height write: one file per table, the same rows as a 4-partition write") {
+    val env = batch(1L to 200L).repartition(4)
+    val single = tmpDir("graft_ingest_single")
+    Ingest.write(single, env, None)
+    // the keyed path keeps its input's 4 partitions
+    val split = tmpDir("graft_ingest_split")
+    Ingest.write(split, env, Some(0L))
+    def dataFiles(wh: String, o: String): Int = {
+      val it = java.nio.file.Files.walk(java.nio.file.Paths.get(wh, o))
+      try it.toArray.count(f => f.toString.endsWith(".parquet")) finally it.close()
+    }
+    for (o <- outputs.take(10))
+      assert(dataFiles(single, o) === 1, s"$o files")
+    assert(dataFiles(split, "blocks") === 4)
+    for (o <- outputs)
+      assert(IngestSpec.digest(spark, single, o) ===
+        IngestSpec.digest(spark, split, o, drop = Seq("ingest_batch")), o)
+  }
 }
 
 object IngestSpec {
@@ -59,8 +80,9 @@ object IngestSpec {
 
   /** Row count plus the sorted multiset of row hashes: order-independent.
     * `created_at` outside `blocks` is processing time, so it is left out. */
-  def digest(spark: SparkSession, wh: String, name: String): (Long, Seq[Long]) = {
-    val df = spark.read.parquet(s"$wh/$name")
+  def digest(spark: SparkSession, wh: String, name: String,
+             drop: Seq[String] = Nil): (Long, Seq[Long]) = {
+    val df = spark.read.parquet(s"$wh/$name").drop(drop: _*)
     val cols = df.columns.filterNot(c => c == "created_at" && name != "blocks")
     val hashes = df.select(xxhash64(cols.map(col): _*)).collect().map(_.getLong(0)).sorted
     (hashes.length.toLong, hashes.toSeq)

@@ -293,6 +293,170 @@ class PipelineSpec extends SparkTestBase {
     assert(pb.claimNext(None).map(_._2) === Some(Iv(1, 10)))
   }
 
+  private def backfillConfig(dir: String) = PipelineConfig(
+    warehouse = dir, startHeight = 1, assignRange = 10, numWorkers = 2,
+    backfillMode = true, now = () => { clock += 1; clock })
+
+  test("driver-held state equals a fresh instance's cold read after every transition") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_wh_state").toString
+    val cfg = backfillConfig(dir)
+    val p = new Pipeline(spark, cfg)
+    def coldRead(after: String): Unit =
+      assert(p.loopState === new Pipeline(spark, cfg).loopState, s"after $after")
+    coldRead("construction")
+    assert(p.seedWorkQueue(1, 40).size === 4)
+    coldRead("seed")
+    val Some((id, iv)) = p.claimNext(None)
+    coldRead("claim")
+    p.updateWorkStatus(id, "processing", range = Some(iv))
+    coldRead("processing")
+    p.ingest(envelopes(iv.start to iv.end))
+    coldRead("ingest")
+    p.updateWorkStatus(id, "done", range = Some(iv))
+    p.advanceIndexState(p.maxBlockHeight())
+    coldRead("done")
+    // [11, 20] fetches without height 15: failed, with a failed_blocks row
+    assert(p.runOnce(tip = 40, iv => envelopes((iv.start to iv.end).filter(_ != 15))) ===
+      Some(Iv(11, 20)))
+    assert(p.loopState.queue.values.exists(_.status == "failed"))
+    coldRead("failed")
+    // a complete 'processing' item: reconcile marks it done with no range
+    val Some((id3, iv3)) = p.claimNext(None)
+    p.updateWorkStatus(id3, "processing", range = Some(iv3))
+    p.ingest(envelopes(iv3.start to iv3.end))
+    assert(p.reconcile() === 1)
+    assert(p.loopState.queue(id3).start === 0L)
+    coldRead("reconcile")
+    clock += 3600 // past the retry backoff
+    assert(p.retryFailedBlocks(hs => envelopes(hs)) === ((1L, 0L)))
+    coldRead("retryFailedBlocks")
+    // killed mid-item: 'processing' and half the range ingested, then the
+    // instance is dropped; a new one resumes from what is on disk
+    val Some((id4, iv4)) = p.claimNext(None)
+    p.updateWorkStatus(id4, "processing", range = Some(iv4))
+    p.ingest(envelopes(iv4.start to iv4.start + 4))
+    coldRead("a partial ingest")
+    val resumed = new Pipeline(spark, cfg)
+    assert(resumed.lastIndexedHeight() === iv4.start + 4)
+    assert(resumed.reconcile() === 0)
+    assert(resumed.loopState === p.loopState)
+  }
+
+  test("a foreign append between two items is seen by the next runOnce") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_wh_foreign").toString
+    val cfg = backfillConfig(dir)
+    val fetch = (iv: Iv) => envelopes(iv.start to iv.end)
+    val p = new Pipeline(spark, cfg)
+    assert(p.runOnce(tip = 40, fetch) === Some(Iv(1, 10)))
+    // a second instance finishes the pending [11, 20] behind p's back
+    val other = new Pipeline(spark, cfg)
+    val Some((id, iv)) = other.claimNext(None)
+    assert(iv === Iv(11, 20))
+    other.ingest(fetch(iv))
+    other.updateWorkStatus(id, "done", range = Some(iv))
+    other.advanceIndexState(20)
+    assert(p.runOnce(tip = 40, fetch) === Some(Iv(21, 30)))
+    assert(p.lastIndexedHeight() === 30L)
+    assert(p.loopState === new Pipeline(spark, cfg).loopState)
+  }
+
+  test("the staleness check compacts a state table past its file bound") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_wh_compact").toString
+    val cfg = backfillConfig(dir)
+    val p = new Pipeline(spark, cfg)
+    p.seedWorkQueue(1, 10)
+    val Some((id, iv)) = p.claimNext(None)
+    (0 to Pipeline.StateFileBound).foreach(_ =>
+      p.updateWorkStatus(id, "processing", range = Some(iv)))
+    def files = new java.io.File(dir, "work_queue").list().count(n => !n.startsWith(".") && !n.startsWith("_"))
+    assert(files > Pipeline.StateFileBound)
+    // the one item is 'processing': nothing to seed or claim
+    assert(p.runOnce(tip = 10, iv => envelopes(iv.start to iv.end)) === None)
+    assert(files <= 4, "work_queue not compacted")
+    assert(p.readTableRaw("work_queue").count() === 1L)
+    assert(p.loopState === new Pipeline(spark, cfg).loopState)
+    // the compacted files are this instance's own: no reload, and the loop goes on
+    p.updateWorkStatus(id, "pending", range = Some(iv))
+    assert(p.runOnce(tip = 10, iv => envelopes(iv.start to iv.end)) === Some(Iv(1, 10)))
+    assert(p.loopState === new Pipeline(spark, cfg).loopState)
+  }
+
+  test("claimNext's forward-priority window follows a direct ingest") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_wh_window").toString
+    val p = new Pipeline(spark, PipelineConfig(
+      warehouse = dir, startHeight = 1, assignRange = 10,
+      backfillMode = false, backfillWindow = 100,
+      now = () => { clock += 1; clock }))
+    p.seedWorkQueue(1, 10)
+    p.seedWorkQueue(450, 459)
+    // no blocks yet: the window starts at startHeight
+    assert(p.claimNext(None).map(_._2) === Some(Iv(1, 10)))
+    p.ingest(envelopes(Seq(500L)))
+    assert(p.maxBlockHeight() === 500L)
+    assert(p.claimNext(None).map(_._2) === Some(Iv(450, 459)))
+  }
+
+  test("findGaps, isRangeComplete and retryFailedBlocks read only the range's height buckets") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    val p = mkPipeline()
+    val heights = Seq(1L, 2L, 4L, 99999L, 100001L, 100003L, 200001L)
+    p.ingest(envelopes(heights))
+    def bucketPruned(scans: Seq[FileSourceScanExec]): Boolean =
+      scans.nonEmpty && scans.forall(_.partitionFilters.exists(_.references.exists(_.name == "height_bucket")))
+    def blocksScans(qe: QueryExecution): Seq[FileSourceScanExec] =
+      qe.sparkPlan.collect {
+        case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.getName == "blocks") => s
+      }
+    /** The blocks scans of every query `body` runs, from a QueryExecutionListener.
+      * Delivery is asynchronous but ordered: once a marker query arrives, every
+      * earlier query has, so markers before and after `body` fence its queries. */
+    def scansOf(body: => Unit): Seq[FileSourceScanExec] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+      val l = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = { seen.add(qe); () }
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      def fence(marker: String): Unit = {
+        spark.range(1).toDF(marker).collect()
+        val deadline = System.currentTimeMillis() + 10000
+        def arrived = seen.toArray.exists(_.asInstanceOf[QueryExecution].analyzed.output
+          .exists(_.name == marker))
+        while (!arrived && System.currentTimeMillis() < deadline) Thread.sleep(20)
+        assert(arrived, s"listener never saw the $marker query")
+      }
+      spark.listenerManager.register(l)
+      try {
+        fence("scans_of_start")
+        seen.clear()
+        body
+        fence("scans_of_end")
+      } finally spark.listenerManager.unregister(l)
+      seen.toArray.toSeq.map(_.asInstanceOf[QueryExecution]).flatMap(blocksScans)
+    }
+    def unprunedGaps(s: Long, e: Long): Seq[Long] =
+      spark.range(s, e + 1).toDF("height")
+        .join(p.readTable("blocks").select("height").distinct(), Seq("height"), "left_anti")
+        .collect().map(_.getLong(0)).toSeq.sorted
+    for ((s, e) <- Seq((1L, 5L), (99998L, 100004L), (100001L, 100001L), (1L, 200001L))) {
+      val gaps = p.findGaps(s, e)
+      assert(bucketPruned(blocksScans(gaps.queryExecution)), s"findGaps($s, $e) plan")
+      assert(gaps.collect().map(_.getLong(0)).toSeq.sorted === unprunedGaps(s, e))
+      var complete = false
+      assert(bucketPruned(scansOf { complete = p.isRangeComplete(s, e) }), s"isRangeComplete($s, $e)")
+      assert(complete === unprunedGaps(s, e).isEmpty, s"isRangeComplete($s, $e)")
+    }
+    // 3 and 100002 fail, then a retry can refetch 100002 only
+    p.recordFailedBlocks(Seq(3L, 100002L).toDF("height"), "missing", "gap")
+    clock += 3600
+    var outcome = (0L, 0L)
+    val scans = scansOf {
+      outcome = p.retryFailedBlocks(hs => envelopes(hs.filter(_ == 100002L)))
+    }
+    assert(outcome === ((1L, 1L)))
+    assert(bucketPruned(scans), "retryFailedBlocks' read of the refetched heights")
+    assert(unprunedGaps(100001L, 100003L).isEmpty)
+  }
+
   test("RpcClient: rotation + retry, tip discovery, fetchEnvelopes end-to-end") {
     var calls = Vector.empty[(String, String)]
     val transport: (String, String) => String = (url, pth) => {

@@ -51,9 +51,13 @@ class ProbeSpec extends SparkTestBase {
     ("crawl", Seq("1000", "20"),
       Seq("n_rows", "cap", "outlinks_sec", "n_edges", "frontier_sec", "n_frontier",
         "frontier_frac_of_edges", "robots_sec", "n_allowed", "allowed_frac",
-        "rank_sec", "n_domains", "order_sec", "n_queue", "queue_frac_of_allowed")))
+        "rank_sec", "n_domains", "order_sec", "n_queue", "queue_frac_of_allowed")),
+    ("loop", Seq("0", "2"),
+      Seq("preloaded_blocks", "items") ++ secs("preload", "setup") ++
+        secs("item_first", "item_p50", "item_max", "verify_p50") ++
+        Seq("n_done", "state_files")))
 
-  test("Probe.ladders is exactly the five recorded ladders") {
+  test("Probe.ladders is exactly the recorded ladders") {
     assert(Probe.ladders.keySet === rungs.map(_._1).toSet)
   }
 

@@ -40,36 +40,19 @@ object Scratch {
     f.delete(); ()
   }
 
-  /** Per-(JVM, path) parquet schema cache — the catalog-metastore shape: a
-    * production table's schema is catalog metadata read once, not a per-query
-    * driver footer pass. Without it every bench/verify query execution re-ran
-    * listing + footer schema inference per table read (~0.08–0.15 s each on
-    * warm sf0.1 — the largest slice of the ~0.4 s tail-query floor). Caches
-    * SCHEMA METADATA only; every read still scans the parquet data itself. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
-  /** Read a parquet path with the (JVM-cached) inferred schema supplied, so
-    * planning skips the per-read footer inference. The first read of a path
-    * pays one inference under the session's CURRENT parquet flags — callers
-    * that depend on e.g. nanosAsLong must set it before their first read
-    * (Td.t does). Only for IMMUTABLE paths (testdata tables, build-once
-    * stores): a path whose schema could change must not be cached. */
+  /** Read a parquet path with its inferred schema supplied from
+    * [[Artifacts]] — the catalog-metastore shape: a table's schema is
+    * metadata read once, not a per-query driver footer pass (without it
+    * every bench/verify query execution re-ran listing + footer schema
+    * inference per table read, ~0.08–0.15 s each on warm sf0.1). A
+    * rewrite of the path re-infers. The inference runs under the session's
+    * CURRENT parquet flags — callers that depend on e.g. nanosAsLong must
+    * set it before their first read (Td.t does). Every read still scans
+    * the parquet data itself. */
   def readCachedSchema(spark: org.apache.spark.sql.SparkSession,
                        path: String): org.apache.spark.sql.DataFrame = {
-    val schema = schemaCache.computeIfAbsent(path,
-      _ => spark.read.parquet(path).schema)
+    val schema = Artifacts.memo(spark, "schema", Nil, Seq(path))(
+      spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
-
-  /** Per-(JVM, key) memo for DETERMINISTIC table metadata (row counts of
-    * immutable testdata/build-once stores) — the same catalog rationale as
-    * the schema cache: production keeps table statistics in the catalog;
-    * re-running a count() JOB per gate execution measures the harness. Memoizing
-    * a deterministic value is result-identical by construction. */
-  private val metaLongCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  def memoLong(key: String)(body: => Long): Long =
-    metaLongCache.computeIfAbsent(key, _ => body).longValue()
 }

@@ -1580,73 +1580,33 @@ object Dedup {
       numHashes, bandSize, shingleK, threshold, maxBucket = maxBucket)
   }
 
-  /** Metadata fingerprint of a parquet dataset (file count, total bytes,
-    * max mtime) via the Hadoop FS API — any scheme. Folded into artifact
-    * cache keys so an in-process rewrite/append of the source data builds a
-    * fresh artifact instead of silently probing the stale one. */
-  private[ext] def dataFingerprint(spark: org.apache.spark.sql.SparkSession,
-                                   path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "absent"
-    else {
-      val it = fs.listFiles(p, true)
-      var n = 0L; var bytes = 0L; var mtime = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        n += 1; bytes += f.getLen
-        mtime = math.max(mtime, f.getModificationTime)
-      }
-      s"$n:$bytes:$mtime"
-    }
-  }
-
-  /** Build-once persisted band store per (dataset dir + data fingerprint,
-    * corpus split, LSH config): the existing corpus' bands are written
-    * partitioned-by-band on first use (standing in for the ingest-time
-    * append at scale); every later probe only READS the parquet.
-    *
-    * `warehouse` picks where the artifact lives: Some(base) writes under
-    * that base on whatever Hadoop FS scheme it names (s3a://, hdfs://, …) —
-    * the production shape, reusable across JVMs (an existing _SUCCESS marker
-    * skips the rebuild) — while None (bench/test default) uses a JVM-local
-    * temp dir. Mirrors Similarity.indexPathFor's artifact cache. */
-  private val bandStoreCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
+  /** Build-once persisted band store per (dataset, corpus split, LSH
+    * config), an [[graft.Artifacts.stored]] artifact: the existing corpus'
+    * bands are written partitioned-by-band on first use (standing in for
+    * the ingest-time append at scale); every later probe only READS the
+    * parquet. `warehouse` picks where the artifact lives: Some(base) on
+    * any Hadoop FS scheme, reusable across JVMs — the production shape —
+    * while None (bench/test default) uses a JVM-local temp dir. */
   def bandStorePathFor(spark: org.apache.spark.sql.SparkSession, dir: String,
                        idCol: String, textCol: String, idUpperExclusive: Long,
                        numHashes: Int = 8, bandSize: Int = 2,
                        shingleK: Int = 3,
-                       warehouse: Option[String] = None): String = {
-    val key = s"$dir#$idCol#$textCol#$idUpperExclusive#$numHashes#$bandSize#$shingleK" +
-      s"#${dataFingerprint(spark, s"$dir/documents.parquet")}#$warehouse"
-    bandStoreCache.getOrElseUpdate(key, {
-      val path = warehouse match {
-        case Some(w) =>
-          val tag = java.security.MessageDigest.getInstance("MD5")
-            .digest(key.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-          s"$w/band_store_$tag"
-        case None =>
-          graft.Scratch.dir("graft_band_store")
-      }
-      val marker = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-          .filter(col(idCol) < idUpperExclusive)
-        writeBands(lshBands(minhashSig(docs, textCol, idCol, numHashes, shingleK),
-          idCol, numHashes, bandSize), path)
-      }
-      path
-    })
-  }
+                       warehouse: Option[String] = None): String =
+    graft.Artifacts.stored(spark, "band_store",
+        Seq(idCol, textCol, idUpperExclusive, numHashes, bandSize, shingleK),
+        Seq(s"$dir/documents.parquet"), warehouse) { path =>
+      val docs = spark.read.parquet(s"$dir/documents.parquet")
+        .filter(col(idCol) < idUpperExclusive)
+      writeBands(lshBands(minhashSig(docs, textCol, idCol, numHashes, shingleK),
+        idCol, numHashes, bandSize), path)
+    }
 
   /** Build-once persisted SHINGLE store — the corpus-derived artifact every
     * member of the pair-join family consumes ([[prefixJoinPairs]],
     * [[containmentPairs]], source-overlap-from-pairs), so three queries
     * stop paying three identical shingle + frequency + dictionary-encode
     * passes. Two tables under one path, keyed like [[bandStorePathFor]] by
-    * (dataset dir + data fingerprint, columns, shingleK):
+    * (dataset, columns, shingleK):
     *
     *  - `isets/` — (idCol, tids): per-doc SORTED dense-id gram sets over
     *    the FULL universe, ids assigned in global (frequency, gram)
@@ -1661,39 +1621,21 @@ object Dedup {
     * corpus grows; queries only READ it. `warehouse` as in
     * [[bandStorePathFor]]: Some(base) persists across JVMs on any Hadoop
     * FS scheme, None (bench/test) uses a JVM-local temp dir. */
-  private val shingleStoreCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
   def shingleStorePathFor(spark: org.apache.spark.sql.SparkSession, dir: String,
                           idCol: String, textCol: String, shingleK: Int = 3,
-                          warehouse: Option[String] = None): String = {
-    val key = s"$dir#$idCol#$textCol#$shingleK" +
-      s"#${dataFingerprint(spark, s"$dir/documents.parquet")}#$warehouse"
-    shingleStoreCache.getOrElseUpdate(key, {
-      val path = warehouse match {
-        case Some(w) =>
-          val tag = java.security.MessageDigest.getInstance("MD5")
-            .digest(key.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-          s"$w/shingle_store_$tag"
-        case None =>
-          graft.Scratch.dir("graft_shingle_store")
-      }
-      // explicit top-level marker: the store is two parquet writes, so the
-      // per-table _SUCCESS files can't signal whole-artifact completeness
-      val marker = new org.apache.hadoop.fs.Path(s"$path/_GRAFT_READY")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-        val enc = buildIdSets(docs, textCol, idCol, shingleK,
-          big = sizeRatioPrefilterWorthIt(docs.select(col(idCol), col(textCol))))
-        enc.isets.write.mode("overwrite").parquet(s"$path/isets")
-        enc.freq.join(enc.dict, Seq("s"))
-          .select(col("__tid"), col("__f"))
-          .write.mode("overwrite").parquet(s"$path/freq")
-        fs.create(marker, true).close()
-      }
-      path
-    })
-  }
+                          warehouse: Option[String] = None): String =
+    // explicit top-level marker: the store is two parquet writes, so the
+    // per-table _SUCCESS files can't signal whole-artifact completeness
+    graft.Artifacts.stored(spark, "shingle_store", Seq(idCol, textCol, shingleK),
+        Seq(s"$dir/documents.parquet"), warehouse, marker = "_GRAFT_READY") { path =>
+      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val enc = buildIdSets(docs, textCol, idCol, shingleK,
+        big = sizeRatioPrefilterWorthIt(docs.select(col(idCol), col(textCol))))
+      enc.isets.write.mode("overwrite").parquet(s"$path/isets")
+      enc.freq.join(enc.dict, Seq("s"))
+        .select(col("__tid"), col("__f"))
+        .write.mode("overwrite").parquet(s"$path/freq")
+    }
 
   /** [[prefixJoinPairs]] against the persisted shingle store: the corpus
     * pays shingling + dictionary encoding ONCE per (data, config) — every
@@ -1707,18 +1649,25 @@ object Dedup {
                                warehouse: Option[String] = None): DataFrame = {
     val path = shingleStorePathFor(spark, dir, idCol, textCol, shingleK, warehouse)
     val isets = graft.Scratch.readCachedSchema(spark, s"$path/isets")
-    // doc count from the SOURCE table (same basis as the inline form and
-    // the oracle's count(*)) — deterministic store metadata, memoized per
-    // JVM like the store itself (production keeps both in the catalog)
-    val cap = resolveMaxToken(maxToken, graft.Scratch.memoLong(s"count#$dir/documents.parquet") {
-      spark.read.parquet(s"$dir/documents.parquet").count()
-    })
-    val nCapped = graft.Scratch.memoLong(s"ncapped#$path#$cap") {
+    val nCapped = cappedUniverse(spark, dir, path, maxToken)
+    prefixPairsFromIdSets(isets, idCol, threshold, nCapped,
+      big = sizeRatioPrefilterWorthIt(isets))
+  }
+
+  /** Size of the `maxToken`-capped gram universe of the shingle store at
+    * `path`: `count(__f <= cap)` over its freq table, with the cap resolved
+    * from the doc count of the SOURCE table (same basis as the inline form
+    * and the oracle's count(*)). Both counts are store metadata, memoized
+    * like the store itself (production keeps both in the catalog). */
+  private def cappedUniverse(spark: org.apache.spark.sql.SparkSession, dir: String,
+                             path: String, maxToken: Int): Long = {
+    val docs = s"$dir/documents.parquet"
+    val cap = resolveMaxToken(maxToken, graft.Artifacts.memo(spark, "doc_count", Nil,
+      Seq(docs))(spark.read.parquet(docs).count()))
+    graft.Artifacts.memo(spark, "capped_universe", Seq(cap), Seq(s"$path/freq")) {
       graft.Scratch.readCachedSchema(spark, s"$path/freq")
         .filter(col("__f") <= cap).count()
     }
-    prefixPairsFromIdSets(isets, idCol, threshold, nCapped,
-      big = sizeRatioPrefilterWorthIt(isets))
   }
 
   /** [[containmentPairs]] against the persisted shingle store — see
@@ -1730,13 +1679,7 @@ object Dedup {
                                 warehouse: Option[String] = None): DataFrame = {
     val path = shingleStorePathFor(spark, dir, idCol, textCol, shingleK, warehouse)
     val isets = graft.Scratch.readCachedSchema(spark, s"$path/isets")
-    val cap = resolveMaxToken(maxToken, graft.Scratch.memoLong(s"count#$dir/documents.parquet") {
-      spark.read.parquet(s"$dir/documents.parquet").count()
-    })
-    val nCapped = graft.Scratch.memoLong(s"ncapped#$path#$cap") {
-      graft.Scratch.readCachedSchema(spark, s"$path/freq")
-        .filter(col("__f") <= cap).count()
-    }
+    val nCapped = cappedUniverse(spark, dir, path, maxToken)
     containmentPairsFromIdSets(isets, idCol, threshold, nCapped,
       big = sizeRatioPrefilterWorthIt(isets))
   }
@@ -1749,42 +1692,26 @@ object Dedup {
     * ([[dedupClusters]]), keep-one-per-cluster, keep-best-quality — re-reads
     * the same graph. At 100 TB the graph is written once at curation time
     * (next to the band and shingle stores) and the decision queries only
-    * READ it; locally the same keying as [[bandStorePathFor]] (dataset dir +
-    * data fingerprint + LSH config + threshold) makes the first caller build
-    * and every sibling probe. The builder's cost stays measured: the
-    * x_near_dup gate always runs the full inline pipeline. */
-  private val pairStoreCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
+    * READ it; locally the same keying as [[bandStorePathFor]] (dataset,
+    * LSH config, threshold) makes the first caller build and every sibling
+    * probe. The builder's cost stays measured: the x_near_dup gate always
+    * runs the full inline pipeline. */
   def nearDupPairsPathFor(spark: org.apache.spark.sql.SparkSession, dir: String,
                           idCol: String, textCol: String,
                           numHashes: Int = 8, bandSize: Int = 2,
                           shingleK: Int = 3, threshold: Double = 0.2,
                           maxBucket: Int = DefaultMaxBucket,
-                          warehouse: Option[String] = None): String = {
-    val key = s"$dir#$idCol#$textCol#$numHashes#$bandSize#$shingleK#$threshold" +
-      s"#$maxBucket#${dataFingerprint(spark, s"$dir/documents.parquet")}#$warehouse"
-    pairStoreCache.getOrElseUpdate(key, {
-      val path = warehouse match {
-        case Some(w) =>
-          val tag = java.security.MessageDigest.getInstance("MD5")
-            .digest(key.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-          s"$w/near_dup_pairs_$tag"
-        case None =>
-          graft.Scratch.dir("graft_pair_store")
-      }
-      val marker = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        val docs = spark.read.parquet(s"$dir/documents.parquet")
-        // materialize: a batch write consumes the result fully, and the
-        // checkpointed sig+sets RDD is dropped with this local reference
-        nearDupPairs(docs, textCol, idCol, numHashes, bandSize, shingleK,
-          threshold, maxBucket, materialize = true)
-          .write.mode("overwrite").parquet(path)
-      }
-      path
-    })
-  }
+                          warehouse: Option[String] = None): String =
+    graft.Artifacts.stored(spark, "near_dup_pairs",
+        Seq(idCol, textCol, numHashes, bandSize, shingleK, threshold, maxBucket),
+        Seq(s"$dir/documents.parquet"), warehouse) { path =>
+      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      // materialize: a batch write consumes the result fully, and the
+      // checkpointed sig+sets RDD is dropped with this local reference
+      nearDupPairs(docs, textCol, idCol, numHashes, bandSize, shingleK,
+        threshold, maxBucket, materialize = true)
+        .write.mode("overwrite").parquet(path)
+    }
 
   /** The persisted near-dup pair graph as a DataFrame — see
     * [[nearDupPairsPathFor]]. Result-identical to the inline

@@ -46,9 +46,6 @@ object Dsir {
                              nTargetFeats: Long, nRawFeats: Long,
                              nTargetDocs: Int, nRawDocs: Int)
 
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[String, DsirModel]
-
   /** md5-bucket of a feature string — MUST match the column-side hash
     * (`conv(substring(md5(tok), 1, 4), 16, 10) % dim`) and the oracle's
     * hexToIntSql twin: first 4 lowercase hex chars of the UTF-8 md5. */
@@ -77,8 +74,9 @@ object Dsir {
                targetLang: String = "en", textCol: String = "text",
                idCol: String = "doc_id", langCol: String = "lang",
                dim: Int = 1024, sampleDocs: Int = 512): DsirModel =
-    cache.getOrElseUpdate(
-      s"$dir#$targetLang#$textCol#$idCol#$langCol#$dim#$sampleDocs", {
+    graft.Artifacts.memo(spark, "dsir_model",
+        Seq(targetLang, textCol, idCol, langCol, dim, sampleDocs),
+        Seq(s"$dir/documents.parquet")) {
         val rows = spark.read.parquet(s"$dir/documents.parquet")
           .select(col(idCol), col(textCol), col(langCol))
           .orderBy(md5(col(idCol).cast("string")), col(idCol))
@@ -101,7 +99,7 @@ object Dsir {
           math.round(1000.0 * (lpT - lpR))
         }
         DsirModel(w, dim, nt, nr, ntd, nrd)
-      })
+      }
 
   /** Unigram + adjacent-bigram feature array of a text column. NULL text
     * features as the empty string's singleton (both engines split "" to

@@ -39,9 +39,6 @@ object Lm {
                             uniFallbackMilli: Map[String, Long],
                             floorMilli: Long, vocab: Int)
 
-  private val lmCache =
-    scala.collection.concurrent.TrieMap.empty[String, BigramLm]
-
   /** Deterministic md5-spread driver sample of a text column — the ONE
     * read behind every driver-side trainer (bigram/trigram LM, CCNet
     * cutoffs), so the sampling and null policy can't drift between them.
@@ -64,8 +61,9 @@ object Lm {
                   textCol: String = "text", idCol: String = "doc_id",
                   sampleDocs: Int = 512, topBigrams: Int = 8192,
                   topUnigrams: Int = 2048): BigramLm =
-    lmCache.getOrElseUpdate(
-      s"$dir#$textCol#$idCol#$sampleDocs#$topBigrams#$topUnigrams", {
+    graft.Artifacts.memo(spark, "bigram_lm",
+        Seq(textCol, idCol, sampleDocs, topBigrams, topUnigrams),
+        Seq(s"$dir/documents.parquet")) {
         val texts = sampleTexts(spark, dir, textCol, idCol, sampleDocs)
         val uni = scala.collection.mutable.Map.empty[String, Long]
         val big = scala.collection.mutable.Map.empty[String, Long]
@@ -94,7 +92,7 @@ object Lm {
           }.toMap
         val fallback = topUni.map { case (w, c) => w -> lp(1L, c + v) }
         BigramLm(bigs, fallback, lp(1L, v.toLong), v)
-      })
+      }
 
   /** Per-document LM score: `(idCol, n_bigrams, lp_milli, keep)` where
     * `lp_milli` is the integer total of per-bigram milli-nat log-probs and
@@ -141,9 +139,6 @@ object Lm {
                              floorMilli: Long, vocab: Int,
                              backoffMilli: Long)
 
-  private val lm3Cache =
-    scala.collection.concurrent.TrieMap.empty[String, TrigramLm]
-
   /** Train-once cached artifact per (dataset dir, config) — the
     * [[bigramLmFor]] sample and pruning policy, one order up: top
     * `topTrigrams` trigrams by (count desc, key asc) with denominators from
@@ -153,8 +148,9 @@ object Lm {
                    textCol: String = "text", idCol: String = "doc_id",
                    sampleDocs: Int = 512, topTrigrams: Int = 16384,
                    topBigrams: Int = 8192, topUnigrams: Int = 2048): TrigramLm =
-    lm3Cache.getOrElseUpdate(
-      s"$dir#$textCol#$idCol#$sampleDocs#$topTrigrams#$topBigrams#$topUnigrams", {
+    graft.Artifacts.memo(spark, "trigram_lm",
+        Seq(textCol, idCol, sampleDocs, topTrigrams, topBigrams, topUnigrams),
+        Seq(s"$dir/documents.parquet")) {
         val texts = sampleTexts(spark, dir, textCol, idCol, sampleDocs)
         val uni = scala.collection.mutable.Map.empty[String, Long]
         val big = scala.collection.mutable.Map.empty[String, Long]
@@ -195,7 +191,7 @@ object Lm {
         val fallback = topUni.map { case (w, c) => w -> lp(1L, c + v) }
         TrigramLm(tris, bigs, fallback, lp(1L, v.toLong), v,
           lp(2L, 5L)) // ln(0.4) = ln(2/5), quantized through the same formula
-      })
+      }
 
   /** Per-document trigram-LM score: `(idCol, n_trigrams, lp_milli, keep)` —
     * the [[scoreMilli]] contract one order up (`n_trigrams` = max(words−2,
@@ -287,9 +283,6 @@ object Lm {
   final case class CcnetCutoffs(headMinMilli: Long, middleMinMilli: Long,
                                 nScored: Int)
 
-  private val cutCache =
-    scala.collection.concurrent.TrieMap.empty[String, CcnetCutoffs]
-
   /** Driver-side twin of [[scoreMilli]]'s kernel: `(n_bigrams, lp_milli)`
     * for one document (the LmSpec reference fold, promoted to the library
     * so the cutoff trainer and the spec share one definition). */
@@ -320,10 +313,11 @@ object Lm {
     // the key must carry the LM's identity: two differently-configured
     // models over the same dir must not share cutoffs (Map hashCode is
     // content-based — stable for a per-JVM cache)
-    cutCache.getOrElseUpdate(
-      s"$dir#$textCol#$idCol#$sampleDocs#v${lm.vocab}#f${lm.floorMilli}" +
-        s"#b${lm.bigramMilli.size}:${lm.bigramMilli.hashCode}" +
-        s"#u${lm.uniFallbackMilli.size}:${lm.uniFallbackMilli.hashCode}", {
+    graft.Artifacts.memo(spark, "ccnet_cutoffs",
+        Seq(textCol, idCol, sampleDocs, s"v${lm.vocab}", s"f${lm.floorMilli}",
+          s"b${lm.bigramMilli.size}:${lm.bigramMilli.hashCode}",
+          s"u${lm.uniFallbackMilli.size}:${lm.uniFallbackMilli.hashCode}"),
+        Seq(s"$dir/documents.parquet")) {
       val texts = sampleTexts(spark, dir, textCol, idCol, sampleDocs)
       val scored = texts.map(t => scoreDocMilli(t, lm))
         .filter(_._1 > 0L)
@@ -340,7 +334,7 @@ object Lm {
       }
       CcnetCutoffs(cutAt(scored.length / 3 - 1),
         cutAt(2 * scored.length / 3 - 1), scored.length)
-    })
+    }
 
   /** Per-document CCNet bucket: `(idCol, n_bigrams, lp_milli, bucket)` with
     * `bucket` ∈ head/middle/tail. Same zero-shuffle kernel pass as

@@ -133,15 +133,13 @@ object Similarity {
       .limit(sampleN).collect()
       .map(_.getSeq[Float](1).toArray.map(_.toDouble))
 
-  private val centroidCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
-
   def centroidsFor(spark: org.apache.spark.sql.SparkSession, dir: String,
                    nLists: Int = 8, iters: Int = 10,
                    sampleN: Int = 4096): Array[Array[Double]] =
-    centroidCache.getOrElseUpdate(s"$dir#$nLists#$iters#$sampleN", {
+    graft.Artifacts.memo(spark, "centroids", Seq(nLists, iters, sampleN),
+        Seq(s"$dir/embeddings.parquet")) {
       kmeansLocal(sampleVectors(spark, dir, sampleN), nLists, iters)
-    })
+    }
 
   private[graft] def sqdist(a: Array[Double], c: Array[Double]): Double = {
     var s = 0.0; var i = 0
@@ -248,14 +246,9 @@ object Similarity {
       .withColumn("list", ivfAssign(col(vecCol), centroids))
       .write.mode("overwrite").partitionBy("list").parquet(path)
 
-  /** Build-once index location per (dataset, centroid-config): the write-time
-    * assignment is paid on first use in this JVM, queries after that only
-    * read. Stands in for the ingest-time partitioned write at scale. The
-    * cache key carries a fingerprint of the centroid array, so re-indexing
-    * the same dir with different centroids (or list counts) builds a fresh
+  /** Identity of a centroid array for artifact keys, so re-indexing the
+    * same dir with different centroids (or list counts) builds a fresh
     * index instead of silently returning the stale one. */
-  private val indexCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def centroidFingerprint(centroids: Array[Array[Double]]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     centroids.foreach { c =>
@@ -266,37 +259,25 @@ object Similarity {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** `warehouse` = Some(base): the index lives under that base on whatever
-    * Hadoop FS scheme it names (s3a://, hdfs://, …) and is reused across
-    * JVMs via its _SUCCESS marker — the production shape. None (bench/test
-    * default) uses a JVM-local temp dir. The source-data fingerprint in the
-    * cache key rebuilds the index if embeddings.parquet changes in-process. */
+  /** Build-once index location per (dataset, centroid-config), an
+    * [[graft.Artifacts.stored]] artifact: the write-time assignment is paid
+    * on first use, queries after that only read. Stands in for the
+    * ingest-time partitioned write at scale. `warehouse` = Some(base): the
+    * index lives under that base on any Hadoop FS scheme and is reused
+    * across JVMs — the production shape. None (bench/test default) uses a
+    * JVM-local temp dir. */
   def indexPathFor(spark: org.apache.spark.sql.SparkSession, dir: String,
                    centroids: Array[Array[Double]],
                    idCol: String = "vec_id", vecCol: String = "embedding",
                    excludeId: Option[Long] = Some(0L),
-                   warehouse: Option[String] = None): String = {
-    val key = s"$dir#$idCol#$vecCol#$excludeId#${centroidFingerprint(centroids)}" +
-      s"#${Dedup.dataFingerprint(spark, s"$dir/embeddings.parquet")}#$warehouse"
-    indexCache.getOrElseUpdate(key, {
-      val path = warehouse match {
-        case Some(w) =>
-          val tag = java.security.MessageDigest.getInstance("MD5")
-            .digest(key.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-          s"$w/ivf_idx_$tag"
-        case None =>
-          graft.Scratch.dir("graft_ivf_idx")
-      }
-      val marker = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        val base = spark.read.parquet(s"$dir/embeddings.parquet")
-        val em = excludeId.fold(base)(x => base.filter(col(idCol) =!= x))
-        ivfWriteIndex(em, idCol, vecCol, centroids, path)
-      }
-      path
-    })
-  }
+                   warehouse: Option[String] = None): String =
+    graft.Artifacts.stored(spark, "ivf_idx",
+        Seq(idCol, vecCol, excludeId, centroidFingerprint(centroids)),
+        Seq(s"$dir/embeddings.parquet"), warehouse) { path =>
+      val base = spark.read.parquet(s"$dir/embeddings.parquet")
+      val em = excludeId.fold(base)(x => base.filter(col(idCol) =!= x))
+      ivfWriteIndex(em, idCol, vecCol, centroids, path)
+    }
 
   /** Incremental index maintenance: assign a NEW batch of vectors with the
     * same native kernel and APPEND into an existing list-partitioned layout.
@@ -346,34 +327,22 @@ object Similarity {
   /** Two-phase build for the append gate: base index from the rows NOT in
     * the delta wave (`idCol % deltaMod != deltaMod - 1`), then the delta
     * wave [[ivfAppendIndex]]ed into it. Idempotent across JVMs via
-    * [[DeltaMarker]]; cache-keyed like [[indexPathFor]] (centroid + data
-    * fingerprints) so changed inputs rebuild instead of reusing stale
-    * state. */
+    * [[DeltaMarker]]; keyed like [[indexPathFor]] (centroids + data) so
+    * changed inputs rebuild instead of reusing stale state. */
   def appendIndexPathFor(spark: org.apache.spark.sql.SparkSession, dir: String,
                          centroids: Array[Array[Double]],
                          idCol: String = "vec_id", vecCol: String = "embedding",
                          excludeId: Option[Long] = Some(0L), deltaMod: Int = 5,
-                         warehouse: Option[String] = None): String = {
-    val key = s"append#$dir#$idCol#$vecCol#$excludeId#$deltaMod" +
-      s"#${centroidFingerprint(centroids)}" +
-      s"#${Dedup.dataFingerprint(spark, s"$dir/embeddings.parquet")}#$warehouse"
-    indexCache.getOrElseUpdate(key, {
-      val path = warehouse match {
-        case Some(w) =>
-          val tag = java.security.MessageDigest.getInstance("MD5")
-            .digest(key.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-          s"$w/ivf_appidx_$tag"
-        case None =>
-          graft.Scratch.dir("graft_ivf_appidx")
-      }
+                         warehouse: Option[String] = None): String =
+    graft.Artifacts.stored(spark, "ivf_appidx",
+        Seq(idCol, vecCol, excludeId, deltaMod, centroidFingerprint(centroids)),
+        Seq(s"$dir/embeddings.parquet"), warehouse, marker = DeltaMarker) { path =>
       val base = spark.read.parquet(s"$dir/embeddings.parquet")
       val em = excludeId.fold(base)(x => base.filter(col(idCol) =!= x))
       val isDelta = pmod(col(idCol), lit(deltaMod)) === (deltaMod - 1)
       buildAppendIndex(spark, em.filter(!isDelta), em.filter(isDelta),
         idCol, vecCol, centroids, path)
-      path
-    })
-  }
+    }
 
   /** Compact the small files appends accumulate (one file per task per
     * touched list per append): [[graft.store.Store.compact]]'s swap rewrite
@@ -511,20 +480,18 @@ object Similarity {
     * budget on this (random, clusterless — PQ's worst case) data, m=8
     * measures 7/10 (SimilaritySpec). Cached per (dataset, config) like the
     * IVF centroid artifact. */
-  private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Array[Double]]]]
-
   def pqCodebooksFor(spark: org.apache.spark.sql.SparkSession, dir: String,
                      m: Int = 8, ksub: Int = 16, iters: Int = 10,
                      sampleN: Int = 4096): Array[Array[Array[Double]]] =
-    pqCache.getOrElseUpdate(s"$dir#$m#$ksub#$iters#$sampleN", {
+    graft.Artifacts.memo(spark, "pq_codebooks", Seq(m, ksub, iters, sampleN),
+        Seq(s"$dir/embeddings.parquet")) {
       val vecs = sampleVectors(spark, dir, sampleN)
       require(vecs(0).length % m == 0,
         s"dim ${vecs(0).length} not divisible into $m subspaces")
       val subdim = vecs(0).length / m
       Array.tabulate(m)(s =>
         kmeansLocal(vecs.map(_.slice(s * subdim, (s + 1) * subdim)), ksub, iters))
-    })
+    }
 
   /** Per-subspace nearest-sub-centroid codes as ONE column expression
     * (array of m small ints) — the write-time encode at scale; ties break
@@ -747,8 +714,9 @@ object Similarity {
                              dir: String, centroids: Array[Array[Double]],
                              m: Int = 8, ksub: Int = 16, iters: Int = 10,
                              sampleN: Int = 4096): Array[Array[Array[Double]]] =
-    pqCache.getOrElseUpdate(
-      s"$dir#res#${centroidFingerprint(centroids)}#$m#$ksub#$iters#$sampleN", {
+    graft.Artifacts.memo(spark, "pq_residual_codebooks",
+        Seq(centroidFingerprint(centroids), m, ksub, iters, sampleN),
+        Seq(s"$dir/embeddings.parquet")) {
         val vecs = sampleVectors(spark, dir, sampleN)
         require(vecs(0).length % m == 0,
           s"dim ${vecs(0).length} not divisible into $m subspaces")
@@ -765,7 +733,7 @@ object Similarity {
         val subdim = vecs(0).length / m
         Array.tabulate(m)(s =>
           kmeansLocal(res.map(_.slice(s * subdim, (s + 1) * subdim)), ksub, iters))
-      })
+      }
 
   /** The residual of a vector against its assigned list's centroid, as one
     * column expression (ARRAY<DOUBLE> — stays in the double arithmetic the
@@ -798,42 +766,24 @@ object Similarity {
       .write.mode("overwrite").partitionBy("list").parquet(path)
 
   /** Build-once location for the combined index, keyed like [[indexPathFor]]
-    * (data + centroid + codebook fingerprints; warehouse-scheme aware). */
-  private val ivfPqIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
+    * (data, centroids and codebooks; warehouse-scheme aware). */
   def ivfPqIndexPathFor(spark: org.apache.spark.sql.SparkSession, dir: String,
                         centroids: Array[Array[Double]],
                         codebooks: Array[Array[Array[Double]]],
                         idCol: String = "vec_id", vecCol: String = "embedding",
                         excludeId: Option[Long] = Some(0L),
-                        warehouse: Option[String] = None): String = {
-    // "#res1" versions the ENCODING scheme (residual codes since round 9):
+                        warehouse: Option[String] = None): String =
+    // "res1" versions the ENCODING scheme (residual codes since round 9):
     // a persisted-warehouse artifact written by the flat-code era must not
     // be read back as residual codes
-    val key = s"$dir#$idCol#$vecCol#$excludeId#res1" +
-      s"#${centroidFingerprint(centroids)}" +
-      s"#${centroidFingerprint(codebooks.flatten)}" +
-      s"#${Dedup.dataFingerprint(spark, s"$dir/embeddings.parquet")}#$warehouse"
-    ivfPqIndexCache.getOrElseUpdate(key, {
-      val path = warehouse match {
-        case Some(w) =>
-          val tag = java.security.MessageDigest.getInstance("MD5")
-            .digest(key.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-          s"$w/ivfpq_idx_$tag"
-        case None =>
-          graft.Scratch.dir("graft_ivfpq_idx")
-      }
-      val marker = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        val base = spark.read.parquet(s"$dir/embeddings.parquet")
-        val em = excludeId.fold(base)(x => base.filter(col(idCol) =!= x))
-        ivfPqWriteIndex(em, idCol, vecCol, centroids, codebooks, path)
-      }
-      path
-    })
-  }
+    graft.Artifacts.stored(spark, "ivfpq_idx",
+        Seq(idCol, vecCol, excludeId, "res1", centroidFingerprint(centroids),
+          centroidFingerprint(codebooks.flatten)),
+        Seq(s"$dir/embeddings.parquet"), warehouse) { path =>
+      val base = spark.read.parquet(s"$dir/embeddings.parquet")
+      val em = excludeId.fold(base)(x => base.filter(col(idCol) =!= x))
+      ivfPqWriteIndex(em, idCol, vecCol, centroids, codebooks, path)
+    }
 
   /** Query the combined index: driver-side centroid argmin → literal
     * `list IN (...)` prunes partitions; ADC over the codes column cuts to

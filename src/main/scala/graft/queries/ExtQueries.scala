@@ -790,7 +790,8 @@ object ExtQueries {
       "trim(regexp_extract(el, '(?i)>([^<]*)</a>', 1)) AS anchor_text " +
       "FROM r WHERE raw IS NOT NULL)"
 
-  /** The outlink fixture's edge list, extracted ONCE per (JVM, sf dir) and
+  /** The outlink fixture's edge list, extracted ONCE per sf dir (an
+    * [[graft.Artifacts.stored]] artifact of its documents) and
     * parquet-materialized — the PRODUCTION shape (r13 verdict item 8): the
     * edge list is a pipeline product consumed by the frontier, the URL/
     * domain ranks and the queue ordering, so production extracts it once
@@ -802,77 +803,58 @@ object ExtQueries {
     * by `x_html_links`/`x_anchor_text`, which dump [[Url.outlinks]]/
     * [[Url.outAnchors]] directly. Same rows either way — the four consumer
     * gates' hashes are unchanged (CORRECTNESS-checked both forms). */
-  private val linksCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def fixtureLinks(s: SparkSession, d: String): DataFrame = {
-    val dir = linksCache.computeIfAbsent(d, _ => {
-      val out = graft.Scratch.dir("graft-links-fixture") + "/links"
+  private[graft] def fixtureLinks(s: SparkSession, d: String): DataFrame =
+    Td.readTable(s, graft.Artifacts.stored(s, "links_fixture", Nil,
+        Seq(s"$d/documents.parquet"), None) { out =>
       Url.outlinks(
           Fixtures.attachLinksHtml(
             Fixtures.attachUrls(t(s, d, "documents"), "doc_id", "source"),
             "doc_id", "url"),
           "doc_id", "url", "html")
         .write.parquet(out)
-      out
     })
-    Td.readTable(s, dir)
-  }
 
-  /** The anchor-occurrence fixture, extracted once per (JVM, sf dir) and
+  /** The anchor-occurrence fixture, extracted once per sf dir and
     * parquet-materialized — the same production rationale as
     * [[fixtureLinks]]: the anchor table is a pipeline product with two
     * consumers (the per-target rollup and the frontier quality blend);
     * raw extraction stays priced by `x_anchor_text`, which dumps
     * [[Url.outAnchors]] directly. */
-  private val anchorsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def fixtureAnchors(s: SparkSession, d: String): DataFrame = {
-    val dir = anchorsCache.computeIfAbsent(d, _ => {
-      val out = graft.Scratch.dir("graft-anchors-fixture") + "/anchors"
+  private[graft] def fixtureAnchors(s: SparkSession, d: String): DataFrame =
+    Td.readTable(s, graft.Artifacts.stored(s, "anchors_fixture", Nil,
+        Seq(s"$d/documents.parquet"), None) { out =>
       Url.outAnchors(
           Fixtures.attachLinksHtml(
             Fixtures.attachUrls(t(s, d, "documents"), "doc_id", "source"),
             "doc_id", "url"),
           "doc_id", "url", "html")
         .write.parquet(out)
-      out
     })
-    Td.readTable(s, dir)
-  }
 
   /** Discovered-frontier and domain-rank fixtures, computed once per
-    * (JVM, sf dir) and parquet-materialized — the production shape for the
+    * sf dir and parquet-materialized — the production shape for the
     * frontierOrder CONSUMER gates: the frontier and the rank table are
     * pipeline PRODUCTS with three consumers each (order/quota/anchor), and
     * their own construction stays priced by `x_crawl_frontier` /
     * `x_domain_rank`, which run the operators directly. Before this cache
     * each consumer gate re-ran the Bloom build and the 3-round rank
     * iteration from the raw edge list (x_frontier_quota alone measured
-    * 3.2 s at sf0.1 — mostly shared input recompute, not the operator). */
-  private val frontierCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def fixtureFrontier(s: SparkSession, d: String): DataFrame = {
-    val dir = frontierCache.computeIfAbsent(d, _ => {
-      val out = graft.Scratch.dir("graft-frontier-fixture") + "/frontier"
+    * 3.2 s at sf0.1 — mostly shared input recompute, not the operator).
+    * Both build from [[fixtureLinks]], a nested artifact lookup. */
+  private[graft] def fixtureFrontier(s: SparkSession, d: String): DataFrame =
+    Td.readTable(s, graft.Artifacts.stored(s, "frontier_fixture", Nil,
+        Seq(s"$d/documents.parquet"), None) { out =>
       Url.discoveredFromLinks(fixtureLinks(s, d),
           Fixtures.attachUrls(t(s, d, "documents"), "doc_id", "source")
             .select(Url.canonicalKey(col("url"))), expectedItems = 100000L)
         .write.parquet(out)
-      out
     })
-    Td.readTable(s, dir)
-  }
 
-  private val domainRankCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def fixtureDomainRank(s: SparkSession, d: String): DataFrame = {
-    val dir = domainRankCache.computeIfAbsent(d, _ => {
-      val out = graft.Scratch.dir("graft-domainrank-fixture") + "/rank"
+  private[graft] def fixtureDomainRank(s: SparkSession, d: String): DataFrame =
+    Td.readTable(s, graft.Artifacts.stored(s, "domain_rank_fixture", Nil,
+        Seq(s"$d/documents.parquet"), None) { out =>
       LinkGraph.domainRank(fixtureLinks(s, d)).write.parquet(out)
-      out
     })
-    Td.readTable(s, dir)
-  }
 
   /** DuckDB twin of [[LinkGraph.urlRank]] (3 iterations, damping 850/1000,
     * scale 1e6) over the [[OutlinksCte]] fixture graph: the iteration is

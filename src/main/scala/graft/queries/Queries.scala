@@ -16,7 +16,7 @@ object Td {
   /** Schema-cached table read ([[graft.Scratch.readCachedSchema]]) — the
     * catalog-metastore shape shared with the ext-store readers. The
     * nanosAsLong flag must already be set when a path's FIRST read pays the
-    * one-time inference (t() sets it before calling). */
+    * inference (t() sets it before calling). */
   def readTable(spark: SparkSession, path: String): DataFrame =
     graft.Scratch.readCachedSchema(spark, path)
 
@@ -1086,13 +1086,13 @@ object Queries {
       // constant (PLANS.md r11 chunk curve), and the gate's claims —
       // disjoint batch ids, cross-batch isolation, redelivery absorption —
       // are fully exercised by 2 data batches + the plant. Chunk staging
-      // is cached per JVM (stageKey) and delivered atomically; spec-level
+      // is cached per state of orders.parquet and delivered atomically; spec-level
       // multi-batch coverage (out-of-order, JSON arrival) lives in
       // StreamingSpec.
       (s: SparkSession, d: String) => {
         val wh = graft.streaming.StreamingIngest
           .flattenFileRun(s, syntheticEnvelopes(s, d), chunks = 2,
-            stageKey = d)
+            stageInputs = Seq(s"$d/orders.parquet"))
         Mvs.readMv(s.read.parquet(s"$wh/mv_daily_block_stats")
             .drop("ingest_batch"), Seq("date"))
           .withColumn("date", date_format(col("date"), "yyyy-MM-dd"))

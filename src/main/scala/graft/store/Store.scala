@@ -220,9 +220,13 @@ object Store {
     // table), adding ~300 ms of pointless backoff before propagating.
     def vanished(t: Throwable): Boolean =
       t != null && (t.isInstanceOf[java.io.FileNotFoundException] ||
+        // a checksum (.crc) file removed mid-read surfaces through NIO
+        t.isInstanceOf[java.nio.file.NoSuchFileException] ||
         (t match {
+          // UNABLE_TO_INFER_SCHEMA: a listing that raced the swap found no
+          // parquet file to infer from
           case e: org.apache.spark.sql.AnalysisException =>
-            e.getErrorClass == "PATH_NOT_FOUND"
+            e.getErrorClass == "PATH_NOT_FOUND" || e.getErrorClass == "UNABLE_TO_INFER_SCHEMA"
           case _ => false
         }) ||
         (t.getMessage != null &&

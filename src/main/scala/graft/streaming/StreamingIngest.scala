@@ -92,19 +92,19 @@ object StreamingIngest {
     * through `Ingest.write` with the same batch key after the
     * stream stops, proving the overwrite absorbs it. Returns the warehouse
     * directory. The JSON arrival format keeps its own streaming coverage in
-    * StreamingSpec (startExactlyOnce defaults to `format = "json"`). A
-    * non-empty `stageKey` (the sf dir) builds the chunk staging once per
-    * JVM: every rep of the gate stages the IDENTICAL frame (~5 s at sf1). */
+    * StreamingSpec (startExactlyOnce defaults to `format = "json"`).
+    * `stageInputs`, the paths `envelopes` reads, builds the chunk staging
+    * once per state of those inputs: every rep of the gate stages the
+    * IDENTICAL frame (~5 s at sf1). No inputs stage afresh. */
   def flattenFileRun(spark: SparkSession, envelopes: DataFrame, chunks: Int = 4,
                      replayLastBatch: Boolean = true,
-                     stageKey: String = ""): String = {
+                     stageInputs: Seq[String] = Nil): String = {
     import org.apache.hadoop.fs.Path
     val stage = graft.Scratch.dir("graft_sflat")
     val inDir = s"$stage/in"
     val wh = s"$stage/wh"; val ckpt = s"$stage/ckpt"
 
-    val parts = StreamStage.staged(spark,
-        if (stageKey.isEmpty) "" else s"flatten:$stageKey#$chunks") { dir =>
+    val parts = StreamStage.staged(spark, Seq("flatten", chunks), stageInputs) { dir =>
       envelopes
         .repartitionByRange(chunks, col("height"))
         // SMALL ROW GROUPS (1 MiB vs the 128 MiB default): a chunk written

@@ -34,18 +34,12 @@ object Artifacts {
     * of every file under it, via the Hadoop FS API (any scheme). Names
     * count: Spark writes new part-file names on every rewrite, so a
     * rewrite with the same file count, bytes and mtime still changes it.
-    * One listing, no Spark job. */
-  private def fingerprint(spark: SparkSession, path: String): String = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // listStatus, not listFiles: a located status reads each local file's
-    // owner and permissions, which on a local FS forks a shell per file
-    def files(dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(dir).toSeq.flatMap(f => if (f.isDirectory) files(f.getPath) else Seq(f))
-    try md5Hex(files(p).map(f => s"${f.getPath}\u0000${f.getLen}\u0000${f.getModificationTime}")
+    * One listing ([[graft.store.Store.filesUnder]]), no Spark job. */
+  private def fingerprint(spark: SparkSession, path: String): String =
+    try md5Hex(graft.store.Store.filesUnder(spark.sparkContext.hadoopConfiguration, path)
+      .map(f => s"${f.getPath}\u0000${f.getLen}\u0000${f.getModificationTime}")
       .sorted.mkString("\n"))
     catch { case _: java.io.FileNotFoundException => "absent" }
-  }
 
   private def lookup[T](spark: SparkSession, key: String, inputs: Seq[String])(
       build: String => T): T = {

@@ -37,17 +37,12 @@ object Tune {
 
   private val BytesPerPartition: Long = 4L << 20
 
-  /** Total bytes under `dir` (non-recursive listing is enough for the flat
-    * sf layouts; parquet directories are walked). 0 when unreadable. */
+  /** Total bytes of the files under `dir` on any Hadoop FS scheme
+    * ([[graft.store.Store.filesUnder]]). 0 when unreadable. */
   def inputBytes(dir: String): Long =
-    try {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try s.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(f =>
-          try java.nio.file.Files.size(f) catch { case _: Exception => 0L })
-        .sum()
-      finally s.close()
-    } catch { case _: Exception => 0L }
+    try graft.store.Store.filesUnder(new org.apache.hadoop.conf.Configuration(), dir)
+      .map(_.getLen).sum
+    catch { case _: Exception => 0L }
 
   /** The sizing rule: one partition per ~4 MiB of `bytes`, at least
     * `floor`, at most 4096. */

@@ -353,8 +353,8 @@ object Similarity {
     * compacted index still reads as fully maintained. */
   def ivfCompactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                       idCol: String = "vec_id"): Unit = {
-    graft.store.Store.compact(spark, path, keys = Seq(idCol),
-      versionCol = None, partitionCols = Seq("list"))
+    graft.store.Store.compact(spark, path, graft.store.Store.latestAnyRow(_, Seq(idCol)),
+      partitionCols = Seq("list"))
     val marker = new org.apache.hadoop.fs.Path(s"$path/$DeltaMarker")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.create(marker, true).close()

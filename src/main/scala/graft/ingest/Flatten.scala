@@ -188,19 +188,4 @@ object Flatten {
       blockEvents = blockEvents,
       blockEventAttrs = blockEventAttrs)
   }
-
-  /** Join the two raw RPC response DataFrames (one row per height each, with a
-    * `height` column alongside the parsed body) into the envelope shape. */
-  def envelopeFromRpc(blockRpc: DataFrame, blockResultsRpc: DataFrame): DataFrame = {
-    val b = blockRpc.select(
-      col("height"),
-      col("result.block.header.time").as("time"),
-      col("result.block.header.app_hash").as("app_hash"),
-      col("result.block.data.txs").as("txs"))
-    val r = blockResultsRpc.select(
-      col("height"),
-      col("result.txs_results").as("txs_results"),
-      col("result.finalize_block_events").as("finalize_block_events"))
-    b.join(r, Seq("height"), "inner")
-  }
 }

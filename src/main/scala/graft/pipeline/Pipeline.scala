@@ -13,7 +13,7 @@ import Pipeline.{IndexRow, LoopState, WorkItem}
   * worker processes collapsed into one driver program over DataFrames.
   * Process/queue plumbing becomes Spark task scheduling; the work_queue /
   * index_state / failed_blocks tables survive as audit/state Parquet tables
-  * (upsert-by-insert, FINAL semantics through `Store.latest`).
+  * (upsert-by-insert, FINAL semantics through [[readTable]]).
   *
   * The driver loop's own state — the FINAL rows of work_queue and
   * index_state, the next work-item id and the blocks height watermark — is
@@ -46,14 +46,7 @@ final case class PipelineConfig(
     backfillWindow: Long = 50000L,
     maxRetries: Int = 10,
     // injected clock for deterministic tests (epoch seconds)
-    now: () => Long = () => System.currentTimeMillis() / 1000,
-    // FINAL-by-default for state-table reads (VERDICT r9 item 8 trial →
-    // r10 green → flipped): readTable of work_queue / index_state /
-    // failed_blocks returns the latest-per-key view — ClickHouse's
-    // `final = 1` stance for exactly the tables with update semantics.
-    // Raw-append readers (requeue-loop detection, file-layout audits)
-    // opt out EXPLICITLY via readTableRaw, never by flipping this off.
-    autoFinal: Boolean = true)
+    now: () => Long = () => System.currentTimeMillis() / 1000)
 
 class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
 
@@ -69,25 +62,23 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** State tables with genuine update semantics — the set `autoFinal`
-    * applies to. `blocks` is ALSO registry-versioned (for the FINAL hint /
-    * compaction), but its pipeline reads are observational — gap detection
-    * counts arrivals, max-height over appends equals max over FINAL — and
-    * injecting a window over the largest fact table on every internal read
-    * would buy nothing, so it stays raw here. */
-  private val autoFinalTables = Set("work_queue", "index_state", "failed_blocks")
+  /** State tables with genuine update semantics, read FINAL. `blocks` is
+    * ALSO registry-versioned (for the FINAL hint / compaction), but its
+    * pipeline reads are observational — gap detection counts arrivals,
+    * max-height over appends equals max over FINAL — and injecting a window
+    * over the largest fact table on every internal read would buy nothing,
+    * so it stays raw here. */
+  private val finalTables = Set("work_queue", "index_state", "failed_blocks")
 
-  /** Read a state/analytic table. With `cfg.autoFinal` (the default), reads
-    * of the versioned STATE tables return the latest-per-key view — the same
-    * window plan `Store.latest` / the FINAL hint build, so hinted, explicit
-    * and default reads are plan-identical. Append-audit readers use
-    * [[readTableRaw]]. */
+  /** Read a state/analytic table: the versioned STATE tables return their
+    * latest-per-key view (`Store.latest` with the registry spec — the plan
+    * the FINAL hint builds), ClickHouse's `final = 1` stance for exactly
+    * the tables with update semantics. Append-audit readers (requeue-loop
+    * detection, file-layout audits) use [[readTableRaw]]. */
   def readTable(table: String): DataFrame = {
     val raw = readTableRaw(table)
-    if (cfg.autoFinal && autoFinalTables.contains(table)) {
-      val spec = Store.versionedTables(table)
-      Store.latest(raw, spec.keys, spec.ver, spec.tieBreak)
-    } else raw
+    if (finalTables.contains(table)) Store.latest(raw, Store.versionedTables(table))
+    else raw
   }
 
   /** Raw-append read: every inserted row, superseded versions included,
@@ -96,8 +87,7 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
     * still discovered from the directories), empty-but-typed when not yet
     * written. The explicit opt-out for call
     * sites whose SEMANTICS are the insert log (requeue-loop detection counts
-    * re-inserts; file-layout audits count appends) and for internal reads
-    * that wrap their own latest() view.
+    * re-inserts; file-layout audits count appends).
     *
     * The existence probe lives INSIDE Store.withReadRetry (a miss throws and
     * is retried): a concurrent Store.compact publish has a millisecond
@@ -135,8 +125,6 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
     case "failed_blocks" => Schemas.failedBlocks
     case other => throw new IllegalArgumentException(other)
   }
-
-  private def nowTs = timestamp_seconds(lit(cfg.now()))
 
   /** Process-monotonic micro-stamp: epoch micros from the injected seconds
     * clock, forced strictly increasing by a per-WAREHOUSE last-issued
@@ -198,7 +186,7 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
       .collect().map(r => r.getLong(0) -> WorkItem(r.getLong(0), r.getLong(1),
         r.getLong(2), r.getString(3), r.getString(4), r.getString(5),
         r.getLong(6), r.getLong(7))).toMap
-    val index = Store.latest(readTableRaw("index_state"), Seq("index_name"), "updated_at")
+    val index = readTable("index_state")
       .select(col("index_name"), col("last_processed_height"), unix_micros(col("updated_at")))
       .collect().map(r => r.getString(0) -> IndexRow(r.getLong(1), r.getLong(2))).toMap
     val watermark = readTable("blocks").agg(max("height")).head()
@@ -216,8 +204,7 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
     val listed = Pipeline.StateTables.map(t => t -> stateFiles(t)).toMap
     if (listed.exists { case (t, files) => files != known(t) }) coldLoad()
     for ((t, files) <- listed if files.size > Pipeline.StateFileBound) {
-      val spec = Store.versionedTables(t)
-      Store.compact(spark, path(t), spec.keys, Some(spec.ver))
+      Store.compact(spark, path(t), Store.latest(_, Store.versionedTables(t)))
       known += t -> stateFiles(t)
     }
   }
@@ -251,8 +238,7 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
   }
 
   /** Latest view of the work queue (FINAL). */
-  def workQueue(): DataFrame =
-    Store.latest(readTableRaw("work_queue"), Seq("id"), "updated_at")
+  def workQueue(): DataFrame = readTable("work_queue")
 
   /** Seed work items for [from, to], subtracting already-queued
     * pending/processing ranges (J4; orchestrator.js:574-636). */
@@ -387,7 +373,7 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
     recordFailedBlocks(Seq(height).toDF("height"), errorType, errorMessage, workerId)
   }
 
-  /** Batched failure records: ONE latest() read joins prior retry counts for
+  /** Batched failure records: ONE FINAL read joins prior retry counts for
     * every height, ONE append writes all failure rows (coalesced to a single
     * file — state appends are tiny). A failed 1 000-height work item is one
     * Spark job, not ~2 000 (the per-height loop did a full read + a
@@ -395,8 +381,7 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
   def recordFailedBlocks(heights: DataFrame, errorType: String,
                          errorMessage: String,
                          workerId: String = "driver"): Unit = {
-    val prior = Store.latest(readTableRaw("failed_blocks"), Seq("block_height"),
-        "last_retry_at", tieBreak = Seq("id"))
+    val prior = readTable("failed_blocks")
       .select(col("block_height").as("height"),
         col("retry_count").as("__prior_retry"))
     val ts = nextMicros()
@@ -423,8 +408,7 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
 
   /** P7: blocks eligible for retry now. */
   def retryEligible(): DataFrame =
-    Store.latest(readTableRaw("failed_blocks"), Seq("block_height"), "last_retry_at",
-        tieBreak = Seq("id"))
+    readTable("failed_blocks")
       .filter(col("status") === "pending" &&
         col("retry_count") < col("max_retries") &&
         col("next_retry_at") <= timestamp_seconds(lit(cfg.now())))

@@ -93,116 +93,49 @@ object HeightBucketPruning extends Rule[LogicalPlan] {
 }
 
 /** ClickHouse's `FINAL` modifier as a Spark query hint (SURVEY §4 optional
-  * polish #1, opt-in form): `df.hint("FINAL")` — or
-  * `SELECT /*+ FINAL */ …` on the SQL surface — rewrites the hinted
-  * subtree to its latest-full-row-per-key view during analysis.
+  * polish #1): `df.hint("FINAL")` — or `SELECT /*+ FINAL */ …` on the SQL
+  * surface — rewrites the hinted subtree to its latest-full-row-per-key
+  * view during analysis.
   *
-  * The dedup spec (keys + version column) is resolved against
-  * [[graft.store.Store.versionedTables]] by SCHEMA inference: exactly one
-  * registry entry whose key and version columns all appear in the child's
-  * output. Zero matches or an ambiguous schema fail loudly — a silent
-  * raw read is exactly the hazard the hint exists to close. The rewrite
-  * is the same window plan `Store.latest` builds (row_number over keys,
-  * version desc, keep rank 1), so hinted and explicit reads are
+  * The rule only infers which spec applies: exactly one
+  * [[graft.store.Store.versionedTables]] entry whose key and version
+  * columns all appear in the child's output. Zero matches or an ambiguous
+  * schema fail loudly — a silent raw read is exactly the hazard the hint
+  * exists to close. The rewrite itself is [[graft.store.Store.latestPlan]],
+  * the plan `Store.latest` builds, so hinted and explicit reads are
   * plan-identical.
+  *
+  * Tie-break columns deliberately do NOT gate the match: a projection that
+  * pruned `id` off failed_blocks is still a versioned read and must keep
+  * resolving; the rewrite applies the tie-breaks that survive the
+  * projection (full-schema reads stay plan-identical to the explicit read).
   *
   * Opt-in by design: an automatic rewrite of every versioned-table read
   * would break the call sites that legitimately read raw appends (ingest
   * counters, compaction audits, partition-layout checks). */
 object FinalHintResolution extends Rule[LogicalPlan] {
   import org.apache.spark.sql.catalyst.plans.logical.UnresolvedHint
+  import graft.store.Store
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
     case h @ UnresolvedHint(name, _, child) if name.equalsIgnoreCase("FINAL") =>
       if (!child.resolved) h
       else {
-        val matches = FinalRewrite.specsMatching(child)
-        matches match {
-          case Seq((_, spec)) => FinalRewrite.latestPlan(child, spec)
+        def present(c: String) = child.output.exists(_.name == c)
+        Store.versionedTables.toSeq.filter { case (_, spec) =>
+          (spec.keys :+ spec.ver).forall(present)
+        } match {
+          case Seq((_, spec)) =>
+            Store.latestPlan(child, spec.copy(tieBreak = spec.tieBreak.filter(present)))
           case Seq() => throw new IllegalArgumentException(
             "FINAL hint: no versioned-table spec matches schema " +
               child.output.map(_.name).mkString("[", ", ", "]") +
-              s" (registry: ${graft.store.Store.versionedTables.keys.mkString(", ")})")
+              s" (registry: ${Store.versionedTables.keys.mkString(", ")})")
           case many => throw new IllegalArgumentException(
             s"FINAL hint: ambiguous schema matches ${many.map(_._1).sorted.mkString(", ")}")
         }
       }
   }
-}
-
-/** Shared FINAL machinery: spec inference + the latest-view window plan. */
-object FinalRewrite {
-  import org.apache.spark.sql.catalyst.plans.logical.{Project, Window}
-
-  /** Registry entries whose KEY and VERSION columns all appear in the
-    * plan's output — the schema-inference step both FINAL forms share.
-    * Tie-break columns deliberately do NOT gate the match: a projection
-    * that pruned `id` off failed_blocks is still a versioned read and must
-    * keep resolving; [[latestPlan]] applies whatever tie-breaks survive
-    * the projection (full-schema reads — the common case — stay
-    * plan-identical to Store.latest(tieBreak)). */
-  def specsMatching(plan: LogicalPlan): Seq[(String, graft.store.Store.VersionedSpec)] =
-    graft.store.Store.versionedTables.toSeq.filter {
-      case (_, spec) =>
-        (spec.keys :+ spec.ver).forall(c => plan.output.exists(_.name == c))
-    }
-
-  /** row_number() over (partition by keys order by ver desc, tieBreak desc)
-    * == 1, then project the original columns — Store.latest's exact plan,
-    * tie-breaks included, so hinted and explicit reads are plan-identical
-    * and deterministic under version ties (failed_blocks ties on id). */
-  def latestPlan(child: LogicalPlan,
-                 spec: graft.store.Store.VersionedSpec): LogicalPlan = {
-    def attr(n: String) = child.output.find(_.name == n).get
-    // tie-breaks the projection kept; a read that pruned them accepts the
-    // corresponding nondeterminism under exact version ties (its choice)
-    val tb = spec.tieBreak.filter(c => child.output.exists(_.name == c))
-    val order = (spec.ver +: tb).map(c => SortOrder(attr(c), Descending))
-    val winSpec = WindowSpecDefinition(spec.keys.map(attr), order, UnspecifiedFrame)
-    val rn = Alias(WindowExpression(RowNumber(), winSpec), "__rn")()
-    val win = Window(Seq(rn), spec.keys.map(attr), order, child)
-    Project(child.output, Filter(EqualTo(rn.toAttribute, Literal(1)), win))
-  }
-}
-
-/** SURVEY §4 polish #1, automatic form: with
-  * `spark.graft.autoFinal=true`, every LEAF relation whose schema matches
-  * exactly ONE registered versioned-table spec is rewritten to its
-  * latest-row-per-key view during analysis — ClickHouse's
-  * `final = 1` session setting, where every ReplacingMergeTree read is
-  * implicitly FINAL, without call sites spelling the hint.
-  *
-  * Off by default: raw-append call sites (ingest counters, compaction
-  * audits, partition-layout checks) must keep reading appends, so the
-  * automatic rewrite is an opt-in session mode, not engine default.
-  * Conservative in auto mode: zero or ambiguous schema matches skip the
-  * leaf silently (the explicit hint is where loud failure belongs — an
-  * auto mode that throws on every non-versioned scan would be unusable).
-  * A TreeNodeTag marks rewritten leaves so the analyzer's fixpoint loop
-  * does not re-wrap the same scan. */
-object AutoFinalResolution extends Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.plans.logical.LeafNode
-  import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-
-  val ConfKey = "spark.graft.autoFinal"
-  private val rewritten = TreeNodeTag[Boolean]("graft.autoFinal.done")
-
-  private def enabled: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString(ConfKey, "false").toBoolean
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.resolveOperatorsUp {
-      case leaf: LeafNode
-          if leaf.resolved && leaf.getTagValue(rewritten).isEmpty =>
-        FinalRewrite.specsMatching(leaf) match {
-          case Seq((_, spec)) =>
-            leaf.setTagValue(rewritten, true)
-            FinalRewrite.latestPlan(leaf, spec)
-          case _ => leaf
-        }
-    }
 }
 
 /** Session-extension registration: `SparkSession.builder()
@@ -212,7 +145,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => HeightBucketPruning)
     e.injectResolutionRule(_ => FinalHintResolution)
-    e.injectResolutionRule(_ => AutoFinalResolution)
   }
 }
 

@@ -33,7 +33,7 @@ class Monitor(spark: SparkSession, p: Pipeline, nowSecs: () => Long) {
 
   /** Failure analysis by (status, error_type) (A5; monitor_indexer.js:65-72). */
   def failureReport(): DataFrame =
-    Store.latest(p.readTableRaw("failed_blocks"), Seq("block_height"), "last_retry_at")
+    p.readTable("failed_blocks")
       .groupBy("status", "error_type").agg(
         count(lit(1)).as("cnt"),
         min("block_height").as("min_height"),
@@ -84,7 +84,7 @@ class Monitor(spark: SparkSession, p: Pipeline, nowSecs: () => Long) {
   /** Recent ingest throughput: blocks whose created_at falls in the last
     * window (monitor_indexer.js:136-142,161-168 flavor). */
   def recentThroughput(minutes: Int = 60): DataFrame =
-    Store.latest(p.readTable("blocks"), Seq("height"), "created_at")
+    Store.latest(p.readTable("blocks"), Store.versionedTables("blocks"))
       .filter(col("created_at") > now - expr(s"INTERVAL $minutes MINUTES"))
       .agg(
         count(lit(1)).as("blocks_ingested"),
@@ -92,7 +92,7 @@ class Monitor(spark: SparkSession, p: Pipeline, nowSecs: () => Long) {
 
   /** One-row overall summary (A12 multi-scalar shape). */
   def summary(): DataFrame = {
-    val blocks = Store.latest(p.readTable("blocks"), Seq("height"), "created_at")
+    val blocks = Store.latest(p.readTable("blocks"), Store.versionedTables("blocks"))
     blocks.agg(
       count(lit(1)).as("n_blocks"),
       coalesce(min("height"), lit(0L)).as("min_height"),

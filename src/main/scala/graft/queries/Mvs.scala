@@ -23,7 +23,7 @@ import graft.store.Store
 object Mvs {
 
   private def blocksLatest(blocks: DataFrame) =
-    Store.latest(blocks, Seq("height"), "created_at")
+    Store.latest(blocks, Store.versionedTables("blocks"))
 
   /** MV1: per-day block stats (init_clickhouse.js:384-395). */
   def dailyBlockStatsRecompute(blocks: DataFrame): DataFrame =

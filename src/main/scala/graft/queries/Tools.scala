@@ -90,7 +90,7 @@ object Tools {
       new java.net.URI(warehouse), spark.sparkContext.hadoopConfiguration)
     val missing = expected.filterNot(t =>
       fs.exists(new org.apache.hadoop.fs.Path(s"$warehouse/$t")))
-    val state = Store.latest(p.readTableRaw("index_state"), Seq("index_name"), "updated_at")
+    val state = p.readTable("index_state")
       .agg(
         coalesce(max("last_processed_height"), lit(-1L)).as("h"),
         coalesce(max(unix_timestamp(col("updated_at"))), lit(-1L)).as("u"))

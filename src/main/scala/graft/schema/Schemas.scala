@@ -167,21 +167,4 @@ object Schemas {
     StructField("status", StringType, nullable = false),
     StructField("next_retry_at", TimestampType, nullable = false),
     StructField("last_retry_at", TimestampType, nullable = false)))
-
-  /** Analytic-table name -> (dedup key columns, version column or None).
-    * Mirrors the ReplacingMergeTree clauses in models.js §1.4. */
-  val tableKeys: Map[String, (Seq[String], Option[String])] = Map(
-    "blocks" -> (Seq("height"), Some("created_at")),
-    "txs" -> (Seq("height", "tx_index"), None),
-    "tx_events" -> (Seq("height", "tx_index", "event_index"), None),
-    "tx_event_attrs_json" -> (Seq("height", "tx_index", "event_index"), Some("created_at")),
-    "block_events" -> (Seq("height", "event_index"), None),
-    "block_event_attrs" -> (Seq("height", "event_index", "attr_index"), None),
-    "type_wasm" -> (Seq("height", "tx_index", "event_index"), Some("created_at")),
-    "type_wasm_attrs" -> (Seq("height", "tx_index", "event_index", "attr_index"), None),
-    "type_message" -> (Seq("height", "tx_index", "event_index"), Some("created_at")),
-    "type_message_attrs" -> (Seq("height", "tx_index", "event_index", "attr_index"), None),
-    "index_state" -> (Seq("index_name"), Some("updated_at")),
-    "work_queue" -> (Seq("id"), Some("updated_at")),
-    "failed_blocks" -> (Seq("block_height", "id"), Some("last_retry_at")))
 }

@@ -1,7 +1,8 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window}
 import org.apache.spark.sql.functions._
 
 /** Storage semantics (SURVEY §1.4, §2.1): ClickHouse ReplacingMergeTree
@@ -15,17 +16,34 @@ import org.apache.spark.sql.functions._
   */
 object Store {
 
-  /** A15/W1 — ClickHouse `FINAL`: newest row per key by `versionCol`
-    * (ties broken by `tieBreak` desc, then arbitrary-but-deterministic).
+  /** A15/W1 — ClickHouse `FINAL`: newest row per `spec.keys` by
+    * `spec.ver`, ties broken by `spec.tieBreak` desc. A versioned table's
+    * read takes its registry spec, `latest(df, versionedTables(t))`.
     * One shuffle on the dedup key; at 100 TB this is a single hash
     * repartition + in-partition sort, no global sort. */
+  def latest(df: DataFrame, spec: VersionedSpec): DataFrame =
+    GraftBridge.withPlan(df)(latestPlan(_, spec))
+
+  /** [[latest]] over an ad-hoc spec (a table outside the registry). */
   def latest(df: DataFrame, keys: Seq[String], versionCol: String,
-             tieBreak: Seq[String] = Nil): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy((versionCol +: tieBreak).map(c => col(c).desc): _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
+             tieBreak: Seq[String] = Nil): DataFrame =
+    latest(df, VersionedSpec(keys, versionCol, tieBreak))
+
+  /** The one FINAL plan: row_number() over (partition by keys order by ver
+    * desc, tieBreak desc) = 1, projected back to `child`'s columns. Both
+    * [[latest]] and the FINAL hint ([[graft.plans.FinalHintResolution]])
+    * build it, so hinted and explicit reads are plan-identical. */
+  def latestPlan(child: LogicalPlan, spec: VersionedSpec): LogicalPlan = {
+    val resolver = org.apache.spark.sql.internal.SQLConf.get.resolver
+    def attr(n: String) = child.output.find(a => resolver(a.name, n)).getOrElse(
+      throw new IllegalArgumentException(
+        s"latest: no column $n in ${child.output.map(_.name).mkString("[", ", ", "]")}"))
+    val keys = spec.keys.map(attr)
+    val order = (spec.ver +: spec.tieBreak).map(c => SortOrder(attr(c), Descending))
+    val rn = Alias(WindowExpression(RowNumber(),
+      WindowSpecDefinition(keys, order, UnspecifiedFrame)), "__rn")()
+    Project(child.output,
+      Filter(EqualTo(rn.toAttribute, Literal(1)), Window(Seq(rn), keys, order, child)))
   }
 
   /** Version-less ReplacingMergeTree tables keep an arbitrary row per key
@@ -151,20 +169,18 @@ object Store {
     "type_message" -> Seq("tx_hash"))
 
   /** Dedup spec of one ReplacingMergeTree-versioned table: dedup keys,
-    * version column, and the deterministic tie-break columns `latest()`
-    * call sites pass — carried here so the FINAL hint's window is
-    * plan-identical to the explicit read (failed_blocks ties on
-    * (block_height, last_retry_at) are broken by id, mirroring the
+    * version column, and the deterministic tie-break columns (failed_blocks
+    * ties on (block_height, last_retry_at) are broken by id, mirroring the
     * reference ORDER BY (block_height, id)). */
   final case class VersionedSpec(keys: Seq[String], ver: String,
-                                 tieBreak: Seq[String] = Nil) {
-    def allCols: Seq[String] = (keys :+ ver) ++ tieBreak
-  }
+                                 tieBreak: Seq[String] = Nil)
 
-  /** ReplacingMergeTree-versioned tables: the registry the FINAL query hint
-    * ([[graft.plans.FinalHintResolution]]) resolves against by schema
-    * inference (ref models.js ORDER BY/ver pairs; same specs every
-    * `latest()` call site passes explicitly). */
+  /** ReplacingMergeTree-versioned tables (ref models.js ORDER BY/ver
+    * pairs): the one place their specs are written. Every FINAL read of
+    * them takes its spec from here — `Pipeline.readTable`, explicit
+    * `latest` calls, compaction, and the FINAL query hint
+    * ([[graft.plans.FinalHintResolution]]), which picks its entry by
+    * schema inference. */
   val versionedTables: Map[String, VersionedSpec] = Map(
     "blocks" -> VersionedSpec(Seq("height"), "created_at"),
     "index_state" -> VersionedSpec(Seq("index_name"), "updated_at"),
@@ -172,16 +188,13 @@ object Store {
     "failed_blocks" -> VersionedSpec(Seq("block_height"), "last_retry_at", Seq("id")))
 
   /** Background-merge analogue (the job ClickHouse's MergeTree does
-    * asynchronously): rewrite a versioned table to its latest() view,
-    * reclaiming superseded rows. Atomic-ish via tmp-dir + rename swap. */
-  def compact(spark: SparkSession, path: String, keys: Seq[String],
-              versionCol: Option[String], partitionCols: Seq[String] = Nil,
-              sortCols: Seq[String] = Nil): Unit = {
-    val df = spark.read.parquet(path)
-    val deduped = versionCol match {
-      case Some(v) => latest(df, keys, v)
-      case None => latestAnyRow(df, keys)
-    }
+    * asynchronously): rewrite a table to its FINAL view `keep` —
+    * `latest(_, spec)` with a versioned table's registry spec,
+    * `latestAnyRow(_, keys)` for a version-less one — reclaiming
+    * superseded rows. Atomic-ish via tmp-dir + rename swap. */
+  def compact(spark: SparkSession, path: String, keep: DataFrame => DataFrame,
+              partitionCols: Seq[String] = Nil, sortCols: Seq[String] = Nil): Unit = {
+    val deduped = keep(spark.read.parquet(path))
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     val tmp = new org.apache.hadoop.fs.Path(path + ".compact.tmp")
@@ -248,19 +261,15 @@ object Store {
     * (analogue of system.tables/system.parts, ref init_clickhouse.js:464-532). */
   def tableStats(spark: SparkSession, basePath: String): DataFrame = {
     import spark.implicits._
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(basePath), spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
     val base = new org.apache.hadoop.fs.Path(basePath)
+    val fs = base.getFileSystem(conf)
     val rows: Seq[(String, Long, Long, Long)] =
       if (!fs.exists(base)) Seq.empty
       else fs.listStatus(base).toSeq.filter(_.isDirectory).map { st =>
-        val it = fs.listFiles(st.getPath, true)
-        var bytes = 0L
-        var files = 0L
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.getPath.getName.endsWith(".parquet")) { bytes += f.getLen; files += 1 }
-        }
+        val parts = filesUnder(conf, st.getPath.toString)
+          .filter(_.getPath.getName.endsWith(".parquet"))
+        val (bytes, files) = (parts.map(_.getLen).sum, parts.size.toLong)
         val nRows =
           try spark.read.parquet(st.getPath.toString).count()
           catch { case _: Throwable => 0L }
@@ -269,5 +278,18 @@ object Store {
     rows.toDF("table", "n_rows", "bytes", "n_files")
       .withColumn("readable_size", graft.functions.Fns.formatReadableSize(col("bytes")))
       .orderBy(col("bytes").desc)
+  }
+
+  /** Every file under `path` (itself, when a file) on any Hadoop FS
+    * scheme; throws FileNotFoundException when absent. A `listStatus`
+    * walk, not `listFiles(recursive)`: a located status reads each local
+    * file's owner and permissions, ~15x the cost per listing. */
+  def filesUnder(conf: org.apache.hadoop.conf.Configuration,
+                 path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(conf)
+    def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).toSeq.flatMap(f => if (f.isDirectory) walk(f.getPath) else Seq(f))
+    walk(root)
   }
 }

@@ -94,37 +94,6 @@ object StreamingDedup {
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(update)
   }
 
-  /** Fixture-stream harness for the batch-equivalence CORRECTNESS check
-    * (x_stream_dedup_eq): run `docs` through [[firstSeenWins]] as one
-    * MemoryStream micro-batch (generous watermark/TTL, so nothing expires)
-    * and return the completed result as a batch DataFrame. With one batch
-    * and monotone event times the contract reduces to: per content hash,
-    * ordinal by (event_time, doc_id) order — a plain window in the DuckDB
-    * oracle, making the only otherwise-oracle-free operator family
-    * hash-diffable. */
-  def firstSeenWinsBatchRun(spark: org.apache.spark.sql.SparkSession,
-                            docs: Seq[Doc], lateness: String = "10 minutes",
-                            stateTtlMs: Long = 86400000L): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Doc]
-    ms.addData(docs)
-    // unique memory-sink name: Verify and Bench may run this several times
-    // in one session
-    val name = "graft_stream_dedup_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = firstSeenWins(ms.toDS(), lateness, stateTtlMs)
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    // Force analysis so the plan captures the sink relation, then drop the
-    // temp view — otherwise repeated runs in one session pin every sink's
-    // rows in the catalog for the JVM lifetime.
-    val out = spark.table(name)
-    out.queryExecution.assertAnalyzed()
-    spark.catalog.dropTempView(name)
-    out
-  }
-
   /** File-stream harness: replay a documents parquet directory through
     * [[firstSeenWins]] as a REAL multi-batch stream — no driver collect on
     * either side. The corpus is staged as `chunks` doc_id-range files which

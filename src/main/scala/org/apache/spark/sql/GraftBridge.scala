@@ -1,12 +1,20 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Minimal `private[sql]` access bridge (the standard pattern for third-party
-  * Catalyst extensions): Column <-> Expression conversion is not public API
-  * in Spark 4, so this one-file shim lives in the sql package. Nothing else
-  * in this repo compiles into Spark's namespace. */
+  * Catalyst extensions): Column <-> Expression and DataFrame <-> plan
+  * conversion are not public API in Spark 4, so this one-file shim lives in
+  * the sql package. Nothing else in this repo compiles into Spark's
+  * namespace. */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** `df` with its analyzed plan rewritten by `f`. */
+  def withPlan(df: DataFrame)(f: LogicalPlan => LogicalPlan): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    classic.Dataset.ofRows(ds.sparkSession, f(ds.queryExecution.analyzed))
+  }
 }

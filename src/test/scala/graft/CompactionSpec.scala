@@ -20,7 +20,7 @@ class CompactionSpec extends SparkTestBase {
     val viewBefore = Store.latest(before, Seq("id"), "v")
       .orderBy("id").collect().map(r => (r.getLong(0), r.getString(1)))
 
-    Store.compact(spark, p, Seq("id"), Some("v"))
+    Store.compact(spark, p, Store.latest(_, Seq("id"), "v"))
 
     val after = spark.read.parquet(p)
     assert(after.count() === 2) // superseded rows reclaimed
@@ -40,7 +40,7 @@ class CompactionSpec extends SparkTestBase {
       .toDF("height", "tx_index", "s")
       .withColumn("height_bucket", graft.functions.Fns.heightBucket(col("height")))
     df.write.mode("append").partitionBy("height_bucket").parquet(p)
-    Store.compact(spark, p, Seq("height", "tx_index"), None,
+    Store.compact(spark, p, Store.latestAnyRow(_, Seq("height", "tx_index")),
       partitionCols = Seq("height_bucket"), sortCols = Seq("height"))
     val after = spark.read.parquet(p)
     assert(after.count() === 2)
@@ -72,7 +72,7 @@ class CompactionSpec extends SparkTestBase {
       (1 to 5).foreach { i =>
         Seq((i.toLong + 10, "x", i)).toDF("id", "s", "v")
           .write.mode("append").parquet(p)
-        Store.compact(spark, p, Seq("id"), Some("v"))
+        Store.compact(spark, p, Store.latest(_, Seq("id"), "v"))
       }
     } finally { stop = true; reader.join(30000) }
     assert(failures.isEmpty, s"concurrent read failed: ${failures.peek()}")

@@ -97,18 +97,74 @@ class ExtensionsSpec extends SparkTestBase {
     assert(interp === viaCol2)
   }
 
+  /** One fixture per registry table, in the table's own schema: several
+    * versions per key, and one exact version tie. failed_blocks' tie is
+    * broken by its `id` tie-break, with the losing smaller id written first
+    * so a read that drops the tie-break keeps it. The other three specs
+    * have no tie-break, which promises nothing between differing tied
+    * rows, so their tie is a re-insert of one row. The expected FINAL rows
+    * are the last of each fixture. */
+  private def finalFixtures(): Seq[(String, Seq[Seq[Any]], Seq[Seq[Any]])] = {
+    def ts(s: Long) = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(s))
+    def block(h: Long, t: Long, hash: String) = Seq(h, hash, 0, 0, ts(t))
+    def state(name: String, h: Long, t: Long) = Seq(name, h, ts(t))
+    def item(id: Long, status: String, t: Long) =
+      Seq(id, 1L, 10L, status, null, null, ts(1), ts(t))
+    def failure(h: Long, id: Long, status: String, t: Long) =
+      Seq(h, id, "missing", "gap", "driver", 0, 10, status, ts(t + 300), ts(t))
+    Seq(
+      ("blocks",
+        Seq(block(1, 100, "a"), block(1, 200, "b"), block(1, 150, "c"),
+          block(2, 50, "d"), block(2, 50, "d")),
+        Seq(block(1, 200, "b"), block(2, 50, "d"))),
+      ("index_state",
+        Seq(state("main", 10, 100), state("main", 30, 300), state("main", 20, 200),
+          state("side", 5, 100), state("side", 5, 100)),
+        Seq(state("main", 30, 300), state("side", 5, 100))),
+      ("work_queue",
+        Seq(item(1, "pending", 100), item(1, "processing", 200), item(1, "done", 300),
+          item(2, "pending", 100), item(2, "pending", 100)),
+        Seq(item(1, "done", 300), item(2, "pending", 100))),
+      ("failed_blocks",
+        Seq(failure(3, 1, "pending", 100), failure(3, 2, "pending", 200),
+          failure(7, 3, "pending", 500), failure(7, 4, "failed_permanently", 500)),
+        Seq(failure(3, 2, "pending", 200), failure(7, 4, "failed_permanently", 500))))
+  }
+
   test("FINAL hint: rewrites to latest-per-key, equal to Store.latest, SQL surface works") {
-    // blocks-shaped frame: (height, created_at) spec from the registry
+    import graft.pipeline.{Pipeline, PipelineConfig}
+    import graft.schema.Schemas
+    import org.apache.spark.sql.Row
+    val schemas = Map("blocks" -> Schemas.blocks, "index_state" -> Schemas.indexState,
+      "work_queue" -> Schemas.workQueue, "failed_blocks" -> Schemas.failedBlocks)
+    val fixtures = finalFixtures()
+    assert(fixtures.map(_._1).toSet === Store.versionedTables.keySet)
+    val wh = java.nio.file.Files.createTempDirectory("graft_final").toString
+    def frame(t: String, rows: Seq[Seq[Any]]) =
+      spark.createDataFrame(java.util.Arrays.asList(rows.map(Row.fromSeq): _*), schemas(t))
+    fixtures.foreach { case (t, rows, _) =>
+      frame(t, rows).coalesce(1).write.parquet(s"$wh/$t")
+    }
+    val p = new Pipeline(spark, PipelineConfig(warehouse = wh))
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    fixtures.foreach { case (t, _, expected) =>
+      withClue(t) {
+        val raw = spark.read.parquet(s"$wh/$t")
+        val want = sorted(frame(t, expected))
+        assert(sorted(raw.hint("FINAL")) === want)
+        assert(sorted(Store.latest(raw, Store.versionedTables(t))) === want)
+        if (t != "blocks") assert(sorted(p.readTable(t)) === want)
+        val copy = s"$wh/compacted_$t"
+        raw.write.parquet(copy)
+        Store.compact(spark, copy, Store.latest(_, Store.versionedTables(t)))
+        assert(sorted(spark.read.parquet(copy)) === want)
+      }
+    }
+    // SQL surface: the ClickHouse-FINAL analogue as a hint
     val df = Seq(
       (1L, 100L, "a"), (1L, 200L, "b"), // height 1: v200 wins
       (2L, 50L, "c")).toDF("height", "created_at", "payload")
-    val viaHint = df.hint("FINAL").orderBy("height")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-    val viaApi = Store.latest(df, Seq("height"), "created_at").orderBy("height")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-    assert(viaHint.toSeq === viaApi.toSeq)
-    assert(viaHint.toSeq === Seq((1L, 200L, "b"), (2L, 50L, "c")))
-    // SQL surface: the ClickHouse-FINAL analogue as a hint
     df.createOrReplaceTempView("final_hint_t")
     // the hint goes on the table read (innermost select) — above a
     // projection the version column may already be pruned away
@@ -153,30 +209,6 @@ class ExtensionsSpec extends SparkTestBase {
     val got = df.hint("FINAL").orderBy("block_height")
       .collect().map(r => (r.getLong(0), r.getString(2)))
     assert(got.toSeq === Seq((10L, "a"), (11L, "b")))
-  }
-
-  test("autoFinal conf: unhinted reads of versioned schemas rewrite to latest") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_autofinal").toString
-    Seq((1L, 100L, "a"), (1L, 200L, "b"), (2L, 50L, "c"))
-      .toDF("height", "created_at", "payload").write.mode("overwrite").parquet(dir)
-    // off (default): raw append rows visible
-    assert(spark.read.parquet(dir).count() === 3L)
-    spark.conf.set(graft.plans.AutoFinalResolution.ConfKey, "true")
-    try {
-      val auto = spark.read.parquet(dir)
-      // the latest-view window is injected for the unhinted read
-      assert(auto.queryExecution.analyzed.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
-      }.nonEmpty)
-      val got = auto.orderBy("height").collect()
-        .map(r => (r.getLong(0), r.getString(2)))
-      assert(got.toSeq === Seq((1L, "b"), (2L, "c")))
-      // ambiguous / unknown schemas are skipped silently in auto mode
-      val amb = Seq((1L, 2L, 3L, 4L)).toDF("height", "created_at", "id", "updated_at")
-      assert(amb.count() === 1L)
-      assert(Seq((1L, "x")).toDF("some_id", "v").count() === 1L)
-    } finally spark.conf.unset(graft.plans.AutoFinalResolution.ConfKey)
-    assert(spark.read.parquet(dir).count() === 3L)
   }
 
   test("sorted kernels: nullable output survives non-nullable inputs under strict codegen") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.pipeline.{Pipeline, PipelineConfig}
 import graft.queries.Monitor
@@ -69,6 +69,49 @@ class MonitorSpec extends SparkTestBase {
     val sum = m.summary().collect()(0)
     assert(sum.getAs[Long]("n_blocks") === 2L)
     assert(sum.getAs[Long]("n_pending") === 3L)
+  }
+
+  test("failureReport: counts each height's FINAL row; a version tie goes to the larger id") {
+    val (_, m, dir) = mk()
+    def ts(s: Long) = java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(s))
+    // height 7's two rows share last_retry_at; the smaller id is written
+    // first, so a read that drops failed_blocks' id tie-break keeps it
+    val rows = Seq(
+      Row(3L, 1L, "missing", "gap", "driver", 0, 10, "pending", ts(400), ts(100)),
+      Row(3L, 2L, "missing", "gap", "driver", 1, 10, "pending", ts(900), ts(200)),
+      Row(7L, 3L, "missing", "gap", "driver", 0, 10, "pending", ts(800), ts(500)),
+      Row(7L, 4L, "ingest_error", "rpc down", "driver", 10, 10, "failed_permanently",
+        ts(800), ts(500)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), Schemas.failedBlocks)
+      .coalesce(1).write.parquet(s"$dir/failed_blocks")
+    val got = m.failureReport().collect().map(r =>
+      (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
+    assert(got === Seq(
+      ("failed_permanently", "ingest_error", 1L, 7L, 7L),
+      ("pending", "missing", 1L, 3L, 3L)))
+  }
+
+  test("recentThroughput: FINAL blocks whose created_at falls in the window") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_mon_tp").toString
+    val p = new Pipeline(spark, PipelineConfig(warehouse = dir))
+    val m = new Monitor(spark, p,
+      () => java.time.Instant.parse("2025-06-01T12:45:00Z").getEpochSecond)
+    def env(h: Long, time: String, nTxs: Int) =
+      s"""{"height":$h,"time":"2025-06-01T${time}Z","app_hash":"AH",""" +
+        s""""txs":[${Seq.fill(nTxs)("\"dGVzdA==\"").mkString(",")}],""" +
+        s""""txs_results":[${Seq.fill(nTxs)("""{"code":0,"gas_wanted":"1",""" +
+          """"gas_used":"1","data":"","log":"","events":[]}""").mkString(",")}],""" +
+        """"finalize_block_events":[]}"""
+    def ingest(envs: String*) =
+      p.ingest(spark.read.schema(Schemas.envelope).json(envs.toDS))
+    // height 1: two versions in the window, the later carries 2 txs;
+    // height 2: one row inserted twice; height 3: before the window
+    ingest(env(1, "12:10:00", 1), env(2, "12:00:00", 1), env(3, "10:00:00", 1))
+    ingest(env(1, "12:40:00", 2), env(2, "12:00:00", 1))
+    val got = m.recentThroughput(60).collect()(0)
+    assert(got.getAs[Long]("blocks_ingested") === 2L)
+    assert(got.getAs[Long]("txs_ingested") === 3L)
+    assert(m.recentThroughput(24 * 60).collect()(0).getAs[Long]("blocks_ingested") === 3L)
   }
 
   test("retryFailedBlocks: recovers refetchable heights, backs off the rest") {

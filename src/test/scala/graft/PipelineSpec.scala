@@ -48,45 +48,8 @@ class PipelineSpec extends SparkTestBase {
     assert(p.lastIndexedHeight() === 20L)
   }
 
-  test("autoFinal session mode: full pipeline cycle green; unhinted state reads get implicit FINAL") {
-    // VERDICT r9 item 8: the ClickHouse `final = 1` analogue flipped ON for
-    // a whole pipeline run. Internal reads already go through Store.latest;
-    // the rule's latest-over-latest wrap is idempotent, and raw audit reads
-    // of versioned tables now resolve to the FINAL view — asserted below on
-    // the work queue (the state table with the hottest transition traffic).
-    spark.conf.set(graft.plans.AutoFinalResolution.ConfKey, "true")
-    try {
-      val p = mkPipeline()
-      val claimed = p.runOnce(tip = 25, fetch = iv => envelopes(iv.start to iv.end))
-      assert(claimed === Some(Iv(1, 10)))
-      assert(p.maxBlockHeight() === 10L)
-      assert(p.lastIndexedHeight() === 10L)
-      val second = p.runOnce(tip = 25, fetch = iv => envelopes(iv.start to iv.end))
-      assert(second === Some(Iv(11, 20)))
-      assert(p.lastIndexedHeight() === 20L)
-      // an UNHINTED raw read of the versioned work queue resolves to the
-      // latest view: injected Window in the analyzed plan, one row per id,
-      // and row-identical to the explicit Store.latest read
-      val wq = p.readTable("work_queue")
-      assert(wq.queryExecution.analyzed.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
-      }.nonEmpty, "autoFinal must inject the latest-view window")
-      assert(wq.count() === wq.select("id").distinct().count())
-      val auto = wq.orderBy("id").collect()
-        .map(r => (r.getAs[Long]("id"), r.getAs[String]("status")))
-      val explicit = p.workQueue().orderBy("id").collect()
-        .map(r => (r.getAs[Long]("id"), r.getAs[String]("status")))
-      assert(auto.toSeq === explicit.toSeq)
-      assert(auto.count(_._2 == "done") === 2)
-    } finally spark.conf.unset(graft.plans.AutoFinalResolution.ConfKey)
-  }
-
   test("readTable is FINAL by default for state tables; readTableRaw keeps appends") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wh_af").toString
-    def mk(auto: Boolean) = new Pipeline(spark, PipelineConfig(
-      warehouse = dir, startHeight = 1, assignRange = 10, numWorkers = 2,
-      backfillMode = true, now = () => { clock += 1; clock }, autoFinal = auto))
-    val p = mk(auto = true)
+    val p = mkPipeline()
     p.runOnce(tip = 10, fetch = iv => envelopes(iv.start to iv.end))
     // the claim→processing→done transitions appended multiple versions of
     // the one queue item: FINAL collapses them, raw keeps the insert log
@@ -94,16 +57,14 @@ class PipelineSpec extends SparkTestBase {
     val raw = p.readTableRaw("work_queue")
     assert(raw.count() > fin.count(), "superseded versions only in raw")
     assert(fin.count() === fin.select("id").distinct().count())
-    // default read row-identical to the explicit latest view
+    // row-identical to the explicit latest view over the raw log
     assert(fin.orderBy("id", "updated_at").collect().toSeq ===
-      p.workQueue().orderBy("id", "updated_at").collect().toSeq)
+      graft.store.Store.latest(raw, Seq("id"), "updated_at")
+        .orderBy("id", "updated_at").collect().toSeq)
     // blocks stays raw under the default (observational fact reads)
     assert(p.readTable("blocks").queryExecution.analyzed.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }.isEmpty, "blocks reads must not grow a window")
-    // autoFinal = false restores raw readTable for the same warehouse
-    val pOff = mk(auto = false)
-    assert(pOff.readTable("work_queue").count() === raw.count())
   }
 
   test("failed ingest: incomplete range -> failed status + failed_blocks with backoff") {

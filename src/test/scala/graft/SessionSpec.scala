@@ -41,7 +41,6 @@ class SessionSpec extends SparkTestBase {
     assert(spark.sparkContext.master === "local[4]")
     val analyzerRules = spark.sessionState.analyzer.extendedResolutionRules
     assert(analyzerRules.contains(plans.FinalHintResolution))
-    assert(analyzerRules.contains(plans.AutoFinalResolution))
     assert(spark.sessionState.optimizer.extendedOperatorOptimizationRules
       .contains(plans.HeightBucketPruning))
   }

@@ -116,9 +116,23 @@ class StoreSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft_stats").toString
     Seq((1, "x")).toDF("a", "b").write.parquet(s"$dir/t1")
     Seq((1, "x"), (2, "y")).toDF("a", "b").write.parquet(s"$dir/t2")
+    // a nested table: its files sit under height_bucket= partition dirs
+    Seq((1L, "x"), (100001L, "y"), (200002L, "z")).toDF("height", "b")
+      .withColumn("height_bucket", graft.functions.Fns.heightBucket(col("height")))
+      .write.partitionBy("height_bucket").parquet(s"$dir/t3")
     val stats = Store.tableStats(spark, dir).collect()
     assert(stats.map(r => (r.getString(0), r.getLong(1))).toMap ===
-      Map("t1" -> 1L, "t2" -> 2L))
+      Map("t1" -> 1L, "t2" -> 2L, "t3" -> 3L))
     assert(stats.forall(_.getAs[Long]("bytes") > 0))
+    // every data file counted once, bytes are their lengths (no .crc files)
+    def parquetFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(parquetFiles)
+      else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
+    val t3 = parquetFiles(new java.io.File(s"$dir/t3"))
+    assert(t3.map(_.getParentFile.getName).toSet ===
+      Set("height_bucket=0", "height_bucket=1", "height_bucket=2"))
+    val row = stats.find(_.getString(0) == "t3").get
+    assert(row.getAs[Long]("n_files") === t3.size.toLong)
+    assert(row.getAs[Long]("bytes") === t3.map(_.length).sum)
   }
 }

@@ -195,7 +195,7 @@ object Bpe {
         w => tokensOf(w, merges))).as("tokens"))
 
   /** Bulk corpus tokenization, native-expression path: one compiled-kernel
-    * call per row ([[graft.functions.BpeEncode]]) with per-task word
+    * call per row ([[graft.functions.BpeTokenizer]]) with per-task word
     * memoization — the fast form of [[tokenizeBulk]] (token-stream-equal,
     * BpeSpec-asserted), one corpus scan, zero shuffles, whole-stage
     * codegen. */

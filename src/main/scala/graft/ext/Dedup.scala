@@ -1496,7 +1496,7 @@ object Dedup {
     * up the tree; ~10 bits/doc at fpp 1 %, so a billion-doc corpus is a
     * ~1.2 GB broadcast artifact, rebuilt only as often as the corpus
     * grows). Each refresh then probes the broadcast filter in a codegen'd
-    * projection ([[graft.functions.BloomMightContain]]):
+    * projection ([[graft.functions.BloomProbe]]):
     *  - might-contain == false ⇒ DEFINITELY new (Bloom has no false
     *    negatives) — these rows SKIP the join entirely (the vast majority
     *    of a typical refresh batch);

@@ -117,7 +117,7 @@ object Dsir {
     * `(idCol, n_feats, w_milli, keep)` where `w_milli` is the integer
     * milli-nat log importance weight summed over hashed unigram+bigram
     * features and `keep` = (w_milli ≥ 0). Zero shuffles; one native-kernel
-    * pass per row (`DsirScoreMilli` — the HOF fold interprets md5/conv/
+    * pass per row (`DsirScorer` — the HOF fold interprets md5/conv/
     * element_at per feature and allocates a hex string per hash, measured
     * 10.0 s at the sf0.1 gate vs sub-second for the kernel; the fold stays
     * below as the spec reference). */

@@ -99,7 +99,7 @@ object Lm {
     * `keep` compares the per-bigram mean against `keepMeanMilli` (default
     * −9 000: mean log-prob above −9 nats ≈ perplexity below ~8 100). Zero
     * shuffles; one native-kernel pass per row with HASHED model lookups
-    * (`LmScoreMilli` — the MapType-literal fold form is a linear key scan
+    * (`LmScorer` — the MapType-literal fold form is a linear key scan
     * per lookup, measured 23× slower; kept below as the spec reference). */
   def scoreMilli(docs: DataFrame, textCol: String, idCol: String,
                  lm: BigramLm, keepMeanMilli: Long = -9000L): DataFrame =

@@ -201,18 +201,6 @@ object Sampling {
     }
   }
 
-  /** Per-source audit of the token budget: totals vs kept tokens/docs. */
-  def tokenBudgetSummary(docs: DataFrame, idCol: String, sourceCol: String,
-                         textCol: String, budgetTokens: Long): DataFrame =
-    tokenBudgetKeep(docs, idCol, sourceCol, textCol, budgetTokens)
-      .groupBy(col(sourceCol))
-      .agg(count(lit(1)).as("n_total"),
-        sum("n_tokens").as("tok_total"),
-        sum(when(col("keep") === 1, col("n_tokens")).otherwise(0L))
-          .as("tok_kept"),
-        sum(col("keep").cast("long")).as("n_kept"))
-      .orderBy(sourceCol)
-
   /** Temperature-based source mixing — the data-mix rebalance multilingual /
     * multi-source training runs use (alpha-sampling): per-source keep rate
     * ∝ n_s^α / n_s with α = 0.5, scaled so the expected kept volume is

@@ -185,7 +185,7 @@ object Similarity {
 
   /** Nearest-centroid assignment as ONE native expression (argmin of
     * squared L2 over the centroid table, compiled kernel with exact
-    * early-abandon — `IvfAssign`). The HOF form below is the
+    * early-abandon — `IvfAssigner`). The HOF form below is the
     * independently-derived reference it is spec-asserted against; the
     * native kernel is what the 1 M-vector index builds run, where the
     * interpreted nLists·dim HOF tree per row was the dominant build cost

@@ -273,7 +273,7 @@ object TextFns {
     * every gram). Pure per-row array ops — zero shuffles, stays in
     * whole-stage codegen. Takes a pre-split words column. */
   def winnowedPrints(ws: Column, k: Int = 3, w: Int = 4): Column =
-    // ONE native kernel ([[graft.functions.WinnowPrints]]): the HOF chain
+    // ONE native kernel ([[graft.functions.Winnower]]): the HOF chain
     // below is kept as its independently-derived reference (spec-asserted
     // equal on real corpus text + adversarial vectors). coalesce: the
     // kernel's null contract matches the HOF's — a NULL words array (null

@@ -1,124 +1,126 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge, SparkSession}
+import org.apache.spark.sql.GraftBridge.InputType
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, ImplicitCastInputTypes, KnownNullable, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the two scalar functions that aren't
-  * compositions of built-ins (SURVEY §2.11). A native `Expression` beats a
-  * Scala UDF: no encoder round-trip, and `FormatReadableSize` stays inside
-  * whole-stage codegen via `doGenCode`.
+/** Native SQL functions for the per-row work no built-in composition does
+  * well (SURVEY §2.11). Each is a kernel — plain Scala over Catalyst's
+  * internal types (`UTF8String`, `ArrayData`, primitives) — called through
+  * one [[Native]] node. Spark swaps the node for its own invoke expression
+  * after analysis, so whole-stage codegen emits the direct call
+  * (`Kernels.rollingHash(s)`, `((LmScorer) references[i]).score(ws)`) and
+  * nothing here writes generated code.
   */
 
-/** F15 as a codegen'd unary expression: bytes (long) -> "1.50 KiB". */
-case class FormatReadableSize(child: Expression) extends UnaryExpression {
+/** A call of `method` on `target` with the children's internal values, shown
+  * and named as `name(children)`. `target` is a Scala object's class (a call
+  * of its static forwarder) or a serializable kernel instance; a kernel that
+  * carries a model is a case class, so equal models give `semanticEquals`
+  * nodes. A null input yields null without calling the kernel;
+  * `nullableResult` lets the kernel itself return null (a boxed result). */
+case class Native(name: String, children: Seq[Expression], target: AnyRef,
+    method: String, resultType: DataType, argTypes: Seq[InputType],
+    nullableResult: Boolean = false)
+    extends RuntimeReplaceable with ImplicitCastInputTypes {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | org.apache.spark.sql.types.IntegerType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an integral input, got ${other.catalogString}")
-  }
-  override def dataType: DataType = StringType
-  override def prettyName: String = "format_readable_size"
-
-  override protected def nullSafeEval(v: Any): Any = {
-    val b = v match { case i: java.lang.Integer => i.longValue(); case l => l.asInstanceOf[Long] }
-    UTF8String.fromString(Fns.formatReadableSizeStr(b))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    // Fns is a top-level object => scalac emits static forwarders on class
-    // graft.functions.Fns, callable from Janino-generated Java.
-    defineCodeGen(ctx, ev, c =>
-      s"UTF8String.fromString(graft.functions.Fns.formatReadableSizeStr((long)($c)))")
-
-  override protected def withNewChildInternal(newChild: Expression): FormatReadableSize =
-    copy(child = newChild)
-}
-
-/** F3 as a native expression (CodegenFallback — regex + base64 decode has no
-  * profitable codegen form, but this still avoids UDF encoder overhead). */
-case class MaybeB64Decode(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+  override def prettyName: String = name
+  override def toString: String = s"$name(${children.mkString(", ")})"
+  override def inputTypes: Seq[InputType] = argTypes
+  override def dataType: DataType = resultType
+  override def nullable: Boolean = nullableResult || children.exists(_.nullable)
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    if (children.length == argTypes.length) super.checkInputDataTypes()
     else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING input, got ${child.dataType.catalogString}")
-  override def dataType: DataType = StringType
-  override def prettyName: String = "maybe_b64_decode"
+      s"$name takes ${argTypes.length} arguments, got ${children.length}")
 
-  override protected def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(Fns.maybeB64DecodeStr(v.asInstanceOf[UTF8String].toString))
-
-  override protected def withNewChildInternal(newChild: Expression): MaybeB64Decode =
-    copy(child = newChild)
-}
-
-/** Karp-Rabin rolling hash as a codegen'd unary expression: one tight
-  * code-point loop per row, staying inside whole-stage codegen. Replaces
-  * the split("")→aggregate fold in the fingerprint hot path, which
-  * materialized |chars| single-char strings per row (the dominant cost of
-  * x_fingerprint at sf0.1). Value-identical to the fold (spec-asserted). */
-case class RollingHash(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING input, got ${child.dataType.catalogString}")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "rolling_hash"
-
-  override protected def nullSafeEval(v: Any): Any =
-    Fns.rollingHashStr(v.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Fns.rollingHashStr($c.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHash =
-    copy(child = newChild)
-}
-
-/** Cosine similarity of two float-array columns as ONE codegen'd loop per
-  * row — the similarity hot path (brute-force scans, bucketed self-joins)
-  * otherwise pays three higher-order-function folds (zip_with + aggregate
-  * for dot, ‖a‖, ‖b‖), and HOFs don't participate in whole-stage codegen.
-  * Arithmetic is the HOFs' exact fold: products/squares accumulated in
-  * index order from 0.0, result dot/(√‖a‖·√‖b‖) — bit-identical doubles
-  * (SimilaritySpec asserts), so the DuckDB-oracle contract is unchanged.
-  * Null semantics mirror the HOF form: null array, length mismatch
-  * (zip_with's null padding) or a null element → null. One deliberate
-  * divergence: zero-norm/empty inputs yield NULL, where the HOF form under
-  * ANSI mode (Spark 4 default) THROWS DIVIDE_BY_ZERO — the native loop is
-  * total where the fold was partial. NULL (not NaN): Spark orders NaN
-  * GREATER than any double, so a NaN would silently rank first in every
-  * `orderBy(desc)` top-k and pass `>= threshold` filters; nulls sort last
-  * under desc and fail filters, which is the semantics a degenerate
-  * embedding deserves. */
-case class CosineSim(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  private def isFloatArray(t: DataType): Boolean = t match {
-    case org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType, _) => true
-    case _ => false
+  /** Spark's invokes declare themselves null-intolerant, so the optimizer
+    * would infer `isnotnull(arg)` from a condition over the call and push it
+    * below the projection that computes the argument, evaluating that
+    * argument twice (x_near_dup's verify sets: 2x the query time). A nullable
+    * call is therefore wrapped in a tagging node, which infers nothing. */
+  override lazy val replacement: Expression = {
+    val call = target match {
+      case obj: Class[_] =>
+        StaticInvoke(obj, resultType, method, children, returnNullable = nullableResult)
+      case v: VectorKernel =>
+        val isDouble = children.head.dataType match {
+          case ArrayType(DoubleType, _) => true
+          case _ => false
+        }
+        invoke(v.forElements(isDouble))
+      case k => invoke(k)
+    }
+    if (nullable) KnownNullable(call) else call
   }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (isFloatArray(left.dataType) && isFloatArray(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two ARRAY<FLOAT> inputs, got " +
-        s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def prettyName: String = "cosine_sim"
 
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val b = r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+  private def invoke(kernel: AnyRef): Expression =
+    Invoke(Literal.fromObject(kernel), method, resultType, children,
+      returnNullable = nullableResult)
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Native = copy(children = newChildren)
+}
+
+/** A kernel whose loop reads FLOAT or DOUBLE vectors: [[Native]] fixes which
+  * from the input's resolved type, so no input is cast to array<double>. */
+trait VectorKernel {
+  def forElements(isDouble: Boolean): AnyRef
+}
+
+/** The kernels with no model, called statically. */
+object Kernels {
+  private[functions] val md5 = new ThreadLocal[java.security.MessageDigest] {
+    override def initialValue(): java.security.MessageDigest =
+      java.security.MessageDigest.getInstance("MD5")
+  }
+
+  /** F15: bytes -> "1.50 KiB". */
+  def formatReadableSize(bytes: Long): UTF8String =
+    UTF8String.fromString(Fns.formatReadableSizeStr(bytes))
+
+  /** F3: the reference's heuristic base64 decode (regex + decode). */
+  def maybeB64Decode(s: UTF8String): UTF8String =
+    UTF8String.fromString(Fns.maybeB64DecodeStr(s.toString))
+
+  /** Karp-Rabin rolling hash: one code-point loop per row. Replaces the
+    * split("")→aggregate fold in the fingerprint hot path, which
+    * materialized |chars| single-char strings per row (the dominant cost of
+    * x_fingerprint at sf0.1). Value-identical to the fold (spec-asserted). */
+  def rollingHash(s: UTF8String): Long = Fns.rollingHashStr(s.toString)
+
+  /** Unicode text cleanup: NFC composition + C0/DEL controls → space +
+    * space-run collapse + trim (the CCNet/ftfy-style step run before any
+    * fingerprinting/dedup so byte-level encoding noise doesn't defeat exact
+    * matching). The DuckDB oracle twin is nfc_normalize + regexp_replace —
+    * NFC is pinned by Unicode, so both engines agree. */
+  def normalizeText(s: UTF8String): UTF8String =
+    UTF8String.fromString(Fns.normalizeTextStr(s.toString))
+
+  /** Cosine similarity of two float arrays as ONE loop per row — the
+    * similarity hot path (brute-force scans, bucketed self-joins) otherwise
+    * pays three higher-order-function folds (zip_with + aggregate for dot,
+    * ‖a‖, ‖b‖), and HOFs don't participate in whole-stage codegen.
+    * Arithmetic is the HOFs' exact fold: products/squares accumulated in
+    * index order from 0.0, result dot/(√‖a‖·√‖b‖) — bit-identical doubles
+    * (SimilaritySpec asserts), so the DuckDB-oracle contract is unchanged.
+    * Null semantics mirror the HOF form: length mismatch (zip_with's null
+    * padding) or a null element → null. One deliberate divergence:
+    * zero-norm/empty inputs yield NULL, where the HOF form under ANSI mode
+    * (Spark 4 default) THROWS DIVIDE_BY_ZERO — the native loop is total
+    * where the fold was partial. NULL (not NaN): Spark orders NaN GREATER
+    * than any double, so a NaN would silently rank first in every
+    * `orderBy(desc)` top-k and pass `>= threshold` filters; nulls sort last
+    * under desc and fail filters, which is the semantics a degenerate
+    * embedding deserves. */
+  def cosineSim(a: ArrayData, b: ArrayData): java.lang.Double = {
     val n = a.numElements()
     if (n != b.numElements()) return null
     var dot = 0.0; var na = 0.0; var nb = 0.0
@@ -131,140 +133,18 @@ case class CosineSim(left: Expression, right: Expression)
       i += 1
     }
     if (na == 0.0 || nb == 0.0) null
-    else dot / (math.sqrt(na) * math.sqrt(nb))
+    else java.lang.Double.valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (av, bv) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot"); val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb"); val bad = ctx.freshName("bad")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      s"""
-         |final int $n = $av.numElements();
-         |if ($n != $bv.numElements()) { ${ev.isNull} = true; }
-         |else {
-         |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |  boolean $bad = false;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($av.isNullAt($i) || $bv.isNullAt($i)) { $bad = true; break; }
-         |    final double $x = (double) $av.getFloat($i);
-         |    final double $y = (double) $bv.getFloat($i);
-         |    $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |  }
-         |  if ($bad || $na == 0.0 || $nb == 0.0) { ${ev.isNull} = true; }
-         |  else { ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb)); }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Intersection CARDINALITY of two string arrays that are SORTED ascending
-  * (binary UTF8 order — `array_sort`'s order) and element-distinct, as one
-  * codegen'd merge loop per row. The set-similarity verify joins
-  * (prefixJoinPairs) otherwise pay `array_intersect`, which builds a fresh
-  * hash set PER ROW and allocates the intersection array only to take its
-  * size; the merge is allocation-free, O(|a|+|b|), and stays inside
-  * whole-stage codegen. Count-identical to
-  * `size(array_intersect(a, b))` on sorted-distinct inputs (spec-asserted).
-  * Null array or null element → null (mirrors the built-ins' null
-  * propagation). */
-case class SortedIntersectCount(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  private def isStringArray(t: DataType): Boolean = t match {
-    case org.apache.spark.sql.types.ArrayType(StringType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (isStringArray(left.dataType) && isStringArray(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two ARRAY<STRING> inputs, got " +
-        s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  // A null SLOT inside a non-null array also yields null, so the output is
-  // nullable even when both inputs are non-nullable attributes; without this
-  // override the generated `ev.isNull = true` assigns to the literal `false`
-  // and the whole stage falls back to interpreted execution.
-  override def nullable: Boolean = true
-  override def prettyName: String = "sorted_intersect_count"
-
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val b = r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val na = a.numElements(); val nb = b.numElements()
-    var i = 0; var j = 0; var c = 0
-    while (i < na && j < nb) {
-      if (a.isNullAt(i) || b.isNullAt(j)) return null
-      val cmp = a.getUTF8String(i).compareTo(b.getUTF8String(j))
-      if (cmp == 0) { c += 1; i += 1; j += 1 }
-      else if (cmp < 0) i += 1
-      else j += 1
-    }
-    c
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (av, bv) => {
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c"); val cmp = ctx.freshName("cmp")
-      val bad = ctx.freshName("bad")
-      s"""
-         |final int $na = $av.numElements();
-         |final int $nb = $bv.numElements();
-         |int $i = 0; int $j = 0; int $c = 0;
-         |boolean $bad = false;
-         |while ($i < $na && $j < $nb) {
-         |  if ($av.isNullAt($i) || $bv.isNullAt($j)) { $bad = true; break; }
-         |  final int $cmp = $av.getUTF8String($i).compareTo($bv.getUTF8String($j));
-         |  if ($cmp == 0) { $c++; $i++; $j++; }
-         |  else if ($cmp < 0) { $i++; }
-         |  else { $j++; }
-         |}
-         |if ($bad) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $c; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectCount =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[SortedIntersectCount]] for ARRAY<BIGINT>: the merge loop compares
-  * longs instead of UTF8 byte strings. Pair-verify hot paths first encode
-  * the gram universe to dense integer ids (prefixJoinPairs' dictionary), so
-  * the per-pair cost is a branchy-but-allocation-free int merge — ~20-byte
-  * memcmps per step become one register compare. Same null contract as the
-  * string form. */
-case class SortedIntersectCountLong(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  private def isLongArray(t: DataType): Boolean = t match {
-    case org.apache.spark.sql.types.ArrayType(LongType, _) => true
-    case _ => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (isLongArray(left.dataType) && isLongArray(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two ARRAY<BIGINT> inputs, got " +
-        s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  // See SortedIntersectCount: null slots make the output nullable regardless
-  // of input nullability; required for the codegen null branch to compile.
-  override def nullable: Boolean = true
-  override def prettyName: String = "sorted_intersect_count_long"
-
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val b = r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+  /** Intersection CARDINALITY of two long arrays that are SORTED ascending
+    * and element-distinct, as one merge loop per row. The set-similarity
+    * verify joins (prefixJoinPairs) first encode the gram universe to dense
+    * ids; the merge is allocation-free and O(|a|+|b|), where
+    * `array_intersect` builds a hash set per row and allocates the
+    * intersection only to take its size. Count-identical to
+    * `size(array_intersect(a, b))` on sorted-distinct inputs
+    * (spec-asserted). A null element → null. */
+  def sortedIntersectCountLong(a: ArrayData, b: ArrayData): java.lang.Integer = {
     val na = a.numElements(); val nb = b.numElements()
     var i = 0; var j = 0; var c = 0
     while (i < na && j < nb) {
@@ -274,167 +154,39 @@ case class SortedIntersectCountLong(left: Expression, right: Expression)
       else if (x < y) i += 1
       else j += 1
     }
-    c
+    java.lang.Integer.valueOf(c)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (av, bv) => {
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c"); val x = ctx.freshName("x")
-      val y = ctx.freshName("y"); val bad = ctx.freshName("bad")
-      s"""
-         |final int $na = $av.numElements();
-         |final int $nb = $bv.numElements();
-         |int $i = 0; int $j = 0; int $c = 0;
-         |boolean $bad = false;
-         |while ($i < $na && $j < $nb) {
-         |  if ($av.isNullAt($i) || $bv.isNullAt($j)) { $bad = true; break; }
-         |  final long $x = $av.getLong($i);
-         |  final long $y = $bv.getLong($j);
-         |  if ($x == $y) { $c++; $i++; $j++; }
-         |  else if ($x < $y) { $i++; }
-         |  else { $j++; }
-         |}
-         |if ($bad) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $c; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectCountLong =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Binary-search membership in a SORTED ARRAY<STRING> — the broadcast-set
-  * probe for [[graft.ext.Dedup.segmentDedup]]'s frequent-segment test, where
-  * the builtin `array_contains` is a linear scan: at sf0.1 that is 5.4 k
-  * frequent segments × 70 k probes ≈ 4×10⁸ string compares, vs ~12 per probe
-  * here. The caller owns the precondition (build the array with
-  * `sort_array`); unsorted input gives meaningless results, exactly like
-  * [[SortedIntersectCount]]. Argument order (array, elem) matches
-  * `array_contains`. A null slot probed mid-search yields null. */
-case class SortedContains(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = left.dataType match {
-    case org.apache.spark.sql.types.ArrayType(StringType, _)
-      if right.dataType == StringType => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (ARRAY<STRING>, STRING), got " +
-        s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  }
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  // Null slot probed mid-search -> null; see SortedIntersectCount.
-  override def nullable: Boolean = true
-  override def prettyName: String = "sorted_contains"
-
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val e = r.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
+  /** Binary-search membership of a long in a SORTED long array — the
+    * broadcast-set probe for [[graft.ext.Dedup.segmentDedup]]'s hashed
+    * frequent-segment set, where the builtin `array_contains` is a linear
+    * scan. The caller owns the precondition (build the array with
+    * `sort_array`); unsorted input gives meaningless results. Argument order
+    * (array, elem) matches `array_contains`. A null slot probed mid-search
+    * yields null. */
+  def sortedContainsLong(a: ArrayData, e: Long): java.lang.Boolean = {
     var lo = 0; var hi = a.numElements() - 1
     while (lo <= hi) {
       val mid = (lo + hi) >>> 1
       if (a.isNullAt(mid)) return null
-      val cmp = a.getUTF8String(mid).compareTo(e)
-      if (cmp == 0) return true
-      else if (cmp < 0) lo = mid + 1
+      val v = a.getLong(mid)
+      if (v == e) return java.lang.Boolean.TRUE
+      else if (v < e) lo = mid + 1
       else hi = mid - 1
     }
-    false
+    java.lang.Boolean.FALSE
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (av, ev2) => {
-      val lo = ctx.freshName("lo"); val hi = ctx.freshName("hi")
-      val mid = ctx.freshName("mid"); val cmp = ctx.freshName("cmp")
-      val found = ctx.freshName("found"); val bad = ctx.freshName("bad")
-      s"""
-         |int $lo = 0; int $hi = $av.numElements() - 1;
-         |boolean $found = false; boolean $bad = false;
-         |while ($lo <= $hi) {
-         |  final int $mid = ($lo + $hi) >>> 1;
-         |  if ($av.isNullAt($mid)) { $bad = true; break; }
-         |  final int $cmp = $av.getUTF8String($mid).compareTo($ev2);
-         |  if ($cmp == 0) { $found = true; break; }
-         |  else if ($cmp < 0) { $lo = $mid + 1; }
-         |  else { $hi = $mid - 1; }
-         |}
-         |if ($bad) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $found; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedContains =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Unicode text cleanup as a codegen'd unary expression: NFC composition +
-  * C0/DEL controls → space + space-run collapse + trim (the CCNet/ftfy-
-  * style step run before any fingerprinting/dedup so byte-level encoding
-  * noise doesn't defeat exact matching). Kernel in [[Fns.normalizeTextStr]];
-  * the DuckDB oracle twin is nfc_normalize + regexp_replace — NFC is
-  * pinned by Unicode, so both engines agree. */
-case class NormalizeText(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING input, got ${child.dataType.catalogString}")
-  override def dataType: DataType = StringType
-  override def prettyName: String = "normalize_text"
-
-  override protected def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(Fns.normalizeTextStr(v.asInstanceOf[UTF8String].toString))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"UTF8String.fromString(graft.functions.Fns.normalizeTextStr($c.toString()))")
-
-  override protected def withNewChildInternal(newChild: Expression): NormalizeText =
-    copy(child = newChild)
-}
-
-/** 16-bit SimHash of a word array as ONE native kernel call per row —
-  * bit-identical to the Catalyst fold form (md5 per word, bit p votes on
-  * whether hex digit p ≥ 8 i.e. the nibble's high bit; ties and the empty
-  * array set the bit; a NULL word votes −1 on every bit, matching the
-  * fold's null-condition branch). The fold rebuilt a 16-slot vote array
-  * per word (the BPE-fold churn pattern); here votes live in 16 ints and
-  * the md5 is consumed as raw bytes — the 32-char hex string per word is
-  * never materialized. DedupSpec asserts equality on real corpus text. */
-case class SimHash16(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.ArrayType(StringType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<STRING> input, got ${other.catalogString}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash16"
-
-  override protected def nullSafeEval(v: Any): Any =
-    SimHash16.compute(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SimHash16.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash16 =
-    copy(child = newChild)
-}
-
-object SimHash16 {
-  private val mdPool = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** votes over the high bit of the first 16 md5 nibbles; ties set the bit. */
-  def compute(words: org.apache.spark.sql.catalyst.util.ArrayData): Long = {
-    val md = mdPool.get()
+  /** 16-bit SimHash of a word array as ONE kernel call per row —
+    * bit-identical to the Catalyst fold form (md5 per word, bit p votes on
+    * whether hex digit p ≥ 8 i.e. the nibble's high bit; ties and the empty
+    * array set the bit; a NULL word votes −1 on every bit, matching the
+    * fold's null-condition branch). The fold rebuilt a 16-slot vote array
+    * per word (the BPE-fold churn pattern); here votes live in 16 ints and
+    * the md5 is consumed as raw bytes — the 32-char hex string per word is
+    * never materialized. DedupSpec asserts equality on real corpus text. */
+  def simhash16(words: ArrayData): Long = {
+    val md = md5.get()
     val votes = new Array[Int](16)
     val n = words.numElements()
     var i = 0
@@ -464,691 +216,23 @@ object SimHash16 {
   }
 }
 
-/** Broadcast Bloom-filter membership probe as a native expression: string →
-  * "might the OLD corpus contain it". The filter rides the expression's
-  * reference array (one deserialized copy per task, like [[BpeEncode]]'s
-  * kernel), so the probe stays inside whole-stage codegen — no UDF, no
-  * encoder round-trip. Contract: NO false negatives (a false ⇒ definitely
-  * absent), false positives at the filter's configured fpp — callers that
-  * need exactness must re-check positives (see Dedup.bloomNewDocs). */
-case class BloomMightContain(child: Expression,
-    filter: org.apache.spark.util.sketch.BloomFilter)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING input, got ${child.dataType.catalogString}")
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  override def prettyName: String = "bloom_might_contain"
-
-  override protected def nullSafeEval(v: Any): Any =
-    filter.mightContainString(v.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bf = ctx.addReferenceObj("bloomFilter", filter,
-      classOf[org.apache.spark.util.sketch.BloomFilter].getName)
-    defineCodeGen(ctx, ev, c => s"$bf.mightContainString($c.toString())")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BloomMightContain =
-    copy(child = newChild)
-}
-
-/** Serializable BPE-application kernel for [[BpeEncode]]: a frozen merge
-  * list plus a per-instance (= per-task after deserialization) word→tokens
-  * memo. By Heaps' law the distinct-word set a task sees is far smaller
-  * than its token count, so most words are one hash probe. The memo is
-  * capped — an adversarial all-distinct corpus degrades to compute, never
-  * to memory. */
-final class BpeTokenizer(val merges: Seq[(String, String)]) extends Serializable {
-  import graft.ext.Bpe
-  private val MemoCap = 1 << 16
-  @transient private lazy val memo =
-    new java.util.HashMap[String, Array[UTF8String]]()
-
-  private def encodeWord(w: String): Array[UTF8String] = {
-    val cached = memo.get(w)
-    if (cached != null) return cached
-    val toks = Bpe.tokenizeWord(w, merges).iterator
-      .map(UTF8String.fromString).toArray
-    if (memo.size < MemoCap) memo.put(w, toks)
-    toks
-  }
-
-  /** Tokens of the whole text: words split on single spaces (empty words
-    * skipped — same contract as the fold path's split+filter). */
-  def encode(text: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val s = text.toString
-    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-    var start = 0
-    val n = s.length
-    var i = 0
-    while (i <= n) {
-      if (i == n || s.charAt(i) == ' ') {
-        if (i > start) {
-          val toks = encodeWord(s.substring(start, i))
-          var k = 0
-          while (k < toks.length) { out += toks(k); k += 1 }
-        }
-        start = i + 1
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
-  }
-}
-
-/** Bulk BPE application as ONE native expression per row: text →
-  * ARRAY<STRING> of tokens under a frozen merge list. The pure-Catalyst
-  * fold form (one `aggregate` HOF per merge, nested under
-  * `transform`/`flatten`) re-allocates the accumulator array per element
-  * per pass — O(merges·|word|²) array copies per word, measured 17 s for
-  * 5 k docs at sf0.1; this is one compiled-kernel call per row with
-  * per-task word memoization (BENCH x_bpe_tokens). Token-stream-identical
-  * to the fold path (BpeSpec asserts all three paths equal). Stays inside
-  * whole-stage codegen via a reference-object call, like [[RollingHash]]. */
-case class BpeEncode(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING input, got ${child.dataType.catalogString}")
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "bpe_encode"
-
-  private lazy val tokenizer = new BpeTokenizer(merges)
-
-  override protected def nullSafeEval(v: Any): Any =
-    tokenizer.encode(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tok = ctx.addReferenceObj("bpeTokenizer", tokenizer,
-      classOf[BpeTokenizer].getName)
-    defineCodeGen(ctx, ev, c => s"$tok.encode($c)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeEncode =
-    copy(child = newChild)
-}
-
-/** [[SortedContains]] for ARRAY<BIGINT>: binary-search membership of a long
-  * in a sorted long array — the broadcast-set probe when the set rides as
-  * 64-bit identities (segmentDedup's hashed frequent set). Same contract:
-  * caller owns the sort precondition; null slot probed mid-search → null. */
-case class SortedContainsLong(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = left.dataType match {
-    case org.apache.spark.sql.types.ArrayType(LongType, _)
-      if right.dataType == LongType => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (ARRAY<BIGINT>, BIGINT), got " +
-        s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  }
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  // Null slot probed mid-search -> null; see SortedIntersectCount.
-  override def nullable: Boolean = true
-  override def prettyName: String = "sorted_contains_long"
-
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val e = r.asInstanceOf[java.lang.Long].longValue()
-    var lo = 0; var hi = a.numElements() - 1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      if (a.isNullAt(mid)) return null
-      val v = a.getLong(mid)
-      if (v == e) return true
-      else if (v < e) lo = mid + 1
-      else hi = mid - 1
-    }
-    false
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (av, ev2) => {
-      val lo = ctx.freshName("lo"); val hi = ctx.freshName("hi")
-      val mid = ctx.freshName("mid"); val v = ctx.freshName("v")
-      val found = ctx.freshName("found"); val bad = ctx.freshName("bad")
-      s"""
-         |int $lo = 0; int $hi = $av.numElements() - 1;
-         |boolean $found = false; boolean $bad = false;
-         |while ($lo <= $hi) {
-         |  final int $mid = ($lo + $hi) >>> 1;
-         |  if ($av.isNullAt($mid)) { $bad = true; break; }
-         |  final long $v = $av.getLong($mid);
-         |  if ($v == $ev2) { $found = true; break; }
-         |  else if ($v < $ev2) { $lo = $mid + 1; }
-         |  else { $hi = $mid - 1; }
-         |}
-         |if ($bad) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $found; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedContainsLong =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Serializable scoring kernel for [[LmScoreMilli]]: hashed lookup tables
-  * (the MapType-literal `element_at` is a LINEAR key scan per lookup —
-  * measured 7.7 s for 10 k docs × 8 k-entry model at sf0.1; this kernel is
-  * one HashMap probe per bigram). Keys are held as UTF8String so probes
-  * compare bytes without decoding. */
-final class LmScorer(val bigram: Map[String, Long], val uni: Map[String, Long],
-                     val floor: Long) extends Serializable {
-  @transient private lazy val bigM = {
-    val m = new java.util.HashMap[UTF8String, java.lang.Long](bigram.size * 2)
-    bigram.foreach { case (k, v) => m.put(UTF8String.fromString(k), v) }
-    m
-  }
-  @transient private lazy val uniM = {
-    val m = new java.util.HashMap[UTF8String, java.lang.Long](uni.size * 2)
-    uni.foreach { case (k, v) => m.put(UTF8String.fromString(k), v) }
-    m
-  }
-  private val space = UTF8String.fromString(" ")
-
-  /** (n_bigrams, lp_milli) of one tokenized document. A null token SLOT
-    * scores the floor for its bigrams — exactly the fold form's semantics,
-    * where the null key misses both map lookups and the coalesce lands on
-    * the floor literal (split() never emits null slots, but the contract
-    * must agree wherever the input comes from). */
-  def score(ws: org.apache.spark.sql.catalyst.util.ArrayData):
-      org.apache.spark.sql.catalyst.InternalRow = {
-    val n = ws.numElements()
-    var lp = 0L
-    var i = 0
-    while (i < n - 1) {
-      if (ws.isNullAt(i)) lp += floor // null w1: both lookups miss in the fold
-      else {
-        val w1 = ws.getUTF8String(i)
-        // null w2 nulls the bigram key in the fold — miss, then w1 fallback
-        val hit = if (ws.isNullAt(i + 1)) null
-                  else bigM.get(UTF8String.concat(w1, space, ws.getUTF8String(i + 1)))
-        lp += (if (hit ne null) hit.longValue
-               else {
-                 val fb = uniM.get(w1)
-                 if (fb ne null) fb.longValue else floor
-               })
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](math.max(n - 1, 0).toLong, lp))
-  }
-}
-
-/** Per-document bigram-LM score as ONE native expression: token array →
-  * struct(n_bigrams, lp_milli) in a single pass with hashed model lookups.
-  * Integer-exact (same quantized milli-nat tables as the DuckDB oracle);
-  * code-identical to the aggregate-fold reference form (LmSpec). */
-case class LmScoreMilli(child: Expression, bigram: Map[String, Long],
-                        uni: Map[String, Long], floor: Long)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.ArrayType(StringType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<STRING> input, got ${other.catalogString}")
-  }
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("n_bigrams", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("lp_milli", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "lm_score_milli"
-
-  private lazy val scorer = new LmScorer(bigram, uni, floor)
-
-  override protected def nullSafeEval(v: Any): Any =
-    scorer.score(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sc = ctx.addReferenceObj("lmScorer", scorer, classOf[LmScorer].getName)
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("lmRow")
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow $tmp = $sc.score($c);
-         |if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LmScoreMilli =
-    copy(child = newChild)
-}
-
-/** Serializable trigram-LM scoring kernel for [[LmScoreMilli3]] — the
-  * [[LmScorer]] one order up, with stupid backoff: an unseen trigram costs
-  * `backoff` plus the bigram chain's score on (w2, w3). Hashed UTF8String
-  * probes; arithmetic contract shared with the fold reference form and the
-  * generated DuckDB oracle (integer milli-nat sums). */
-final class LmScorer3(val trigram: Map[String, Long],
-                      val bigram: Map[String, Long],
-                      val uni: Map[String, Long],
-                      val floor: Long, val backoff: Long) extends Serializable {
-  private def toMap(m: Map[String, Long]) = {
-    val h = new java.util.HashMap[UTF8String, java.lang.Long](m.size * 2)
-    m.foreach { case (k, v) => h.put(UTF8String.fromString(k), v) }
-    h
-  }
-  @transient private lazy val triM = toMap(trigram)
-  @transient private lazy val bigM = toMap(bigram)
-  @transient private lazy val uniM = toMap(uni)
-  private val space = UTF8String.fromString(" ")
-
-  /** (n_trigrams, lp_milli) of one tokenized document. Null token slots
-    * miss every lookup they key — exactly the fold form's coalesce
-    * semantics (a null anywhere in a concat nulls the key). */
-  def score(ws: org.apache.spark.sql.catalyst.util.ArrayData):
-      org.apache.spark.sql.catalyst.InternalRow = {
-    val n = ws.numElements()
-    var lp = 0L
-    var i = 0
-    while (i < n - 2) {
-      val n1 = ws.isNullAt(i); val n2 = ws.isNullAt(i + 1)
-      val n3 = ws.isNullAt(i + 2)
-      val triHit =
-        if (n1 || n2 || n3) null
-        else triM.get(UTF8String.concat(ws.getUTF8String(i), space,
-          ws.getUTF8String(i + 1), space, ws.getUTF8String(i + 2)))
-      lp += (if (triHit ne null) triHit.longValue
-             else {
-               val bigHit = if (n2 || n3) null
-                 else bigM.get(UTF8String.concat(ws.getUTF8String(i + 1),
-                   space, ws.getUTF8String(i + 2)))
-               backoff + (if (bigHit ne null) bigHit.longValue
-                          else {
-                            val fb = if (n2) null
-                                     else uniM.get(ws.getUTF8String(i + 1))
-                            if (fb ne null) fb.longValue else floor
-                          })
-             })
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](math.max(n - 2, 0).toLong, lp))
-  }
-}
-
-/** Per-document trigram-LM score as ONE native expression: token array →
-  * struct(n_trigrams, lp_milli) in a single pass with hashed model lookups
-  * through the stupid-backoff chain. Integer-exact (same quantized
-  * milli-nat tables as the DuckDB oracle); code-identical to the
-  * aggregate-fold reference form (LmSpec). */
-case class LmScoreMilli3(child: Expression, trigram: Map[String, Long],
-                         bigram: Map[String, Long], uni: Map[String, Long],
-                         floor: Long, backoff: Long)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.ArrayType(StringType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<STRING> input, got ${other.catalogString}")
-  }
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("n_trigrams", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("lp_milli", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "lm_score_milli3"
-
-  private lazy val scorer = new LmScorer3(trigram, bigram, uni, floor, backoff)
-
-  override protected def nullSafeEval(v: Any): Any =
-    scorer.score(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sc = ctx.addReferenceObj("lmScorer3", scorer, classOf[LmScorer3].getName)
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("lm3Row")
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow $tmp = $sc.score($c);
-         |if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LmScoreMilli3 =
-    copy(child = newChild)
-}
-
-/** Serializable product-quantization encode kernel for [[PqEncode]]:
-  * per-subspace nearest-sub-centroid codes. Arithmetic contract (shared
-  * with the generated DuckDB oracle): per-centroid distance is the
-  * LEFT-TO-RIGHT fold of (x−c)² in index order on doubles; ties break to
-  * the LOWEST code (strict < keeps the first). */
-final class PqEncoder(val codebooks: Array[Array[Array[Double]]],
-                      val isDouble: Boolean = false)
-    extends Serializable {
-  private val m = codebooks.length
-  private val subdim = codebooks(0)(0).length
-
-  /** codes of one vector, or null if the vector is too short / has a null
-    * slot (mirrors the HOF form's null propagation). Input elements are
-    * FLOAT (raw embeddings) or DOUBLE (residuals — already the product of
-    * double arithmetic, so no float round-trip is introduced). */
-  def encode(v: org.apache.spark.sql.catalyst.util.ArrayData):
-      org.apache.spark.sql.catalyst.util.ArrayData = {
-    if (v.numElements() < m * subdim) return null
-    val out = new Array[Any](m)
-    var s = 0
-    while (s < m) {
-      val base = s * subdim
-      var i = 0
-      while (i < subdim) { if (v.isNullAt(base + i)) return null; i += 1 }
-      val cb = codebooks(s)
-      var best = 0; var bd = Double.MaxValue
-      var j = 0
-      while (j < cb.length) {
-        val c = cb(j)
-        var d = 0.0
-        var k = 0
-        while (k < subdim) {
-          val x = if (isDouble) v.getDouble(base + k)
-                  else v.getFloat(base + k).toDouble
-          val diff = x - c(k)
-          d += diff * diff
-          k += 1
-        }
-        if (d < bd) { bd = d; best = j }
-        j += 1
-      }
-      out(s) = best
-      s += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-}
-
-/** Product-quantization encode as ONE native expression per row:
-  * ARRAY<FLOAT> vector → ARRAY<INT> of m sub-centroid codes. The
-  * HOF/literal form (one zip_with+aggregate l2 fold per sub-centroid,
-  * m·ksub of them under array_min) is a ~1000-node expression tree per
-  * row — the dominant cost of the PQ family at sf0.1; this is one
-  * compiled-kernel call (BENCH x_pq_codes). Code-identical to the HOF
-  * form (SimilaritySpec asserts; same IEEE fold order and tie-break as
-  * the generated DuckDB oracle). */
-case class PqEncode(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.FloatType |
-      org.apache.spark.sql.types.DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<FLOAT|DOUBLE> input, got ${other.catalogString}")
-  }
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    org.apache.spark.sql.types.IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "pq_encode"
-
-  private lazy val encoder =
-    new PqEncoder(codebooks.map(_.map(_.toArray).toArray).toArray,
-      isDouble = child.dataType match {
-        case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType, _) => true
-        case _ => false
-      })
-
-  override protected def nullSafeEval(v: Any): Any =
-    encoder.encode(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val enc = ctx.addReferenceObj("pqEncoder", encoder,
-      classOf[PqEncoder].getName)
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("pqCodes")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $tmp = $enc.encode($c);
-         |if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PqEncode =
-    copy(child = newChild)
-}
-
-/** Serializable nearest-centroid kernel for [[IvfAssign]]. Arithmetic
-  * contract (shared with [[Similarity.ivfAssignHof]] and the generated
-  * DuckDB oracle): per-centroid distance is the LEFT-TO-RIGHT fold of
-  * (x−c)² in index order on doubles; ties break to the LOWEST list id
-  * (strict < keeps the first). The inner scan abandons a centroid as soon
-  * as its partial sum reaches the best-so-far — exact under IEEE because
-  * the summands are non-negative (partial sums are monotone nondecreasing)
-  * and `d == bd` already loses the strict-< tie to the earlier id. */
-final class IvfAssigner(val centroids: Array[Array[Double]],
-                        val isDouble: Boolean = false)
-    extends Serializable {
-  private val dim = centroids(0).length
-
-  /** list id of one vector, or null if the vector's length differs from
-    * the centroid dim or it has a null slot (the PqEncoder null contract).
-    * Length-mismatch REJECTION is deliberate on both sides: silently
-    * assigning the first dim components of an oversized vector would file
-    * garbage into a real list, and the HOF reference's zip_with-padding
-    * resolves the same vector to list 0 — an explicit null is the only
-    * answer that can't be mistaken for a valid assignment. */
-  def assign(v: org.apache.spark.sql.catalyst.util.ArrayData): Any = {
-    if (v.numElements() != dim) return null
-    var i = 0
-    while (i < dim) { if (v.isNullAt(i)) return null; i += 1 }
-    var best = 0
-    var bd = Double.MaxValue
-    var j = 0
-    while (j < centroids.length) {
-      val c = centroids(j)
-      var d = 0.0
-      var k = 0
-      while (k < dim && d < bd) {
-        val x = if (isDouble) v.getDouble(k) else v.getFloat(k).toDouble
-        val diff = x - c(k)
-        d += diff * diff
-        k += 1
-      }
-      if (d < bd) { bd = d; best = j }
-      j += 1
-    }
-    java.lang.Integer.valueOf(best)
-  }
-}
-
-/** Nearest-centroid IVF list assignment as ONE native expression per row:
-  * ARRAY<FLOAT|DOUBLE> vector → INT list id. The HOF/literal form (one
-  * zip_with+aggregate l2 fold per centroid under array_min) is an
-  * ~nLists·dim-node interpreted expression tree per row — measured as the
-  * dominant cost of the 1 M-vector index BUILDS (IVF 326 s / IVF-PQ 234 s,
-  * ANNPROBE_r09_1m); this is one compiled-kernel call with exact
-  * early-abandon. Code-identical to the HOF form on well-formed vectors
-  * (SimilaritySpec asserts; same IEEE fold order and tie-break as the
-  * generated DuckDB oracle). Malformed vectors (length != dim, null slot)
-  * evaluate to NULL — the HOF form silently resolves them to list 0 via
-  * zip_with null-padding, which is exactly the mistake-for-valid this
-  * kernel refuses. */
-case class IvfAssign(child: Expression, centroids: Seq[Seq[Double]])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.FloatType |
-      org.apache.spark.sql.types.DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<FLOAT|DOUBLE> input, got ${other.catalogString}")
-  }
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "ivf_assign"
-
-  private lazy val assigner =
-    new IvfAssigner(centroids.map(_.toArray).toArray,
-      isDouble = child.dataType match {
-        case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType, _) => true
-        case _ => false
-      })
-
-  override protected def nullSafeEval(v: Any): Any =
-    assigner.assign(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val asg = ctx.addReferenceObj("ivfAssigner", assigner,
-      classOf[IvfAssigner].getName)
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("ivfList")
-      s"""
-         |Object $tmp = $asg.assign($c);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((java.lang.Integer) $tmp).intValue(); }
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): IvfAssign =
-    copy(child = newChild)
-}
-
-/** Serializable DSIR scoring kernel for [[DsirScoreMilli]]: token array →
-  * (n_feats, w_milli) summed over hashed unigram + adjacent-bigram
-  * features. The bucket hash — big-endian first 2 bytes of the feature's
-  * UTF-8 md5, mod `dim` — matches `Dsir.bucketOf`, the HOF fold form
-  * (`conv(substring(md5(tok),1,4),16,10) % dim`) and the generated DuckDB
-  * oracle byte-for-byte; bigram features digest `w1 ++ ' ' ++ w2`
-  * incrementally, so no concatenated string is ever allocated. */
-final class DsirScorer(val weights: Array[Long], val dim: Int)
-    extends Serializable {
-  // one digest per scorer instance: expression instances are per-task and
-  // MessageDigest.digest() leaves the instance reset for the next feature
-  @transient private lazy val md =
-    java.security.MessageDigest.getInstance("MD5")
-  private def bucketOf(d: Array[Byte]): Int =
-    (((d(0) & 0xff) << 8) | (d(1) & 0xff)) % dim
-
-  /** Null result ⇔ the fold form's null propagation: a null token slot
-    * nulls its feature weight and the aggregate sum with it. split() never
-    * emits null slots, but the kernel and the fold must agree on every
-    * input. */
-  def score(ws: org.apache.spark.sql.catalyst.util.ArrayData):
-      org.apache.spark.sql.catalyst.InternalRow = {
-    val n = ws.numElements()
-    var i = 0
-    while (i < n) { if (ws.isNullAt(i)) return null; i += 1 }
-    var w = 0L
-    i = 0
-    while (i < n) {
-      val tok = ws.getUTF8String(i).getBytes
-      w += weights(bucketOf(md.digest(tok)))
-      if (i + 1 < n) {
-        md.update(tok)
-        md.update(' '.toByte)
-        md.update(ws.getUTF8String(i + 1).getBytes)
-        w += weights(bucketOf(md.digest()))
-      }
-      i += 1
-    }
-    val nFeats = if (n >= 2) 2L * n - 1L else n.toLong
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](nFeats, w))
-  }
-}
-
-/** Per-document DSIR importance weight as ONE native expression: token
-  * array → struct(n_feats, w_milli). The HOF form (transform + aggregate
-  * over md5/conv/element_at per feature) is interpreted per feature and
-  * allocates a hex string per hash — measured 10.0 s at the sf0.1 gate vs
-  * sub-second for the kernel (the IvfAssign finding, one round later).
-  * Code-identical to the fold reference form (DsirSpec asserts). */
-case class DsirScoreMilli(child: Expression, weights: Seq[Long], dim: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.ArrayType(StringType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<STRING> input, got ${other.catalogString}")
-  }
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("n_feats", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("w_milli", LongType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "dsir_score_milli"
-
-  private lazy val scorer = new DsirScorer(weights.toArray, dim)
-
-  override protected def nullSafeEval(v: Any): Any =
-    scorer.score(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sc = ctx.addReferenceObj("dsirScorer", scorer,
-      classOf[DsirScorer].getName)
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("dsirRow")
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow $tmp = $sc.score($c);
-         |if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): DsirScoreMilli =
-    copy(child = newChild)
-}
-
-/** Full winnowing (Schleimer et al. 2003) as ONE native kernel: pre-split
-  * words -> distinct window-min 56-bit shingle hashes. Bit-identical to the
-  * HOF chain ([[graft.ext.TextFns.winnowedPrintsHof]], spec-asserted on
-  * real corpus text + adversarial vectors): k-word shingles joined by a
-  * single space with `concat_ws` null-skipping (`UTF8String.concatWs` IS
-  * the engine primitive behind the SQL function), hash = first 7 digest
-  * bytes big-endian (== `conv(substring(md5(g), 1, 14), 16, 10)`), windows
-  * of `w` consecutive hashes reduced to their minima (one global min when
-  * the doc has <= w shingles), first-occurrence-order distinct. The HOF
-  * form materialized a 32-char hex string + a substring + a base-16 parse
-  * per gram and re-entered the lambda machinery per window; here the md5
-  * is consumed as raw bytes and the window scan is two tight loops. */
-case class WinnowPrints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case org.apache.spark.sql.types.ArrayType(StringType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<STRING> input, got ${other.catalogString}")
-  }
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "winnow_prints"
-
-  override protected def nullSafeEval(v: Any): Any =
-    WinnowPrints.compute(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.WinnowPrints.compute($c, $k, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowPrints =
-    copy(child = newChild)
-}
-
-object WinnowPrints {
-  private val mdPool = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
+/** Full winnowing (Schleimer et al. 2003) as ONE kernel: pre-split words ->
+  * distinct window-min 56-bit shingle hashes. Bit-identical to the HOF
+  * chain ([[graft.ext.TextFns.winnowedPrintsHof]], spec-asserted on real
+  * corpus text + adversarial vectors): k-word shingles joined by a single
+  * space with `concat_ws` null-skipping (`UTF8String.concatWs` IS the
+  * engine primitive behind the SQL function), hash = first 7 digest bytes
+  * big-endian (== `conv(substring(md5(g), 1, 14), 16, 10)`), windows of `w`
+  * consecutive hashes reduced to their minima (one global min when the doc
+  * has <= w shingles), first-occurrence-order distinct. The HOF form
+  * materialized a 32-char hex string + a substring + a base-16 parse per
+  * gram and re-entered the lambda machinery per window; here the md5 is
+  * consumed as raw bytes and the window scan is two tight loops. */
+case class Winnower(k: Int, w: Int) {
   private val Space = UTF8String.fromString(" ")
 
-  def compute(words: org.apache.spark.sql.catalyst.util.ArrayData,
-              k: Int, w: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val md = mdPool.get()
+  def prints(words: ArrayData): ArrayData = {
+    val md = Kernels.md5.get()
     val n = words.numElements()
     // shingle layout mirrors shinglesOfWords: n >= k -> sliding k-grams;
     // short docs -> ONE shingle of all words (including the empty doc ->
@@ -1202,98 +286,428 @@ object WinnowPrints {
       if (seen.add(mins(x))) buf += mins(x)
       x += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(buf.toArray)
+    new GenericArrayData(buf.toArray)
   }
 }
 
+/** Broadcast Bloom-filter membership probe: string → "might the OLD corpus
+  * contain it". The filter rides in the plan (one deserialized copy per
+  * task), so the probe stays inside whole-stage codegen. Contract: NO false
+  * negatives (a false ⇒ definitely absent), false positives at the filter's
+  * configured fpp — callers that need exactness must re-check positives
+  * (see Dedup.bloomNewDocs). */
+case class BloomProbe(filter: org.apache.spark.util.sketch.BloomFilter) {
+  def mightContain(s: UTF8String): Boolean = filter.mightContainString(s.toString)
+  override def toString: String = s"BloomProbe(${filter.bitSize} bits)"
+}
+
+/** Bulk BPE application: text → tokens under a frozen merge list, one call
+  * per row. The pure-Catalyst fold form (one `aggregate` HOF per merge,
+  * nested under `transform`/`flatten`) re-allocates the accumulator array
+  * per element per pass — measured 17 s for 5 k docs at sf0.1 (BENCH
+  * x_bpe_tokens). Token-stream-identical to the fold path (BpeSpec asserts
+  * all three paths equal). A per-instance (= per-task after
+  * deserialization) word→tokens memo: by Heaps' law the distinct-word set a
+  * task sees is far smaller than its token count, so most words are one
+  * hash probe. The memo is capped — an adversarial all-distinct corpus
+  * degrades to compute, never to memory. */
+case class BpeTokenizer(merges: Seq[(String, String)]) {
+  import graft.ext.Bpe
+  private val MemoCap = 1 << 16
+  @transient private lazy val memo =
+    new java.util.HashMap[String, Array[UTF8String]]()
+
+  private def encodeWord(w: String): Array[UTF8String] = {
+    val cached = memo.get(w)
+    if (cached != null) return cached
+    val toks = Bpe.tokenizeWord(w, merges).iterator
+      .map(UTF8String.fromString).toArray
+    if (memo.size < MemoCap) memo.put(w, toks)
+    toks
+  }
+
+  /** Tokens of the whole text: words split on single spaces (empty words
+    * skipped — same contract as the fold path's split+filter). */
+  def encode(text: UTF8String): ArrayData = {
+    val s = text.toString
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    var start = 0
+    val n = s.length
+    var i = 0
+    while (i <= n) {
+      if (i == n || s.charAt(i) == ' ') {
+        if (i > start) {
+          val toks = encodeWord(s.substring(start, i))
+          var k = 0
+          while (k < toks.length) { out += toks(k); k += 1 }
+        }
+        start = i + 1
+      }
+      i += 1
+    }
+    new GenericArrayData(out.toArray)
+  }
+
+  override def toString: String = s"BpeTokenizer(${merges.size} merges)"
+}
+
+/** Per-document bigram-LM score: token array → (n_bigrams, lp_milli) in a
+  * single pass. Hashed lookup tables (the MapType-literal `element_at` is a
+  * LINEAR key scan per lookup — measured 7.7 s for 10 k docs × 8 k-entry
+  * model at sf0.1; this is one HashMap probe per bigram). Keys are held as
+  * UTF8String so probes compare bytes without decoding. Integer-exact (same
+  * quantized milli-nat tables as the DuckDB oracle); code-identical to the
+  * aggregate-fold reference form (LmSpec). */
+case class LmScorer(bigram: Map[String, Long], uni: Map[String, Long],
+                    floor: Long) {
+  @transient private lazy val bigM = LmScorer.hashed(bigram)
+  @transient private lazy val uniM = LmScorer.hashed(uni)
+  private val space = UTF8String.fromString(" ")
+
+  /** A null token SLOT scores the floor for its bigrams — exactly the fold
+    * form's semantics, where the null key misses both map lookups and the
+    * coalesce lands on the floor literal (split() never emits null slots,
+    * but the contract must agree wherever the input comes from). */
+  def score(ws: ArrayData): InternalRow = {
+    val n = ws.numElements()
+    var lp = 0L
+    var i = 0
+    while (i < n - 1) {
+      if (ws.isNullAt(i)) lp += floor // null w1: both lookups miss in the fold
+      else {
+        val w1 = ws.getUTF8String(i)
+        // null w2 nulls the bigram key in the fold — miss, then w1 fallback
+        val hit = if (ws.isNullAt(i + 1)) null
+                  else bigM.get(UTF8String.concat(w1, space, ws.getUTF8String(i + 1)))
+        lp += (if (hit ne null) hit.longValue
+               else {
+                 val fb = uniM.get(w1)
+                 if (fb ne null) fb.longValue else floor
+               })
+      }
+      i += 1
+    }
+    new GenericInternalRow(Array[Any](math.max(n - 1, 0).toLong, lp))
+  }
+
+  override def toString: String = s"LmScorer(${bigram.size} bigrams)"
+}
+
+object LmScorer {
+  private[functions] def hashed(m: Map[String, Long]) = {
+    val h = new java.util.HashMap[UTF8String, java.lang.Long](m.size * 2)
+    m.foreach { case (k, v) => h.put(UTF8String.fromString(k), v) }
+    h
+  }
+}
+
+/** Per-document trigram-LM score: token array → (n_trigrams, lp_milli) —
+  * the [[LmScorer]] one order up, with stupid backoff: an unseen trigram
+  * costs `backoff` plus the bigram chain's score on (w2, w3). Hashed
+  * UTF8String probes; arithmetic contract shared with the fold reference
+  * form and the generated DuckDB oracle (integer milli-nat sums). */
+case class LmScorer3(trigram: Map[String, Long], bigram: Map[String, Long],
+                     uni: Map[String, Long], floor: Long, backoff: Long) {
+  @transient private lazy val triM = LmScorer.hashed(trigram)
+  @transient private lazy val bigM = LmScorer.hashed(bigram)
+  @transient private lazy val uniM = LmScorer.hashed(uni)
+  private val space = UTF8String.fromString(" ")
+
+  /** Null token slots miss every lookup they key — exactly the fold form's
+    * coalesce semantics (a null anywhere in a concat nulls the key). */
+  def score(ws: ArrayData): InternalRow = {
+    val n = ws.numElements()
+    var lp = 0L
+    var i = 0
+    while (i < n - 2) {
+      val n1 = ws.isNullAt(i); val n2 = ws.isNullAt(i + 1)
+      val n3 = ws.isNullAt(i + 2)
+      val triHit =
+        if (n1 || n2 || n3) null
+        else triM.get(UTF8String.concat(ws.getUTF8String(i), space,
+          ws.getUTF8String(i + 1), space, ws.getUTF8String(i + 2)))
+      lp += (if (triHit ne null) triHit.longValue
+             else {
+               val bigHit = if (n2 || n3) null
+                 else bigM.get(UTF8String.concat(ws.getUTF8String(i + 1),
+                   space, ws.getUTF8String(i + 2)))
+               backoff + (if (bigHit ne null) bigHit.longValue
+                          else {
+                            val fb = if (n2) null
+                                     else uniM.get(ws.getUTF8String(i + 1))
+                            if (fb ne null) fb.longValue else floor
+                          })
+             })
+      i += 1
+    }
+    new GenericInternalRow(Array[Any](math.max(n - 2, 0).toLong, lp))
+  }
+
+  override def toString: String = s"LmScorer3(${trigram.size} trigrams)"
+}
+
+/** Product-quantization encode: vector → m per-subspace nearest-sub-centroid
+  * codes, one call per row. The HOF/literal form (one zip_with+aggregate l2
+  * fold per sub-centroid, m·ksub of them under array_min) is a ~1000-node
+  * expression tree per row — the dominant cost of the PQ family at sf0.1
+  * (BENCH x_pq_codes). Arithmetic contract (shared with the generated
+  * DuckDB oracle): per-centroid distance is the LEFT-TO-RIGHT fold of
+  * (x−c)² in index order on doubles; ties break to the LOWEST code (strict
+  * < keeps the first). Input elements are FLOAT (raw embeddings) or DOUBLE
+  * (residuals — already the product of double arithmetic, so no float
+  * round-trip is introduced). */
+case class PqEncoder(codebooks: Seq[Seq[Seq[Double]]], isDouble: Boolean = false)
+    extends VectorKernel {
+  @transient private lazy val cbs = codebooks.map(_.map(_.toArray).toArray).toArray
+  private val m = codebooks.length
+  private val subdim = codebooks.head.head.length
+
+  def forElements(isDouble: Boolean): PqEncoder = copy(isDouble = isDouble)
+
+  /** codes of one vector, or null if the vector is too short / has a null
+    * slot (mirrors the HOF form's null propagation). */
+  def encode(v: ArrayData): ArrayData = {
+    if (v.numElements() < m * subdim) return null
+    val books = cbs
+    val out = new Array[Any](m)
+    var s = 0
+    while (s < m) {
+      val base = s * subdim
+      var i = 0
+      while (i < subdim) { if (v.isNullAt(base + i)) return null; i += 1 }
+      val cb = books(s)
+      var best = 0; var bd = Double.MaxValue
+      var j = 0
+      while (j < cb.length) {
+        val c = cb(j)
+        var d = 0.0
+        var k = 0
+        while (k < subdim) {
+          val x = if (isDouble) v.getDouble(base + k)
+                  else v.getFloat(base + k).toDouble
+          val diff = x - c(k)
+          d += diff * diff
+          k += 1
+        }
+        if (d < bd) { bd = d; best = j }
+        j += 1
+      }
+      out(s) = best
+      s += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  override def toString: String =
+    s"PqEncoder(m=$m, ksub=${codebooks.head.length}, double=$isDouble)"
+}
+
+/** Nearest-centroid IVF list assignment, one call per row. The HOF/literal
+  * form (one zip_with+aggregate l2 fold per centroid under array_min) is an
+  * ~nLists·dim-node interpreted expression tree per row — measured as the
+  * dominant cost of the 1 M-vector index BUILDS (IVF 326 s / IVF-PQ 234 s,
+  * ANNPROBE_r09_1m). Arithmetic contract (shared with
+  * [[graft.ext.Similarity.ivfAssignHof]] and the generated DuckDB oracle):
+  * per-centroid distance is the LEFT-TO-RIGHT fold of (x−c)² in index order
+  * on doubles; ties break to the LOWEST list id (strict < keeps the first).
+  * The inner scan abandons a centroid as soon as its partial sum reaches
+  * the best-so-far — exact under IEEE because the summands are non-negative
+  * (partial sums are monotone nondecreasing) and `d == bd` already loses
+  * the strict-< tie to the earlier id. */
+case class IvfAssigner(centroids: Seq[Seq[Double]], isDouble: Boolean = false)
+    extends VectorKernel {
+  @transient private lazy val cs = centroids.map(_.toArray).toArray
+  private val dim = centroids.head.length
+
+  def forElements(isDouble: Boolean): IvfAssigner = copy(isDouble = isDouble)
+
+  /** list id of one vector, or null if the vector's length differs from
+    * the centroid dim or it has a null slot (the PqEncoder null contract).
+    * Length-mismatch REJECTION is deliberate on both sides: silently
+    * assigning the first dim components of an oversized vector would file
+    * garbage into a real list, and the HOF reference's zip_with-padding
+    * resolves the same vector to list 0 — an explicit null is the only
+    * answer that can't be mistaken for a valid assignment. */
+  def assign(v: ArrayData): java.lang.Integer = {
+    if (v.numElements() != dim) return null
+    var i = 0
+    while (i < dim) { if (v.isNullAt(i)) return null; i += 1 }
+    val cents = cs
+    var best = 0
+    var bd = Double.MaxValue
+    var j = 0
+    while (j < cents.length) {
+      val c = cents(j)
+      var d = 0.0
+      var k = 0
+      while (k < dim && d < bd) {
+        val x = if (isDouble) v.getDouble(k) else v.getFloat(k).toDouble
+        val diff = x - c(k)
+        d += diff * diff
+        k += 1
+      }
+      if (d < bd) { bd = d; best = j }
+      j += 1
+    }
+    java.lang.Integer.valueOf(best)
+  }
+
+  override def toString: String =
+    s"IvfAssigner(${centroids.length} lists, double=$isDouble)"
+}
+
+/** Per-document DSIR importance weight: token array → (n_feats, w_milli)
+  * summed over hashed unigram + adjacent-bigram features. The HOF form
+  * (transform + aggregate over md5/conv/element_at per feature) is
+  * interpreted per feature and allocates a hex string per hash — measured
+  * 10.0 s at the sf0.1 gate vs sub-second for the kernel. The bucket hash —
+  * big-endian first 2 bytes of the feature's UTF-8 md5, mod `dim` — matches
+  * `Dsir.bucketOf`, the HOF fold form
+  * (`conv(substring(md5(tok),1,4),16,10) % dim`) and the generated DuckDB
+  * oracle byte-for-byte; bigram features digest `w1 ++ ' ' ++ w2`
+  * incrementally, so no concatenated string is ever allocated.
+  * Code-identical to the fold reference form (DsirSpec asserts). */
+case class DsirScorer(weights: Seq[Long], dim: Int) {
+  @transient private lazy val ws = weights.toArray
+  private def bucketOf(d: Array[Byte]): Int =
+    (((d(0) & 0xff) << 8) | (d(1) & 0xff)) % dim
+
+  /** Null result ⇔ the fold form's null propagation: a null token slot
+    * nulls its feature weight and the aggregate sum with it. split() never
+    * emits null slots, but the kernel and the fold must agree on every
+    * input. */
+  def score(toks: ArrayData): InternalRow = {
+    val n = toks.numElements()
+    var i = 0
+    while (i < n) { if (toks.isNullAt(i)) return null; i += 1 }
+    val md = Kernels.md5.get()
+    val weight = ws
+    var w = 0L
+    i = 0
+    while (i < n) {
+      val tok = toks.getUTF8String(i).getBytes
+      w += weight(bucketOf(md.digest(tok)))
+      if (i + 1 < n) {
+        md.update(tok)
+        md.update(' '.toByte)
+        md.update(toks.getUTF8String(i + 1).getBytes)
+        w += weight(bucketOf(md.digest()))
+      }
+      i += 1
+    }
+    val nFeats = if (n >= 2) 2L * n - 1L else n.toLong
+    new GenericInternalRow(Array[Any](nFeats, w))
+  }
+
+  override def toString: String = s"DsirScorer(dim=$dim)"
+}
+
+/** The column builders. Every function keeps its SQL name, so generated
+  * column names read `name(args)`. */
 object GraftExpressions {
   import GraftBridge.{column, expression}
 
-  def format_readable_size(c: Column): Column =
-    column(FormatReadableSize(expression(c)))
+  /** A function over one of [[Kernels]]' methods. */
+  private case class Static(name: String, method: String, resultType: DataType,
+      argTypes: Seq[InputType], nullableResult: Boolean = false) {
+    def expr(args: Seq[Expression]): Native =
+      Native(name, args, Kernels.getClass, method, resultType, argTypes, nullableResult)
+    def apply(args: Column*): Column = column(expr(args.map(expression)))
+  }
 
-  def maybe_b64_decode(c: Column): Column =
-    column(MaybeB64Decode(expression(c)))
+  private val FormatReadableSize =
+    Static("format_readable_size", "formatReadableSize", StringType, Seq(LongType))
+  private val MaybeB64Decode =
+    Static("maybe_b64_decode", "maybeB64Decode", StringType, Seq(StringType))
+  private val RollingHash = Static("rolling_hash", "rollingHash", LongType, Seq(StringType))
+  private val NormalizeText =
+    Static("normalize_text", "normalizeText", StringType, Seq(StringType))
+  private val CosineSim = Static("cosine_sim", "cosineSim", DoubleType,
+    Seq(ArrayType(FloatType), ArrayType(FloatType)), nullableResult = true)
+  private val SortedIntersectCountLong = Static("sorted_intersect_count_long",
+    "sortedIntersectCountLong", IntegerType,
+    Seq(ArrayType(LongType), ArrayType(LongType)), nullableResult = true)
+  private val SortedContainsLong = Static("sorted_contains_long", "sortedContainsLong",
+    BooleanType, Seq(ArrayType(LongType), LongType), nullableResult = true)
+  private val SimHash16 =
+    Static("simhash16", "simhash16", LongType, Seq(ArrayType(StringType)))
 
-  def rolling_hash(c: Column): Column =
-    column(RollingHash(expression(c)))
+  private val statics = Seq(FormatReadableSize, MaybeB64Decode, RollingHash,
+    NormalizeText, CosineSim, SortedIntersectCountLong, SortedContainsLong, SimHash16)
 
-  def cosine_sim(a: Column, b: Column): Column =
-    column(CosineSim(expression(a), expression(b)))
+  /** A one-argument function over a kernel instance that carries a model. */
+  private def withModel(name: String, arg: Column, argType: InputType,
+      kernel: AnyRef, method: String, resultType: DataType,
+      nullableResult: Boolean): Column =
+    column(Native(name, Seq(expression(arg)), kernel, method, resultType,
+      Seq(argType), nullableResult))
 
-  def sorted_intersect_count(a: Column, b: Column): Column =
-    column(SortedIntersectCount(expression(a), expression(b)))
+  private val FloatOrDoubleArray = GraftBridge.anyOf(ArrayType(FloatType), ArrayType(DoubleType))
+  private val Words = ArrayType(StringType)
 
-  def sorted_contains(arr: Column, elem: Column): Column =
-    column(SortedContains(expression(arr), expression(elem)))
+  private def longPair(a: String, b: String): StructType = StructType(Seq(
+    StructField(a, LongType, nullable = false), StructField(b, LongType, nullable = false)))
 
-  def bpe_encode(text: Column, merges: Seq[(String, String)]): Column =
-    column(BpeEncode(expression(text), merges))
+  def format_readable_size(c: Column): Column = FormatReadableSize(c)
+
+  def maybe_b64_decode(c: Column): Column = MaybeB64Decode(c)
+
+  def rolling_hash(c: Column): Column = RollingHash(c)
+
+  def normalize_text(c: Column): Column = NormalizeText(c)
+
+  def cosine_sim(a: Column, b: Column): Column = CosineSim(a, b)
 
   def sorted_intersect_count_long(a: Column, b: Column): Column =
-    column(SortedIntersectCountLong(expression(a), expression(b)))
+    SortedIntersectCountLong(a, b)
 
   def sorted_contains_long(arr: Column, elem: Column): Column =
-    column(SortedContainsLong(expression(arr), expression(elem)))
+    SortedContainsLong(arr, elem)
+
+  def simhash16(words: Column): Column = SimHash16(words)
+
+  def winnow_prints(words: Column, k: Int, w: Int): Column =
+    withModel("winnow_prints", words, Words, Winnower(k, w), "prints",
+      ArrayType(LongType, containsNull = false), nullableResult = false)
 
   def bloom_might_contain(c: Column,
       filter: org.apache.spark.util.sketch.BloomFilter): Column =
-    column(BloomMightContain(expression(c), filter))
+    withModel("bloom_might_contain", c, StringType, BloomProbe(filter),
+      "mightContain", BooleanType, nullableResult = false)
 
-  def simhash16(words: Column): Column =
-    column(SimHash16(expression(words)))
-
-  def winnow_prints(words: Column, k: Int, w: Int): Column =
-    column(WinnowPrints(expression(words), k, w))
-
-  def normalize_text(c: Column): Column =
-    column(NormalizeText(expression(c)))
+  def bpe_encode(text: Column, merges: Seq[(String, String)]): Column =
+    withModel("bpe_encode", text, StringType, BpeTokenizer(merges), "encode",
+      ArrayType(StringType, containsNull = false), nullableResult = false)
 
   def pq_encode(vec: Column, codebooks: Array[Array[Array[Double]]]): Column =
-    column(PqEncode(expression(vec),
-      codebooks.map(_.map(_.toSeq).toSeq).toSeq))
+    withModel("pq_encode", vec, FloatOrDoubleArray,
+      PqEncoder(codebooks.map(_.map(_.toSeq).toSeq).toSeq), "encode",
+      ArrayType(IntegerType, containsNull = false), nullableResult = true)
 
   def ivf_assign(vec: Column, centroids: Array[Array[Double]]): Column =
-    column(IvfAssign(expression(vec), centroids.map(_.toSeq).toSeq))
+    withModel("ivf_assign", vec, FloatOrDoubleArray, IvfAssigner(centroids.map(_.toSeq).toSeq),
+      "assign", IntegerType, nullableResult = true)
 
   def lm_score_milli(words: Column, bigram: Map[String, Long],
                      uni: Map[String, Long], floor: Long): Column =
-    column(LmScoreMilli(expression(words), bigram, uni, floor))
+    withModel("lm_score_milli", words, Words, LmScorer(bigram, uni, floor), "score",
+      longPair("n_bigrams", "lp_milli"), nullableResult = true)
 
   def lm_score_milli3(words: Column, trigram: Map[String, Long],
                       bigram: Map[String, Long], uni: Map[String, Long],
                       floor: Long, backoff: Long): Column =
-    column(LmScoreMilli3(expression(words), trigram, bigram, uni, floor,
-      backoff))
+    withModel("lm_score_milli3", words, Words,
+      LmScorer3(trigram, bigram, uni, floor, backoff), "score",
+      longPair("n_trigrams", "lp_milli"), nullableResult = true)
 
   def dsir_score_milli(words: Column, weights: Seq[Long], dim: Int): Column =
-    column(DsirScoreMilli(expression(words), weights, dim))
+    withModel("dsir_score_milli", words, Words, DsirScorer(weights, dim), "score",
+      longPair("n_feats", "w_milli"), nullableResult = true)
 
-  /** Register all for the SQL surface (S7): usable from spark.sql(...). */
-  def register(spark: SparkSession): Unit = {
+  /** Register the model-free functions for the SQL surface (S7): usable
+    * from spark.sql(...). */
+  def register(spark: SparkSession): Unit = statics.foreach { f =>
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "format_readable_size", exprs => FormatReadableSize(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "maybe_b64_decode", exprs => MaybeB64Decode(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_contains",
-      exprs => SortedContains(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count_long",
-      exprs => SortedIntersectCountLong(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_contains_long",
-      exprs => SortedContainsLong(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash16", exprs => SimHash16(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "normalize_text", exprs => NormalizeText(exprs.head), "built-in")
+      f.name, f.expr, "built-in")
   }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 /** Scalar-function kit (SURVEY §2.8, F1–F19).
@@ -15,7 +14,8 @@ import org.apache.spark.sql.functions._
   *
   * Everything here is either a codegen'd built-in composition (preferred —
   * stays inside whole-stage codegen at 100 TB) or, where genuinely not
-  * expressible (F3/F15), a small deterministic Scala UDF.
+  * expressible (F3/F15), a plain Scala core that a native function in
+  * [[GraftExpressions]] calls.
   */
 object Fns {
 
@@ -45,9 +45,6 @@ object Fns {
     }
     s
   }
-
-  /** F3 as a (deterministic) UDF for column use. */
-  val maybeB64Decode: UserDefinedFunction = udf((s: String) => maybeB64DecodeStr(s))
 
   /** F4: first `message`-type event's non-empty `action` attribute value,
     * else "unknown". Pure higher-order-function form — no UDF, codegen-safe.
@@ -84,17 +81,13 @@ object Fns {
     if (i == 0) s"$bytes B" else f"$b%.2f ${units(i)}"
   }
 
-  val formatReadableSize: UserDefinedFunction = udf((b: Long) => formatReadableSizeStr(b))
-
   /** Karp-Rabin rolling-hash core: fold code points through
     * (acc*31 + cp) mod 1e9+7. One tight loop per row — the expression-fold
     * formulation (split("") → per-char array → aggregate) materializes
     * |chars| single-char strings per row. Code points (not UTF-16 units)
     * match both `ascii()` over empty-regex split pieces (Java splits
     * between code points) and DuckDB's per-character string_split. Empty
-    * string hashes to 0 like the fold's single-empty-piece ascii('')=0.
-    * Top-level object method => static forwarder callable from
-    * Janino-generated code (see FormatReadableSize). */
+    * string hashes to 0 like the fold's single-empty-piece ascii('')=0. */
   def rollingHashStr(s: String): Long = {
     var acc = 0L
     var i = 0

@@ -2836,8 +2836,8 @@ object ExtQueries {
         "ORDER BY n DESC, pair LIMIT 20")),
 
     ("x_bpe_tokens", // BPE tokenizer APPLICATION in bulk: the frozen
-      // Bpe.DemoMerges vocab applied to every doc via the native BpeEncode
-      // expression (compiled kernel + per-task word memo, whole-stage
+      // Bpe.DemoMerges vocab applied to every doc via the native bpe_encode
+      // function (compiled kernel + per-task word memo, whole-stage
       // codegen, no UDF) — one corpus scan, zero shuffles. Gate checks the
       // md5 of the full token stream, so any per-word divergence fails
       // loudly. The pure-Catalyst fold (tokenizeBulk) and broadcast

@@ -786,8 +786,8 @@ object Queries {
 
     ("f3_maybe_b64",
       // Oracle-checkable without a DuckDB base64 heuristic: for printable
-      // inputs maybeB64Decode(base64(x)) == x and c_name contains '#'
-      // (outside the b64 charset) so maybeB64Decode(c_name) == c_name —
+      // inputs maybe_b64_decode(base64(x)) == x and c_name contains '#'
+      // (outside the b64 charset) so maybe_b64_decode(c_name) == c_name —
       // DuckDB states both identities directly. Known tricky vectors
       // (valid-b64→printable, valid-charset→non-printable, bad charset)
       // pin the heuristic's branches with hard-coded expectations.
@@ -795,8 +795,8 @@ object Queries {
         import s.implicits._
         val fromData = t(s, d, "customer")
           .select(col("c_custkey"),
-            graft.functions.Fns.maybeB64Decode(base64(col("c_name").cast("binary"))).as("decoded"),
-            graft.functions.Fns.maybeB64Decode(col("c_name")).as("passthrough"))
+            graft.functions.GraftExpressions.maybe_b64_decode(base64(col("c_name").cast("binary"))).as("decoded"),
+            graft.functions.GraftExpressions.maybe_b64_decode(col("c_name")).as("passthrough"))
         val vecInputs = Seq(
           (-4L, "aGVsbG8="),    // valid b64 of printable "hello" -> decode
           (-3L, "abcd"),        // valid charset but decodes to non-printable -> unchanged
@@ -804,8 +804,8 @@ object Queries {
           (-1L, "TWFuIQ=="))    // valid b64 of "Man!" -> decode
           .toDF("c_custkey", "inp")
         val fromVecs = vecInputs.select(col("c_custkey"),
-          graft.functions.Fns.maybeB64Decode(base64(col("inp").cast("binary"))).as("decoded"),
-          graft.functions.Fns.maybeB64Decode(col("inp")).as("passthrough"))
+          graft.functions.GraftExpressions.maybe_b64_decode(base64(col("inp").cast("binary"))).as("decoded"),
+          graft.functions.GraftExpressions.maybe_b64_decode(col("inp")).as("passthrough"))
         fromData.unionByName(fromVecs).orderBy("c_custkey")
       },
       Some("SELECT c_custkey, c_name AS decoded, c_name AS passthrough FROM customer " +

@@ -19,17 +19,10 @@ object Model {
       gas_wanted: Option[Long], gas_used: Option[Long],
       data: String, tx_hash: String, log: String)
 
-  final case class TxEvent(height: Long, tx_index: Int, event_index: Int, `type`: String)
-
   final case class WorkItem(
       id: Long, start_height: Long, end_height: Long, status: String,
       worker_id: Option[String], error_message: Option[String],
       created_at: Timestamp, updated_at: Timestamp)
-
-  final case class FailedBlock(
-      block_height: Long, id: Long, error_type: String, error_message: String,
-      worker_id: Option[String], retry_count: Int, max_retries: Int,
-      status: String, next_retry_at: Timestamp, last_retry_at: Timestamp)
 
   def blocks(df: DataFrame): Dataset[Block] = {
     val spark = df.sparkSession; import spark.implicits._

@@ -88,8 +88,4 @@ object RpcSource {
       col("r.result.txs_results").as("txs_results"),
       col("r.result.finalize_block_events").as("finalize_block_events"))
   }
-
-  /** S4: per-tx point lookup on the flattened store (bloom/minmax-backed). */
-  def txByHash(txs: DataFrame, hash: String): DataFrame =
-    txs.filter(col("tx_hash") === hash)
 }

@@ -37,9 +37,4 @@ class RefreshingDict(load: () => DataFrame, ttlSeconds: Long,
     * dictGetOrDefault with null default). */
   def lookup(fact: DataFrame, keys: Seq[String]): DataFrame =
     fact.join(broadcast(current()), keys, "left")
-
-  def invalidate(): Unit = synchronized {
-    cached.foreach { case (df, _) => df.unpersist() }
-    cached = None
-  }
 }

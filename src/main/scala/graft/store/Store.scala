@@ -276,7 +276,7 @@ object Store {
         (st.getPath.getName, nRows, bytes, files)
       }
     rows.toDF("table", "n_rows", "bytes", "n_files")
-      .withColumn("readable_size", graft.functions.Fns.formatReadableSize(col("bytes")))
+      .withColumn("readable_size", graft.functions.GraftExpressions.format_readable_size(col("bytes")))
       .orderBy(col("bytes").desc)
   }
 

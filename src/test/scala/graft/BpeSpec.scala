@@ -117,10 +117,12 @@ class BpeSpec extends SparkTestBase {
 
   test("tokenizeBulkNative: interpreted eval (no codegen) matches too") {
     // Force the non-codegen path: evaluate the expression directly.
-    val e = graft.functions.BpeEncode(
-      org.apache.spark.sql.catalyst.expressions.Literal("lower partner stow"),
-      Bpe.DemoMerges)
-    val got = e.eval(null)
+    val e = org.apache.spark.sql.GraftBridge.expression(
+      graft.functions.GraftExpressions.bpe_encode(col("text"), Bpe.DemoMerges))
+      .withNewChildren(Seq(
+        org.apache.spark.sql.catalyst.expressions.Literal("lower partner stow")))
+      .asInstanceOf[graft.functions.Native]
+    val got = e.replacement.eval(null)
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       .toArray[org.apache.spark.unsafe.types.UTF8String](
         org.apache.spark.sql.types.StringType).map(_.toString).toSeq

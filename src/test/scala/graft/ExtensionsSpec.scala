@@ -65,36 +65,125 @@ class ExtensionsSpec extends SparkTestBase {
     assert(q2.count() === 2)
   }
 
-  test("native kernels: interpreted eval matches the codegen'd column path") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.unsafe.types.UTF8String
-    // NormalizeText
-    val nt = graft.functions.NormalizeText(Literal("a  b́  "))
-    assert(nt.eval(null).asInstanceOf[UTF8String].toString ===
-      graft.functions.Fns.normalizeTextStr("a  b́  "))
-    // SimHash16 over a words literal
-    val wordsLit = Literal.create(Seq("lower", "stow"),
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.StringType))
-    val sh = graft.functions.SimHash16(wordsLit)
-    val viaCol = Seq(Seq("lower", "stow")).toDF("ws")
-      .select(graft.functions.GraftExpressions.simhash16(col("ws")))
-      .collect()(0).getLong(0)
-    assert(sh.eval(null).asInstanceOf[Long] === viaCol)
-    // PqEncode on a real codebook + vector
-    val cbs = Array.tabulate(2, 4, 2)((s, c, d) => (s + c * 2 + d).toDouble)
-    val vec = Literal.create(Seq(1.0f, 2.0f, 3.0f, 4.0f),
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType))
-    val pq = graft.functions.PqEncode(vec,
-      cbs.map(_.map(_.toSeq).toSeq).toSeq)
-    val interp = pq.eval(null)
-      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      .toIntArray().toSeq
-    val viaCol2 = Seq(Seq(1.0f, 2.0f, 3.0f, 4.0f)).toDF("v")
-      .select(graft.functions.GraftExpressions.pq_encode(col("v"), cbs))
-      .collect()(0).getSeq[Int](0)
-    assert(interp === viaCol2)
+  /** One row per input shape: normal values, every input null, and a
+    * null slot in every array. */
+  private def nativeInputs(): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("s", StringType), StructField("n", LongType),
+      StructField("ws", ArrayType(StringType)), StructField("f", ArrayType(FloatType)),
+      StructField("g", ArrayType(FloatType)), StructField("d", ArrayType(DoubleType)),
+      StructField("la", ArrayType(LongType)), StructField("lb", ArrayType(LongType)),
+      StructField("e", LongType)))
+    val rows = Seq(
+      Seq("lower  partner\tstow dGVzdA== b́", 1536L,
+        Seq("lower", "stow", "lower", "partner"), Seq(1f, 2f, 3f, 4f), Seq(4f, 3f, 2f, 1f),
+        Seq(0.5, 1.5, 2.5, 3.5), Seq(1L, 3L, 5L, 9L), Seq(3L, 5L, 7L), 5L),
+      Seq.fill[Any](9)(null),
+      Seq("dGVzdA==", 7L, Seq("a", null, "b"), Seq(1f, null, 3f, 4f), Seq(1f, 2f, 3f, 4f),
+        Seq(1.0, null, 3.0, 4.0), Seq(1L, null, 5L), Seq(1L, 5L), 5L))
+    val dir = java.nio.file.Files.createTempDirectory("graft_native").toString
+    spark.createDataFrame(java.util.Arrays.asList(
+        rows.map(org.apache.spark.sql.Row.fromSeq): _*), schema)
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("every native function: codegen equals interpreted eval of its replacement") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.BindReferences
+    import graft.functions.Native
+    import GraftExpressions._
+    val bloom = org.apache.spark.util.sketch.BloomFilter.create(100)
+    bloom.putString("dGVzdA==")
+    val cbs = Array.tabulate(2, 3, 2)((s, c, d) => (s + c * 2 + d).toDouble)
+    val cents = Array.tabulate(3, 4)((c, d) => (c * 2 + d).toDouble)
+    val cases: Seq[(String, Column)] = Seq(
+      "format_readable_size" -> format_readable_size(col("n")),
+      "maybe_b64_decode" -> maybe_b64_decode(col("s")),
+      "rolling_hash" -> rolling_hash(col("s")),
+      "normalize_text" -> normalize_text(col("s")),
+      "cosine_sim" -> cosine_sim(col("f"), col("g")),
+      "sorted_intersect_count_long" -> sorted_intersect_count_long(col("la"), col("lb")),
+      "sorted_contains_long" -> sorted_contains_long(col("la"), col("e")),
+      // non-nullable inputs: the kernel's own null (a null slot) must still
+      // compile into the generated code
+      "sorted_intersect_count_long, non-nullable inputs" -> sorted_intersect_count_long(
+        coalesce(col("la"), typedLit(Seq(5L))), coalesce(col("lb"), typedLit(Seq(5L)))),
+      "sorted_contains_long, non-nullable inputs" ->
+        sorted_contains_long(coalesce(col("la"), typedLit(Seq(5L))), lit(5L)),
+      "simhash16" -> simhash16(col("ws")),
+      "winnow_prints" -> winnow_prints(col("ws"), 2, 2),
+      "bloom_might_contain" -> bloom_might_contain(col("s"), bloom),
+      "bpe_encode" -> bpe_encode(col("s"), graft.ext.Bpe.DemoMerges),
+      "pq_encode float" -> pq_encode(col("f"), cbs),
+      "pq_encode double" -> pq_encode(col("d"), cbs),
+      "ivf_assign float" -> ivf_assign(col("f"), cents),
+      "ivf_assign double" -> ivf_assign(col("d"), cents),
+      "lm_score_milli" -> lm_score_milli(col("ws"),
+        Map("lower stow" -> -100L), Map("lower" -> -200L), -900L),
+      "lm_score_milli3" -> lm_score_milli3(col("ws"), Map("lower stow lower" -> -50L),
+        Map("stow lower" -> -100L), Map("stow" -> -200L), -900L, -400L),
+      "dsir_score_milli" -> dsir_score_milli(col("ws"), (1L to 16L).toSeq, 16))
+    val in = nativeInputs()
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(in.schema)
+    val inRows = in.collect().toSeq.map(r => toInternal(r).asInstanceOf[InternalRow])
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try cases.foreach { case (label, c) =>
+      withClue(label) {
+        val q = in.select(c)
+        val got = q.collect().map(_.get(0)).toSeq
+        val plan = q.queryExecution.executedPlan
+        assert(plan.find {
+          case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
+            w.child.isInstanceOf[org.apache.spark.sql.execution.ProjectExec]
+          case _ => false
+        }.isDefined, plan.toString)
+        val analyzed = q.queryExecution.analyzed
+        val native = analyzed.expressions.head.children.head.asInstanceOf[Native]
+        val interpreted =
+          BindReferences.bindReference(native.replacement, analyzed.children.head.output)
+        val want = inRows.map(r =>
+          CatalystTypeConverters.convertToScala(interpreted.eval(r), native.dataType))
+        assert(got === want)
+        if (native.children.forall(_.nullable)) assert(got(1) == null, "null input")
+        // no isnotnull(column) is inferred through the call (Native.replacement)
+        val filtered = in.filter(c.isNotNull).queryExecution.optimizedPlan.toString
+        assert("isnotnull\\([a-z]+#".r.findFirstIn(filtered).isEmpty, filtered)
+      }
+    } finally spark.conf.unset("spark.sql.codegen.fallback")
+  }
+
+  test("native functions over equal models are semanticEquals") {
+    import org.apache.spark.sql.Column
+    import GraftExpressions._
+    def bloom(s: String) = {
+      val b = org.apache.spark.util.sketch.BloomFilter.create(100); b.putString(s); b
+    }
+    def cbs(k: Double) = Array.tabulate(2, 3, 2)((s, c, d) => s + c * 2 + d + k)
+    val builds: Seq[(String, Int => Column)] = Seq(
+      "winnow_prints" -> (k => winnow_prints(col("ws"), 2 + k, 2)),
+      "bloom_might_contain" -> (k => bloom_might_contain(col("s"), bloom(s"x$k"))),
+      "bpe_encode" -> (k => bpe_encode(col("s"), graft.ext.Bpe.DemoMerges.drop(k))),
+      "pq_encode" -> (k => pq_encode(col("f"), cbs(k))),
+      "ivf_assign" -> (k => ivf_assign(col("f"), Array.fill(3, 4)(k.toDouble))),
+      "lm_score_milli" -> (k =>
+        lm_score_milli(col("ws"), Map("a b" -> (-1L - k)), Map("a" -> -2L), -9L)),
+      "lm_score_milli3" -> (k => lm_score_milli3(col("ws"), Map("a b c" -> (-1L - k)),
+        Map("b c" -> -2L), Map("b" -> -3L), -9L, -4L)),
+      "dsir_score_milli" -> (k => dsir_score_milli(col("ws"), Seq.fill(8)(k.toLong), 8)))
+    val in = nativeInputs()
+    def resolved(c: Column) =
+      in.select(c).queryExecution.analyzed.expressions.head.children.head
+    builds.foreach { case (label, build) =>
+      withClue(label) {
+        assert(resolved(build(0)).semanticEquals(resolved(build(0))))
+        assert(!resolved(build(0)).semanticEquals(resolved(build(1))))
+        assert(in.select(build(0)).queryExecution.executedPlan
+          .sameResult(in.select(build(0)).queryExecution.executedPlan))
+      }
+    }
   }
 
   /** One fixture per registry table, in the table's own schema: several
@@ -209,33 +298,5 @@ class ExtensionsSpec extends SparkTestBase {
     val got = df.hint("FINAL").orderBy("block_height")
       .collect().map(r => (r.getLong(0), r.getString(2)))
     assert(got.toSeq === Seq((10L, "a"), (11L, "b")))
-  }
-
-  test("sorted kernels: nullable output survives non-nullable inputs under strict codegen") {
-    // sort_array(collect_list(..)) yields nullable=false array columns; the
-    // kernels' null branch (null SLOT -> null) must still compile — declare
-    // nullable=true and run with codegen fallback disabled so a generated-
-    // code compile error fails the test instead of silently interpreting.
-    val nl = org.apache.spark.sql.catalyst.expressions.Literal(null)
-    val exprs = Seq(
-      graft.functions.SortedIntersectCount(nl, nl),
-      graft.functions.SortedIntersectCountLong(nl, nl),
-      graft.functions.SortedContains(nl, nl),
-      graft.functions.SortedContainsLong(nl, nl))
-    exprs.foreach(e => assert(e.nullable, e.prettyName))
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val grouped = Seq((1, 10L), (1, 20L), (2, 10L), (2, 30L)).toDF("g", "v")
-        .groupBy("g").agg(sort_array(collect_list(col("v"))).as("vs"))
-      val joined = grouped.as("a").crossJoin(grouped.as("b"))
-        .select(
-          GraftExpressions.sorted_intersect_count_long(col("a.vs"), col("b.vs")).as("c"),
-          GraftExpressions.sorted_contains_long(col("a.vs"), lit(10L)).as("m"))
-        .orderBy(col("c"))
-      val rows = joined.collect()
-      assert(rows.length === 4)
-      assert(rows.map(_.getInt(0)).toSeq === Seq(1, 1, 2, 2))
-      assert(rows.forall(_.getBoolean(1)))
-    } finally spark.conf.unset("spark.sql.codegen.fallback")
   }
 }

@@ -49,6 +49,22 @@ class FlattenSpec extends SparkTestBase {
     Flatten(env, processedAt = lit("2025-06-02 00:00:00").cast("timestamp"))
   }
 
+  test("every Flatten output has the column names and types Schemas declares") {
+    val declared = Map(
+      "blocks" -> Schemas.blocks, "txs" -> Schemas.txs,
+      "tx_events" -> Schemas.txEvents, "tx_event_attrs_json" -> Schemas.txEventAttrsJson,
+      "type_wasm" -> Schemas.typeEvent, "type_wasm_attrs" -> Schemas.typeEventAttrs,
+      "type_message" -> Schemas.typeEvent, "type_message_attrs" -> Schemas.typeEventAttrs,
+      "block_events" -> Schemas.blockEvents, "block_event_attrs" -> Schemas.blockEventAttrs)
+    assert(tables.all.map(_._1).toSet === declared.keySet)
+    tables.all.foreach { case (t, df) =>
+      withClue(t) {
+        assert(df.schema.map(f => f.name -> f.dataType) ===
+          declared(t).map(f => f.name -> f.dataType))
+      }
+    }
+  }
+
   test("blocks: one row per height with counts and epoch-second created_at") {
     val rows = tables.blocks.orderBy("height").collect()
     assert(rows.length === 3)

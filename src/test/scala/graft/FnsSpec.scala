@@ -31,12 +31,6 @@ class FnsSpec extends SparkTestBase {
     assert(Fns.maybeB64DecodeStr(tabby) === "a\tb\n")
   }
 
-  test("F3 as column UDF") {
-    val got = Seq("aGVsbG8=", "hello").toDF("s")
-      .select(Fns.maybeB64Decode(col("s"))).collect().map(_.getString(0))
-    assert(got.toSeq === Seq("hello", "hello"))
-  }
-
   test("F4 messageAction: first message event's non-empty action, else unknown") {
     val df = spark.read.schema(
       org.apache.spark.sql.types.StructType(Seq(
@@ -84,61 +78,6 @@ class FnsSpec extends SparkTestBase {
     val got = Seq((1000L, 4600L)).toDF("ts", "ref")
       .select(Fns.ageMinutes(col("ts"), col("ref"))).collect()(0).getLong(0)
     assert(got === 60L)
-  }
-
-  test("SortedContains == array_contains on sorted arrays") {
-    import graft.functions.GraftExpressions.sorted_contains
-    val rng = new scala.util.Random(11)
-    val vocab = (0 until 60).map(i => s"w$i")
-    val rows = (0 until 300).map { _ =>
-      (rng.shuffle(vocab).take(rng.nextInt(40)).toSeq, // incl. empty arrays
-        vocab(rng.nextInt(vocab.size)))
-    }
-    val df = rows.toDF("a", "e").select(array_sort(col("a")).as("a"), col("e"))
-    val got = df.select(sorted_contains(col("a"), col("e")).as("m"),
-      array_contains(col("a"), col("e")).as("ref")).collect()
-    got.foreach(r => assert(r.getBoolean(0) === r.getBoolean(1)))
-    // interpreted path (filter condition is evaluated un-fused here too)
-    assert(df.filter(sorted_contains(col("a"), col("e")) =!=
-      array_contains(col("a"), col("e"))).count() === 0L)
-    // null array / null elem -> null
-    val nul = Seq((Option.empty[Seq[String]], Some("a")),
-        (Some(Seq("a")), Option.empty[String])).toDF("a", "e")
-      .select(sorted_contains(col("a"), col("e"))).collect()
-    assert(nul.forall(_.isNullAt(0)))
-  }
-
-  test("SortedIntersectCount == size(array_intersect) on sorted-distinct arrays") {
-    import graft.functions.GraftExpressions.sorted_intersect_count
-    // randomized cross-check on generated word sets (fixed seed)
-    val rng = new scala.util.Random(7)
-    val vocab = (0 until 40).map(i => s"w$i")
-    val rows = (0 until 200).map { _ =>
-      def set() = rng.shuffle(vocab).take(1 + rng.nextInt(30)).toSeq
-      (set(), set())
-    }
-    val df = rows.toDF("a", "b")
-      .select(array_sort(col("a")).as("a"), array_sort(col("b")).as("b"))
-    val got = df.select(
-      sorted_intersect_count(col("a"), col("b")).as("m"),
-      size(array_intersect(col("a"), col("b"))).as("ref")).collect()
-    got.foreach(r => assert(r.getInt(0) === r.getInt(1)))
-    // edge cases: empty, disjoint, identical, null array -> null
-    val edge = Seq(
-      (Seq.empty[String], Seq("a")),
-      (Seq("a", "b"), Seq("c", "d")),
-      (Seq("a", "b"), Seq("a", "b"))).toDF("a", "b")
-      .select(sorted_intersect_count(col("a"), col("b"))).collect()
-    assert(edge.map(_.getInt(0)).toSeq === Seq(0, 0, 2))
-    val nul = Seq((Some(Seq("a")), Option.empty[Seq[String]])).toDF("a", "b")
-      .select(sorted_intersect_count(col("a"), col("b"))).collect()(0)
-    assert(nul.isNullAt(0))
-    // interpreted eval agrees with codegen (the randomized frame above runs
-    // through WholeStageCodegen; force the interpreted path too)
-    val interp = df.filter(
-      sorted_intersect_count(col("a"), col("b")) =!=
-        size(array_intersect(col("a"), col("b")))).count()
-    assert(interp === 0L)
   }
 
   test("SortedContainsLong == array_contains on sorted long arrays") {

@@ -167,15 +167,15 @@ class PlanSpec extends SparkTestBase {
     }
     // prefix join completes the intersection from the uncapped suffixes via
     // the native long-merge kernel; containment is exact by count alone
-    assert(plan("x_prefix_pairs").contains("sorted_intersect_count_long"),
+    assert(plan("x_prefix_pairs").contains("sortedIntersectCountLong"),
       "x_prefix_pairs suffix completion not native")
-    assert(!plan("x_containment_pairs").contains("sorted_intersect_count_long"),
+    assert(!plan("x_containment_pairs").contains("sortedIntersectCountLong"),
       "x_containment_pairs should need no array verify (count is exact)")
   }
 
   test("x_bloom_new_docs: bloom probe evaluated in the scan filter, no shuffle before it") {
     val p = plan("x_bloom_new_docs")
-    assert(p.contains("bloom_might_contain"), p.take(1500))
+    assert(p.contains("mightContain"), p.take(1500))
     assert(!p.contains("CartesianProduct"))
   }
 

@@ -325,7 +325,7 @@ class SimilaritySpec extends SparkTestBase {
     nat.collect()
     val plan = nat.queryExecution.executedPlan.toString
     // the '*(n)' prefix is how the tree renders a WholeStageCodegen span
-    assert("\\*\\(\\d+\\) Project \\[cosine_sim".r.findFirstIn(plan).isDefined,
+    assert("\\*\\(\\d+\\) Project \\[.*Kernels\\.cosineSim\\(".r.findFirstIn(plan).isDefined,
       plan.take(600))
 
     // edges: length mismatch -> null on both forms (zip_with pad

@@ -65,6 +65,37 @@ class ExtensionsSpec extends SparkTestBase {
     assert(q2.count() === 2)
   }
 
+  test("native kernels: interpreted eval matches the codegen'd column path") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.Native
+    // the resolved Native's replacement (StaticInvoke/Invoke), evaluated
+    // without codegen
+    def interpreted(c: Column): Any = spark.range(1).select(c).queryExecution
+      .analyzed.expressions.head.children.head
+      .asInstanceOf[Native].replacement.eval(null)
+    // normalize_text
+    val nt = interpreted(GraftExpressions.normalize_text(lit("a  b\u0301  ")))
+    assert(nt.asInstanceOf[UTF8String].toString ===
+      graft.functions.Fns.normalizeTextStr("a  b\u0301  "))
+    // simhash16 over a words literal
+    val sh = interpreted(GraftExpressions.simhash16(typedLit(Seq("lower", "stow"))))
+    val viaCol = Seq(Seq("lower", "stow")).toDF("ws")
+      .select(GraftExpressions.simhash16(col("ws")))
+      .collect()(0).getLong(0)
+    assert(sh.asInstanceOf[Long] === viaCol)
+    // pq_encode on a real codebook + vector
+    val cbs = Array.tabulate(2, 4, 2)((s, c, d) => (s + c * 2 + d).toDouble)
+    val pq = interpreted(
+      GraftExpressions.pq_encode(typedLit(Seq(1.0f, 2.0f, 3.0f, 4.0f)), cbs))
+    val interp = pq.asInstanceOf[ArrayData].toIntArray().toSeq
+    val viaCol2 = Seq(Seq(1.0f, 2.0f, 3.0f, 4.0f)).toDF("v")
+      .select(GraftExpressions.pq_encode(col("v"), cbs))
+      .collect()(0).getSeq[Int](0)
+    assert(interp === viaCol2)
+  }
+
   /** One row per input shape: normal values, every input null, and a
     * null slot in every array. */
   private def nativeInputs(): org.apache.spark.sql.DataFrame = {
@@ -298,5 +329,33 @@ class ExtensionsSpec extends SparkTestBase {
     val got = df.hint("FINAL").orderBy("block_height")
       .collect().map(r => (r.getLong(0), r.getString(2)))
     assert(got.toSeq === Seq((10L, "a"), (11L, "b")))
+  }
+
+  test("sorted kernels: nullable output survives non-nullable inputs under strict codegen") {
+    // sort_array(collect_list(..)) yields nullable=false array columns; the
+    // kernels' null branch (null SLOT -> null) must still compile — declare
+    // nullable=true and run with codegen fallback disabled so a generated-
+    // code compile error fails the test instead of silently interpreting.
+    val vs = typedLit(Seq(10L, 20L))
+    Seq(GraftExpressions.sorted_intersect_count_long(vs, vs),
+        GraftExpressions.sorted_contains_long(vs, lit(10L))).foreach { c =>
+      val e = spark.range(1).select(c).queryExecution.analyzed.expressions.head.children.head
+      assert(e.children.forall(!_.nullable), e.toString)
+      assert(e.nullable, e.toString)
+    }
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      val grouped = Seq((1, 10L), (1, 20L), (2, 10L), (2, 30L)).toDF("g", "v")
+        .groupBy("g").agg(sort_array(collect_list(col("v"))).as("vs"))
+      val joined = grouped.as("a").crossJoin(grouped.as("b"))
+        .select(
+          GraftExpressions.sorted_intersect_count_long(col("a.vs"), col("b.vs")).as("c"),
+          GraftExpressions.sorted_contains_long(col("a.vs"), lit(10L)).as("m"))
+        .orderBy(col("c"))
+      val rows = joined.collect()
+      assert(rows.length === 4)
+      assert(rows.map(_.getInt(0)).toSeq === Seq(1, 1, 2, 2))
+      assert(rows.forall(_.getBoolean(1)))
+    } finally spark.conf.unset("spark.sql.codegen.fallback")
   }
 }

@@ -40,7 +40,4 @@ object Era {
     val best = (1 to 5).map(_ => once()).min
     Steps / best / 1e6
   }
-
-  /** `quality()` formatted for direct inclusion in a JSON object body. */
-  def jsonField(): String = f""""era_quality":${quality()}%.1f"""
 }

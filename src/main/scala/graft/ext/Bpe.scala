@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding tokenizer TRAINING primitives (Sennrich et al. 2016,
@@ -142,7 +142,8 @@ object Bpe {
   }
 
   /** Apply a trained merge list to one word — the (driver-side) reference
-    * tokenizer used by specs and the per-word kernel of [[tokenizeBulkBig]]. */
+    * tokenizer used by specs and the per-word kernel of the native
+    * `bpe_encode`. */
   def tokenizeWord(word: String, merges: Seq[(String, String)]): Seq[String] =
     merges.foldLeft(word.map(_.toString): Seq[String]) {
       case (syms, (a, b)) => mergeOnce(syms, a, b)
@@ -157,75 +158,12 @@ object Bpe {
     ("e", "r"), ("o", "r"), ("i", "n"), ("o", "w"),
     ("s", "t"), ("l", "u"), ("a", "r"), ("p", "ar"))
 
-  /** One BPE merge pass over a symbol array, as a pure Catalyst fold
-    * (`aggregate` HOF — whole-stage-codegen'd, no UDF). Left-to-right
-    * non-overlapping fusing via "fuse with the accumulator's last symbol":
-    * equivalent to [[mergeOnce]] because a fused token (a+b) is strictly
-    * longer than `a`, so it can never itself match the pair's left side
-    * within the same pass. CASE branches evaluate lazily, so element_at on
-    * the empty accumulator is never reached. */
-  private def mergePass(syms: Column, a: String, b: String): Column =
-    aggregate(
-      syms,
-      array().cast("array<string>"),
-      (acc, x) =>
-        when(size(acc) === 0, array(x))
-          .when(element_at(acc, -1) === lit(a) && x === lit(b),
-            concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
-          .otherwise(concat(acc, array(x))))
-
-  /** BPE tokens of one word under a FIXED merge list, as a column
-    * expression: chars (empty-word-safe), then one [[mergePass]] per merge
-    * in training order (Sennrich's sequential application). The merge list
-    * is inlined into the expression tree — right for demo/gate-sized
-    * vocabularies; a 50k-merge production vocab goes through
-    * [[tokenizeBulkBig]] instead. */
-  def tokensOf(word: Column, merges: Seq[(String, String)]): Column = {
-    val chars = filter(split(word, ""), c => c =!= lit(""))
-    merges.foldLeft(chars) { case (syms, (a, b)) => mergePass(syms, a, b) }
-  }
-
-  /** Bulk corpus tokenization, codegen path: (doc_id, tokens) with the
-    * per-word folds fused into one whole-stage-codegen'd projection — one
-    * corpus scan, zero shuffles, trivially partition-parallel. */
-  def tokenizeBulk(docs: DataFrame, idCol: String, textCol: String,
-                   merges: Seq[(String, String)]): DataFrame =
-    docs.select(col(idCol).cast("long").as("doc_id"),
-      flatten(transform(split(col(textCol), " "),
-        w => tokensOf(w, merges))).as("tokens"))
-
   /** Bulk corpus tokenization, native-expression path: one compiled-kernel
     * call per row ([[graft.functions.BpeTokenizer]]) with per-task word
-    * memoization — the fast form of [[tokenizeBulk]] (token-stream-equal,
-    * BpeSpec-asserted), one corpus scan, zero shuffles, whole-stage
-    * codegen. */
+    * memoization — token-stream-equal to BpeSpec's pure-Catalyst fold, one
+    * corpus scan, zero shuffles, whole-stage codegen. */
   def tokenizeBulkNative(docs: DataFrame, idCol: String, textCol: String,
                          merges: Seq[(String, String)]): DataFrame =
     docs.select(col(idCol).cast("long").as("doc_id"),
       graft.functions.GraftExpressions.bpe_encode(col(textCol), merges).as("tokens"))
-
-  /** Bulk corpus tokenization, big-vocab path: the merge table rides an
-    * executor BROADCAST (one copy per JVM, not per task) and each partition
-    * memoizes word→tokens — by Heaps' law the distinct-word set per
-    * partition is far smaller than its token count, so most words are a
-    * hash lookup, not a fold. Same semantics as [[tokenizeBulk]]
-    * (spec-asserted equal); use when the merge list is too large to inline
-    * as an expression tree. */
-  def tokenizeBulkBig(docs: DataFrame, idCol: String, textCol: String,
-                      merges: Seq[(String, String)]): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(merges)
-    docs.select(col(idCol).cast("long"), col(textCol).cast("string"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        val cache = scala.collection.mutable.HashMap.empty[String, Seq[String]]
-        it.map { case (id, text) =>
-          val toks = text.split(" ", -1).iterator.filter(_.nonEmpty)
-            .flatMap(w => cache.getOrElseUpdate(w, tokenizeWord(w, bc.value)))
-            .toSeq
-          (id, toks)
-        }
-      }.toDF("doc_id", "tokens")
-  }
 }

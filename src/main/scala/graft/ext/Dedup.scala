@@ -68,48 +68,11 @@ object Dedup {
         i => concat_ws(" ", slice(ws, i + 1, lit(k)))))
       .otherwise(array(concat_ws(" ", ws)))
 
-  /** Convenience form over raw text — correctness-equivalent, but quadratic
-    * in words (see shinglesOfWords); hot paths must materialize words first. */
-  def wordShingles(text: Column, k: Int): Column =
-    shinglesOfWords(split(text, " "), k)
-
   /** Exact dedup: group by content hash, keep the smallest id.
     * One shuffle on the 128-bit hash; streams at any scale. */
   def exactDedup(df: DataFrame, textCol: String, idCol: String): DataFrame =
     df.groupBy(md5(col(textCol)).as("h"))
       .agg(count(lit(1)).as("cnt"), min(col(idCol)).as("keep_id"))
-
-  /** Cross-SOURCE exact-duplicate overlap matrix — the curation diagnostic
-    * behind mix decisions ("how much of source A is verbatim inside source
-    * B?"). Counts duplicate PAIRS per (source_a, source_b) with
-    * source_a ≤ source_b: within a source C(n,2), across sources n_a·n_b.
-    *
-    * Scale shape: never a doc-level self-join — docs collapse to one row
-    * per (fingerprint, source) first (map-side-combinable agg), and the
-    * pair join runs on that collapsed table keyed by fingerprint; its size
-    * is bounded by the duplicate groups themselves. Pure integer pair
-    * arithmetic, partition-order-proof. */
-  def sourceOverlapMatrix(df: DataFrame, textCol: String, idCol: String,
-                          sourceCol: String): DataFrame = {
-    val perFp = Par.ensure(df.select(col(textCol), col(sourceCol)))
-      .groupBy(md5(col(textCol)).as("h"), col(sourceCol))
-      .agg(count(lit(1)).as("n"))
-    val a = perFp
-      .select(col("h"), col(sourceCol).as("source_a"), col("n").as("na"))
-      .hint("shuffle_hash")
-    val b = perFp
-      .select(col("h"), col(sourceCol).as("source_b"), col("n").as("nb"))
-      .hint("shuffle_hash")
-    a.join(b, Seq("h"))
-      .filter(col("source_a") <= col("source_b"))
-      .withColumn("pairs",
-        when(col("source_a") === col("source_b"),
-          expr("na * (na - 1) div 2")).otherwise(col("na") * col("nb")))
-      .groupBy("source_a", "source_b")
-      .agg(sum(col("pairs")).as("n_pairs"))
-      .filter(col("n_pairs") > 0)
-      .select("source_a", "source_b", "n_pairs")
-  }
 
   /** Winnowing-print candidate pairs: docs sharing ≥ `minShared` winnowed
     * fingerprints ([[TextFns.winnowedPrints]]). The winnowed set samples
@@ -1565,21 +1528,6 @@ object Dedup {
     definiteNew.unionByName(suspects).select(col(idCol), col(keyCol))
   }
 
-  /** Inline form: derives the old band table from the old text and delegates
-    * to [[incrementalNearDupsFromBands]]. Correctness-equivalent; prod and
-    * the bench use the band-store form — re-LSHing the corpus per refresh is
-    * exactly what the store exists to avoid. */
-  def incrementalNearDups(newDf: DataFrame, oldDf: DataFrame,
-                          textCol: String, idCol: String,
-                          numHashes: Int = 8, bandSize: Int = 2,
-                          shingleK: Int = 3, threshold: Double = 0.7,
-                          maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val oldBands = lshBands(minhashSig(oldDf, textCol, idCol, numHashes, shingleK),
-      idCol, numHashes, bandSize)
-    incrementalNearDupsFromBands(newDf, oldBands, oldDf, textCol, idCol,
-      numHashes, bandSize, shingleK, threshold, maxBucket = maxBucket)
-  }
-
   /** Build-once persisted band store per (dataset, corpus split, LSH
     * config), an [[graft.Artifacts.stored]] artifact: the existing corpus'
     * bands are written partitioned-by-band on first use (standing in for
@@ -1818,41 +1766,12 @@ object Dedup {
     (labels, iter)
   }
 
-  /** 16-bit SimHash from a PRE-MATERIALIZED array of md5(word) hex strings,
-    * in ONE pass: each word's 16 "hex digit p >= 8" flags collapse to a
-    * 16-bit mask (one translate + one base-2 parse per word), and a single
-    * `aggregate` folds all 16 vote counters at once — 16 bitmask tests per
-    * word instead of 16 positional array passes, an order of magnitude less
-    * array traffic than the per-bit formulation. Bit p of the result is the
-    * majority vote of the top bit of hex digit p, weighted ±1 per token;
-    * ties (vote == 0, incl. the empty array) set the bit. Bit-identical to
-    * the per-bit original (DedupSpec asserts known vectors). */
-  def simhash16FromHashes(wordHashes: Column): Column = {
-    // digit p of the hash maps to mask bit (16 - p): substring position 1
-    // is the most significant binary digit of the conv() parse
-    val masks = transform(wordHashes, h =>
-      conv(translate(substring(h, 1, 16),
-        "0123456789abcdef", "0000000011111111"), 2, 10).cast("long"))
-    val packed = aggregate(
-      masks,
-      array((1 to 16).map(_ => lit(0)): _*),
-      (acc, m) => array((1 to 16).map { p =>
-        element_at(acc, p) +
-          when(m.bitwiseAND(lit(1L << (16 - p))) =!= lit(0L), lit(1)).otherwise(lit(-1))
-      }: _*),
-      acc => (1 to 16).map { p =>
-        when(element_at(acc, p) >= 0, lit(1L << (p - 1))).otherwise(lit(0L))
-      }.reduce(_ + _))
-    // null input folded to 0, matching the per-bit form (null vote -> bit 0)
-    coalesce(packed, lit(0L))
-  }
-
   /** SimHash over raw words — the native kernel form (md5 consumed as
-    * bytes, no hex strings materialized); bit-identical to
-    * [[simhash16FromHashes]] over `transform(words, md5)` (DedupSpec
-    * asserts on corpus text). Hot paths use this. The kernel propagates
-    * NULL for a null words array, so fold it to 0L here to keep the
-    * fold-form contract (null text -> signature 0, never a NULL band key). */
+    * bytes, no hex strings materialized); bit-identical to DedupSpec's
+    * fold over `transform(words, md5)` (asserted on corpus text). Hot paths
+    * use this. The kernel propagates NULL for a null words array, so fold
+    * it to 0L here to keep the fold-form contract (null text -> signature
+    * 0, never a NULL band key). */
   def simhash16(words: Column): Column =
     coalesce(graft.functions.GraftExpressions.simhash16(words), lit(0L))
 

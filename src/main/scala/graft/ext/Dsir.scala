@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** DSIR-style data selection via importance resampling (Xie et al. 2023,
@@ -57,8 +57,8 @@ object Dsir {
   }
 
   /** Unigram + adjacent-bigram features of a whitespace-split text, the
-    * paper's feature set. Driver-side twin of [[featuresCol]], including
-    * its null contract: null text features as the empty string (a null-text
+    * paper's feature set, with the null contract of the native kernel:
+    * null text features as the empty string (a null-text
     * doc in the md5-spread training sample must train, not NPE). */
   private[graft] def featuresOf(text: String): Seq[String] = {
     val ws = (if (text == null) "" else text).split(" ", -1).toSeq
@@ -101,26 +101,14 @@ object Dsir {
         DsirModel(w, dim, nt, nr, ntd, nrd)
       }
 
-  /** Unigram + adjacent-bigram feature array of a text column. NULL text
-    * features as the empty string's singleton (both engines split "" to
-    * [""]), so null documents score identically across engines. */
-  private[graft] def featuresCol(textCol: Column): Column = {
-    val ws = split(coalesce(textCol, lit("")), " ")
-    val bgs = when(size(ws) >= 2,
-      transform(sequence(lit(1), size(ws) - 1), i =>
-        concat(element_at(ws, i), lit(" "), element_at(ws, i + 1))))
-      .otherwise(array().cast("array<string>"))
-    concat(ws, bgs)
-  }
-
   /** Per-document DSIR importance weights:
     * `(idCol, n_feats, w_milli, keep)` where `w_milli` is the integer
     * milli-nat log importance weight summed over hashed unigram+bigram
     * features and `keep` = (w_milli ≥ 0). Zero shuffles; one native-kernel
     * pass per row (`DsirScorer` — the HOF fold interprets md5/conv/
     * element_at per feature and allocates a hex string per hash, measured
-    * 10.0 s at the sf0.1 gate vs sub-second for the kernel; the fold stays
-    * below as the spec reference). */
+    * 10.0 s at the sf0.1 gate vs sub-second for the kernel; DsirSpec keeps
+    * the fold as the reference). */
   def importanceWeights(docs: DataFrame, textCol: String, idCol: String,
                         model: DsirModel): DataFrame =
     docs.select(col(idCol),
@@ -131,23 +119,4 @@ object Dsir {
         col("__s.n_feats").as("n_feats"),
         col("__s.w_milli").as("w_milli"))
       .withColumn("keep", (col("w_milli") >= 0L).cast("int"))
-
-  /** The declarative HOF-fold form — the independently-derived reference
-    * the native kernel is spec-asserted against (DsirSpec). */
-  private[graft] def importanceWeightsFold(docs: DataFrame, textCol: String,
-                                           idCol: String,
-                                           model: DsirModel): DataFrame = {
-    val feats = featuresCol(col(textCol))
-    val wLit = typedLit(model.weightsMilli)
-    val score = aggregate(
-      transform(feats, tok =>
-        element_at(wLit,
-          (conv(substring(md5(tok), 1, 4), 16, 10).cast("long") % model.dim)
-            .cast("int") + 1)),
-      lit(0L), (acc, v) => acc + v)
-    docs.select(col(idCol),
-        size(feats).cast("long").as("n_feats"),
-        score.as("w_milli"))
-      .withColumn("keep", (col("w_milli") >= 0L).cast("int"))
-  }
 }

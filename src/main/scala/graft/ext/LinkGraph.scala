@@ -107,31 +107,6 @@ object LinkGraph {
     ranks
   }
 
-  /** [[pageRank]] over [[Url.outlinks]] edges: one row per canonical URL
-    * key with its rank — pages link pages, so both endpoints are canonical
-    * keys (the page's own url collapsed through the same [[Url.canonicalKey]]
-    * as its links). The crawl-quality table a frontier orders its fetch
-    * queue by.
-    *
-    * GATE-ONLY in its default lazy form (r14 verdict item 8): the inline
-    * composition re-runs the html link-extraction regex chain under every
-    * iteration subtree, and the lazily-checkpointed variant of exactly
-    * this shape OOM-killed the 30 M link rung twice in r13. Production
-    * callers either pass `materialize = true` (pageRank then parquet-
-    * truncates the weighted edge list and every iteration — the shape the
-    * clean 30 M/100 M rungs ran) or extract [[Url.outlinks]] to a table
-    * once and iterate [[pageRank]] over it directly (LinkProbe measures
-    * the difference). */
-  def urlRank(docs: DataFrame, idCol: String, urlCol: String,
-              htmlCol: String, iterations: Int = 3,
-              dampingMilli: Int = 850,
-              materialize: Boolean = false): DataFrame =
-    // [[Url.outlinks]] carries the page's own key through its per-row
-    // select, so the edge list needs no join-back on id
-    pageRank(Url.outlinks(docs, idCol, urlCol, htmlCol),
-      "src_key", "link_key", iterations, dampingMilli,
-      materialize = materialize)
-
   /** [[pageRank]] rolled up to REGISTRABLE DOMAINS — the granularity the
     * public web rankings actually publish (Common Crawl's domain-level
     * ranks) and the one domain caps / blocklists act at. Edges collapse to

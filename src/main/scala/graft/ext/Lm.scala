@@ -100,7 +100,7 @@ object Lm {
     * −9 000: mean log-prob above −9 nats ≈ perplexity below ~8 100). Zero
     * shuffles; one native-kernel pass per row with HASHED model lookups
     * (`LmScorer` — the MapType-literal fold form is a linear key scan
-    * per lookup, measured 23× slower; kept below as the spec reference). */
+    * per lookup, measured 23× slower; LmSpec keeps it as the reference). */
   def scoreMilli(docs: DataFrame, textCol: String, idCol: String,
                  lm: BigramLm, keepMeanMilli: Long = -9000L): DataFrame =
     // NULL text scores as the EMPTY doc (n=0, lp=0, keep=1) — without the
@@ -197,7 +197,7 @@ object Lm {
     * the [[scoreMilli]] contract one order up (`n_trigrams` = max(words−2,
     * 0); `keep` compares the per-trigram mean against `keepMeanMilli`).
     * Zero shuffles; one native-kernel pass per row with HASHED lookups
-    * through the backoff chain (the fold form below is the spec
+    * through the backoff chain (LmSpec keeps the fold form as the
     * reference). NULL text scores as the empty doc, the scoreMilli rule. */
   def scoreMilli3(docs: DataFrame, textCol: String, idCol: String,
                   lm: TrigramLm, keepMeanMilli: Long = -9000L): DataFrame =
@@ -211,71 +211,6 @@ object Lm {
         col("__s.lp_milli").as("lp_milli"))
       .withColumn("keep",
         (col("lp_milli") >= col("n_trigrams") * lit(keepMeanMilli)).cast("int"))
-
-  /** The declarative aggregate-fold form of [[scoreMilli3]] — the
-    * independently-derived reference the native kernel is spec-asserted
-    * against (LmSpec). The backoff rides INSIDE the outer coalesce: an
-    * unseen trigram costs `backoffMilli` plus the bigram chain's score. */
-  private[graft] def scoreMilli3Fold(docs: DataFrame, textCol: String,
-                                     idCol: String, lm: TrigramLm,
-                                     keepMeanMilli: Long = -9000L): DataFrame = {
-    val triLit = typedLit(lm.trigramMilli)
-    val bigLit = typedLit(lm.bigramMilli)
-    val uniLit = typedLit(lm.uniFallbackMilli)
-    val ws = split(coalesce(col(textCol), lit("")), " ")
-    val idxs = when(size(ws) >= 3, sequence(lit(1), size(ws) - 2))
-      .otherwise(array().cast("array<int>"))
-    val lpCol = aggregate(idxs, lit(0L), (acc, i) => acc + coalesce(
-      element_at(triLit,
-        concat(element_at(ws, i), lit(" "), element_at(ws, i + 1),
-          lit(" "), element_at(ws, i + 2))),
-      lit(lm.backoffMilli) + coalesce(
-        element_at(bigLit,
-          concat(element_at(ws, i + 1), lit(" "), element_at(ws, i + 2))),
-        element_at(uniLit, element_at(ws, i + 1)),
-        lit(lm.floorMilli))))
-    docs.select(col(idCol),
-        greatest(size(ws) - 2, lit(0)).cast("long").as("n_trigrams"),
-        lpCol.as("lp_milli"))
-      .withColumn("keep",
-        (col("lp_milli") >= col("n_trigrams") * lit(keepMeanMilli)).cast("int"))
-  }
-
-  /** The declarative aggregate-fold form — the independently-derived
-    * reference the native kernel is spec-asserted against (LmSpec). */
-  private[graft] def scoreMilliFold(docs: DataFrame, textCol: String,
-                                    idCol: String, lm: BigramLm,
-                                    keepMeanMilli: Long = -9000L): DataFrame = {
-    val bigLit = typedLit(lm.bigramMilli)
-    val uniLit = typedLit(lm.uniFallbackMilli)
-    // null text → empty-doc score, the scoreMilli contract
-    val ws = split(coalesce(col(textCol), lit("")), " ")
-    val idxs = when(size(ws) >= 2, sequence(lit(1), size(ws) - 1))
-      .otherwise(array().cast("array<int>"))
-    val lpCol = aggregate(idxs, lit(0L), (acc, i) => acc + coalesce(
-      element_at(bigLit,
-        concat(element_at(ws, i), lit(" "), element_at(ws, i + 1))),
-      element_at(uniLit, element_at(ws, i)),
-      lit(lm.floorMilli)))
-    docs.select(col(idCol),
-        greatest(size(ws) - 1, lit(0)).cast("long").as("n_bigrams"),
-        lpCol.as("lp_milli"))
-      .withColumn("keep",
-        (col("lp_milli") >= col("n_bigrams") * lit(keepMeanMilli)).cast("int"))
-  }
-
-  // --------------------------------------------------------------------
-  // CCNet head/middle/tail perplexity bucketing (Wenzek et al. 2020 §4.3):
-  // CCNet sorts each language's corpus by document perplexity and splits
-  // it into thirds — head (lowest perplexity, best), middle, tail — with
-  // the two cutoffs computed once per language and SHIPPED with the model.
-  // The engine-exact analogue: cutoffs are order statistics of the
-  // per-bigram mean milli-nat log-prob over the SAME bounded md5-spread
-  // sample the LM trains on (a driver artifact, like CCNet's published
-  // per-language cutoff files), and bucket assignment is a pure integer
-  // multiply-compare `lp_milli >= cutoff * n_bigrams` — no division, so
-  // Spark and DuckDB agree bit-for-bit at every boundary.
-  // --------------------------------------------------------------------
 
   /** Per-bigram-mean cutoffs in milli-nats: a doc is `head` iff
     * `lp >= headMinMilli * n`, else `middle` iff `lp >= middleMinMilli * n`,

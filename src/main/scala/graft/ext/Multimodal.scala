@@ -737,16 +737,6 @@ object Multimodal {
       }(encoder)
   }
 
-  /** Metadata-only resize: clamp the declared dimensions. This is the
-    * non-image branch of [[resizeMedia]] (audio/opaque bytes have no pixels
-    * to scale) and the cheap path when only the metadata contract matters. */
-  def resizeMeta(media: DataFrame, maxW: Int, maxH: Int): DataFrame =
-    media.withColumn("meta", struct(
-      col("meta.format"),
-      least(col("meta.width"), lit(maxW)).as("width"),
-      least(col("meta.height"), lit(maxH)).as("height"),
-      col("meta.duration_ms")))
-
   /** Synthesize a REAL w×h PNG with deterministic seed-derived pixels —
     * the harness for exercising the real decode/resize paths at the gate,
     * where the corpus carries no native image bytes. JDK-only. */

@@ -290,9 +290,7 @@ object Sampling {
     * sf0.01 and sf0.1 including the .99 interpolation).
     *
     * Scale stance: `percentile` buffers the column per partial aggregate —
-    * the correctness anchor, fine up to ~10⁸ rows per executor. For 100 TB
-    * use [[valueQuantilesApprox]] (mergeable sketch, bounded memory) and
-    * accept the documented rank error. */
+    * the correctness anchor, fine up to ~10⁸ rows per executor. */
   def valueQuantiles(df: DataFrame, valueCol: String,
                      qs: Seq[Double]): DataFrame = {
     val qArr = qs.map(q => s"${q}D").mkString("array(", ", ", ")")
@@ -301,20 +299,6 @@ object Sampling {
       .select(
         element_at(typedLit(qs), col("__i").cast("int") + 1).as("q"),
         round(col("__v"), 6).as("v"))
-  }
-
-  /** Approximate quantiles with bounded memory: `approx_percentile`'s
-    * mergeable sketch (one pass, no per-group buffering) — the 100 TB path.
-    * `accuracy` bounds the rank error at n/accuracy rows (Spark contract);
-    * SamplingSpec asserts that bound against the exact form. */
-  def valueQuantilesApprox(df: DataFrame, valueCol: String, qs: Seq[Double],
-                           accuracy: Int = 10000): DataFrame = {
-    val qArr = qs.map(q => s"${q}D").mkString("array(", ", ", ")")
-    df.agg(expr(s"approx_percentile($valueCol, $qArr, $accuracy)").as("__vs"))
-      .select(posexplode(col("__vs")).as(Seq("__i", "__v")))
-      .select(
-        element_at(typedLit(qs), col("__i").cast("int") + 1).as("q"),
-        col("__v").as("v"))
   }
 
   /** HLL++ cardinality-sketch audit: exact distinct count beside a boolean

@@ -23,28 +23,13 @@ object Similarity {
       zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
 
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine over two FLOAT-array columns: one native codegen'd loop per row
     * (functions/Expressions.scala CosineSim) — bit-identical to the
-    * higher-order-function fold [[cosineHof]] (spec-asserted), but inside
-    * whole-stage codegen where the three HOF folds are not. */
+    * higher-order-function fold dot(a, b) / (|a| · |b|) (SimilaritySpec
+    * asserts), but inside whole-stage codegen where the three HOF folds are
+    * not. */
   def cosine(a: Column, b: Column): Column =
     graft.functions.GraftExpressions.cosine_sim(a, b)
-
-  /** The HOF formulation — the cross-checkable reference for [[cosine]]. */
-  def cosineHof(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** Brute-force cosine top-k neighbors of `queryVec` (a one-row DataFrame
-    * with column `qv`). The broadcast + TakeOrdered plan is the right shape
-    * at any scale: no shuffle of the big side. */
-  def bruteForceTopK(em: DataFrame, idCol: String, vecCol: String,
-                     queryVec: DataFrame, k: Int): DataFrame =
-    em.crossJoin(broadcast(queryVec))
-      .withColumn("cos", cosine(col(vecCol), col("qv")))
-      .select(col(idCol), col("cos"))
-      .orderBy(col("cos").desc, col(idCol))
-      .limit(k)
 
   /** Deterministic ±1 hyperplanes (nPlanes × dim) from a fixed seed. */
   def planes(nPlanes: Int, dim: Int, seed: Long = 42L): Seq[Seq[Double]] = {
@@ -171,45 +156,15 @@ object Similarity {
     cents
   }
 
-  /** Full-corpus KMeans (Spark ML) — the offline/bulk alternative to
-    * `centroidsFor` when a distributed training pass is warranted. */
-  def ivfTrain(em: DataFrame, vecCol: String, nLists: Int,
-               seed: Long = 42L): Array[Array[Double]] = {
-    val toVec = org.apache.spark.ml.functions.array_to_vector(
-      transform(col(vecCol), x => x.cast("double")))
-    val feats = em.select(toVec.as("features"))
-    val km = new org.apache.spark.ml.clustering.KMeans()
-      .setK(nLists).setSeed(seed).setMaxIter(10).setFeaturesCol("features")
-    km.fit(feats).clusterCenters.map(_.toArray)
-  }
-
   /** Nearest-centroid assignment as ONE native expression (argmin of
     * squared L2 over the centroid table, compiled kernel with exact
-    * early-abandon — `IvfAssigner`). The HOF form below is the
-    * independently-derived reference it is spec-asserted against; the
+    * early-abandon — `IvfAssigner`). SimilaritySpec asserts it against an
+    * independently-derived HOF form; the
     * native kernel is what the 1 M-vector index builds run, where the
     * interpreted nLists·dim HOF tree per row was the dominant build cost
     * (ANNPROBE_r09_1m: 326 s IVF build). */
   def ivfAssign(vec: Column, centroids: Array[Array[Double]]): Column =
     graft.functions.GraftExpressions.ivf_assign(vec, centroids)
-
-  /** The HOF/literal form of [[ivfAssign]] — one zip_with+aggregate l2 fold
-    * per centroid under a struct array_min (ties to the lowest list id).
-    * Kept as the spec reference for the native kernel (same IEEE
-    * left-to-right fold order, same low-id tiebreak). */
-  private[graft] def ivfAssignHof(vec: Column,
-                                  centroids: Array[Array[Double]]): Column = {
-    val dists = centroids.zipWithIndex.map { case (c, i) =>
-      val d = aggregate(
-        zip_with(vec, typedLit(c.toSeq), (x, y) => {
-          val diff = x.cast("double") - y
-          diff * diff
-        }),
-        lit(0.0), (acc, v) => acc + v)
-      struct(d.as("d"), lit(i).as("list"))
-    }
-    array_min(array(dists: _*)).getField("list")
-  }
 
   /** IVF ANN: probe the `nProbe` lists nearest to the query with exact
     * cosine. Equi-join on the list id — same shuffle shape as LSH buckets. */
@@ -344,22 +299,6 @@ object Similarity {
         idCol, vecCol, centroids, path)
     }
 
-  /** Compact the small files appends accumulate (one file per task per
-    * touched list per append): [[graft.store.Store.compact]]'s swap rewrite
-    * over the index, partitioned by list. Keyed by the id column — ids are
-    * unique so the dedup pass is a no-op that doubles as double-append
-    * repair (an at-least-once append of the same delta collapses back to
-    * one row per id). Re-touches the delta marker the rewrite drops, so a
-    * compacted index still reads as fully maintained. */
-  def ivfCompactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                      idCol: String = "vec_id"): Unit = {
-    graft.store.Store.compact(spark, path, graft.store.Store.latestAnyRow(_, Seq(idCol)),
-      partitionCols = Seq("list"))
-    val marker = new org.apache.hadoop.fs.Path(s"$path/$DeltaMarker")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(marker, true).close()
-  }
-
   /** The marker-checked two-phase write behind [[appendIndexPathFor]],
     * callable directly against an explicit path (tests drive the
     * interrupted-build recovery through this). */
@@ -458,17 +397,6 @@ object Similarity {
 
   // ------------------------------------------------------------------- PQ --
 
-  /** Squared-L2 distance from an array column to a literal centroid, as a
-    * left-to-right fold (the summation order DuckDB's list_sum shares — the
-    * oracle contract the IVF paths already prove at dim 64). */
-  private def l2ToLit(vec: Column, c: Array[Double]): Column =
-    aggregate(
-      zip_with(vec, typedLit(c.toSeq), (x, y) => {
-        val diff = x.cast("double") - y
-        diff * diff
-      }),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Product-quantization codebooks (Jégou et al., PAMI 2011): split the
     * vector into `m` subspaces and k-means EACH independently over the same
     * bounded ordered sample the IVF trainer uses — deterministic, never a
@@ -499,22 +427,6 @@ object Similarity {
     * contract). */
   def pqEncode(vec: Column, codebooks: Array[Array[Array[Double]]]): Column =
     graft.functions.GraftExpressions.pq_encode(vec, codebooks)
-
-  /** The HOF/literal form of [[pqEncode]] — one zip_with+aggregate l2 fold
-    * per sub-centroid under array_min, a ~1000-node expression tree per row.
-    * Kept as the independently-derived reference the native kernel is
-    * spec-asserted against (same IEEE fold order, same low-code tiebreak). */
-  private[graft] def pqEncodeHof(vec: Column,
-                                 codebooks: Array[Array[Array[Double]]]): Column = {
-    val subdim = codebooks(0)(0).length
-    array(codebooks.zipWithIndex.map { case (cb, s) =>
-      val sub = slice(vec, s * subdim + 1, subdim)
-      val dists = cb.zipWithIndex.map { case (c, i) =>
-        struct(l2ToLit(sub, c).as("d"), lit(i).as("c"))
-      }
-      array_min(array(dists: _*)).getField("c")
-    }: _*)
-  }
 
   /** TIE-INCLUSIVE rerank cut: the top-`rerank` candidates by (adc, id)
     * PLUS everything tied at the boundary adc value. A plain LIMIT cuts

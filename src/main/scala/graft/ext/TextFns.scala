@@ -254,15 +254,6 @@ object TextFns {
   def rollingHash(text: Column): Column =
     graft.functions.GraftExpressions.rolling_hash(text)
 
-  /** The pure column-fold formulation — value-identical (TextFnsSpec
-    * asserts), kept as the cross-checkable reference for the native
-    * expression; materializes |chars| single-char strings per row. */
-  def rollingHashFold(text: Column): Column =
-    aggregate(
-      split(text, ""),
-      lit(0L),
-      (acc, ch) => (acc * 31L + ascii(ch)) % 1000000007L)
-
   /** FULL winnowing (Schleimer et al. 2003 — the MOSS local-fingerprinting
     * algorithm): hash every k-word shingle (portable 56-bit md5 prefix, the
     * same hash family MinHash uses), slide a window of `w` consecutive
@@ -273,8 +264,8 @@ object TextFns {
     * every gram). Pure per-row array ops — zero shuffles, stays in
     * whole-stage codegen. Takes a pre-split words column. */
   def winnowedPrints(ws: Column, k: Int = 3, w: Int = 4): Column =
-    // ONE native kernel ([[graft.functions.Winnower]]): the HOF chain
-    // below is kept as its independently-derived reference (spec-asserted
+    // ONE native kernel ([[graft.functions.Winnower]]): TextFnsSpec keeps
+    // the HOF chain as its independently-derived reference (asserted
     // equal on real corpus text + adversarial vectors). coalesce: the
     // kernel's null contract matches the HOF's — a NULL words array (null
     // text) degrades to the single empty-string shingle, because concat_ws
@@ -282,28 +273,6 @@ object TextFns {
     graft.functions.GraftExpressions.winnow_prints(
       coalesce(ws, typedLit(Seq.empty[String])), k, w)
 
-  /** The HOF/literal form of [[winnowedPrints]] — the cross-checkable
-    * reference the native kernel is spec-pinned against (same shingling,
-    * same 56-bit md5-prefix hash, same window minima and distinct). */
-  private[graft] def winnowedPrintsHof(ws: Column, k: Int = 3, w: Int = 4): Column = {
-    val hashes = transform(Dedup.shinglesOfWords(ws, k),
-      g => conv(substring(md5(g), 1, 14), 16, 10).cast("long"))
-    // Bind the hash array to a LAMBDA VARIABLE before windowing: a lambda
-    // body re-evaluates every non-variable subtree per element, so slicing
-    // `hashes` directly inside the window transform would recompute the
-    // full md5 transform per window — O(grams × windows) digests per doc
-    // (measured: 59 s -> ~2 s for 1 M prints at 50 k docs). The singleton
-    // outer transform evaluates `hashes` exactly once per row.
-    element_at(transform(array(hashes), hs =>
-      array_distinct(
-        when(size(hs) <= w, array(array_min(hs)))
-          .otherwise(transform(sequence(lit(1), size(hs) - w + 1),
-            i => array_min(slice(hs, i, lit(w))))))), 1)
-  }
-
-  /** Winnowing-style shingle fingerprint: minimum shingle hash — equals the
-    * first MinHash component, so near-identical docs collide. Hot paths
-    * should pass a materialized words column via the Dedup two-step API. */
   /** Gopher-style repetition stats from a PRE-MATERIALIZED shingle array:
     * (n_shingles, n_distinct, rounded repetition ratio). Boilerplate repeats
     * shingles; prose doesn't. */
@@ -381,8 +350,12 @@ object TextFns {
       .orderBy(col(idCol), col("score").desc, col("term"))
   }
 
-  def shingleFingerprint(text: Column, k: Int = 3): Column =
-    array_min(transform(Dedup.wordShingles(text, k), s => md5(s)))
+  /** Winnowing-style shingle fingerprint: the minimum md5 over a
+    * document's k-word shingles — equals the first MinHash component, so
+    * near-identical docs collide. `words` must be a MATERIALIZED words
+    * column (see [[Dedup.shinglesOfWords]]). */
+  def shingleFingerprint(words: Column, k: Int = 3): Column =
+    array_min(transform(Dedup.shinglesOfWords(words, k), s => md5(s)))
 
   /** PII-style scrubbing patterns, written in the regex subset that means
     * the same thing in Java regex (Spark) and RE2 (DuckDB): character

@@ -118,15 +118,6 @@ object Url {
       oldDocs.select(canonicalKey(col(urlCol)).as("url_key")),
       idCol, "url_key", fpp, expectedItems)
 
-  /** Per-key dup groups: canonical keys carried by more than one document,
-    * with the keeper and the collapse count — the audit table a URL-dedup
-    * pass publishes. */
-  def urlDupGroups(docs: DataFrame, urlCol: String, idCol: String): DataFrame =
-    docs.withColumn("url_key", canonicalKey(col(urlCol)))
-      .groupBy("url_key")
-      .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") > 1)
-
   /** Domain quota: keep at most `cap` documents per registrable domain —
     * [[Sampling.sourceCapKeep]] composed over the derived domain column
     * (same salted scale route available via `salts`). `domainOf` selects
@@ -514,23 +505,6 @@ object Url {
       .select("link_key", "loc", "lastmod", "fetched_at")
   }
 
-  /** Newly discovered frontier URLs: [[outlinks]] grouped to one row per
-    * canonical link key (representative spelling = min link, discoverer =
-    * min src, in-degree = n_refs), minus every key the corpus has already
-    * fetched — [[Dedup.bloomNewKeys]] again, so the fetched-corpus side
-    * compresses to a Bloom filter and only might-contain suspects pay the
-    * exact anti-join backstop (EXACT output at any fpp). This closes the
-    * crawl loop: fetch → [[TextFns.stripHtml]] for text, [[outlinks]] for
-    * edges, this for the next fetch batch. One shuffle (the link-key
-    * groupBy); the corpus ships as a bloom + a suspects-only anti-join,
-    * never a corpus-wide exchange. */
-  def discoveredUrls(docs: DataFrame, idCol: String, urlCol: String,
-                     htmlCol: String, fpp: Double = 0.01,
-                     expectedItems: Long = -1L): DataFrame =
-    discoveredFromLinks(outlinks(docs, idCol, urlCol, htmlCol),
-      docs.select(canonicalKey(col(urlCol)).as("__fetched_key")),
-      fpp, expectedItems)
-
   /** The FULL frontier: link discovery ∪ sitemap discovery, minus the
     * fetched corpus — the composition the r14 verdict flagged as missing
     * ([[sitemapEntries]] was gate-only; sitemaps are the PRIMARY discovery
@@ -603,14 +577,16 @@ object Url {
     mat.join(newKeys.select("link_key"), Seq("link_key"), "left_semi")
   }
 
-  /** [[discoveredUrls]] over an ALREADY-MATERIALIZED [[outlinks]] table —
+  /** Newly discovered frontier URLs: [[outlinks]] grouped to one row per
+    * canonical link key (representative spelling = min link, discoverer =
+    * min src, in-degree = n_refs), minus every key the corpus has already
+    * fetched. `links` is an ALREADY-MATERIALIZED [[outlinks]] table —
     * the production form: the edge list is a pipeline product (the frontier
     * reads it, [[LinkGraph.pageRank]] iterates it, anchor/graph analyses
-    * consume it), so it is extracted once and persisted, and the lazy
-    * inline form's re-extraction (the resolve regex chain is the dominant
-    * cost, and bloomNewKeys probes its input on two branches) never
-    * re-runs. `fetchedKeys`' single column is the already-crawled canonical
-    * key set, any column name. */
+    * consume it), so it is extracted once and persisted rather than
+    * re-extracted lazily (the resolve regex chain is the dominant cost, and
+    * bloomNewKeys probes its input on two branches). `fetchedKeys`' single
+    * column is the already-crawled canonical key set, any column name. */
   def discoveredFromLinks(links: DataFrame, fetchedKeys: DataFrame,
                           fpp: Double = 0.01,
                           expectedItems: Long = -1L): DataFrame =

@@ -218,7 +218,7 @@ object Kernels {
 
 /** Full winnowing (Schleimer et al. 2003) as ONE kernel: pre-split words ->
   * distinct window-min 56-bit shingle hashes. Bit-identical to the HOF
-  * chain ([[graft.ext.TextFns.winnowedPrintsHof]], spec-asserted on real
+  * chain (TextFnsSpec's reference, asserted on real
   * corpus text + adversarial vectors): k-word shingles joined by a single
   * space with `concat_ws` null-skipping (`UTF8String.concatWs` IS the
   * engine primitive behind the SQL function), hash = first 7 digest bytes
@@ -506,8 +506,8 @@ case class PqEncoder(codebooks: Seq[Seq[Seq[Double]]], isDouble: Boolean = false
   * form (one zip_with+aggregate l2 fold per centroid under array_min) is an
   * ~nLists·dim-node interpreted expression tree per row — measured as the
   * dominant cost of the 1 M-vector index BUILDS (IVF 326 s / IVF-PQ 234 s,
-  * ANNPROBE_r09_1m). Arithmetic contract (shared with
-  * [[graft.ext.Similarity.ivfAssignHof]] and the generated DuckDB oracle):
+  * ANNPROBE_r09_1m). Arithmetic contract (shared with SimilaritySpec's HOF
+  * reference and the generated DuckDB oracle):
   * per-centroid distance is the LEFT-TO-RIGHT fold of (x−c)² in index order
   * on doubles; ties break to the LOWEST list id (strict < keeps the first).
   * The inner scan abandons a centroid as soon as its partial sum reaches

@@ -104,9 +104,6 @@ object Fns {
   def backoffSeconds(attempts: Column): Column =
     least(lit(600.0), pow(lit(2.0), attempts) * lit(5.0)).cast("long")
 
-  def backoffSecondsScala(attempts: Int): Long =
-    math.min(600.0, math.pow(2.0, attempts) * 5.0).toLong
-
   /** F16 (block retry): next-retry delay seconds = 300 * 2^min(retryCount, 5).
     * Ref: src/core/worker.js:345-352 (5 min base, capped exponent). */
   def blockRetryDelaySeconds(retryCount: Column): Column =

@@ -203,8 +203,7 @@ object Scale {
     op("curation_funnel") {
       val staged = graft.ext.Par.ensure(docs.select("doc_id", "text", "lang"))
         .withColumn("__ws", split(col("text"), " "))
-        .withColumn("fp",
-          array_min(transform(Dedup.shinglesOfWords(col("__ws"), 3), x => md5(x))))
+        .withColumn("fp", TextFns.shingleFingerprint(col("__ws")))
         .withColumn("q",
           round(TextFns.qualityScoreOfWords(col("text"), col("__ws")), 6) >= 0.5)
         .withColumn("smp", Sampling.hashPct(col("doc_id")) < 60)

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -138,20 +138,11 @@ object FinalHintResolution extends Rule[LogicalPlan] {
   }
 }
 
-/** Session-extension registration: `SparkSession.builder()
-  * .withExtensions(new GraftExtensions)` or
+/** Session-extension registration, installed by [[graft.Session]] through
   * `spark.sql.extensions=graft.plans.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => HeightBucketPruning)
     e.injectResolutionRule(_ => FinalHintResolution)
   }
-}
-
-object GraftExtensions {
-  /** Install into an already-running session (tests, REPL). */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(HeightBucketPruning))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ HeightBucketPruning
 }

@@ -856,7 +856,7 @@ object ExtQueries {
       LinkGraph.domainRank(fixtureLinks(s, d)).write.parquet(out)
     })
 
-  /** DuckDB twin of [[LinkGraph.urlRank]] (3 iterations, damping 850/1000,
+  /** DuckDB twin of [[LinkGraph.pageRank]] (3 iterations, damping 850/1000,
     * scale 1e6) over the [[OutlinksCte]] fixture graph: the iteration is
     * UNROLLED (r0 → c1/r1 → c2/r2 → c3/r3) because the engine's loop is a
     * fixed count, and every quantity is integer (the operator's whole
@@ -1056,6 +1056,11 @@ object ExtQueries {
       s"CASE WHEN $lastTwo <> '' THEN $lastTwo END, $host)"
   }
 
+  /** The x_url_blocklist list: registrable domains of the
+    * [[Fixtures.attachUrls]] rotation. */
+  private val BlockedDomains: Seq[String] =
+    Seq("example.com", "src0-0.co.uk", "src1-1.com", "src2-2.org", "never.example")
+
   val inventory: Seq[(String, Q, Option[String])] = Seq(
 
     // --------------------------------------------------------------- url --
@@ -1102,6 +1107,22 @@ object ExtQueries {
         "SELECT doc_id, domain FROM (SELECT doc_id, domain, row_number() OVER " +
         "(PARTITION BY domain ORDER BY doc_id) AS rn FROM dom) " +
         "WHERE rn <= 25 ORDER BY doc_id")),
+
+    ("x_url_blocklist", // domain blocklist (RefinedWeb §3.1 URL filter):
+      // drop every document whose registrable domain is listed. One
+      // broadcast LEFT ANTI join against the list, the domain chain computed
+      // once in a Project; zero exchanges on the corpus side. The list
+      // covers a shared parent domain (every *.example.com host), a ccSLD
+      // domain, two plain ones and an entry no document carries.
+      (s: SparkSession, d: String) =>
+        Url.blocklistFilter(
+            Fixtures.attachUrls(t(s, d, "documents"), "doc_id", "source"),
+            "url", BlockedDomains)
+          .select("doc_id", "url").orderBy("doc_id"),
+      Some(s"$UrlCte SELECT doc_id, url FROM k WHERE " +
+        s"${urlDomainSql(urlHostSql("key"))} NOT IN " +
+        BlockedDomains.map(b => s"'$b'").mkString("(", ", ", ")") +
+        " ORDER BY doc_id")),
 
     ("x_url_domain_psl", // public-suffix-list registrable domain (VERDICT
       // r11 item 1): the exact-policy upgrade over the ccSLD regex — hosts
@@ -1212,8 +1233,7 @@ object ExtQueries {
       // partitioning AND across engines (a float PageRank could never
       // hash-gate). Two shuffles per iteration (contribution join on src,
       // fold on dst); nothing collected. Iterates the materialized edge
-      // list (production route, r13 item 8) — [[LinkGraph.urlRank]] keeps
-      // the inline composition for ad-hoc use.
+      // list (production route, r13 item 8).
       (s: SparkSession, d: String) =>
         LinkGraph.pageRank(fixtureLinks(s, d), "src_key", "link_key",
             iterations = 3)
@@ -2813,8 +2833,7 @@ object ExtQueries {
       (s: SparkSession, d: String) =>
         graft.ext.Par.ensure(t(s, d, "documents").select("doc_id", "text"))
           .select(col("doc_id"), split(col("text"), " ").as("__ws"))
-          .select(col("doc_id"),
-            array_min(transform(Dedup.shinglesOfWords(col("__ws"), 3), x => md5(x))).as("fp"))
+          .select(col("doc_id"), TextFns.shingleFingerprint(col("__ws")).as("fp"))
           .orderBy("doc_id"),
       Some(s"$ShingleCte SELECT doc_id, min(md5(s)) AS fp FROM u GROUP BY doc_id ORDER BY doc_id")),
 
@@ -2840,8 +2859,7 @@ object ExtQueries {
       // function (compiled kernel + per-task word memo, whole-stage
       // codegen, no UDF) — one corpus scan, zero shuffles. Gate checks the
       // md5 of the full token stream, so any per-word divergence fails
-      // loudly. The pure-Catalyst fold (tokenizeBulk) and broadcast
-      // big-vocab (tokenizeBulkBig) forms are spec-asserted token-equal.
+      // loudly. BpeSpec asserts it token-equal to a pure-Catalyst fold.
       (s: SparkSession, d: String) =>
         graft.ext.Bpe.tokenizeBulkNative(t(s, d, "documents"), "doc_id", "text",
             graft.ext.Bpe.DemoMerges)
@@ -3170,9 +3188,7 @@ object ExtQueries {
     ("x_source_overlap", // cross-source NEAR-dup overlap matrix: J >= 0.2
       // pairs (the lossless prefix join) per unordered source pair — the
       // "how much of A duplicates B" table behind mix/decontamination
-      // decisions. (The exact-fingerprint variant, sourceOverlapMatrix, is
-      // spec-tested: this corpus has zero verbatim dups, so its gate query
-      // would be a vacuous 0-row check.) Oracle: DIRECT all-pairs Jaccard
+      // decisions. Oracle: DIRECT all-pairs Jaccard
       // on the capped token universe — slower but independently derived.
       (s: SparkSession, d: String) => {
         val docs = t(s, d, "documents")
@@ -3216,8 +3232,6 @@ object ExtQueries {
       // x_token_quantiles' histogram shrink can't serve). Spark `percentile`
       // and DuckDB quantile_cont interpolate identically (verified
       // bit-for-bit incl. the .99 point); rounded to 6 for belt and braces.
-      // Scale path: Sampling.valueQuantilesApprox (mergeable sketch),
-      // rank-error-bounded against this exact form in SamplingSpec.
       (s: SparkSession, d: String) =>
         Sampling.valueQuantiles(t(s, d, "events"), "value",
           Seq(0.25, 0.5, 0.9, 0.99)).orderBy("q"),
@@ -3419,8 +3433,7 @@ object ExtQueries {
         val staged = graft.ext.Par.ensure(
             t(s, d, "documents").select("doc_id", "text", "lang"))
           .withColumn("__ws", split(col("text"), " "))
-          .withColumn("fp",
-            array_min(transform(Dedup.shinglesOfWords(col("__ws"), 3), x => md5(x))))
+          .withColumn("fp", TextFns.shingleFingerprint(col("__ws")))
           .withColumn("q",
             round(TextFns.qualityScoreOfWords(col("text"), col("__ws")), 6) >= 0.5)
           .withColumn("l", col("lang").isin("en", "es", "fr"))

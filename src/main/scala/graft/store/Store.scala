@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window}
 import org.apache.spark.sql.functions._
@@ -60,12 +60,6 @@ object Store {
   def upsert(existing: DataFrame, incoming: DataFrame, keys: Seq[String],
              versionCol: String, tieBreak: Seq[String] = Nil): DataFrame =
     latest(existing.unionByName(incoming), keys, versionCol, tieBreak)
-
-  /** Async `ALTER TABLE ... DELETE` analogue (ref clickhouse_queries.js:13-30):
-    * a view filtering out matching rows. Null predicate rows are KEPT (SQL
-    * DELETE only removes rows where the predicate is true). */
-  def deleteWhere(df: DataFrame, predicate: Column): DataFrame =
-    df.filter(!coalesce(predicate, lit(false)))
 
   /** S6/S10 — partitioned, sorted Parquet append. `partitionCols` gives
     * directory pruning (the reference's intDiv(height,1e5) / toYYYYMM
@@ -143,22 +137,6 @@ object Store {
     if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(table, name)))
       throw new java.io.IOException(s"appendRows: cannot publish $tmp")
     name
-  }
-
-  /** Bucketed managed table: rows are hash-distributed into `nBuckets`
-    * files per partition by `bucketCol` AT WRITE TIME, so two tables
-    * bucketed the same way equi-join on that column with NO exchange — the
-    * scan is bucket-aware and each task joins matching buckets in place.
-    * This is the co-location story for repeated large-⋈-large joins at
-    * 100 TB (the reference gets the same effect from ClickHouse
-    * sharding-key-local joins); broadcast stays the right tool for dims.
-    * `sortCols` orders within buckets so the merge join skips its sort. */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    nBuckets: Int, sortCols: Seq[String] = Nil): Unit = {
-    var w = df.write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, bucketCol)
-    if (sortCols.nonEmpty) w = w.sortBy(sortCols.head, sortCols.tail: _*)
-    w.saveAsTable(table)
   }
 
   /** Bloom-indexed columns per table, mirroring the reference's skip

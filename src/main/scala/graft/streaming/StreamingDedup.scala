@@ -3,25 +3,22 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming deduplication for document ingest (LLM-pipeline extension):
   * exact dedup on the content hash as documents arrive, instead of a
   * periodic batch pass over everything ingested so far.
   *
-  * Scale stance: both forms keep state PER DISTINCT CONTENT HASH, bounded by
-  * the watermark/TTL horizon — never proportional to total documents seen.
+  * Scale stance: state is kept PER DISTINCT CONTENT HASH, bounded by the
+  * watermark/TTL horizon — never proportional to total documents seen.
   * At 100 TB the state store holds one 16-byte hash + a few longs per
   * distinct recent document, sharded by Spark's state-store partitioning on
   * the group key (the same hash-shuffle a batch groupBy would use).
   *
-  *  - [[exactWithinWatermark]]: the built-in `dropDuplicatesWithinWatermark`
-  *    — right default when "suppress duplicates" is all that's needed.
-  *  - [[firstSeenWins]]: `flatMapGroupsWithState` with event-time timeout —
-  *    the custom-state form for per-key bookkeeping: every document is
-  *    EMITTED (annotated first/dup + running dup ordinal), not silently
-  *    dropped, so downstream can filter, count, or route dups differently.
+  * [[firstSeenWins]]: `flatMapGroupsWithState` with event-time timeout —
+  * per-key bookkeeping: every document is EMITTED (annotated first/dup +
+  * running dup ordinal), not silently dropped, so downstream can filter,
+  * count, or route dups differently.
   */
 object StreamingDedup {
 
@@ -35,15 +32,6 @@ object StreamingDedup {
     * occurrence, then 1, 2, … for subsequent duplicates of the same hash. */
   final case class Deduped(doc_id: Long, content_hash: String,
                            is_first: Boolean, dup_ordinal: Long)
-
-  /** Built-in bounded-state dedup: drop any row whose content hash was
-    * already seen within the watermark horizon. */
-  def exactWithinWatermark(docs: DataFrame, textCol: String,
-                           timeCol: String, lateness: String): DataFrame =
-    docs
-      .withColumn("content_hash", md5(col(textCol)))
-      .withWatermark(timeCol, lateness)
-      .dropDuplicatesWithinWatermark("content_hash")
 
   /** First-seen-wins with explicit state: group by content hash, remember
     * the first doc_id, annotate every arrival. State for a hash expires

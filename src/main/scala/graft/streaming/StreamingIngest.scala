@@ -17,25 +17,6 @@ import graft.schema.Schemas
   */
 object StreamingIngest {
 
-  /** Event-time windowed block-rate aggregation with a watermark: counts
-    * blocks and txs per tumbling window of block time, tolerating
-    * `lateness` of out-of-order arrival (the streaming analogue of the
-    * reference's BACKFILL_WINDOW forward-priority rule). Append mode: a
-    * window emits once its watermark passes — exactly-once per window. */
-  def windowedBlockStats(spark: SparkSession, inputDir: String,
-                         window: String = "1 minute",
-                         lateness: String = "10 minutes"): DataFrame = {
-    import org.apache.spark.sql.functions.{window => windowFn}
-    val env = spark.readStream.schema(Schemas.envelope).json(inputDir)
-    env
-      .withColumn("block_time", col("time").cast("timestamp"))
-      .withWatermark("block_time", lateness)
-      .groupBy(windowFn(col("block_time"), window))
-      .agg(
-        count(lit(1)).as("blocks"),
-        coalesce(sum(size(col("txs"))), lit(0L)).as("txs"))
-  }
-
   /** Exactly-once ingest stream: every micro-batch writes through
     * `Ingest.write` keyed by its batch id, so a batch REDELIVERED after a
     * failure (foreachBatch's at-least-once contract: crash after a partial

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.ext.Dedup
 
@@ -12,6 +13,51 @@ class DedupSpec extends SparkTestBase {
     (2L, "the quick brown fox jumps over the lazy dog near the river bank yesterday"), // near dup
     (3L, "completely different text about spark query engines and columnar formats here"),
     (4L, "short doc")).toDF("doc_id", "text")
+
+  /** Inline form: derives the old band table from the old text and delegates
+    * to `Dedup.incrementalNearDupsFromBands`. Correctness-equivalent; prod and
+    * the bench use the band-store form — re-LSHing the corpus per refresh is
+    * exactly what the store exists to avoid. */
+  private def incrementalNearDups(newDf: DataFrame, oldDf: DataFrame,
+                                  textCol: String, idCol: String,
+                                  numHashes: Int = 8, bandSize: Int = 2,
+                                  shingleK: Int = 3, threshold: Double = 0.7,
+                                  maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame = {
+    val oldBands = Dedup.lshBands(
+      Dedup.minhashSig(oldDf, textCol, idCol, numHashes, shingleK),
+      idCol, numHashes, bandSize)
+    Dedup.incrementalNearDupsFromBands(newDf, oldBands, oldDf, textCol, idCol,
+      numHashes, bandSize, shingleK, threshold, maxBucket = maxBucket)
+  }
+
+  /** 16-bit SimHash from a PRE-MATERIALIZED array of md5(word) hex strings,
+    * in ONE pass: each word's 16 "hex digit p >= 8" flags collapse to a
+    * 16-bit mask (one translate + one base-2 parse per word), and a single
+    * `aggregate` folds all 16 vote counters at once — 16 bitmask tests per
+    * word instead of 16 positional array passes, an order of magnitude less
+    * array traffic than the per-bit formulation. Bit p of the result is the
+    * majority vote of the top bit of hex digit p, weighted ±1 per token;
+    * ties (vote == 0, incl. the empty array) set the bit. Bit-identical to
+    * the per-bit original (DedupSpec asserts known vectors). */
+  private def simhash16FromHashes(wordHashes: Column): Column = {
+    // digit p of the hash maps to mask bit (16 - p): substring position 1
+    // is the most significant binary digit of the conv() parse
+    val masks = transform(wordHashes, h =>
+      conv(translate(substring(h, 1, 16),
+        "0123456789abcdef", "0000000011111111"), 2, 10).cast("long"))
+    val packed = aggregate(
+      masks,
+      array((1 to 16).map(_ => lit(0)): _*),
+      (acc, m) => array((1 to 16).map { p =>
+        element_at(acc, p) +
+          when(m.bitwiseAND(lit(1L << (16 - p))) =!= lit(0L), lit(1)).otherwise(lit(-1))
+      }: _*),
+      acc => (1 to 16).map { p =>
+        when(element_at(acc, p) >= 0, lit(1L << (p - 1))).otherwise(lit(0L))
+      }.reduce(_ + _))
+    // null input folded to 0, matching the per-bit form (null vote -> bit 0)
+    coalesce(packed, lit(0L))
+  }
 
   test("exact dedup: dup group found, smallest id kept") {
     val got = Dedup.exactDedup(docs, "text", "doc_id").collect()
@@ -377,11 +423,6 @@ class DedupSpec extends SparkTestBase {
       (3L, "boiler plate text", "A"), (4L, "boiler plate text", "B"),
       (5L, "boiler plate text", "B"), (6L, "uniq one", "A"),
       (7L, "uniq two", "B")).toDF("doc_id", "text", "source")
-    val m = Dedup.sourceOverlapMatrix(hand, "text", "doc_id", "source")
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    // C(3,2)=3 within A, C(2,2)=1 within B, 3*2=6 across
-    assert(m === Map(("A", "A") -> 3L, ("A", "B") -> 6L, ("B", "B") -> 1L))
-
     // pairs-based matrix: feed an explicit pair list, check normalization
     val pairs = Seq((1L, 4L), (4L, 2L), (6L, 7L), (1L, 2L))
       .toDF("a_id", "b_id")
@@ -481,7 +522,7 @@ class DedupSpec extends SparkTestBase {
     val docs = graft.queries.Td.t(spark, sf0001, "documents")
     val full = Dedup.nearDupPairs(docs, "text", "doc_id", threshold = 0.2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val incr = Dedup.incrementalNearDups(
+    val incr = incrementalNearDups(
         docs.filter(col("doc_id") >= 250), docs.filter(col("doc_id") < 250),
         "text", "doc_id", threshold = 0.2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -534,14 +575,14 @@ class DedupSpec extends SparkTestBase {
       when(vote >= 0, lit(1L << (p - 1))).otherwise(lit(0L))
     }.reduce(_ + _)
     val mismatches = docs
-      .select(Dedup.simhash16FromHashes(wh).as("a"), perBit.as("b"))
+      .select(simhash16FromHashes(wh).as("a"), perBit.as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(mismatches === 0L)
     // native kernel == the fold form on every corpus doc (+ empty-array tie
     // behavior: all 16 votes tie at 0 -> every bit set)
     val nativeMismatch = docs
       .select(Dedup.simhash16(split(col("text"), " ")).as("a"),
-        Dedup.simhash16FromHashes(wh).as("b"))
+        simhash16FromHashes(wh).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(nativeMismatch === 0L)
     val empty = Seq(Seq.empty[String]).toDF("ws")
@@ -569,7 +610,7 @@ class DedupSpec extends SparkTestBase {
       "text", "doc_id", threshold = 0.2, materializeCands = false)
     assert(visible.inputFiles.exists(_.contains(storePath)),
       s"band store $storePath not in ${visible.inputFiles.take(5).mkString(",")}")
-    val inline = Dedup.incrementalNearDups(
+    val inline = incrementalNearDups(
       docs.filter(col("doc_id") >= 250), docs.filter(col("doc_id") < 250),
       "text", "doc_id", threshold = 0.2)
     def key(df: org.apache.spark.sql.DataFrame) =
@@ -644,7 +685,7 @@ class DedupSpec extends SparkTestBase {
     val fromStore = Dedup.incrementalNearDupsFromBands(
       docs.filter(col("doc_id") >= 250), store, docs.filter(col("doc_id") < 250),
       "text", "doc_id", threshold = 0.2)
-    val inline = Dedup.incrementalNearDups(
+    val inline = incrementalNearDups(
       docs.filter(col("doc_id") >= 250), docs.filter(col("doc_id") < 250),
       "text", "doc_id", threshold = 0.2)
     def key(df: org.apache.spark.sql.DataFrame) =
@@ -684,7 +725,7 @@ class DedupSpec extends SparkTestBase {
 
   test("wordShingles: k-grams with short-text fallback") {
     val got = Seq("a b c d", "a b").toDF("t")
-      .select(Dedup.wordShingles(col("t"), 3)).collect()
+      .select(Dedup.shinglesOfWords(split(col("t"), " "), 3)).collect()
       .map(_.getSeq[String](0).toSeq)
     assert(got(0) === Seq("a b c", "b c d"))
     assert(got(1) === Seq("a b"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.ext.{Dsir, TextFns}
 
@@ -11,6 +12,37 @@ class DsirSpec extends SparkTestBase {
     rows.toDF("doc_id", "text", "lang")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
+  }
+
+  /** Unigram + adjacent-bigram feature array of a text column. NULL text
+    * features as the empty string's singleton (both engines split "" to
+    * [""]), so null documents score identically across engines. */
+  private def featuresCol(textCol: Column): Column = {
+    val ws = split(coalesce(textCol, lit("")), " ")
+    val bgs = when(size(ws) >= 2,
+      transform(sequence(lit(1), size(ws) - 1), i =>
+        concat(element_at(ws, i), lit(" "), element_at(ws, i + 1))))
+      .otherwise(array().cast("array<string>"))
+    concat(ws, bgs)
+  }
+
+  /** The declarative HOF-fold form of `Dsir.importanceWeights` — the
+    * independently-derived reference the native kernel is asserted against. */
+  private def importanceWeightsFold(docs: DataFrame, textCol: String,
+                                    idCol: String,
+                                    model: Dsir.DsirModel): DataFrame = {
+    val feats = featuresCol(col(textCol))
+    val wLit = typedLit(model.weightsMilli)
+    val score = aggregate(
+      transform(feats, tok =>
+        element_at(wLit,
+          (conv(substring(md5(tok), 1, 4), 16, 10).cast("long") % model.dim)
+            .cast("int") + 1)),
+      lit(0L), (acc, v) => acc + v)
+    docs.select(col(idCol),
+        size(feats).cast("long").as("n_feats"),
+        score.as("w_milli"))
+      .withColumn("keep", (col("w_milli") >= 0L).cast("int"))
   }
 
   test("DSIR: column fold equals an independent driver-side fold; target docs outscore off-target") {
@@ -60,7 +92,7 @@ class DsirSpec extends SparkTestBase {
     val kernel = Dsir.importanceWeights(docs, "text", "doc_id", m)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
-    val fold = Dsir.importanceWeightsFold(docs, "text", "doc_id", m)
+    val fold = importanceWeightsFold(docs, "text", "doc_id", m)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
     assert(kernel.toSeq === fold.toSeq)

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.GraftExpressions
-import graft.plans.GraftExtensions
 import graft.store.Store
 
 /** Native expressions + the height→bucket pruning rule. */
@@ -32,7 +31,6 @@ class ExtensionsSpec extends SparkTestBase {
   }
 
   test("HeightBucketPruning: height filter derives partition filters on the scan") {
-    GraftExtensions.install(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_prune").toString
     val df = (0L until 500000L by 1000L).toDF("height")
       .withColumn("payload", col("height") * 2)
@@ -55,7 +53,6 @@ class ExtensionsSpec extends SparkTestBase {
   }
 
   test("HeightBucketPruning: no-op when bucket predicate already present or no literal") {
-    GraftExtensions.install(spark)
     val df = Seq((1L, 0L), (200000L, 2L)).toDF("height", "height_bucket")
     // already has bucket predicate -> unchanged result, no duplicate derivation
     val q1 = df.filter(col("height") >= 1L && col("height_bucket") === 0L)

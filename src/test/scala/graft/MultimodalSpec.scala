@@ -204,7 +204,7 @@ class MultimodalSpec extends SparkTestBase {
   }
 
   test("resizeMeta clamps dimensions, keeps format") {
-    val got = Multimodal.resizeMeta(media, 20, 20).select("meta.*").collect()
+    val got = Multimodal.resizeMedia(media, 20, 20).select("meta.*").collect()
     assert(got.forall(r => r.getAs[Int]("width") <= 20 && r.getAs[Int]("height") <= 20))
     assert(got.map(_.getAs[String]("format")).toSet === Set("png", "wav"))
   }

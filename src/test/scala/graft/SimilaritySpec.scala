@@ -1,11 +1,77 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.ext.Similarity
 import graft.queries.Td
 
 class SimilaritySpec extends SparkTestBase {
   import spark.implicits._
+
+  /** The HOF formulation — the cross-checkable reference for
+    * `Similarity.cosine`. */
+  private def cosineHof(a: Column, b: Column): Column =
+    Similarity.dot(a, b) / (norm(a) * norm(b))
+
+  private def norm(a: Column): Column = sqrt(Similarity.dot(a, a))
+
+  /** Brute-force cosine top-k neighbors of `queryVec` (a one-row DataFrame
+    * with column `qv`). The broadcast + TakeOrdered plan is the right shape
+    * at any scale: no shuffle of the big side. */
+  private def bruteForceTopK(em: DataFrame, idCol: String, vecCol: String,
+                             queryVec: DataFrame, k: Int): DataFrame =
+    em.crossJoin(broadcast(queryVec))
+      .withColumn("cos", Similarity.cosine(col(vecCol), col("qv")))
+      .select(col(idCol), col("cos"))
+      .orderBy(col("cos").desc, col(idCol))
+      .limit(k)
+
+  /** The HOF/literal form of `Similarity.ivfAssign` — one
+    * zip_with+aggregate l2 fold per centroid under a struct array_min (ties
+    * to the lowest list id).
+    * Kept as the spec reference for the native kernel (same IEEE
+    * left-to-right fold order, same low-id tiebreak). */
+  private def ivfAssignHof(vec: Column,
+                           centroids: Array[Array[Double]]): Column = {
+    val dists = centroids.zipWithIndex.map { case (c, i) =>
+      val d = aggregate(
+        zip_with(vec, typedLit(c.toSeq), (x, y) => {
+          val diff = x.cast("double") - y
+          diff * diff
+        }),
+        lit(0.0), (acc, v) => acc + v)
+      struct(d.as("d"), lit(i).as("list"))
+    }
+    array_min(array(dists: _*)).getField("list")
+  }
+
+  /** Squared-L2 distance from an array column to a literal centroid, as a
+    * left-to-right fold (the summation order DuckDB's list_sum shares — the
+    * oracle contract the IVF paths already prove at dim 64). */
+  private def l2ToLit(vec: Column, c: Array[Double]): Column =
+    aggregate(
+      zip_with(vec, typedLit(c.toSeq), (x, y) => {
+        val diff = x.cast("double") - y
+        diff * diff
+      }),
+      lit(0.0), (acc, v) => acc + v)
+
+  /** The HOF/literal form of `Similarity.pqEncode` — one
+    * zip_with+aggregate l2 fold per sub-centroid under array_min, a
+    * ~1000-node expression tree per row.
+    * Kept as the independently-derived reference the native kernel is
+    * spec-asserted against (same IEEE fold order, same low-code tiebreak). */
+  private def pqEncodeHof(vec: Column,
+                          codebooks: Array[Array[Array[Double]]]): Column = {
+    val subdim = codebooks(0)(0).length
+    array(codebooks.zipWithIndex.map { case (cb, s) =>
+      val sub = slice(vec, s * subdim + 1, subdim)
+      val dists = cb.zipWithIndex.map { case (c, i) =>
+        struct(l2ToLit(sub, c).as("d"), lit(i).as("c"))
+      }
+      array_min(array(dists: _*)).getField("c")
+    }: _*)
+  }
 
   test("cosine: self=1, orthogonal=0, opposite=-1") {
     val df = Seq(
@@ -23,7 +89,7 @@ class SimilaritySpec extends SparkTestBase {
       (1L, Seq(1f, 0f, 0f)), (2L, Seq(0.9f, 0.1f, 0f)),
       (3L, Seq(0f, 1f, 0f)), (4L, Seq(-1f, 0f, 0f))).toDF("vec_id", "embedding")
     val q = Seq(Tuple1(Seq(1f, 0f, 0f))).toDF("qv")
-    val got = Similarity.bruteForceTopK(em, "vec_id", "embedding", q, 2)
+    val got = bruteForceTopK(em, "vec_id", "embedding", q, 2)
       .collect().map(_.getLong(0))
     assert(got.toSeq === Seq(1L, 2L))
   }
@@ -31,7 +97,7 @@ class SimilaritySpec extends SparkTestBase {
   test("ANN via sign-LSH: query's own bucket contains it; recall vs brute force") {
     val em = Td.t(spark, sf0001, "embeddings")
     val q = em.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    val brute = Similarity.bruteForceTopK(
+    val brute = bruteForceTopK(
       em.filter(col("vec_id") =!= 0), "vec_id", "embedding", q, 10)
       .collect().map(_.getLong(0)).toSet
     val ann = Similarity.annTopK(
@@ -47,10 +113,12 @@ class SimilaritySpec extends SparkTestBase {
   test("IVF: trained centroids route the query to lists containing true neighbors") {
     val em = Td.t(spark, sf0001, "embeddings")
     val q = em.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    val centroids = Similarity.ivfTrain(em, "embedding", nLists = 4)
+    val vecs = em.orderBy("vec_id").select("embedding").collect()
+      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
+    val centroids = Similarity.kmeansLocal(vecs, 4, 10)
     assert(centroids.length === 4)
     assert(centroids.forall(_.length === 64))
-    val brute = Similarity.bruteForceTopK(
+    val brute = bruteForceTopK(
       em.filter(col("vec_id") =!= 0), "vec_id", "embedding", q, 10)
       .collect().map(_.getLong(0)).toSet
     val ivf = Similarity.ivfTopK(
@@ -59,9 +127,6 @@ class SimilaritySpec extends SparkTestBase {
       .collect().map(_.getLong(0)).toSet
     assert(ivf.nonEmpty)
     assert((ivf intersect brute).size >= 3) // 2 of 4 lists probed
-    // determinism: same seed -> same centroids -> same result
-    val centroids2 = Similarity.ivfTrain(em, "embedding", nLists = 4)
-    assert(centroids.map(_.toSeq).toSeq === centroids2.map(_.toSeq).toSeq)
   }
 
   test("centroidsFor: deterministic artifact, cached across calls; kmeansLocal converges") {
@@ -136,7 +201,7 @@ class SimilaritySpec extends SparkTestBase {
     val body = em.filter(col("vec_id") =!= 0)
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.getLong(0)).toSet
-    val truth = ids(Similarity.bruteForceTopK(body, "vec_id", "embedding", q, 10))
+    val truth = ids(bruteForceTopK(body, "vec_id", "embedding", q, 10))
     val single = ids(Similarity.annTopK(body, "vec_id", "embedding", q, 10, nPlanes = 8, dim = 64))
     val multi = ids(Similarity.annTopKMultiProbe(body, "vec_id", "embedding", q, 10, nPlanes = 8, dim = 64))
     assert((multi & truth).size >= (single & truth).size)
@@ -243,44 +308,6 @@ class SimilaritySpec extends SparkTestBase {
     assert(got === want)
   }
 
-  test("ivfCompactIndex: fewer files, same content, double-append repaired, marker survives") {
-    val em = graft.queries.Td.t(spark, sf0001, "embeddings")
-      .filter(col("vec_id") =!= 0)
-    val cents = Similarity.centroidsFor(spark, sf0001)
-    val isDelta = pmod(col("vec_id"), lit(5)) === 4
-    val base = em.filter(!isDelta)
-    val delta = em.filter(isDelta)
-    val path = java.nio.file.Files.createTempDirectory("graft_cmpidx_t").toString
-    Similarity.buildAppendIndex(spark, base, delta, "vec_id", "embedding",
-      cents, path)
-    // simulate an at-least-once redelivery: the same delta appended twice
-    Similarity.ivfAppendIndex(delta, "vec_id", "embedding", cents, path)
-    def files(): Int = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(path)).count(_.getName.endsWith(".parquet"))
-    }
-    val before = files()
-    Similarity.ivfCompactIndex(spark, path)
-    assert(files() < before, s"compaction must shrink the file count ($before)")
-    // content: back to exactly one row per id, per-list counts equal direct
-    // assignment (the doubled delta collapsed)
-    val got = Similarity.ivfIndexStats(spark, path)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val want = em
-      .withColumn("list", Similarity.ivfAssign(col("embedding"), cents))
-      .groupBy("list").count()
-      .collect()
-      .map(r => (r.getAs[Number]("list").longValue, r.getLong(1))).toMap
-    assert(got === want)
-    // marker survives the swap: re-entering the build must be a no-op
-    Similarity.buildAppendIndex(spark, base, delta, "vec_id", "embedding",
-      cents, path)
-    val total = Similarity.ivfIndexStats(spark, path)
-      .agg(sum("n")).head.getLong(0)
-    assert(total === em.count())
-  }
-
   test("buildAppendIndex: half-built dir (base written, no delta marker) is wiped and rebuilt; marker makes re-entry a no-op") {
     val em = graft.queries.Td.t(spark, sf0001, "embeddings")
       .filter(col("vec_id") =!= 0)
@@ -313,7 +340,7 @@ class SimilaritySpec extends SparkTestBase {
     val both = em.crossJoin(org.apache.spark.sql.functions.broadcast(q))
       .select(
         Similarity.cosine(col("embedding"), col("qv")).as("native"),
-        Similarity.cosineHof(col("embedding"), col("qv")).as("hof"))
+        cosineHof(col("embedding"), col("qv")).as("hof"))
     assert(both.filter(
       !(col("native") === col("hof")) &&
         !(org.apache.spark.sql.functions.isnan(col("native")) &&
@@ -335,7 +362,7 @@ class SimilaritySpec extends SparkTestBase {
     // THROWS DIVIDE_BY_ZERO (the native loop is total)
     val mm = Seq((Array(1f, 2f), Array(1f, 2f, 3f))).toDF("a", "b")
       .select(Similarity.cosine(col("a"), col("b")).as("n"),
-        Similarity.cosineHof(col("a"), col("b")).as("h")).collect()(0)
+        cosineHof(col("a"), col("b")).as("h")).collect()(0)
     assert(mm.isNullAt(0) && mm.isNullAt(1))
     val edge = Seq(
       (Array(0f), Array(0f)),                         // zero norm
@@ -344,7 +371,7 @@ class SimilaritySpec extends SparkTestBase {
     val nEdge = edge.select(Similarity.cosine(col("a"), col("b"))).collect()
     assert(nEdge.forall(_.isNullAt(0)))
     intercept[Exception] { // ANSI divide-by-zero: the fold was partial here
-      edge.select(Similarity.cosineHof(col("a"), col("b"))).collect()
+      edge.select(cosineHof(col("a"), col("b"))).collect()
     }
     // a degenerate embedding must NOT win a desc top-k or pass a threshold
     val ranked = Seq((1L, Array(1f, 0f)), (2L, Array(0f, 0f)))
@@ -392,7 +419,7 @@ class SimilaritySpec extends SparkTestBase {
     assert(codes.forall(c => c.length == 8 && c.forall(x => x >= 0 && x < 16)))
     // native kernel == the independently-derived HOF/literal form, every
     // vector (same IEEE fold order + low-code tiebreak)
-    val hof = em.select(Similarity.pqEncodeHof(col("embedding"), cbs).as("c"))
+    val hof = em.select(pqEncodeHof(col("embedding"), cbs).as("c"))
       .collect().map(_.getSeq[Int](0))
     assert(codes.toSeq === hof.toSeq)
     // every (vector, subspace) lands in exactly one histogram cell
@@ -403,7 +430,7 @@ class SimilaritySpec extends SparkTestBase {
     // re-rank must reproduce brute force bit-for-bit — the lossless anchor
     val q = em.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     val rest = em.filter(col("vec_id") =!= 0)
-    val brute = Similarity.bruteForceTopK(rest, "vec_id", "embedding", q, 10)
+    val brute = bruteForceTopK(rest, "vec_id", "embedding", q, 10)
       .withColumn("cos", org.apache.spark.sql.functions.round(col("cos"), 6))
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     val full = Similarity.pqTopKAdc(rest, "vec_id", "embedding", q, 10, cbs,
@@ -421,7 +448,7 @@ class SimilaritySpec extends SparkTestBase {
       .select(Similarity.ivfAssign(col("embedding"), cents).as("l"))
       .collect().map(_.getInt(0))
     val hof = em.orderBy("vec_id")
-      .select(Similarity.ivfAssignHof(col("embedding"), cents).as("l"))
+      .select(ivfAssignHof(col("embedding"), cents).as("l"))
       .collect().map(_.getInt(0))
     assert(native.toSeq === hof.toSeq)
     // null contract: short, OVERSIZED, and null vectors all assign to null —
@@ -443,7 +470,7 @@ class SimilaritySpec extends SparkTestBase {
     val em = Td.t(spark, sf0001, "embeddings")
     val q = em.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     val rest = em.filter(col("vec_id") =!= 0)
-    val brute = Similarity.bruteForceTopK(rest, "vec_id", "embedding", q, 10)
+    val brute = bruteForceTopK(rest, "vec_id", "embedding", q, 10)
       .collect().map(_.getLong(0)).toSet
     val pq = Similarity.pqTopKAdc(rest, "vec_id", "embedding", q, 10, cbs,
       rerank = 50).collect().map(_.getLong(0)).toSet
@@ -631,7 +658,7 @@ class SimilaritySpec extends SparkTestBase {
     val q = em.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     val corpus = em.filter(col("vec_id") =!= 0)
     val n = corpus.count().toInt
-    val exact = Similarity.bruteForceTopK(corpus, "vec_id", "embedding", q, 10)
+    val exact = bruteForceTopK(corpus, "vec_id", "embedding", q, 10)
       .withColumn("cos", round(col("cos"), 6))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val full = Similarity.sq8TopK(corpus, "vec_id", "embedding", q, 10, rerank = n)

@@ -1,47 +1,7 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import graft.plans.Skew
-
 class SkewSpec extends SparkTestBase {
   import spark.implicits._
-
-  private lazy val skewed = (Seq.fill(1000)((1L, 1.0)) ++ Seq((2L, 5.0), (3L, 7.0)))
-    .toDF("k", "v")
-  private lazy val dim = Seq((1L, "hot"), (2L, "warm"), (3L, "cold")).toDF("k", "name")
-
-  test("saltedJoin: same result as plain join, key spread over salts") {
-    val plain = skewed.join(dim, Seq("k")).groupBy("name").count()
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    val salted = Skew.saltedJoin(skewed, dim, Seq("k"), saltFactor = 8)
-      .groupBy("name").count()
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    assert(salted === plain)
-    assert(salted("hot") === 1000L)
-    // the hot key's rows really do carry multiple salt values
-    val salts = skewed.repartition(4).withColumn("__salt",
-      pmod(monotonically_increasing_id(), lit(8L)).cast("int"))
-      .filter(col("k") === 1L).select("__salt").distinct().count()
-    assert(salts > 1)
-  }
-
-  test("saltedJoin: left join keeps unmatched rows exactly once") {
-    val left = Seq((1L, "a"), (9L, "b")).toDF("k", "s")
-    val got = Skew.saltedJoin(left, dim, Seq("k"), 4, "left")
-      .orderBy("k").collect().map(r => (r.getLong(0), Option(r.getAs[String]("name"))))
-    assert(got.toSeq === Seq((1L, Some("hot")), (9L, None)))
-  }
-
-  test("saltedAgg: two-phase aggregation equals direct aggregation") {
-    val direct = skewed.groupBy("k")
-      .agg(sum("v").as("s"), count(lit(1)).as("n"))
-      .orderBy("k").collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
-    val salted = Skew.saltedAgg(skewed, Seq("k"), 8,
-      partialAggs = Seq(sum("v").as("ps"), count(lit(1)).as("pn")),
-      finalAggs = Seq(sum("ps").as("s"), sum("pn").as("n")))
-      .orderBy("k").collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
-    assert(salted.toSeq === direct.toSeq)
-  }
 
   test("bloom filters land in the parquet files for tx_hash") {
     val dir = java.nio.file.Files.createTempDirectory("graft_bloom").toString

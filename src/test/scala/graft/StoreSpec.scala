@@ -62,12 +62,6 @@ class StoreSpec extends SparkTestBase {
     assert(got.toSeq === Seq((1L, "a"), (2L, "b2"), (3L, "c")))
   }
 
-  test("deleteWhere: null predicate rows are kept (SQL DELETE semantics)") {
-    val df = Seq((1L, Some(5)), (2L, None), (3L, Some(50))).toDF("id", "x")
-    val got = Store.deleteWhere(df, col("x") > 10).orderBy("id").collect().map(_.getLong(0))
-    assert(got.toSeq === Seq(1L, 2L)) // row 2 (null) kept, row 3 deleted
-  }
-
   test("latestAnyRow keeps exactly one row per key") {
     val df = Seq((1L, "x"), (1L, "x"), (2L, "y")).toDF("k", "s")
     assert(Store.latestAnyRow(df, Seq("k")).count() === 2)
@@ -88,28 +82,6 @@ class StoreSpec extends SparkTestBase {
     val pruned = back.filter(col("height_bucket") === 1)
     assert(pruned.count() === 1)
     assert(pruned.collect()(0).getAs[String]("s") === "a")
-  }
-
-  test("bucketed tables: equi-join runs with no shuffle exchange") {
-    import spark.implicits._
-    val left = (1L to 200L).map(k => (k, s"L$k")).toDF("k", "lv")
-    val right = (1L to 200L).map(k => (k, k * 10)).toDF("k", "rv")
-    Store.writeBucketed(left, "b_left", "k", 4, sortCols = Seq("k"))
-    Store.writeBucketed(right, "b_right", "k", 4, sortCols = Seq("k"))
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      val j = spark.table("b_left").join(spark.table("b_right"), "k")
-      assert(j.count() === 200)
-      val plan = j.queryExecution.executedPlan.toString
-      // bucket-aware scans, and NO exchange anywhere in the join plan
-      assert(plan.contains("SelectedBucketsCount"), plan.take(800))
-      assert(!plan.contains("Exchange"), plan.take(800))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS b_left")
-      spark.sql("DROP TABLE IF EXISTS b_right")
-    }
   }
 
   test("tableStats: rows/bytes per table directory") {

@@ -103,23 +103,5 @@ class StreamingDedupSpec extends SparkTestBase {
       }
       assert(got(i) === expect, s"doc $i: got ${got(i)}, want $expect")
     }
-  }
-
-  test("exactWithinWatermark: built-in drop suppresses dups in horizon") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[Doc]
-    val out = StreamingDedup.exactWithinWatermark(
-      ms.toDF(), "text", "event_time", lateness = "1 minute")
-    val q = out.writeStream.format("memory").queryName("dedup_builtin")
-      .outputMode("append").start()
-    try {
-      ms.addData(Doc(1, "aaa", ts(0)), Doc(2, "aaa", ts(1)), Doc(3, "bbb", ts(2)))
-      q.processAllAvailable()
-      ms.addData(Doc(4, "aaa", ts(3)))
-      q.processAllAvailable()
-      val ids = spark.table("dedup_builtin").select("doc_id")
-        .collect().map(_.getLong(0)).toSet
-      assert(ids === Set(1L, 3L)) // one survivor per distinct text
-    } finally q.stop()
-  }
+   }
 }

@@ -47,8 +47,9 @@ class StreamingSpec extends SparkTestBase {
       .collect().map(_.getLong(0)).toSeq === Seq(0L, 1L))
 
     // MV partials were written per batch; read finishes the aggregation
-    val mv2 = Mvs.readDailyTxStats(
-        spark.read.parquet(s"$wh/mv_daily_tx_stats").drop("ingest_batch"))
+    val mv2 = Mvs.readMv(
+        spark.read.parquet(s"$wh/mv_daily_tx_stats").drop("ingest_batch"), Seq("date"))
+      .withColumn("avg_gas_used", col("total_gas_used") / col("tx_count"))
       .orderBy("date").collect()
     // heights 1,3 -> day 2025-06-02 (h%2=1), height 2 -> 2025-06-01
     val byDate = mv2.map(r => r.getDate(0).toString ->
@@ -61,49 +62,11 @@ class StreamingSpec extends SparkTestBase {
     assert(avg === 20.0)
 
     // MV recompute over base tables agrees with the incremental read
-    val recomputed = Mvs.dailyTxStatsRecompute(
+    val recomputed = MvRecompute.dailyTxStatsRecompute(
       spark.read.parquet(s"$wh/txs"), spark.read.parquet(s"$wh/blocks"))
       .orderBy("date").collect()
       .map(r => r.getDate(0).toString -> r.getAs[Long]("tx_count")).toMap
     assert(recomputed === byDate.map { case (k, v) => k -> v._1 })
-  }
-
-  test("watermarked windowed block stats: late row beyond watermark dropped") {
-    val in = java.nio.file.Files.createTempDirectory("graft_win").toString
-    val cp = java.nio.file.Files.createTempDirectory("graft_wincp").toString
-    def block(h: Long, time: String, nTx: Int) =
-      s"""{"height":$h,"time":"$time","app_hash":"A","txs":[${Seq.fill(nTx)("\"dGVzdA==\"").mkString(",")}],"txs_results":[],"finalize_block_events":[]}"""
-    // batch 1: two windows of data; watermark advances to max - 10min
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$in/b1.json"),
-      Seq(
-        block(1, "2025-06-01T12:00:10Z", 2),
-        block(2, "2025-06-01T12:00:40Z", 1),
-        block(3, "2025-06-01T12:30:00Z", 0)).mkString("\n").getBytes)
-    val agg = graft.streaming.StreamingIngest.windowedBlockStats(
-      spark, in, window = "1 minute", lateness = "10 minutes")
-    val q = agg.writeStream.outputMode("append")
-      .option("checkpointLocation", cp)
-      .format("memory").queryName("graft_win_out").start()
-    try {
-      q.processAllAvailable()
-      // batch 2: a VERY late row (12:01, watermark is 12:20) -> dropped;
-      // plus a fresh row advancing time so the 12:30 window can close later
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$in/b2.json"),
-        Seq(
-          block(4, "2025-06-01T12:01:00Z", 5), // beyond watermark: dropped
-          block(5, "2025-06-01T13:00:00Z", 1)).mkString("\n").getBytes)
-      q.processAllAvailable()
-      val out = spark.table("graft_win_out")
-        .selectExpr("window.start AS ws", "blocks", "txs")
-        .orderBy("ws").collect()
-        .map(r => (r.getTimestamp(0).toString, r.getLong(1), r.getLong(2)))
-      // emitted (closed) windows: 12:00 (2 blocks, 3 txs) and 12:30 —
-      // the late block 4 never contributes a 12:01 window
-      assert(out.exists(_._1.startsWith("2025-06-01 12:00")))
-      val w1200 = out.find(_._1.startsWith("2025-06-01 12:00")).get
-      assert(w1200._2 === 2L && w1200._3 === 3L)
-      assert(!out.exists(_._1.startsWith("2025-06-01 12:01")))
-    } finally q.stop()
   }
 
   test("exactly-once ingest: redelivered batch is absorbed per-table, new batch lands") {
@@ -141,7 +104,7 @@ class StreamingSpec extends SparkTestBase {
         .drop("ingest_batch"), Seq("date"))
       .orderBy("date").collect()
       .map(r => r.getDate(0).toString -> r.getAs[Long]("blocks_count")).toSeq
-    val re1 = Mvs.dailyBlockStatsRecompute(spark.read.parquet(s"$wh/blocks"))
+    val re1 = MvRecompute.dailyBlockStatsRecompute(spark.read.parquet(s"$wh/blocks"))
       .orderBy("date").collect()
       .map(r => r.getDate(0).toString -> r.getAs[Long]("blocks_count")).toSeq
     assert(mv1 === re1)
@@ -149,7 +112,7 @@ class StreamingSpec extends SparkTestBase {
         .drop("ingest_batch"), Seq("date", "type"))
       .orderBy("date", "type").collect()
       .map(r => (r.getDate(0).toString, r.getString(1), r.getAs[Long]("event_count"))).toSeq
-    val re3 = Mvs.eventTypeStatsRecompute(
+    val re3 = MvRecompute.eventTypeStatsRecompute(
       spark.read.parquet(s"$wh/tx_events"), spark.read.parquet(s"$wh/blocks"))
       .orderBy("date", "type").collect()
       .map(r => (r.getDate(0).toString, r.getString(1), r.getAs[Long]("event_count"))).toSeq
@@ -175,12 +138,12 @@ class StreamingSpec extends SparkTestBase {
     assert(spark.read.parquet(s"$wh/tx_events").count() === streamed.txEvents.count())
 
     // MV2 read through the partials equals the batch recompute
-    val mv2 = Mvs.readDailyTxStats(
-      spark.read.parquet(s"$wh/mv_daily_tx_stats").drop("ingest_batch"))
+    val mv2 = Mvs.readMv(
+      spark.read.parquet(s"$wh/mv_daily_tx_stats").drop("ingest_batch"), Seq("date"))
       .orderBy("date").collect()
       .map(r => (r.getDate(0).toString, r.getAs[Long]("tx_count"),
         r.getAs[Long]("total_gas_used")))
-    val re2 = Mvs.dailyTxStatsRecompute(
+    val re2 = MvRecompute.dailyTxStatsRecompute(
       spark.read.parquet(s"$wh/txs"), blocks)
       .orderBy("date").collect()
       .map(r => (r.getDate(0).toString, r.getAs[Long]("tx_count"),
@@ -247,7 +210,7 @@ class StreamingSpec extends SparkTestBase {
         .drop("ingest_batch"), Seq("date"))
       .orderBy("date").collect()
       .map(r => r.getDate(0).toString -> r.getAs[Long]("blocks_count")).toSeq
-    val re1 = Mvs.dailyBlockStatsRecompute(blocks)
+    val re1 = MvRecompute.dailyBlockStatsRecompute(blocks)
       .orderBy("date").collect()
       .map(r => r.getDate(0).toString -> r.getAs[Long]("blocks_count")).toSeq
     assert(mv1 === re1)
@@ -265,7 +228,7 @@ class StreamingSpec extends SparkTestBase {
       spark.read.parquet(s"$wh/mv_daily_block_stats"), Seq("date")).collect()
     assert(mv1.length === 1)
     assert(mv1(0).getAs[Long]("blocks_count") === 3L)
-    val recompute = Mvs.dailyBlockStatsRecompute(spark.read.parquet(s"$wh/blocks"))
+    val recompute = MvRecompute.dailyBlockStatsRecompute(spark.read.parquet(s"$wh/blocks"))
       .collect()
     assert(recompute(0).getAs[Long]("blocks_count") === 3L)
   }

@@ -1,10 +1,39 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.ext.TextFns
+import graft.ext.{Dedup, TextFns}
 
 class TextFnsSpec extends SparkTestBase {
   import spark.implicits._
+
+  /** The pure column-fold formulation of `TextFns.rollingHash` — the
+    * cross-checkable reference for the native expression; materializes
+    * |chars| single-char strings per row. */
+  private def rollingHashFold(text: Column): Column =
+    aggregate(
+      split(text, ""),
+      lit(0L),
+      (acc, ch) => (acc * 31L + ascii(ch)) % 1000000007L)
+
+  /** The HOF/literal form of `TextFns.winnowedPrints` — the cross-checkable
+    * reference the native kernel is spec-pinned against (same shingling,
+    * same 56-bit md5-prefix hash, same window minima and distinct). */
+  private def winnowedPrintsHof(ws: Column, k: Int = 3, w: Int = 4): Column = {
+    val hashes = transform(Dedup.shinglesOfWords(ws, k),
+      g => conv(substring(md5(g), 1, 14), 16, 10).cast("long"))
+    // Bind the hash array to a LAMBDA VARIABLE before windowing: a lambda
+    // body re-evaluates every non-variable subtree per element, so slicing
+    // `hashes` directly inside the window transform would recompute the
+    // full md5 transform per window — O(grams × windows) digests per doc
+    // (measured: 59 s -> ~2 s for 1 M prints at 50 k docs). The singleton
+    // outer transform evaluates `hashes` exactly once per row.
+    element_at(transform(array(hashes), hs =>
+      array_distinct(
+        when(size(hs) <= w, array(array_min(hs)))
+          .otherwise(transform(sequence(lit(1), size(hs) - w + 1),
+            i => array_min(slice(hs, i, lit(w))))))), 1)
+  }
 
   test("tokenCount and bpeIshTokens") {
     val df = Seq("the quick fox", "a1b2!", "").toDF("t")
@@ -114,12 +143,12 @@ class TextFnsSpec extends SparkTestBase {
     val docs = graft.queries.Td.t(spark, sf0001, "documents")
     val mismatch = docs.select(
         TextFns.rollingHash(col("text")).as("a"),
-        TextFns.rollingHashFold(col("text")).as("b"))
+        rollingHashFold(col("text")).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(mismatch === 0L)
     val edge = Seq("", "a", "abc", "café", "ηξ mixed π").toDF("t")
       .select(TextFns.rollingHash(col("t")).as("a"),
-        TextFns.rollingHashFold(col("t")).as("b"))
+        rollingHashFold(col("t")).as("b"))
       .collect()
     edge.foreach(r => assert(r.getLong(0) === r.getLong(1), r.toString))
     // and the codegen'd plan stays codegen'd (no fallback marker)
@@ -211,7 +240,7 @@ class TextFnsSpec extends SparkTestBase {
 
   test("shingleFingerprint equals first minhash component semantics") {
     val df = Seq("a b c d e").toDF("t")
-    val fp = df.select(TextFns.shingleFingerprint(col("t"))).collect()(0).getString(0)
+    val fp = df.select(TextFns.shingleFingerprint(split(col("t"), " "))).collect()(0).getString(0)
     // min over md5 of shingles {"a b c","b c d","c d e"}
     val exp = Seq("a b c", "b c d", "c d e")
       .map(s => java.security.MessageDigest.getInstance("MD5").digest(s.getBytes)
@@ -284,7 +313,7 @@ class TextFnsSpec extends SparkTestBase {
       .select(split(col("text"), " ").as("ws"))
     val both = docs.select(
         TextFns.winnowedPrints(col("ws"), k, w).as("native"),
-        TextFns.winnowedPrintsHof(col("ws"), k, w).as("hof"))
+        winnowedPrintsHof(col("ws"), k, w).as("hof"))
       .collect()
     assert(both.nonEmpty)
     both.foreach(r => assert(r.getSeq[Long](0) === r.getSeq[Long](1)))
@@ -297,7 +326,7 @@ class TextFnsSpec extends SparkTestBase {
     val edgeRows = edge.toDF("t")
       .select(
         TextFns.winnowedPrints(split(col("t"), " "), k, w).as("native"),
-        TextFns.winnowedPrintsHof(split(col("t"), " "), k, w).as("hof"))
+        winnowedPrintsHof(split(col("t"), " "), k, w).as("hof"))
       .collect()
     edgeRows.zip(edge).foreach { case (r, t) =>
       assert(!r.isNullAt(0), s"native null for '$t'")
@@ -311,7 +340,7 @@ class TextFnsSpec extends SparkTestBase {
       .toDF("id", "ws")
       .select(
         TextFns.winnowedPrints(col("ws"), k, w).as("native"),
-        TextFns.winnowedPrintsHof(col("ws"), k, w).as("hof"))
+        winnowedPrintsHof(col("ws"), k, w).as("hof"))
       .collect()
     withNulls.foreach(r => assert(r.getSeq[Long](0) === r.getSeq[Long](1)))
   }

@@ -127,7 +127,5 @@ class ToolsSpec extends SparkTestBase {
     // era stays comfortably above 1 — the assert guards sign/overflow bugs,
     // not host speed
     assert(q > 1.0 && q < 1e6, s"era_quality out of sane range: $q")
-    val field = Era.jsonField()
-    assert(field.matches("\"era_quality\":[0-9]+\\.[0-9]"), field)
   }
 }

@@ -1,57 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.{Dedup, MinHashAgg}
 import graft.queries.Td
-import graft.schema.Model
 
-/** Typed Dataset model + the Aggregator-based MinHash. */
 class TypedSpec extends SparkTestBase {
-  import spark.implicits._
-
-  test("typed model: flatten output maps onto case classes, nulls -> Option") {
-    val env = spark.read.schema(graft.schema.Schemas.envelope).json(Seq(
-      """{"height":7,"time":"2025-06-01T00:00:00Z","app_hash":"A","txs":["dGVzdA=="],"txs_results":[{"code":0,"gas_wanted":"","gas_used":"9","data":"","log":"","events":[]}],"finalize_block_events":[]}""").toDS)
-    val f = graft.ingest.Flatten(env, lit("2025-06-02 00:00:00").cast("timestamp"))
-    val b = Model.blocks(f.blocks).collect()(0)
-    assert(b.height === 7L && b.txs_results_count === 1)
-    val tx = Model.txs(f.txs).collect()(0)
-    assert(tx.gas_wanted === None) // '' parses to null -> None
-    assert(tx.gas_used === Some(9L))
-    assert(tx.tx_hash.length === 64)
-  }
-
-  test("typed work-queue logic: groupByKey state summary") {
-    val rows = Seq(
-      (1L, 0L, 9L, "done", None: Option[String], None: Option[String]),
-      (2L, 10L, 19L, "pending", None: Option[String], None: Option[String]),
-      (3L, 20L, 29L, "pending", None: Option[String], None: Option[String]))
-      .toDF("id", "start_height", "end_height", "status", "worker_id", "error_message")
-      .withColumn("created_at", lit("2025-06-01 00:00:00").cast("timestamp"))
-      .withColumn("updated_at", lit("2025-06-01 00:00:00").cast("timestamp"))
-    val byStatus = Model.workItems(rows)
-      .groupByKey(_.status)
-      .mapGroups((status, items) => (status, items.map(i => i.end_height - i.start_height + 1).sum))
-      .collect().toMap
-    assert(byStatus === Map("done" -> 10L, "pending" -> 20L))
-  }
-
-  test("MinHashAgg: typed aggregator agrees with the expression-based signature") {
-    val docs = Td.t(spark, sf0001, "documents").limit(50)
-    val exprSig = Dedup.minhashSig(docs, "text", "doc_id")
-      .orderBy("doc_id").collect()
-      .map(r => r.getLong(0) -> (1 to 8).map(i => r.getLong(i)).toSeq).toMap
-    val shingles = docs
-      .select(col("doc_id"), split(col("text"), " ").as("__ws"))
-      .select(col("doc_id"), explode(Dedup.shinglesOfWords(col("__ws"), 3)).as("s"))
-      .as[(Long, String)]
-    val aggSig = shingles.groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(new MinHashAgg(8).toColumn.name("sig"))
-      .collect()
-      .map { case (id, sig) => id -> sig.toSeq }.toMap
-    assert(aggSig === exprSig)
-  }
 
   test("approx cardinality within tolerance of exact (HLL)") {
     val docs = Td.t(spark, sf0001, "documents")

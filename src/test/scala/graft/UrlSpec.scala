@@ -95,9 +95,8 @@ class UrlSpec extends SparkTestBase {
       assert((keep == 1) === (id == keeper(k)), s"doc $id key $k")
     }
     // the synthesized corpus must actually exercise collapsing
-    val groups = Url.urlDupGroups(docs, "url", "doc_id").collect()
-    assert(groups.nonEmpty, "fixture produced no URL collisions")
-    assert(groups.forall(_.getLong(2) > 1))
+    assert(marked.groupBy(_._2).exists(_._2.length > 1),
+      "fixture produced no URL collisions")
   }
 
   test("domainCapKeep caps per registrable domain; salted route identical") {
@@ -498,7 +497,8 @@ class UrlSpec extends SparkTestBase {
       (2L, "https://b.com/2",
         "<a href=\"https://new.org/p\">fresh too</a>"))
       .toDF("doc_id", "url", "html")
-    val got = Url.discoveredUrls(docs, "doc_id", "url", "html")
+    val got = Url.discoveredFromLinks(Url.outlinks(docs, "doc_id", "url", "html"),
+        docs.select(Url.canonicalKey(col("url"))))
       .select("link_key", "link", "first_src", "n_refs")
       .collect().map(r =>
         (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq

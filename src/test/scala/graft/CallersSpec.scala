@@ -150,7 +150,8 @@ class CallersSpec extends AnyFunSuite {
     val start = readme.indexOf(header)
     assert(start >= 0, s"README.md has no '$header' section")
     val body = readme.substring(start + header.length)
-    val section = body.substring(0, Some(body.indexOf("\n## ")).filter(_ >= 0).getOrElse(body.length))
+    val end = body.indexOf("\n## ")
+    val section = if (end < 0) body else body.substring(0, end)
     """`([A-Za-z_][\w]*(?:\.[A-Za-z_][\w]*)*)`""".r.findAllMatchIn(section)
       .flatMap(_.group(1).split('.')).toSet
   }

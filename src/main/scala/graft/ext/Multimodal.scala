@@ -252,7 +252,6 @@ object Multimodal {
     * mapPartitions keeps per-partition codec state (a real decoder would be
     * initialized once per partition, not per row). */
   def decodeFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
     val outSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("features", ArrayType(FloatType)),

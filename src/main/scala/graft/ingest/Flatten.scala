@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Fns
 
-/** The 10 analytic DataFrames derived from one envelope Dataset. */
+/** The 10 analytic DataFrames derived from one envelope Dataset, plus the
+  * txs and tx_events rows with their block's `date`, which the MV partials
+  * aggregate. */
 final case class FlatTables(
     blocks: DataFrame,
     txs: DataFrame,
@@ -15,7 +17,10 @@ final case class FlatTables(
     typeMessage: DataFrame,
     typeMessageAttrs: DataFrame,
     blockEvents: DataFrame,
-    blockEventAttrs: DataFrame) {
+    blockEventAttrs: DataFrame,
+    datedTxs: DataFrame,
+    datedTxEvents: DataFrame) {
+  /** The 10 tables by name. */
   def all: Seq[(String, DataFrame)] = Seq(
     "blocks" -> blocks,
     "txs" -> txs,
@@ -78,11 +83,16 @@ object Flatten {
   }
 
   /** Flatten an envelope DataFrame (schema `Schemas.envelope`) into the
-    * 10-table catalog. `processedAt` feeds the processing-time `created_at`
-    * columns (worker.js:216,226,236 use now(); tests pass a fixed literal). */
+    * 10-table catalog. `processedAt`, an expression over an envelope row,
+    * feeds the processing-time `created_at` columns (worker.js:216,226,236
+    * use now(); tests pass a fixed literal, `Ingest.write` a column of its
+    * cached input). Each tx and event carries it, and its MV `date`, down
+    * from its own envelope row, so the MV partials need no join back to
+    * `blocks`. */
   def apply(envelopes: DataFrame, processedAt: Column = current_timestamp()): FlatTables = {
     // Block time: RFC3339 (possibly nanos) -> epoch seconds (worker.js:75).
     val blockTime = timestamp_seconds(unix_timestamp(col("time").cast("timestamp")))
+    val date = to_date(blockTime).as("date")
 
     val blocks = envelopes.select(
       col("height"),
@@ -93,19 +103,23 @@ object Flatten {
 
     // --- per-tx: zip raw txs with their results positionally (J7) ----------
     val zipped = envelopes
-      .select(col("height"), posexplode(arrays_zip(col("txs"), col("txs_results"))))
+      .select(col("height"), date, processedAt.as("processed_at"),
+        posexplode(arrays_zip(col("txs"), col("txs_results"))))
       .withColumnRenamed("pos", "tx_index")
       // arrays_zip pads the shorter array with nulls; the reference iterates
       // rawTxs, so positions past txs.length are dropped (worker.js:134).
       .filter(col("col.txs").isNotNull)
       .select(
         col("height"),
+        col("date"),
+        col("processed_at"),
         col("tx_index").cast("int"),
         col("col.txs").as("raw_tx"),
         col("col.txs_results").as("r"))
       .withColumn("tx_hash", Fns.txHash(col("raw_tx")))
 
-    val txs = zipped.select(
+    val datedTxs = zipped.select(
+      col("date"),
       col("height"),
       col("tx_index"),
       coalesce(col("r.code"), lit(0)).as("code"), // JS `code || 0`
@@ -115,19 +129,24 @@ object Flatten {
         .otherwise(Fns.b64ToHex(col("r.data"))).as("data"),
       col("tx_hash"),
       coalesce(col("r.log"), lit("")).as("log"))
+    val txs = datedTxs.drop("date")
 
     // --- per-(tx, event) ---------------------------------------------------
     val events = zipped
-      .select(col("height"), col("tx_index"), col("tx_hash"), posexplode(col("r.events")))
+      .select(col("height"), col("date"), col("processed_at"), col("tx_index"),
+        col("tx_hash"), posexplode(col("r.events")))
       .withColumnRenamed("pos", "event_index")
       .select(
-        col("height"), col("tx_index"), col("event_index").cast("int"),
+        col("height"), col("date"), col("processed_at"), col("tx_index"),
+        col("event_index").cast("int"),
         col("tx_hash"),
         coalesce(col("col.type"), lit("")).as("event_type"),
         col("col.attributes").as("attrs"))
 
-    val txEvents = events.select(
-      col("height"), col("tx_index"), col("event_index"), col("event_type").as("type"))
+    val datedTxEvents = events.select(
+      col("date"), col("height"), col("tx_index"), col("event_index"),
+      col("event_type").as("type"))
+    val txEvents = datedTxEvents.drop("date")
 
     // Attribute-bearing events only (worker.js:171 `if attributes.length > 0`).
     val withAttrs = events
@@ -139,14 +158,14 @@ object Flatten {
       to_json(col("norm")).as("attrs_kv"),
       to_json(attrsMap(col("norm"))).as("attrs_map"),
       size(col("attrs")).as("attr_count"),
-      processedAt.as("created_at"))
+      col("processed_at").as("created_at"))
 
     def typeParent(t: String): DataFrame = withAttrs
       .filter(col("event_type") === t)
       .select(
         col("height"), col("tx_index"), col("event_index"),
         col("event_type").as("type"), col("tx_hash"),
-        processedAt.as("created_at"))
+        col("processed_at").as("created_at"))
 
     def typeAttrs(t: String): DataFrame = withAttrs
       .filter(col("event_type") === t)
@@ -186,6 +205,8 @@ object Flatten {
       typeMessage = typeParent("message"),
       typeMessageAttrs = typeAttrs("message"),
       blockEvents = blockEvents,
-      blockEventAttrs = blockEventAttrs)
+      blockEventAttrs = blockEventAttrs,
+      datedTxs = datedTxs,
+      datedTxEvents = datedTxEvents)
   }
 }

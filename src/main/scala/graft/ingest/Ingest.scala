@@ -74,6 +74,10 @@ object Ingest {
     results.collectFirst { case scala.util.Failure(e) => e }.foreach(throw _)
   }
 
+  /** The input column carrying the batch's processing stamp (an ISO-8601
+    * instant string). */
+  private val Stamp = "_graft_processed_at"
+
   /** Flatten `envelopes` and write all 13 outputs under `warehouse`,
     * concurrently. Tables are `height_bucket`-partitioned, height-sorted
     * and bloom-indexed per `Store.bloomColsFor`; the blocks write carries
@@ -113,8 +117,22 @@ object Ingest {
     * per table (was 4 of each on 4 cores). The keyed path keeps its
     * input's partitioning.
     *
+    * The batch is stamped once: one processing time, taken when the call
+    * starts, fills the `created_at` of `tx_event_attrs_json`, `type_wasm`
+    * and `type_message` (the reference's now(), worker.js:216,226,236).
+    * It rides the input as a string column that Flatten reads as data
+    * through the cache: behind the cache boundary the optimizer cannot fold
+    * it into a timestamp literal, so no write's generated code holds the
+    * stamp's value and a warm item's 13 writes reuse the classes the
+    * previous item compiled. (An uncached keyed input, `cacheInput =
+    * false`, still folds it into each write's code.)
+    *
+    * The MV partials group each tx and event by the `date` Flatten carried
+    * down from its own envelope row (`FlatTables.datedTxs`/`datedTxEvents`),
+    * with no join back to `blocks`.
+    *
     * `cacheInput = false` (keyed writes only; a redelivery overwrites any
-    * partial commit) skips caching the input and its flattened blocks:
+    * partial commit) skips caching the input:
     * right when the source is COLUMNAR (parquet staging / landing zone),
     * where 13 concurrent re-scans of a page-cached micro-batch file are
     * cheaper than building one compressed InMemoryRelation of nested rows —
@@ -136,7 +154,8 @@ object Ingest {
         overwritePartitions = key.isDefined)
 
     val cached = cacheInput || key.isEmpty
-    val env = if (cached) envelopes.cache() else envelopes
+    val stamped = envelopes.withColumn(Stamp, lit(java.time.Instant.now().toString))
+    val env = if (cached) stamped.cache() else stamped
     try {
       val input =
         if (key.isDefined) env
@@ -146,30 +165,26 @@ object Ingest {
           env.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())
           env.coalesce(writePartitions(env))
         }
-      val tables = Flatten(input)
-      val blocks = if (cached) tables.blocks.cache() else tables.blocks
+      val tables = Flatten(input, processedAt = col(Stamp).cast("timestamp"))
       val blocksObserved = Observation("graft_ingest")
-      try {
-        val tableWrites = tables.all.map { case (name, df) => () =>
-          val observed =
-            if (name == "blocks")
-              df.observe(blocksObserved,
-                count(lit(1)).as("processed_blocks"),
-                coalesce(sum("txs_results_count"), lit(0L)).as("total_txs"),
-                count(when(col("txs_results_count") === 0, 1)).as("empty_blocks"),
-                max("height").as("max_height"))
-            else df
-          save(observed.withColumn("height_bucket", Fns.heightBucket(col("height"))),
-            name, Seq("height_bucket"), Seq("height"))
-        }
-        val mvWrites = Seq(
-          () => save(Mvs.dailyBlockStatsDelta(blocks), "mv_daily_block_stats", Nil, Nil),
-          () => save(Mvs.dailyTxStatsDelta(tables.txs, blocks), "mv_daily_tx_stats", Nil, Nil),
-          () => save(Mvs.eventTypeStatsDelta(tables.txEvents, blocks),
-            "mv_event_type_stats", Nil, Nil))
-        runConcurrently(tableWrites ++ mvWrites)
-        new Ingested(tables, blocksObserved)
-      } finally { if (cached) { blocks.unpersist(); () } }
+      val tableWrites = tables.all.map { case (name, df) => () =>
+        val observed =
+          if (name == "blocks")
+            df.observe(blocksObserved,
+              count(lit(1)).as("processed_blocks"),
+              coalesce(sum("txs_results_count"), lit(0L)).as("total_txs"),
+              count(when(col("txs_results_count") === 0, 1)).as("empty_blocks"),
+              max("height").as("max_height"))
+          else df
+        save(observed.withColumn("height_bucket", Fns.heightBucket(col("height"))),
+          name, Seq("height_bucket"), Seq("height"))
+      }
+      val mvWrites = Seq(
+        () => save(Mvs.dailyBlockStatsDelta(tables.blocks), "mv_daily_block_stats", Nil, Nil),
+        () => save(Mvs.dailyTxStatsDelta(tables.datedTxs), "mv_daily_tx_stats", Nil, Nil),
+        () => save(Mvs.eventTypeStatsDelta(tables.datedTxEvents), "mv_event_type_stats", Nil, Nil))
+      runConcurrently(tableWrites ++ mvWrites)
+      new Ingested(tables, blocksObserved)
     } finally { if (cached) { env.unpersist(); () } }
   }
 

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
 /** Inclusive height interval [start, end]. */
 final case class Iv(start: Long, end: Long) {

@@ -20,11 +20,11 @@ import org.apache.spark.sql.functions._
 object Mvs {
 
   /** Partial-aggregate delta for MV2 from ONE ingest batch (insert-time MV
-    * trigger semantics: the SELECT runs over the inserted block only). */
-  def dailyTxStatsDelta(batchTxs: DataFrame, batchBlocks: DataFrame): DataFrame =
-    batchTxs
-      .join(batchBlocks.select("height", "created_at"), Seq("height"))
-      .groupBy(to_date(col("created_at")).as("date"))
+    * trigger semantics: the SELECT runs over the inserted block only). The
+    * batch's txs carry their block's `date` (`FlatTables.datedTxs`), so the
+    * delta needs no join to `blocks`. */
+  def dailyTxStatsDelta(batchTxs: DataFrame): DataFrame =
+    batchTxs.groupBy(col("date"))
       .agg(
         count(lit(1)).as("tx_count"),
         sum("gas_used").as("total_gas_used"),
@@ -37,10 +37,10 @@ object Mvs {
         sum("txs_results_count").as("total_txs"),
         sum("finalize_events_count").as("total_events"))
 
-  def eventTypeStatsDelta(batchTxEvents: DataFrame, batchBlocks: DataFrame): DataFrame =
-    batchTxEvents
-      .join(batchBlocks.select("height", "created_at"), Seq("height"))
-      .groupBy(to_date(col("created_at")).as("date"), col("type"))
+  /** MV3's delta over the batch's tx events with their block's `date`
+    * (`FlatTables.datedTxEvents`). */
+  def eventTypeStatsDelta(batchTxEvents: DataFrame): DataFrame =
+    batchTxEvents.groupBy(col("date"), col("type"))
       .agg(count(lit(1)).as("event_count"))
 
   /** Finish-aggregation read over appended partials: group by the key cols,

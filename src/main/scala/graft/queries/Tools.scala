@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import graft.pipeline.Pipeline
 import graft.schema.Schemas
 import graft.sources.RpcClient
-import graft.store.Store
 
 /** Operator-composing utilities mirroring the reference's debug/ops scripts:
   * the per-tx message-action debug oracle

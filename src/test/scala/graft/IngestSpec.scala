@@ -69,6 +69,41 @@ class IngestSpec extends SparkTestBase {
       assert(IngestSpec.digest(spark, single, o) ===
         IngestSpec.digest(spark, split, o, drop = Seq("ingest_batch")), o)
   }
+
+  test("warm unkeyed items reuse the generated code of all 13 output writes") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // output name -> whole-stage sources of its write, per warehouse
+    val sources = new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[String]]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.analyzed.collectFirst { case cmd: InsertIntoHadoopFsRelationCommand => cmd.outputPath }
+          .foreach(out => sources.put((out.getParent.toUri.getPath, out.getName),
+            codegenStringSeq(qe.executedPlan).map(_._2)))
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val items = Seq(tmpDir("graft_ingest_warm1") -> (1L to 200L),
+      tmpDir("graft_ingest_warm2") -> (201L to 400L))
+    spark.listenerManager.register(listener)
+    try {
+      for (((wh, heights), i) <- items.zipWithIndex) {
+        if (i > 0) Thread.sleep(1100) // a later stamp for the second item
+        Ingest.write(wh, batch(heights).repartition(4), None)
+      }
+      val deadline = System.nanoTime() + 30000000000L
+      while (sources.size < 2 * outputs.size && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    def code(wh: String, o: String): Seq[String] =
+      Option(sources.get((new org.apache.hadoop.fs.Path(wh).toUri.getPath, o)))
+        .getOrElse(fail(s"no write of $o under $wh seen"))
+    val Seq(first, second) = items.map(_._1)
+    for (o <- outputs) {
+      assert(code(first, o).nonEmpty, s"$o: no whole-stage code")
+      assert(code(first, o) === code(second, o), s"$o: generated code differs between items")
+    }
+  }
 }
 
 object IngestSpec {

@@ -1,6 +1,11 @@
 package graft.ingest
 
+import org.apache.spark.OneToOneDependency
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{FileScanRDD, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import graft.Tune
 import graft.functions.Fns
@@ -40,8 +45,8 @@ object Ingest {
     * fill the cache cooperatively under BlockManager's per-partition locks,
     * so concurrent writes never recompute (or re-fetch) an input partition
     * whose fill succeeded; a failed fill is retried by the next write that
-    * needs the partition (hence the eager fill before unkeyed appends in
-    * [[write]]). Failures propagate — but only AFTER every sibling write has come to
+    * needs the partition (hence the eager fill before any write of a cached
+    * batch in [[write]]). Failures propagate — but only AFTER every sibling write has come to
     * rest: rethrowing on the first failure while other writes are still in
     * flight would let a retry of the same batch run concurrently with
     * leftover writes to the same table paths (two jobs sharing one output's
@@ -101,21 +106,29 @@ object Ingest {
     * each WRITER, never the session conf: a session-global set/restore
     * races concurrent streams sharing the session.
     *
-    * An append cannot be undone, so `key = None` caches the input and
-    * fills the cache with one pass BEFORE any write starts: an input that
-    * cannot be read (an RPC height failing every retry) then fails the call
-    * with nothing committed. Without it the failure would sink only the
-    * write whose task held that partition's cache lock; each sibling write
-    * would re-fetch the height itself and could commit, and the caller's
-    * retry of the whole range would append those rows twice.
+    * The batch's own plan picks one of two input modes; `key` only picks
+    * the layout ([[parquetScan]]):
     *
-    * After that fill the unkeyed input is coalesced to the partition count
-    * [[Tune.partitionsFor]] gives for the filled cache's size (floor 1):
-    * the 13 outputs already write concurrently, so splitting each one
-    * across the cores adds per-task cost and files, not parallelism. A
-    * 200-height driver-loop item writes 13 single-task jobs and one file
-    * per table (was 4 of each on 4 cores). The keyed path keeps its
-    * input's partitioning.
+    *  - A plain scan of parquet files — a parquet read, or a parquet file
+    *    stream's micro-batch — is read directly by every write: 13
+    *    concurrent re-scans of a page-cached columnar file are cheaper than
+    *    building one compressed InMemoryRelation of nested rows, whose
+    *    per-partition SERIAL build every write lineage would queue behind
+    *    (measured: the whole fan-out stalled in the fill's 2-5 s shadow at
+    *    the sf1 stream gate). Each write re-reads the same bytes.
+    *  - Any other batch (RPC fetches, JSON arrivals, computed frames) is
+    *    stamped, cached and filled with one pass BEFORE any write starts.
+    *    An input that cannot be read (an RPC height failing every retry)
+    *    then fails the call with nothing committed: without the fill the
+    *    failure would sink only the write whose task held that partition's
+    *    cache lock; each sibling write would re-fetch the height itself and
+    *    could commit, and an unkeyed caller's retry of the whole range
+    *    would append those rows twice. The filled input is then coalesced
+    *    to the partition count [[Tune.partitionsFor]] gives for the cache's
+    *    size (floor 1): the 13 outputs already write concurrently, so
+    *    splitting each one across the cores adds per-task cost and files,
+    *    not parallelism. A 200-height driver-loop item writes 13
+    *    single-task jobs and one file per table (was 4 of each on 4 cores).
     *
     * The batch is stamped once: one processing time, taken when the call
     * starts, fills the `created_at` of `tx_event_attrs_json`, `type_wasm`
@@ -124,25 +137,13 @@ object Ingest {
     * through the cache: behind the cache boundary the optimizer cannot fold
     * it into a timestamp literal, so no write's generated code holds the
     * stamp's value and a warm item's 13 writes reuse the classes the
-    * previous item compiled. (An uncached keyed input, `cacheInput =
-    * false`, still folds it into each write's code.)
+    * previous item compiled. (A parquet scan, read directly, still folds it
+    * into each write's code.)
     *
     * The MV partials group each tx and event by the `date` Flatten carried
     * down from its own envelope row (`FlatTables.datedTxs`/`datedTxEvents`),
-    * with no join back to `blocks`.
-    *
-    * `cacheInput = false` (keyed writes only; a redelivery overwrites any
-    * partial commit) skips caching the input:
-    * right when the source is COLUMNAR (parquet staging / landing zone),
-    * where 13 concurrent re-scans of a page-cached micro-batch file are
-    * cheaper than building one compressed InMemoryRelation of nested rows —
-    * the cache build is per-partition SERIAL, so every write lineage queues
-    * behind it (measured: the whole fan-out stalled in the fill's 2-5 s
-    * shadow at the sf1 stream gate). Keep true for JSON arrival, where
-    * re-parsing 13× dwarfs the cache build. A keyed write does no eager
-    * fill: the fill overlaps the write fan-out. */
-  def write(warehouse: String, envelopes: DataFrame, key: Option[Long],
-            cacheInput: Boolean = true): Ingested = {
+    * with no join back to `blocks`. */
+  def write(warehouse: String, envelopes: DataFrame, key: Option[Long]): Ingested = {
     def save(df: DataFrame, name: String, partitionCols: Seq[String],
              sortCols: Seq[String]): Unit =
       Store.writeTable(
@@ -153,17 +154,17 @@ object Ingest {
         bloomCols = Store.bloomColsFor.getOrElse(name, Nil),
         overwritePartitions = key.isDefined)
 
-    val cached = cacheInput || key.isEmpty
+    val direct = parquetScan(envelopes)
     val stamped = envelopes.withColumn(Stamp, lit(java.time.Instant.now().toString))
-    val env = if (cached) stamped.cache() else stamped
     try {
       val input =
-        if (key.isDefined) env
+        if (direct) stamped
         else {
+          stamped.cache()
           // the fill: one job, no shuffle (a count would add an aggregate
           // stage); computing each cached partition stores all of it
-          env.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())
-          env.coalesce(writePartitions(env))
+          stamped.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())
+          stamped.coalesce(writePartitions(stamped))
         }
       val tables = Flatten(input, processedAt = col(Stamp).cast("timestamp"))
       val blocksObserved = Observation("graft_ingest")
@@ -185,11 +186,36 @@ object Ingest {
         () => save(Mvs.eventTypeStatsDelta(tables.datedTxEvents), "mv_event_type_stats", Nil, Nil))
       runConcurrently(tableWrites ++ mvWrites)
       new Ingested(tables, blocksObserved)
-    } finally { if (cached) { env.unpersist(); () } }
+    } finally { if (!direct) { stamped.unpersist(); () } }
   }
 
-  /** Write partitions of an unkeyed batch whose input cache `filled` was
-    * just filled: [[Tune.partitionsFor]] over the bytes the cache holds,
+  /** Whether `batch` is a plain scan of parquet files: a parquet read, or
+    * the [[LogicalRDD]] foreachBatch hands a file-stream micro-batch over
+    * as, whose RDD is a one-to-one chain down to a [[FileScanRDD]] running
+    * the parquet format's reader. A reader this check does not recognize
+    * makes the batch cached: slower for a parquet batch, never wrong. */
+  private def parquetScan(batch: DataFrame): Boolean = {
+    @annotation.tailrec
+    def parquetRdd(rdd: RDD[_]): Boolean = (rdd, rdd.dependencies) match {
+      case (scan: FileScanRDD, _) => ReadFunction.exists(_.get(scan).getClass.getName
+        .startsWith(classOf[ParquetFileFormat].getName))
+      case (_, Seq(dep: OneToOneDependency[_])) => parquetRdd(dep.rdd)
+      case _ => false
+    }
+    batch.queryExecution.analyzed match {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.fileFormat.isInstanceOf[ParquetFileFormat]
+      case l: LogicalRDD => parquetRdd(l.rdd)
+      case _ => false
+    }
+  }
+
+  /** FileScanRDD's per-file reader function (a constructor field, not API). */
+  private lazy val ReadFunction: Option[java.lang.reflect.Field] =
+    classOf[FileScanRDD].getDeclaredFields.find(_.getName.endsWith("readFunction"))
+      .map { f => f.setAccessible(true); f }
+
+  /** Write partitions of a batch whose input cache `filled` was just
+    * filled: [[Tune.partitionsFor]] over the bytes the cache holds,
     * read live from the cached relation (a plan's memoized statistics could
     * predate the fill). An input that is not cached keeps its partitions. */
   private def writePartitions(filled: DataFrame): Int = {

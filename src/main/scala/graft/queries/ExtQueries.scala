@@ -804,7 +804,7 @@ object ExtQueries {
     * [[Url.outAnchors]] directly. Same rows either way — the four consumer
     * gates' hashes are unchanged (CORRECTNESS-checked both forms). */
   private[graft] def fixtureLinks(s: SparkSession, d: String): DataFrame =
-    Td.readTable(s, graft.Artifacts.stored(s, "links_fixture", Nil,
+    graft.Scratch.readCachedSchema(s, graft.Artifacts.stored(s, "links_fixture", Nil,
         Seq(s"$d/documents.parquet"), None) { out =>
       Url.outlinks(
           Fixtures.attachLinksHtml(
@@ -821,7 +821,7 @@ object ExtQueries {
     * raw extraction stays priced by `x_anchor_text`, which dumps
     * [[Url.outAnchors]] directly. */
   private[graft] def fixtureAnchors(s: SparkSession, d: String): DataFrame =
-    Td.readTable(s, graft.Artifacts.stored(s, "anchors_fixture", Nil,
+    graft.Scratch.readCachedSchema(s, graft.Artifacts.stored(s, "anchors_fixture", Nil,
         Seq(s"$d/documents.parquet"), None) { out =>
       Url.outAnchors(
           Fixtures.attachLinksHtml(
@@ -842,7 +842,7 @@ object ExtQueries {
     * 3.2 s at sf0.1 — mostly shared input recompute, not the operator).
     * Both build from [[fixtureLinks]], a nested artifact lookup. */
   private[graft] def fixtureFrontier(s: SparkSession, d: String): DataFrame =
-    Td.readTable(s, graft.Artifacts.stored(s, "frontier_fixture", Nil,
+    graft.Scratch.readCachedSchema(s, graft.Artifacts.stored(s, "frontier_fixture", Nil,
         Seq(s"$d/documents.parquet"), None) { out =>
       Url.discoveredFromLinks(fixtureLinks(s, d),
           Fixtures.attachUrls(t(s, d, "documents"), "doc_id", "source")
@@ -851,7 +851,7 @@ object ExtQueries {
     })
 
   private[graft] def fixtureDomainRank(s: SparkSession, d: String): DataFrame =
-    Td.readTable(s, graft.Artifacts.stored(s, "domain_rank_fixture", Nil,
+    graft.Scratch.readCachedSchema(s, graft.Artifacts.stored(s, "domain_rank_fixture", Nil,
         Seq(s"$d/documents.parquet"), None) { out =>
       LinkGraph.domainRank(fixtureLinks(s, d)).write.parquet(out)
     })
@@ -3384,7 +3384,7 @@ object ExtQueries {
       // applied at the candidate join.
       (s: SparkSession, d: String) => {
         val docs = t(s, d, "documents")
-        val store = Td.readTable(s,
+        val store = graft.Scratch.readCachedSchema(s,
           Dedup.bandStorePathFor(s, d, "doc_id", "text", idUpperExclusive = 250L))
         Dedup.incrementalNearDupsFromBands(
           docs.filter(col("doc_id") >= 250), store, docs.filter(col("doc_id") < 250),

@@ -13,19 +13,14 @@ import graft.store.Store
   * UTC epoch and `unix_micros(cast) * 1000` is exact integer arithmetic
   * (never double division, which loses ulps at 1e18). */
 object Td {
-  /** Schema-cached table read ([[graft.Scratch.readCachedSchema]]) — the
-    * catalog-metastore shape shared with the ext-store readers. The
-    * nanosAsLong flag must already be set when a path's FIRST read pays the
-    * inference (t() sets it before calling). */
-  def readTable(spark: SparkSession, path: String): DataFrame =
-    graft.Scratch.readCachedSchema(spark, path)
-
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // The NTZ→TIMESTAMP cast below is only exact under a UTC session zone;
     // pin it here so correctness never depends on caller-side session state.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val df = readTable(spark, s"$dir/$name.parquet")
+    // schema-cached read: the nanosAsLong flag above must be set before a
+    // path's FIRST read pays the inference
+    val df = graft.Scratch.readCachedSchema(spark, s"$dir/$name.parquet")
     df.schema.find(_.name == "ts") match {
       case Some(f) =>
         f.dataType match {

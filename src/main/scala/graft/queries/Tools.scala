@@ -37,15 +37,15 @@ object Tools {
     *
     * Returns one row per RPC tx: (height, tx_hash, rpc_actions, db_actions,
     * matches) — a tx missing from the warehouse or recorded with different
-    * actions comes back `matches = false`. Fetches run range-partitioned
-    * like RpcSource.fetchEnvelopes; candidate tx rows never collect to the
+    * actions comes back `matches = false`. Heights are sliced
+    * into `parallelism` contiguous ranges like RpcSource.fetchEnvelopes
+    * (no sampling job, no shuffle); candidate tx rows never collect to the
     * driver. */
   def checkMessages(spark: SparkSession, client: RpcClient,
                     typeMessage: DataFrame, typeMessageAttrs: DataFrame,
                     start: Long, end: Long, parallelism: Int = 4): DataFrame = {
     import spark.implicits._
-    val blocks = spark.range(start, end + 1)
-      .repartitionByRange(math.max(1, parallelism), col("id"))
+    val blocks = spark.sparkContext.range(start, end + 1, 1, math.max(1, parallelism))
       .map(h => (h, client.get(s"/block?height=$h")))
       .toDF("height", "block_json")
     val rawTxs = blocks

@@ -23,7 +23,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object StreamingDedup {
 
   /** Input contract for the typed path. */
-  final case class Doc(doc_id: Long, text: String, event_time: Timestamp)
+  final case class Doc(doc_id: Long, text: String, event_time: Timestamp) extends Arrival
 
   /** Per-hash state: who was first, and how many dups followed. */
   final case class SeenState(first_id: Long, dups: Long)
@@ -42,17 +42,10 @@ object StreamingDedup {
                     stateTtlMs: Long): Dataset[Deduped] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val ttlMs = stateTtlMs
 
     def update(hash: String, docs: Iterator[Doc],
-               state: GroupState[SeenState]): Iterator[Deduped] = {
-      if (state.hasTimedOut) {
-        state.remove()
-        Iterator.empty
-      } else {
-        // Deterministic within-batch order: by event time then id (iterator
-        // order from shuffle is not guaranteed).
-        val sorted = docs.toSeq.sortBy(d => (d.event_time.getTime, d.doc_id))
+               state: GroupState[SeenState]): Iterator[Deduped] =
+      StateExpiry(state, docs, stateTtlMs) { sorted =>
         var st = state.getOption.getOrElse(SeenState(-1L, -1L))
         val out = sorted.map { d =>
           st = if (st.first_id < 0) SeenState(d.doc_id, 0L)
@@ -60,15 +53,8 @@ object StreamingDedup {
           Deduped(d.doc_id, hash, st.dups == 0L, st.dups)
         }
         state.update(st)
-        // Anchor the TTL on event time, not the watermark alone: on the
-        // first batch the watermark is still unset (0), and 0 + ttl would be
-        // 1970 — instantly expired once real event times advance it.
-        val maxEvent = sorted.last.event_time.getTime
-        state.setTimeoutTimestamp(
-          math.max(state.getCurrentWatermarkMs(), maxEvent) + ttlMs)
-        out.iterator
+        out
       }
-    }
 
     docs
       .withWatermark("event_time", lateness)
@@ -83,78 +69,56 @@ object StreamingDedup {
   }
 
   /** File-stream harness: replay a documents parquet directory through
-    * [[firstSeenWins]] as a REAL multi-batch stream — no driver collect on
-    * either side. The corpus is staged as `chunks` doc_id-range files which
-    * are then FED to the running query one at a time via Hadoop FS rename
-    * (drained with processAllAvailable between arrivals) — arrival order is
-    * the order of appearance, so the harness needs no mtime mutation and
-    * works on any Hadoop filesystem scheme, like the band store.
+    * [[firstSeenWins]] as a REAL multi-batch stream ([[StreamStage.replayDocs]]:
+    * `chunks` doc_id-range files fed `filesPerTrigger` per micro-batch, a
+    * parquet sink read back as the returned DataFrame).
     *
-    * `arrivalOrder` (a permutation of 0 until chunks) injects out-of-order
-    * arrival: with the default in-order feed, event time is monotone in
-    * doc_id, so first-seen-by-arrival equals first-by-(event_time, doc_id)
-    * and the batch-window oracle stays exact. An out-of-order feed exercises
-    * the watermark path: a late-but-within-lateness chunk must still be
-    * emitted, with firsts/ordinals decided by ARRIVAL (the operator's actual
-    * contract). Output goes to a parquet sink (streaming files, not driver
-    * memory) and is read back as the returned DataFrame. */
+    * With the default in-order feed, event time is monotone in doc_id, so
+    * first-seen-by-arrival equals first-by-(event_time, doc_id) and the
+    * batch-window oracle stays exact. An out-of-order `arrivalOrder`
+    * exercises the watermark path: a late-but-within-lateness chunk must
+    * still be emitted, with firsts/ordinals decided by ARRIVAL (the
+    * operator's actual contract).
+    *
+    * 4 state partitions: the state store writes one checkpoint delta PER
+    * state partition PER micro-batch, and 32 partitions × chunks batches of
+    * tiny files is pure fixed overhead at this state size (thousands of
+    * keys). Purely a partitioning knob — results are identical. */
   def firstSeenWinsFileRun(spark: org.apache.spark.sql.SparkSession,
                            docsParquetDir: String, chunks: Int = 4,
                            lateness: String = "10 minutes",
-                           stateTtlMs: Long = 7L * 86400000L,
                            arrivalOrder: Seq[Int] = Seq.empty,
                            filesPerTrigger: Int = 1): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val stage = graft.Scratch.dir("graft_stream_stage")
-    val inDir = s"$stage/in"
-    val outDir = s"$stage/out"; val ckpt = s"$stage/ckpt"
-
-    // chunk staging is SHARED across the four replay gates (same frame,
-    // same range partitioning — StreamStage builds it once per JVM)
-    val parts = StreamStage.stagedParts(spark, docsParquetDir, chunks)
-    val fs = new Path(stage).getFileSystem(spark.sessionState.newHadoopConf())
-    val order = if (arrivalOrder.nonEmpty) arrivalOrder else parts.indices.toSeq
-    require(order.sorted == parts.indices.toSeq,
-      s"arrivalOrder must be a permutation of 0 until ${parts.length}, got $order")
-    fs.mkdirs(new Path(inDir))
-
-    // The stream runs on a cloned session with few shuffle partitions: the
-    // state store writes one checkpoint delta PER state partition PER
-    // micro-batch, and 32 partitions × chunks batches of tiny files is pure
-    // fixed overhead at this state size (thousands of keys). Purely a
-    // partitioning knob — results are identical; the caller's session is
-    // untouched.
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    // No-data micro-batches exist to advance the watermark for eviction/
-    // append finalization between data batches; with per-chunk drains each
-    // data batch is immediately followed by one, DOUBLING the per-batch
-    // planning + state-commit rounds. State eviction timing is not part of
-    // this harness' contract (TTL is generous; StreamingDedupSpec covers
-    // expiry), so skip them.
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    import ss.implicits._
-    // filesPerTrigger groups staged chunks into fewer, larger micro-batches
-    // (r13 verdict item 5 — the per-batch planning/commit constant is the
-    // dominant replay cost, see candidatesFileRun). The state op sorts each
-    // batch by (event_time, doc_id), so grouping in-order chunks preserves
-    // first-seen assignment exactly; permuted feeds keep their cross-batch
-    // inversions and the ooo gate's oracle is arrival-independent.
-    val inStream = ss.readStream
-      .schema("doc_id LONG, text STRING, event_time TIMESTAMP")
-      .option("maxFilesPerTrigger", filesPerTrigger.toString)
-      .parquet(inDir)
-      .as[Doc]
-    val q = firstSeenWins(inStream, lateness, stateTtlMs)
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    try {
-      order.zipWithIndex.grouped(filesPerTrigger).foreach { group =>
-        group.foreach { case (part, i) => StreamStage.feed(spark, parts(part), inDir, i) }
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.read.parquet(outDir)
+    import spark.implicits._
+    StreamStage.replayDocs(spark, StreamStage.stagedParts(spark, docsParquetDir, chunks),
+      arrivalOrder, filesPerTrigger, stateParts = 4)(docs =>
+      firstSeenWins(docs.as[Doc], lateness, StreamStage.StateTtlMs))
   }
+}
+
+/** A row of an event-time state op: a document arriving at `event_time`. */
+trait Arrival { def doc_id: Long; def event_time: Timestamp }
+
+/** The state-expiry rule of both event-time state ops
+  * ([[StreamingDedup.firstSeenWins]], [[StreamingNearDup.candidateStream]]).
+  * An object of its own: a state op's update function must not capture a
+  * non-serializable enclosing object. */
+object StateExpiry {
+  /** A group whose state timed out drops it and emits nothing. Otherwise
+    * `step` sees the group's rows in (event_time, doc_id) order — shuffle
+    * iterator order is not guaranteed — and the timeout moves to
+    * max(watermark, the batch's max event time) + `ttlMs`. The anchor is
+    * the event time, not the watermark alone: on the first batch the
+    * watermark is still unset (0), and 0 + ttl would be 1970 — instantly
+    * expired once real event times advance it. */
+  def apply[R <: Arrival, S, O](state: GroupState[S], rows: Iterator[R], ttlMs: Long)(
+      step: Seq[R] => Seq[O]): Iterator[O] =
+    if (state.hasTimedOut) { state.remove(); Iterator.empty }
+    else {
+      val sorted = rows.toSeq.sortBy(r => (r.event_time.getTime, r.doc_id))
+      val out = step(sorted)
+      state.setTimeoutTimestamp(
+        math.max(state.getCurrentWatermarkMs(), sorted.last.event_time.getTime) + ttlMs)
+      out.iterator
+    }
 }

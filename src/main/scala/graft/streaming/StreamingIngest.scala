@@ -40,17 +40,19 @@ object StreamingIngest {
     // format: "json" (line-delimited envelope objects — the RPC-shaped
     // arrival format) or "parquet" (pre-staged envelopes — an upstream
     // landing zone that already columnarized; also what the bench harness
-    // stages so the gate measures the streaming path, not JSON codec cost)
+    // stages so the gate measures the streaming path, not JSON codec cost).
+    // Ingest.write reads the batch's own plan to decide how to read it.
     val src = format match {
       case "parquet" => reader.parquet(inputDir)
-      case _ => reader.json(inputDir)
+      case "json" => reader.json(inputDir)
+      case other => throw new IllegalArgumentException(
+        s"unknown stream format '$other': expected \"json\" or \"parquet\"")
     }
     src.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Ingest.write(warehouse, batch, Some(batchKey(streamTag, batchId)),
-          cacheInput = format != "parquet")
+        Ingest.write(warehouse, batch, Some(batchKey(streamTag, batchId)))
         ()
       }
       .start()
@@ -65,12 +67,10 @@ object StreamingIngest {
     * PARQUET files (columnar staging — the JSON round-trip of the round-9
     * harness serialized + re-parsed every nested envelope per batch and was
     * the gate's dominant cost, harness not engine; the exactly-once path
-    * under test is format-agnostic past the source), feed them to a running
-    * [[startExactlyOnce]] stream one file per micro-batch
-    * ([[StreamStage]] staging and atomic feed, drained between arrivals, the
-    * [[StreamingDedup.firstSeenWinsFileRun]] pattern), and — when
-    * `replayLastBatch` — PLANT a redelivery by re-running the final batch
-    * through `Ingest.write` with the same batch key after the
+    * under test is format-agnostic past the source), replay them through a
+    * running [[startExactlyOnce]] stream one file per micro-batch
+    * ([[StreamStage.replay]]), then PLANT a redelivery by re-running the
+    * final batch through `Ingest.write` with the same batch key after the
     * stream stops, proving the overwrite absorbs it. Returns the warehouse
     * directory. The JSON arrival format keeps its own streaming coverage in
     * StreamingSpec (startExactlyOnce defaults to `format = "json"`).
@@ -78,13 +78,7 @@ object StreamingIngest {
     * once per state of those inputs: every rep of the gate stages the
     * IDENTICAL frame (~5 s at sf1). No inputs stage afresh. */
   def flattenFileRun(spark: SparkSession, envelopes: DataFrame, chunks: Int = 4,
-                     replayLastBatch: Boolean = true,
                      stageInputs: Seq[String] = Nil): String = {
-    import org.apache.hadoop.fs.Path
-    val stage = graft.Scratch.dir("graft_sflat")
-    val inDir = s"$stage/in"
-    val wh = s"$stage/wh"; val ckpt = s"$stage/ckpt"
-
     val parts = StreamStage.staged(spark, Seq("flatten", chunks), stageInputs) { dir =>
       envelopes
         .repartitionByRange(chunks, col("height"))
@@ -100,8 +94,6 @@ object StreamingIngest {
         .write.mode("overwrite").option("parquet.block.size", 1L << 20)
         .parquet(dir)
     }
-    val fs = new Path(stage).getFileSystem(spark.sessionState.newHadoopConf())
-    fs.mkdirs(new Path(inDir))
 
     // Split-tuned CLONED session for the stream (and the redelivery read):
     // a micro-batch arrives as ONE staged parquet file, and the session
@@ -118,49 +110,38 @@ object StreamingIngest {
     // the small-batch regime where the default under-parallelizes. A scan
     // split (unlike a repartition) costs no shuffle and is shared by
     // nothing: each write lineage re-scans its slice in parallel, which is
-    // the route's documented design (13 page-cached re-scans beat one
-    // serial InMemoryRelation build).
-    val chunkBytes =
-      if (parts.isEmpty) 0L
-      else parts.map(p =>
-        try fs.getFileStatus(p).getLen catch { case _: Exception => 0L }).max
+    // what `Ingest.write` does with a parquet-scan batch (13 page-cached
+    // re-scans beat one serial InMemoryRelation build).
+    val chunkBytes = StreamStage.partBytes(spark, parts).maxOption.getOrElse(0L)
     val cores = spark.sparkContext.defaultParallelism
     val splitBytes = math.min(
       spark.sessionState.conf.filesMaxPartitionBytes,
       math.max(1L << 20, (chunkBytes + cores - 1) / cores))
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.files.maxPartitionBytes", splitBytes.toString)
     // the MV date derivation is timezone-sensitive: pin the clone to the
     // parent session's zone rather than trusting SparkConf inheritance
-    ss.conf.set("spark.sql.session.timeZone",
-      spark.sessionState.conf.sessionLocalTimeZone)
-    // ONE file per micro-batch, delivered ATOMICALLY (StreamStage.feed
-    // renames into the watched dir): a multi-file group under the continuously
-    // polling 0-second trigger can SPLIT into unplanned micro-batches
-    // (maxFilesPerTrigger is a max, not a min — the source may commit a
-    // batch between two deliveries), which would desynchronize the planted
-    // redelivery's batch id from the stream's actual last batch and
-    // corrupt the exactly-once equality this gate proves. Callers that
-    // want fewer batch constants lower `chunks` instead — batch count IS
-    // the knob here, not files-per-trigger.
-    val q = startExactlyOnce(ss, inDir, wh, ckpt,
-      trigger = Trigger.ProcessingTime("0 seconds"),
-      maxFilesPerTrigger = Some(1),
-      format = "parquet")
-    try {
-      parts.zipWithIndex.foreach { case (part, i) =>
-        StreamStage.feed(spark, part, inDir, i)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-
-    if (replayLastBatch && parts.nonEmpty) {
-      val lastId = parts.length - 1L
-      // read through the split-tuned session: the replay must pay the same
-      // (parallel) scan shape as the stream's own delivery did
-      val redelivered = ss.read.schema(Schemas.envelope)
-        .parquet(s"$inDir/chunk-${"%05d".format(parts.length - 1)}.parquet")
-      Ingest.write(wh, redelivered, Some(batchKey(0L, lastId)), cacheInput = false)
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.files.maxPartitionBytes", splitBytes)
+    ss.conf.set("spark.sql.session.timeZone", spark.sessionState.conf.sessionLocalTimeZone)
+    // ONE file per micro-batch, delivered ATOMICALLY: a multi-file group
+    // under the continuously polling 0-second trigger can SPLIT into
+    // unplanned micro-batches (maxFilesPerTrigger is a max, not a min — the
+    // source may commit a batch between two deliveries), which would
+    // desynchronize the planted redelivery's batch id from the stream's
+    // actual last batch and corrupt the exactly-once equality this gate
+    // proves. Callers that want fewer batch constants lower `chunks`
+    // instead — batch count IS the knob here, not files-per-trigger.
+    val wh = StreamStage.replay(spark, parts) { (in, out, ckpt) =>
+      startExactlyOnce(ss, in, out, ckpt,
+        trigger = Trigger.ProcessingTime("0 seconds"),
+        maxFilesPerTrigger = Some(1),
+        format = "parquet")
+    }
+    if (parts.nonEmpty) {
+      // the redelivery reads the final batch's bytes (its staged master)
+      // through the split-tuned session: the same parallel scan shape as
+      // the stream's own delivery
+      val redelivered = ss.read.schema(Schemas.envelope).parquet(parts.last.toString)
+      Ingest.write(wh, redelivered, Some(batchKey(0L, parts.length - 1L)))
     }
     wh
   }

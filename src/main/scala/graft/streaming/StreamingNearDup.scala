@@ -51,7 +51,7 @@ object StreamingNearDup {
 
   /** One (document × band) arrival: the stateless front half's output. */
   final case class BandRow(doc_id: Long, band: Int, bucket: String,
-                           event_time: Timestamp)
+                           event_time: Timestamp) extends Arrival
 
   /** One candidate pair: `a_id` arrived before `b_id` in this band's
     * bucket. Cross-band duplicates are expected (a true near-dup pair
@@ -100,7 +100,7 @@ object StreamingNearDup {
     * emits one [[Cand]] per already-registered member, then registers
     * (saturating at `maxBucket`, re-deliveries of a registered id are
     * no-ops — the at-least-once guard). Arrival order within a micro-batch
-    * is (event_time, doc_id) — shuffle iterator order is not guaranteed.
+    * and state expiry are [[StateExpiry]]'s.
     * `lateness` IS the event-time watermark (applied here, on the state
     * op's own input — callers must not pre-watermark, or they'd silently
     * configure a different tolerance than the one they passed). */
@@ -109,14 +109,10 @@ object StreamingNearDup {
                       maxBucket: Int = Dedup.DefaultMaxBucket): Dataset[Cand] = {
     val spark = bands.sparkSession
     import spark.implicits._
-    val ttlMs = stateTtlMs
-    val marked = bands.withWatermark("event_time", lateness)
 
     def update(key: (Int, String), rows: Iterator[BandRow],
-               state: GroupState[BucketMembers]): Iterator[Cand] = {
-      if (state.hasTimedOut) { state.remove(); Iterator.empty }
-      else {
-        val sorted = rows.toSeq.sortBy(r => (r.event_time.getTime, r.doc_id))
+               state: GroupState[BucketMembers]): Iterator[Cand] =
+      StateExpiry(state, rows, stateTtlMs) { sorted =>
         // members in REVERSE arrival order (list prepend); emission order of
         // pairs is irrelevant — downstream is a DISTINCT set. The persisted
         // state stays the plain List (stable encoder); membership and size
@@ -136,14 +132,10 @@ object StreamingNearDup {
           }
         }
         state.update(BucketMembers(members))
-        val maxEvent = sorted.last.event_time.getTime
-        state.setTimeoutTimestamp(
-          math.max(state.getCurrentWatermarkMs(), maxEvent) + ttlMs)
-        out.result().iterator
+        out.result()
       }
-    }
 
-    marked
+    bands.withWatermark("event_time", lateness)
       .groupByKey(r => (r.band, r.bucket))
       .flatMapGroupsWithState(
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(update)
@@ -151,96 +143,46 @@ object StreamingNearDup {
 
   /** File-stream harness for the batch-equivalence CORRECTNESS gate
     * (x_stream_neardup_eq): replay a documents parquet directory through
-    * bandRows → candidateStream as a REAL multi-batch stream — the
-    * [[StreamingDedup.firstSeenWinsFileRun]] staging pattern (doc_id-range
-    * chunks fed one per micro-batch via FS rename, parquet sink, no driver
-    * collect on either side). With in-order arrival, generous lateness/TTL
-    * and the cap inert, each bucket's emitted pairs are exactly its
-    * { (a, b) : a < b } set — the batch candidate join's — so DISTINCT
-    * (a_id, b_id) equals the DuckDB banding twin's candidate set. */
+    * bandRows → candidateStream as a REAL multi-batch stream
+    * ([[StreamStage.replayDocs]], the [[StreamingDedup.firstSeenWinsFileRun]]
+    * pattern), with the default bucket cap. With in-order arrival, generous
+    * lateness/TTL and the cap inert, each bucket's emitted pairs are
+    * exactly its { (a, b) : a < b } set — the batch candidate join's — so
+    * DISTINCT (a_id, b_id) equals the DuckDB banding twin's candidate set.
+    * A permuted `arrivalOrder` orients pairs by ARRIVAL (a_id = whoever a
+    * bucket registered first), so the UNORDERED pair set stays the batch
+    * one while a_id/b_id may swap — the invariant the out-of-order spec
+    * pins.
+    *
+    * SIZE-derived state partitions (r16, generalizing r14's hand-picked
+    * 16): ~384 KiB of staged parquet per state partition reproduces r14's
+    * measured choices at both anchors (sf0.1 → 4, sf1 → 16) and keeps
+    * growing for bigger corpora up to the core count.
+    *
+    * A staged chunk file arrives as ONE input partition, and the per-row
+    * signature (one md5 per shingle) is a narrow map — without a
+    * repartition it runs single-threaded per micro-batch and dominates the
+    * gate (measured 17 s of the sf1 run). One tiny shuffle of raw text
+    * spreads it across the cores — SIZE-derived (r16): ~64 KiB of staged
+    * text per task keeps the md5 map parallel at sf1 (32-way) without
+    * paying 32 near-empty tasks × state-partition shuffle blocks per
+    * micro-batch at sf0.1. */
   def candidatesFileRun(spark: org.apache.spark.sql.SparkSession,
                         docsParquetDir: String, chunks: Int = 4,
                         lateness: String = "10 minutes",
-                        stateTtlMs: Long = 7L * 86400000L,
-                        maxBucket: Int = Dedup.DefaultMaxBucket,
                         arrivalOrder: Seq[Int] = Seq.empty,
                         filesPerTrigger: Int = 1): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val stage = graft.Scratch.dir("graft_neardup_stage")
-    val inDir = s"$stage/in"
-    val outDir = s"$stage/out"; val ckpt = s"$stage/ckpt"
-
-    // chunk staging is SHARED across the four replay gates (same frame,
-    // same range partitioning — StreamStage builds it once per JVM)
     val parts = StreamStage.stagedParts(spark, docsParquetDir, chunks)
-    val fs = new Path(stage).getFileSystem(spark.sessionState.newHadoopConf())
-    // `arrivalOrder` (a chunk permutation — the firstSeenWinsFileRun knob)
-    // injects out-of-order arrival: pairs then orient by ARRIVAL (a_id =
-    // whoever a bucket registered first), so the UNORDERED pair set stays
-    // the batch one while a_id/b_id may swap — the invariant the
-    // out-of-order spec pins. The default in-order feed keeps a_id < b_id,
-    // which is what the hash-exact gate relies on.
-    val order = if (arrivalOrder.nonEmpty) arrivalOrder else parts.indices.toSeq
-    require(order.sorted == parts.indices.toSeq,
-      s"arrivalOrder must be a permutation of 0 until ${parts.length}, got $order")
-    fs.mkdirs(new Path(inDir))
-
-    // Cloned session with SIZE-derived state partitions (r16, generalizing
-    // r14's hand-picked 16): the state store writes one checkpoint delta
-    // PER partition PER micro-batch, so the count should follow the corpus,
-    // not the core count — ~384 KiB of staged parquet per state partition
-    // reproduces r14's measured choices at both anchors (sf0.1 → the old
-    // pre-r14 4, sf1 → the r14 16) and keeps growing for bigger corpora up
-    // to the core count. No no-data micro-batches — the
-    // firstSeenWinsFileRun rationale (eviction timing is spec territory,
-    // not gate).
-    val stagedBytes = parts.map(p =>
-      try fs.getFileStatus(p).getLen catch { case _: Exception => 0L }).sum
+    val stagedBytes = StreamStage.partBytes(spark, parts).sum
     val cores = spark.sparkContext.defaultParallelism
     val stateParts = math.min(cores.toLong,
-      math.max(4L, (stagedBytes + (384L << 10) - 1) / (384L << 10))).toInt
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    import ss.implicits._
-    // filesPerTrigger groups staged chunks into fewer, larger micro-batches
-    // (r13 verdict item 5): the dominant replay cost is the PER-MICRO-BATCH
-    // constant — each batch re-plans the (large) signature expression tree
-    // and pays offset/commit/state-store bookkeeping (~0.8-0.9 s/batch at
-    // sf1, measured batch by batch, vs ~0.65 s of actual data
-    // compute for a 12.5k-doc chunk). Within a micro-batch the state op
-    // sorts arrivals by (event_time, doc_id), so grouping IN-ORDER chunks
-    // never changes registration order (hash-identical output); for
-    // PERMUTED feeds the cross-boundary inversions survive and the gate's
-    // least/greatest normalization makes the output set chunking-proof.
-    val inStream = ss.readStream
-      .schema("doc_id LONG, text STRING, event_time TIMESTAMP")
-      .option("maxFilesPerTrigger", filesPerTrigger.toString)
-      .parquet(inDir)
-      // A staged chunk file arrives as ONE input partition, and the per-row
-      // signature (one md5 per shingle) is a narrow map — without this it
-      // runs single-threaded per micro-batch and dominates the gate
-      // (measured 17 s of the sf1 run). One tiny shuffle of raw text spreads
-      // it across the cores — SIZE-derived (r16): ~64 KiB of staged text per
-      // task keeps the md5 map parallel at sf1 (32-way, as before) without
-      // paying 32 near-empty tasks × state-partition shuffle blocks per
-      // micro-batch at sf0.1; the (band, bucket) state shuffle downstream
-      // is unchanged (the session's stateParts).
-      .repartition(math.min(cores.toLong, math.max(2L,
-        (stagedBytes * filesPerTrigger / parts.length + (64L << 10) - 1)
-          / (64L << 10))).toInt)
-    val bandStream = bandRows(inStream, "text", "doc_id", "event_time")
-      .as[BandRow]
-    val q = candidateStream(bandStream, lateness, stateTtlMs, maxBucket)
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    try {
-      order.zipWithIndex.grouped(filesPerTrigger).foreach { group =>
-        group.foreach { case (part, i) => StreamStage.feed(spark, parts(part), inDir, i) }
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.read.parquet(outDir)
+      math.max(4L, (stagedBytes + (384L << 10) - 1) / (384L << 10)))
+    val splits = math.min(cores.toLong, math.max(2L,
+      (stagedBytes * filesPerTrigger / parts.length + (64L << 10) - 1) / (64L << 10))).toInt
+    import spark.implicits._
+    StreamStage.replayDocs(spark, parts, arrivalOrder, filesPerTrigger, stateParts)(docs =>
+      candidateStream(
+        bandRows(docs.repartition(splits), "text", "doc_id", "event_time").as[BandRow],
+        lateness, StreamStage.StateTtlMs))
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ext.{Dedup, Dsir, Lm, Similarity}
-import graft.queries.{ExtQueries, Mvs, Queries, Td}
+import graft.queries.{ExtQueries, Mvs, Queries}
 import graft.streaming.{StreamStage, StreamingIngest}
 
 /** Every artifact kind behind [[Artifacts]] rebuilds when its input is
@@ -53,7 +53,7 @@ class ArtifactsSpec extends SparkTestBase {
     * can tell the two uses apart. */
   private val kinds: Seq[(String, String, DataFrame => DataFrame, String => Any)] = Seq(
     ("schema", "orders", _.withColumn("extra", lit(1)),
-      d => Td.readTable(spark, s"$d/orders.parquet").columns.toSeq),
+      d => Scratch.readCachedSchema(spark, s"$d/orders.parquet").columns.toSeq),
     ("band_store", "documents", moreDocs,
       d => stored(Dedup.bandStorePathFor(spark, d, "doc_id", "text", 1L << 40))),
     ("shingle_store + doc_count + capped_universe", "documents", moreDocs,
@@ -137,7 +137,7 @@ class ArtifactsSpec extends SparkTestBase {
       assert(model() === 500L)
       assert(outer() === paths._1 && inner() === paths._2)
       ExtQueries.fixtureFrontier(spark, dir); ExtQueries.fixtureDomainRank(spark, dir)
-      Td.readTable(spark, docs)
+      Scratch.readCachedSchema(spark, docs)
       // the listener bus delivers in order: once the marker job arrives,
       // every job the lookups started has been seen
       spark.sparkContext.setJobDescription("artifacts-marker")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ingest.Ingest
+import graft.streaming.StreamingIngest
 
 /** The one ingest writer under a failed output: a keyed batch whose write
   * fails on one of its 13 outputs, redelivered under the same key, leaves
@@ -55,19 +56,73 @@ class IngestSpec extends SparkTestBase {
     val env = batch(1L to 200L).repartition(4)
     val single = tmpDir("graft_ingest_single")
     Ingest.write(single, env, None)
-    // the keyed path keeps its input's 4 partitions
+    // a keyed batch that is not a parquet scan gets the same fill and coalesce
+    val keyed = tmpDir("graft_ingest_keyed")
+    Ingest.write(keyed, env, Some(0L))
+    // a parquet scan is read directly and keeps its 4 files' partitions
+    val staged = tmpDir("graft_ingest_staged") + "/env"
+    env.write.parquet(staged)
     val split = tmpDir("graft_ingest_split")
-    Ingest.write(split, env, Some(0L))
+    Ingest.write(split, spark.read.schema(graft.schema.Schemas.envelope).parquet(staged), Some(0L))
     def dataFiles(wh: String, o: String): Int = {
       val it = java.nio.file.Files.walk(java.nio.file.Paths.get(wh, o))
       try it.toArray.count(f => f.toString.endsWith(".parquet")) finally it.close()
     }
-    for (o <- outputs.take(10))
-      assert(dataFiles(single, o) === 1, s"$o files")
+    for (o <- outputs.take(10); wh <- Seq(single, keyed))
+      assert(dataFiles(wh, o) === 1, s"$o files under $wh")
     assert(dataFiles(split, "blocks") === 4)
-    for (o <- outputs)
+    for (o <- outputs; wh <- Seq(keyed, split))
       assert(IngestSpec.digest(spark, single, o) ===
-        IngestSpec.digest(spark, split, o, drop = Seq("ingest_batch")), o)
+        IngestSpec.digest(spark, wh, o, drop = Seq("ingest_batch")), s"$o under $wh")
+  }
+
+  test("input policy: a parquet scan is read directly by every write, any other batch from its cache") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // (warehouse, output) -> whether that output's write read a cached input
+    val cachedRead = new java.util.concurrent.ConcurrentHashMap[(String, String), Boolean]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.analyzed.collectFirst { case cmd: InsertIntoHadoopFsRelationCommand => cmd.outputPath }
+          .foreach(out => cachedRead.put((out.getParent.toUri.getPath, out.getName),
+            qe.optimizedPlan.exists(_.isInstanceOf[InMemoryRelation])))
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val heights = 1L to 20L
+    val stagedPq = tmpDir("graft_policy_pq")
+    batch(heights).write.mode("overwrite").parquet(stagedPq)
+    val stagedJson = tmpDir("graft_policy_json")
+    batch(heights).write.mode("overwrite").json(stagedJson)
+    def stream(format: String, in: String)(wh: String): Unit =
+      StreamingIngest.startExactlyOnce(spark, in, wh, tmpDir("graft_policy_ckpt"),
+        Trigger.AvailableNow(), format = format).awaitTermination()
+    // (case, write, whether every write reads the cache)
+    val cases: Seq[(String, String => Unit, Boolean)] = Seq(
+      ("keyed parquet read", wh => Ingest.write(wh,
+        spark.read.schema(graft.schema.Schemas.envelope).parquet(stagedPq), Some(0L)), false),
+      ("parquet file stream", stream("parquet", stagedPq), false),
+      ("keyed JSON batch", wh => Ingest.write(wh, batch(heights), Some(0L)), true),
+      ("JSON file stream", stream("json", stagedJson), true),
+      ("keyed computed batch", wh => Ingest.write(wh,
+        graft.fixtures.Fixtures.envelopes(spark, 1, 20), Some(0L)), true),
+      ("unkeyed JSON batch", wh => Ingest.write(wh, batch(heights), None), true))
+    spark.listenerManager.register(listener)
+    val seen = try cases.map { case (name, run, _) =>
+      val wh = tmpDir("graft_policy_wh")
+      run(wh)
+      val path = new org.apache.hadoop.fs.Path(wh).toUri.getPath
+      def reads = outputs.flatMap(o => Option(cachedRead.get((path, o))))
+      val deadline = System.nanoTime() + 30000000000L
+      while (reads.size < outputs.size && System.nanoTime() < deadline) Thread.sleep(50)
+      name -> reads
+    } finally spark.listenerManager.unregister(listener)
+    for (((name, reads), (_, _, cached)) <- seen.zip(cases)) {
+      assert(reads.size === outputs.size, s"$name: writes seen")
+      assert(reads.forall(_ == cached), s"$name: cached reads $reads")
+    }
   }
 
   test("warm unkeyed items reuse the generated code of all 13 output writes") {

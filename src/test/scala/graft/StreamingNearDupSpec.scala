@@ -97,6 +97,42 @@ class StreamingNearDupSpec extends SparkTestBase {
     spark.catalog.dropTempView(name)
   }
 
+  test("bucket state expires past its TTL; a later arrival registers afresh") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ms = MemoryStream[BandRow]
+    val out = StreamingNearDup.candidateStream(
+      ms.toDS().as[BandRow], lateness = "10 seconds", stateTtlMs = 60000L)
+    val name = "neardup_ttl_out"
+    val q = out.writeStream.format("memory").queryName(name)
+      .outputMode("append").start()
+    try {
+      def pairs(): Set[(Long, Long)] =
+        spark.table(name).as[Cand].collect().map(c => (c.a_id, c.b_id)).toSet
+
+      ms.addData(BandRow(1, 0, "bkt", ts(0)), BandRow(2, 0, "bkt", ts(1)))
+      q.processAllAvailable()
+      assert(pairs() === Set((1L, 2L)))
+
+      // advance event time far past lateness + TTL in other buckets, then
+      // let the timeout fire (timeouts are processed on the batch AFTER the
+      // watermark moves)
+      ms.addData(BandRow(10, 1, "a", ts(700)))
+      q.processAllAvailable()
+      ms.addData(BandRow(11, 1, "b", ts(701)))
+      q.processAllAvailable()
+
+      // "bkt" forgot 1 and 2: id 3 pairs with nobody and registers, so id 4
+      // pairs with 3 alone
+      ms.addData(BandRow(3, 0, "bkt", ts(702)))
+      q.processAllAvailable()
+      assert(pairs() === Set((1L, 2L)))
+      ms.addData(BandRow(4, 0, "bkt", ts(703)))
+      q.processAllAvailable()
+      assert(pairs() === Set((1L, 2L), (3L, 4L)))
+    } finally q.stop()
+    spark.catalog.dropTempView(name)
+  }
+
   test("cross-band duplicates collapse under distinct; pair order is arrival") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[BandRow]

@@ -69,6 +69,13 @@ class StreamingSpec extends SparkTestBase {
     assert(recomputed === byDate.map { case (k, v) => k -> v._1 })
   }
 
+  test("startExactlyOnce rejects an unknown stream format") {
+    val in = java.nio.file.Files.createTempDirectory("graft_fmt_in").toString
+    val e = intercept[IllegalArgumentException](StreamingIngest.startExactlyOnce(
+      spark, in, s"$in/wh", s"$in/cp", Trigger.AvailableNow(), format = "parqet"))
+    assert(e.getMessage.contains("'parqet'"))
+  }
+
   test("exactly-once ingest: redelivered batch is absorbed per-table, new batch lands") {
     val wh = java.nio.file.Files.createTempDirectory("graft_eowh").toString
     import spark.implicits._
